@@ -312,7 +312,7 @@ object SparkEntry {
         .orderBy("id_a", "id_b")
     }),
 
-    // Dedup CLUSTERING oracled end-to-end (pairs -> GraphX connected
+    // Dedup CLUSTERING oracled end-to-end (pairs -> connected
     // components -> min-id keeper election): every document is planted
     // with TWO exact copies (offsets 2^40 and 2^41) and the candidate
     // pairs are filtered to the CHAIN (a, a+2^40) — which for the
@@ -615,14 +615,12 @@ object SparkEntry {
     // PageRank), searched at nprobe=2 of nlist=8 cells. FULLY
     // hash-oracled: DuckDB replays both Lloyd rounds (assignment
     // argmax + exact decimal per-dimension means) and the cell-bounded
-    // search end-to-end. The spark.ml-KMeans quantizer stays the
-    // fitQuantizer default and is oracled through ann_ivf_plant_top1 /
-    // ann_ivf_exhaustive_topk; recall vs brute force in OpsSpec.
+    // search end-to-end. Recall vs brute force in OpsSpec.
     "ann_ivf_topk" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").select("vec_id", "embedding")
       val probes = e.filter(col("vec_id") < 500)
       graft.ops.Similarity.ivfTopK(s, e, probes, k = 5, nlist = 8, nprobe = 2,
-          lloydIters = Some(2))
+          lloydIters = 2)
         .select("query_id", "neighbor_id", "rk")
         .orderBy("query_id", "rk")
     }),
@@ -645,18 +643,14 @@ object SparkEntry {
         .select("query_id", "neighbor_id", "rk")
         .orderBy("query_id", "rk")
     }),
-    // (r8 perf) lloydIters=Some(1): with nprobe = nlist every probe
-    // visits EVERY quantizer cell, so the output is brute-force-
-    // identical whatever the centroids are — the quantizer fit only
-    // shapes the join, never the result. One deterministic Lloyd
-    // round (2 small jobs) replaces spark.ml KMeans' k-means|| init +
-    // 10 iterations (~2.5 s of fixed joblet overhead) — guide §1.2:
-    // don't compute what the result doesn't depend on.
+    // One Lloyd round: with nprobe = nlist every probe visits EVERY
+    // quantizer cell, so the output is brute-force-identical whatever
+    // the centroids are — the fit only shapes the join.
     "ann_ivf_exhaustive_topk" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").select("vec_id", "embedding")
       val probes = e.filter(col("vec_id") < 500)
       graft.ops.Similarity.ivfTopK(s, e, probes, k = 5, nlist = 8, nprobe = 8,
-          lloydIters = Some(1))
+          lloydIters = 1)
         .select("query_id", "neighbor_id", "rk")
         .orderBy("query_id", "rk")
     }),
@@ -683,13 +677,11 @@ object SparkEntry {
       val e = annUnit(t(s, dir, "embeddings").select("vec_id", "embedding"))
       val planted = e.select((col("vec_id") + lit(1099511627776L)).as("vec_id"),
         col("embedding"))
-      // (r8 perf) lloydIters=Some(1): the rank-1 answer is the planted
-      // twin for ANY quantizer — an identical vector shares its twin's
-      // argmin cell deterministically and the probe's first probed cell
-      // IS its own assigned cell — so the fit choice cannot change the
-      // output; the Lloyd fit drops the spark.ml joblet overhead.
+      // One Lloyd round: the rank-1 answer is the planted twin for ANY
+      // centroids — an identical vector shares its twin's argmin cell
+      // and the probe's first probed cell IS its own assigned cell.
       graft.ops.Similarity.ivfTopK(s, e.unionByName(planted), planted,
-          k = 1, nlist = 8, nprobe = 2, lloydIters = Some(1))
+          k = 1, nlist = 8, nprobe = 2, lloydIters = 1)
         .select(col("query_id"), col("neighbor_id"))
         .orderBy("query_id")
     }),
@@ -704,12 +696,11 @@ object SparkEntry {
       val e = annUnit(t(s, dir, "embeddings").select("vec_id", "embedding"))
       val planted = e.select((col("vec_id") + lit(1099511627776L)).as("vec_id"),
         col("embedding"))
-      // (r8 perf) lloydIters=Some(1): same twin-share argument as
+      // One Lloyd round: same twin-share argument as
       // ann_ivf_plant_top1 — rank 1 is the exact copy under ANY
-      // centroid set, so the fit is join-shape-only; one Lloyd round
-      // replaces the ~8 s spark.ml KMeans joblet cascade.
+      // centroid set.
       graft.ops.Similarity.ivfSelfTopK(s, e.unionByName(planted), k = 1,
-          nlist = 8, nprobe = 2, lloydIters = Some(1))
+          nlist = 8, nprobe = 2, lloydIters = 1)
         .select(col("query_id"), col("neighbor_id"))
         .orderBy("query_id")
     }),
@@ -722,13 +713,13 @@ object SparkEntry {
     // directions of every pair) equals brute force by construction and
     // DuckDB oracles the full k=5 ranking rows+schema+hash. Complements
     // `ann_self_top1`, which only pins rank 1 through planted twins.
-    // (r8 perf) lloydIters=Some(1): nprobe = nlist — exhaustive by
-    // construction, so the result is centroid-independent (see
-    // ann_ivf_exhaustive_topk); only the fit cost changes.
+    // One Lloyd round: nprobe = nlist — exhaustive by construction,
+    // so the result is centroid-independent (see
+    // ann_ivf_exhaustive_topk).
     "ann_self_exhaustive_topk" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").select("vec_id", "embedding")
       graft.ops.Similarity.ivfSelfTopK(s, e, k = 5, nlist = 8, nprobe = 8,
-          lloydIters = Some(1))
+          lloydIters = 1)
         .select("query_id", "neighbor_id", "rk")
         .orderBy("query_id", "rk")
     }),
@@ -1074,7 +1065,7 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // Canonicalization oracled (GraphX connected components + salted
+    // Canonicalization oracled (connected components + salted
     // canonical election, previously LinkSpec-only): the vocabulary as
     // a names table, links = consecutive same-first-letter tokens in
     // sorted order, so every CC is exactly a first-letter group —
@@ -1500,7 +1491,7 @@ object SparkEntry {
     // PageRank over the CANONICAL ENTITY graph — the pipeline's
     // `entity_rank` stage shape (Main.scala), end-to-end through the
     // REAL path: planted-mention extraction → gold mentions → triples
-    // → name vocab → exact-norm linking → GraphX CC → canonical
+    // → name vocab → exact-norm linking → CC → canonical
     // entities → canonicalEdges → pagerank over (page → obj_entity).
     // Entity nodes are pure sinks (a page→entity bipartite graph), so
     // this runs the dangling-redistribution mode — the semantics a
@@ -1606,13 +1597,12 @@ object SparkEntry {
       val e = t(s, dir, "embeddings").select("vec_id", "embedding")
       val planted = e.select((col("vec_id") + lit(1099511627776L)).as("vec_id"),
         col("embedding"))
-      // (r8 perf) lloydIters=Some(1): the keeper map is closed-form for
-      // ANY cell assignment — exact twins share a cell under every
-      // quantizer and tau sits above the corpus's max natural pairwise
-      // cosine, so no non-twin pair can connect whatever the cells are;
-      // the Lloyd fit removes the spark.ml KMeans fixed overhead.
+      // One Lloyd round: the keeper map is closed-form for ANY cell
+      // assignment — exact twins share a cell under every quantizer and
+      // tau sits above the corpus's max natural pairwise cosine, so no
+      // non-twin pair can connect whatever the cells are.
       graft.ops.Similarity.semanticDedup(s, e.unionByName(planted),
-          tau = 0.75, lloydIters = Some(1))
+          tau = 0.75, lloydIters = 1)
         .orderBy("id")
     }),
 

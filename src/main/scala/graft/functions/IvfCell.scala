@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
 /** IVF nearest-cell assignment (`argmax v.c - |c|^2/2` over the coarse-
   * quantizer centroids) as a native Catalyst expression with whole-stage
   * codegen. The centroid table arrives as the second argument — a
-  * nested `ARRAY<ARRAY<DOUBLE>>` literal built from the fitted KMeans
-  * model (tiny: nlist x dim doubles, one constant reference in the
+  * nested `ARRAY<ARRAY<DOUBLE>>` literal built from the fitted Lloyd
+  * centroids (tiny: nlist x dim doubles, one constant reference in the
   * generated code) — so the cell-assignment pass over the whole corpus
   * stays inside the scan's generated loop with zero per-row boxing.
   * The probe-side nprobe-cells variant stays a Scala UDF: probe sets

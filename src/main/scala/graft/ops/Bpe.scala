@@ -14,8 +14,8 @@ import scala.collection.mutable
   * end-of-word marker — merges never cross word boundaries here, so
   * the marker adds nothing): iteratively merge the most frequent
   * adjacent symbol pair over a word-frequency table. The loop runs on
-  * the DRIVER over a BOUNDED word-count table — the same shape as a
-  * KMeans fit: the distributed part is one word-count aggregation
+  * the DRIVER over a BOUNDED word-count table — the same shape as the
+  * IVF Lloyd fit: the distributed part is one word-count aggregation
   * (map-side combined, shuffles only distinct words), the top
   * `maxWords` by frequency are collected (tens of MB at the default
   * maxWords=10^6 — the strings plus the per-symbol expansion and the

@@ -289,71 +289,6 @@ object Similarity {
     counted
   }
 
-  /** Fit the IVF coarse quantizer (spark.ml KMeans, fixed seed) on a
-    * bounded sample of the corpus and broadcast its centroids — shared
-    * by [[ivfTopK]] and [[ivfSelfTopK]].
-    */
-  private def fitQuantizer(spark: SparkSession, corpus: DataFrame,
-      nlist: Int, seed: Long, maxTrain: Long)
-      : org.apache.spark.broadcast.Broadcast[Array[Array[Double]]] = {
-    // null embeddings are filtered before the fit (one malformed row
-    // must not kill the quantizer of a 10^12-row corpus; the same rows
-    // null-propagate out of the search side — see ivfCellTopK)
-    val toVec = udf((v: Seq[Float]) =>
-      org.apache.spark.ml.linalg.Vectors.dense(v.map(_.toDouble).toArray))
-    val kmeans = new org.apache.spark.ml.clustering.KMeans()
-      .setK(nlist).setSeed(seed).setMaxIter(10)
-      .setFeaturesCol("features").setPredictionCol("cell")
-    // The coarse quantizer trains on a bounded sample: KMeans makes
-    // maxIter full passes over its input, so fitting on the whole
-    // corpus would dominate the query at scale. Sizing the sample
-    // without a full-corpus count:
-    //  1. a BOUNDED probe — boundedCount: take()-style INCREMENTAL
-    //     partition scheduling (1 partition, then 4x more, ...) so a
-    //     huge corpus answers from its first partition or two, but
-    //     counting rows per partition inside the executors and
-    //     returning one SCALAR per partition — neither the full-scan
-    //     all-partitions job of limit(cap).count() (GlobalLimit still
-    //     executes and shuffles every map task) nor take()'s transient
-    //     multi-tens-of-MB driver array of Row objects. If the probe
-    //     comes back under its cap, it IS the exact row count: small corpora
-    //     train whole (even when skewed into few partitions), mid-size
-    //     corpora get a seeded uniform Bernoulli sample of a now-known
-    //     fraction — no storage-order bias;
-    //  2. only corpora beyond 4*maxTrain rows (where any exact count
-    //     is a real scan) fall back to a partition-STRATIFIED take:
-    //     the first ceil(maxTrain/P) rows of each of the P partitions
-    //     (narrow, short-circuiting). At that scale P is large (100 TB
-    //     ~ 10^5-10^6 files), so the sample spans the whole corpus
-    //     with ~rows-per-file granularity rather than being the
-    //     sample(f).limit(n) GlobalLimit prefix; when P alone exceeds
-    //     maxTrain, the known fraction maxTrain/P Bernoulli-trims the
-    //     per-partition singletons.
-    val vecs = corpus.filter(col("embedding").isNotNull)
-      .select(toVec(col("embedding")).as("features"))
-    val probeCap = math.min(4L * math.max(1L, maxTrain),
-      (Int.MaxValue - 2).toLong).toInt
-    val probed: Long = boundedCount(vecs, probeCap)
-    val trainSrc =
-      if (probed <= maxTrain) vecs
-      else if (probed <= probeCap)  // probed == exact corpus count
-        vecs.sample(withReplacement = false,
-          math.min(1.0, maxTrain.toDouble / probed * 1.05), seed)
-      else {
-        val parts = math.max(1, vecs.rdd.getNumPartitions)
-        val perPart = math.min((maxTrain + parts - 1) / parts,
-          Int.MaxValue.toLong).toInt.max(1)
-        val strat = vecs.sparkSession.createDataFrame(
-          vecs.rdd.mapPartitions(_.take(perPart)), vecs.schema)
-        if (parts <= maxTrain) strat
-        else strat.sample(withReplacement = false,
-          maxTrain.toDouble / parts, seed)
-      }
-    val model = kmeans.fit(trainSrc)
-    val centroids: Array[Array[Double]] = model.clusterCenters.map(_.toArray)
-    spark.sparkContext.broadcast(centroids)
-  }
-
   /** argmin ||v - c||^2 = argmax (v.c - |c|^2/2); primitive loops and
     * primitive partial selection — this runs once per corpus vector,
     * so no boxing/sorting allocations.
@@ -390,15 +325,6 @@ object Similarity {
     out
   }
 
-  /** IVF (inverted-file) ANN: a coarse quantizer of `nlist` centroids
-    * (spark.ml KMeans, fixed seed, trained once and collected — the
-    * centroid table is tiny) partitions the corpus into cells; each
-    * probe searches only its `nprobe` nearest cells. This is the
-    * standard billion-vector scale path: the corpus is scanned once to
-    * assign cells (narrow), the probe side is broadcast, and the
-    * verification join is bounded by cell sizes instead of going
-    * quadratic.
-    */
   /** Nearest-cell assignment over Catalyst array data — the entry point
     * of the native `ivf_cell` expression ([[graft.functions.IvfCell]];
     * callable from generated code). `cs` is the centroid table as a
@@ -437,13 +363,21 @@ object Similarity {
     best
   }
 
+  /** IVF (inverted-file) ANN: a coarse quantizer of `nlist` centroids
+    * ([[fitQuantizerLloyd]], `lloydIters` rounds, collected — the
+    * centroid table is tiny) partitions the corpus into cells; each
+    * probe searches only its `nprobe` nearest cells. This is the
+    * standard billion-vector scale path: the corpus is scanned once to
+    * assign cells (narrow), the probe side is broadcast, and the
+    * verification join is bounded by cell sizes instead of going
+    * quadratic. The output is bit-identical at any parallelism.
+    */
   def ivfTopK(spark: SparkSession, corpus: DataFrame, probes: DataFrame,
-      k: Int, nlist: Int = 16, nprobe: Int = 2, seed: Long = 42L,
-      maxTrain: Long = 200000L,
+      k: Int, nlist: Int = 16, nprobe: Int = 2,
       maxBroadcastProbes: Long = MaxBroadcastProbes,
-      lloydIters: Option[Int] = None): DataFrame =
-    ivfCellTopK(spark, corpus, Some(probes), k, nlist, nprobe, seed,
-      maxTrain, None, maxBroadcastProbes, lloydIters)
+      lloydIters: Int = 2): DataFrame =
+    ivfCellTopK(spark, corpus, Some(probes), k, nlist, nprobe, lloydIters,
+      maxBroadcastProbes = maxBroadcastProbes)
 
   /** Deterministic coarse-quantizer fit: Lloyd's algorithm with a fixed
     * init (the `nlist` lowest-id vectors) and order-independent
@@ -454,19 +388,16 @@ object Similarity {
     * rational arithmetic) — so the fitted centroids are bit-identical
     * at any parallelism and fully replicable in SQL (the
     * `ann_ivf_topk` oracle replays every assignment and update in
-    * DuckDB). spark.ml KMeans (the
-    * [[fitQuantizer]] default) converges faster per pass but its
-    * k-means|| init and float merge order are runtime-dependent; this
-    * fit is the reproducibility-contract variant — the same trade the
-    * engine's PageRank makes.
+    * DuckDB) — the same reproducibility contract as the engine's
+    * PageRank. It is the only quantizer fit behind [[ivfTopK]],
+    * [[ivfSelfTopK]] and [[semanticDedup]].
     *
     * Scale shape: each Lloyd round is ONE narrow corpus scan through
     * the native codegen `ivf_cell` assignment plus a map-side-combined
     * shuffle of (cell, dim) decimal partials — nlist x dim rows reach
     * the driver per round, never vectors. At 10^12 rows bound the
-    * input the same way fitQuantizer samples (e.g. a deterministic
-    * `vec_id % k = 0` slice) before calling; the fit itself never
-    * collects corpus data.
+    * input (e.g. a deterministic `vec_id % k = 0` slice) before
+    * calling; the fit itself never collects corpus data.
     */
   def fitQuantizerLloyd(spark: SparkSession, corpus: DataFrame,
       nlist: Int, iters: Int, scale: Int = 9, idCol: String = "vec_id")
@@ -519,12 +450,10 @@ object Similarity {
     * once even with nprobe > 1 — no dedup pass needed before ranking.
     */
   def ivfSelfTopK(spark: SparkSession, corpus: DataFrame, k: Int,
-      nlist: Int = 16, nprobe: Int = 2, seed: Long = 42L,
-      maxTrain: Long = 200000L,
+      nlist: Int = 16, nprobe: Int = 2,
       metrics: Option[org.apache.spark.sql.Observation] = None,
-      lloydIters: Option[Int] = None): DataFrame =
-    ivfCellTopK(spark, corpus, None, k, nlist, nprobe, seed, maxTrain, metrics,
-      lloydIters = lloydIters)
+      lloydIters: Int = 2): DataFrame =
+    ivfCellTopK(spark, corpus, None, k, nlist, nprobe, lloydIters, metrics)
 
   /** Shared IVF search core: probes broadcast when given (the bounded-
     * probe-set path), the corpus probing itself through a shuffle join
@@ -534,10 +463,9 @@ object Similarity {
     */
   private def ivfCellTopK(spark: SparkSession, corpus: DataFrame,
       probes: Option[DataFrame], k: Int, nlist: Int, nprobe: Int,
-      seed: Long, maxTrain: Long,
+      lloydIters: Int,
       metrics: Option[org.apache.spark.sql.Observation] = None,
-      maxBroadcastProbes: Long = MaxBroadcastProbes,
-      lloydIters: Option[Int] = None): DataFrame = {
+      maxBroadcastProbes: Long = MaxBroadcastProbes): DataFrame = {
     // register on the input frames' OWN sessions too: call_function
     // resolves against the frame's session registry at analysis, which
     // in a multi-session app may differ from `spark` (the same reason
@@ -553,10 +481,7 @@ object Similarity {
     graft.functions.GraftFunctions.register(spark)
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     probes.foreach(p => graft.functions.GraftFunctions.register(p.sparkSession))
-    val bc = lloydIters match {
-      case Some(li) => fitQuantizerLloyd(spark, corpus, nlist, li)
-      case None => fitQuantizer(spark, corpus, nlist, seed, maxTrain)
-    }
+    val bc = fitQuantizerLloyd(spark, corpus, nlist, lloydIters)
     // corpus-side cell assignment through the native codegen ivf_cell
     // expression (centroids ride as a nested-array literal) — the one
     // pass that touches EVERY corpus vector pays no Seq[Float] boxing;
@@ -638,8 +563,8 @@ object Similarity {
     * controls the quadratic term exactly as in [[ivfSelfTopK]], AQE
     * splits an oversized cell, and `metrics` observes the candidate
     * count as the raise-nlist signal. Keeper election reuses the
-    * checkpointed GraphX CC core, whose output is proportional to the
-    * DUPLICATED subset only.
+    * large-star/small-star CC core ([[graft.spark.Cc]]), whose output
+    * is proportional to the DUPLICATED subset only.
     *
     * Approximation contract (same honesty as the ANN surfaces): a
     * cross-CLUSTER near-duplicate pair is not examined — that is
@@ -648,18 +573,14 @@ object Similarity {
     * oracle is closed-form.
     */
   def semanticDedup(spark: SparkSession, corpus: DataFrame, tau: Double,
-      nlist: Int = 16, seed: Long = 42L, maxTrain: Long = 200000L,
-      maxIter: Int = 20, idCol: String = "vec_id",
+      nlist: Int = 16, maxIter: Int = 20, idCol: String = "vec_id",
       metrics: Option[org.apache.spark.sql.Observation] = None,
-      lloydIters: Option[Int] = None): DataFrame = {
+      lloydIters: Int = 2): DataFrame = {
     // frame-session registration + null-row semantics: see ivfCellTopK
     graft.functions.GraftFunctions.register(spark)
     graft.functions.GraftFunctions.register(corpus.sparkSession)
-    val bc = lloydIters match {
-      case Some(li) => fitQuantizerLloyd(spark, corpus, nlist, li,
-        idCol = idCol)
-      case None => fitQuantizer(spark, corpus, nlist, seed, maxTrain)
-    }
+    val bc = fitQuantizerLloyd(spark, corpus, nlist, lloydIters,
+      idCol = idCol)
     val centroidsLit = typedlit(bc.value.map(_.toSeq).toSeq)
     // unit-normalize via zip_with against array_repeat: the norm stays
     // in an ordinary argument position — evaluated once per ROW — with

@@ -93,18 +93,20 @@ class PipelineSpec extends AnyFunSuite {
     val train = ConllCodec.read(spark, s"${RefCorpus.RefData}/valid").cache()
     val test = ConllCodec.read(spark, s"${RefCorpus.RefData}/test").cache()
 
-    val m0 = Hmm.fit(spark, train, timeSteps = 1, useFeatures = true)
-    val m1 = Hmm.selfTrain(spark, m0, test)
+    try {
+      val m0 = Hmm.fit(spark, train, timeSteps = 1, useFeatures = true)
+      val m1 = Hmm.selfTrain(spark, m0, test)
 
-    val pairs = Hmm.predict(spark, m1, test).map { case (s, pred) =>
-      (pred.map(Hmm.Labels(_)): Seq[String], s.bio)
-    }
-    val res = SpanMetrics.evaluate(spark, pairs)
-    info(f"HMM-1+feat+ST (fit on valid): P=${res.precision}%.4f " +
-      f"R=${res.recall}%.4f F1=${res.f1}%.4f acc=${res.accuracy}%.4f")
-    // published reference: 0.866 trained on data/train (missing blob);
-    // fit on the smaller valid split must still land in a sane band
-    assert(res.f1 > 0.55 && res.f1 <= 1.0, f"F1 ${res.f1}%.4f out of range")
+      val pairs = Hmm.predict(spark, m1, test).map { case (s, pred) =>
+        (pred.map(Hmm.Labels(_)): Seq[String], s.bio)
+      }
+      val res = SpanMetrics.evaluate(spark, pairs)
+      info(f"HMM-1+feat+ST (fit on valid): P=${res.precision}%.4f " +
+        f"R=${res.recall}%.4f F1=${res.f1}%.4f acc=${res.accuracy}%.4f")
+      // published reference: 0.866 trained on data/train (missing blob);
+      // fit on the smaller valid split must still land in a sane band
+      assert(res.f1 > 0.55 && res.f1 <= 1.0, f"F1 ${res.f1}%.4f out of range")
+    } finally { train.unpersist(); test.unpersist() }
   }
 
   test("span metrics agree with conlleval-style counts on a fixture") {

@@ -147,9 +147,9 @@ class MergeRankingSpec extends AnyFunSuite {
     import spark.implicits._
     // unit circle: v1 at 25°, v2 at 50° — cos(v0,v1)=cos(v1,v2)=cos25°
     // ≈ .906 ≥ tau, cos(v0,v2)=cos50° ≈ .643 < tau: the 0-1-2 chain is
-    // connected only TRANSITIVELY. nlist=2 (spark.ml KMeans requires
-    // k ≥ 2) cleanly separates the 50°-arc chain from the antipodal
-    // unique vector, so cluster assignment cannot split the chain.
+    // connected only TRANSITIVELY. nlist=2 separates the 50°-arc chain
+    // from the unique vector, so cluster assignment cannot split the
+    // chain.
     def v(deg: Double) = Seq(math.cos(math.toRadians(deg)).toFloat,
       math.sin(math.toRadians(deg)).toFloat)
     val rows = Seq(
@@ -157,8 +157,7 @@ class MergeRankingSpec extends AnyFunSuite {
       (3L, Seq(0f, -1f)),
       (4L, null.asInstanceOf[Seq[Float]]))
       .toDF("vec_id", "embedding")
-    val out = Similarity.semanticDedup(spark, rows, tau = 0.8, nlist = 2,
-        maxTrain = 10L)
+    val out = Similarity.semanticDedup(spark, rows, tau = 0.8, nlist = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(out === Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 4L))
   }

@@ -182,18 +182,6 @@ class OpsSpec extends AnyFunSuite {
     // quantizer must do materially better than chance
     assert(recall > 0.5, f"recall $recall%.3f no better than chance")
     assert(ivf.nonEmpty)
-
-    // quantizer-sampling path, exact-count branch (corpus under the
-    // probe cap): a seeded uniform Bernoulli sample of ~150/500 rows
-    // must still produce a usable quantizer
-    val ivfSampled = Similarity.ivfTopK(spark, e, e, k = 5, nlist = 8,
-        nprobe = 3, maxTrain = 150L)
-      .select("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recallSampled = ivfSampled.intersect(brute).size.toDouble / brute.size
-    info(f"ann recall@5 (ivf, 150-vector uniform fit): $recallSampled%.3f")
-    assert(recallSampled > 0.375,
-      f"sampled-quantizer recall $recallSampled%.3f at/below chance")
   }
 
   test("lloyd quantizer: bit-identical across partition counts, usable recall") {
@@ -206,21 +194,33 @@ class OpsSpec extends AnyFunSuite {
     val f7 = Similarity.fitQuantizerLloyd(spark, e.repartition(7),
       nlist = 8, iters = 2).value
     assert(f1.map(_.toSeq).toSeq === f7.map(_.toSeq).toSeq)
+    // so every IVF entry point built on it (default fit) gives the
+    // same output at any parallelism
+    def selfRows(df: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfSelfTopK(spark, df, k = 5, nlist = 8, nprobe = 3)
+        .select("query_id", "neighbor_id", "rk").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(selfRows(e.repartition(1)) === selfRows(e.repartition(7)))
+    def keepers(df: org.apache.spark.sql.DataFrame) =
+      Similarity.semanticDedup(spark, df, tau = 0.3, nlist = 8)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val k1 = keepers(e.repartition(1))
+    assert(k1 === keepers(e.repartition(7)))
+    assert(k1.exists { case (id, keeper) => id != keeper },
+      "tau must connect some pairs, or the keeper comparison is vacuous")
     // and the search through it is a real quantizer, not a degenerate
-    // single cell: recall beats the chance line like the KMeans fit
+    // single cell: recall beats the chance line
     val brute = Similarity.bruteForceTopK(e, e, 5)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Similarity.ivfTopK(spark, e, e, k = 5, nlist = 8, nprobe = 3,
-        lloydIters = Some(2))
+    val ivf = Similarity.ivfTopK(spark, e, e, k = 5, nlist = 8, nprobe = 3)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = ivf.intersect(brute).size.toDouble / brute.size
     info(f"ann recall@5 (ivf lloyd-2 fit, 8 cells, 3 probes): $recall%.3f")
     assert(recall > 0.5, f"lloyd-quantizer recall $recall%.3f no better than chance")
     // every cell is argmin-assigned: nprobe = nlist searches everything
-    val all = Similarity.ivfTopK(spark, e, e, k = 5, nlist = 8, nprobe = 8,
-        lloydIters = Some(2))
+    val all = Similarity.ivfTopK(spark, e, e, k = 5, nlist = 8, nprobe = 8)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(all === brute)
@@ -229,7 +229,7 @@ class OpsSpec extends AnyFunSuite {
   test("ivf self k-NN join matches probes-as-corpus ivfTopK, decent recall") {
     val e = embeddings.select("vec_id", "embedding")
     // the self join with every vector as probe must equal ivfTopK with
-    // the corpus passed as the probe set (same quantizer seed, same
+    // the corpus passed as the probe set (same quantizer fit, same
     // ranking) — the only difference is the join strategy (shuffle vs
     // broadcast), which may not change results
     val self = Similarity.ivfSelfTopK(spark, e, k = 5, nlist = 8, nprobe = 3)
@@ -248,13 +248,11 @@ class OpsSpec extends AnyFunSuite {
     assert(recall > 0.5, f"recall $recall%.3f no better than chance")
   }
 
-  test("ivf stratified fit (corpus beyond the probe cap) covers planted clusters") {
+  test("ivf default fit covers planted clusters") {
     import spark.implicits._
     // 2000 vectors in 8 well-separated clusters, cluster cycling with
-    // the row index so every partition's LEADING rows span all
-    // clusters. maxTrain=64 -> probe cap 256 < 2000, so the fit takes
-    // the stratified per-partition path; a quantizer that missed a
-    // cluster would send its probes to the wrong cells.
+    // the row index; a quantizer that missed a cluster would send its
+    // probes to the wrong cells.
     val n = 2000L
     val vecs = spark.range(n).map { i =>
       val c = (i % 8).toInt
@@ -267,12 +265,12 @@ class OpsSpec extends AnyFunSuite {
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val ivf = Similarity.ivfTopK(spark, vecs, probes, k = 3, nlist = 8,
-        nprobe = 2, maxTrain = 64L)
+        nprobe = 2)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = ivf.intersect(brute).size.toDouble / brute.size
-    info(f"ann recall@3 (ivf, stratified 64-vector fit, 8 planted clusters): $recall%.3f")
-    assert(recall > 0.5, f"stratified fit missed planted clusters: $recall%.3f")
+    info(f"ann recall@3 (ivf, 8 planted clusters): $recall%.3f")
+    assert(recall > 0.5, f"quantizer missed planted clusters: $recall%.3f")
   }
 
   test("embedding-cosine near-dup finds planted duplicate vectors") {
