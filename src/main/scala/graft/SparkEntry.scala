@@ -1512,22 +1512,18 @@ object SparkEntry {
         targetNamesFn = Some((_: String) => Seq("zzjohn zzdoe", "zzann")))
       val mentions = graft.kg.Triples.goldMentions(s, sents)
       // materialize triples ONCE (the kg.Main pipeline persists them as
-      // a stage): vocab, the canonical-edge join, and pagerank's
-      // node/edge caches all consume this frame, and without the eager
-      // checkpoint each consumer re-runs the whole extraction kernel
+      // a stage): vocab and the canonical-edge join both consume this
+      // frame, and without the eager checkpoint each consumer re-runs
+      // the whole extraction kernel
       val triples = graft.kg.Triples.fromMentions(s, mentions)
         .localCheckpoint(true)
       val vocab = graft.kg.Linker.nameVocab(s, triples)
       val links = graft.kg.Linker.exactNormLinks(s, vocab)
       val membership = graft.kg.Canonicalize.components(s, links)
       val nodes = graft.kg.Canonicalize.entities(s, vocab, membership)
-      // same reason: pagerank reads its edge argument three times
-      // (node set, out-degrees, edge⋈outdeg cache) — in the pipeline
-      // `edges` IS a materialized stage, so the query mirrors that
       val edges = graft.kg.Canonicalize.canonicalEdges(s, triples, nodes)
         .select(col("subj").as("src"), col("obj_entity").as("dst"))
         .distinct()
-        .localCheckpoint(true)
       graft.kg.GraphOps.pagerank(s, edges,
           iters = 3, danglingRedistribute = true)
         .select(col("node"), round(col("rank"), 10).as("rank"))

@@ -15,6 +15,13 @@ import graft.extract.{Extractor, Py}
 object RefCorpus {
   val RefData = "/root/reference/data"
 
+  /** Fails with one clear message when the corpus is missing, before a
+    * caller trips over the first absent file.
+    */
+  def requirePresent(): Unit =
+    if (!Files.isDirectory(Paths.get(RefData)))
+      throw new IllegalStateException(s"reference corpus absent at $RefData")
+
   def docIds: Seq[Int] = (1 to 145).filter { id =>
     Files.exists(Paths.get(f"$RefData/html/$id%03d.html"))
   }

@@ -3,12 +3,11 @@ package graft.extract
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
+import graft.corpus.RefCorpus.RefData
 import graft.dom.Bs4Config
 
 /** Golden-file access for the reference corpus (dev/test harness only). */
 object GoldenData {
-  val RefDir = "/root/reference/data"
-
   final case class GoldenDoc(id: Int, url: String, lines: Vector[String])
 
   /** Parse data/valid or data/test into per-document line blocks
@@ -27,7 +26,7 @@ object GoldenData {
   }
 
   def readHtml(id: Int): String = {
-    val p = Paths.get(f"$RefDir/html/$id%03d.html")
+    val p = Paths.get(f"$RefData/html/$id%03d.html")
     Py.universalNewlines(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
   }
 
@@ -35,7 +34,7 @@ object GoldenData {
     * (`util/html_segmenter.py:322-328`).
     */
   def readTargetNames(id: Int): Vector[String] = {
-    val p = Paths.get(f"$RefDir/target_names/target_names_$id%03d.txt")
+    val p = Paths.get(f"$RefData/target_names/target_names_$id%03d.txt")
     if (!Files.exists(p)) return Vector.empty
     val content = Py.universalNewlines(
       new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
@@ -75,7 +74,7 @@ object GoldenData {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     val raw = new String(
-      Files.readAllBytes(Paths.get("/root/reference/RNE Dataset.ipynb")),
+      Files.readAllBytes(Paths.get(RefData).resolveSibling("RNE Dataset.ipynb")),
       StandardCharsets.UTF_8)
     val cells = (JsonMethods.parse(raw) \ "cells").asInstanceOf[JArray].arr
     val outputs = (cells(2) \ "outputs").asInstanceOf[JArray].arr
@@ -110,7 +109,7 @@ object ParityCheck {
   import GoldenData._
 
   def main(args: Array[String]): Unit = {
-    val docs = parseSplit(s"$RefDir/valid") ++ parseSplit(s"$RefDir/test")
+    val docs = parseSplit(s"$RefData/valid") ++ parseSplit(s"$RefData/test")
     println(s"golden docs: ${docs.length}")
     val configs = Seq(
       "new-pop/new-class" -> Bs4Config(false, false),

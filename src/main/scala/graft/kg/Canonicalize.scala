@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.fnv1a64
 
 /** Canonicalization: connected components over the link graph, then
   * per-component canonical-name election.
@@ -18,37 +19,31 @@ import org.apache.spark.sql.functions._
   */
 object Canonicalize {
 
-  /** name -> stable 64-bit vertex id (shared FNV-1a over UTF-8 bytes,
-    * consistent with the fnv1a64 SQL fingerprint). Collision-safe enough
-    * for vocabulary-sized vertex sets; a production run would carry the
-    * name through instead of relying on hash uniqueness.
+  /** name -> stable 64-bit vertex id: FNV-1a over UTF-8 bytes, the
+    * plain-Scala twin of the native `fnv1a64` expression the operators
+    * below use. Collision-safe enough for vocabulary-sized vertex sets;
+    * a production run would carry the name through instead of relying
+    * on hash uniqueness.
     */
   def nameId(name: String): Long = graft.functions.Fnv1a64.hashString(name)
-
-  private val nameIdUdf = udf((s: String) => nameId(s))
 
   /** Connected components over (name_a, name_b) pairs; returns
     * (name, component) for every name that appears in a link.
     */
   def components(spark: SparkSession, pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    import spark.implicits._
-    // CC runs on the shared graft.spark.Cc core (alternating
-    // large-star/small-star; per-round localCheckpoint keeps the
-    // lineage flat — see Cc for the convergence/skew policy).
-    // Materialize the pair pipeline ONCE: both the edge RDD and the
-    // vertex name table derive from `pairs`, which is typically a full
-    // upstream derivation (the linker window chain) — without the
-    // checkpoint the vertex branch re-executed it a second time
-    // (r8 measured, the same redundant-derivation class as the
-    // shortest-path edge cache).
+    // Materialize the pair pipeline ONCE: both the id pairs for the
+    // shared graft.spark.Cc core and the vertex name table derive from
+    // `pairs`, which is typically a full upstream derivation (the linker
+    // window chain) — without the checkpoint the vertex branch
+    // re-executed it a second time (r8 measured). Cc itself then
+    // checkpoints only its canonical id pairs.
     val p = pairs.select(col("name_a"), col("name_b")).localCheckpoint(true)
-    val edges = p
-      .select(nameIdUdf(col("name_a")).as("src"), nameIdUdf(col("name_b")).as("dst"))
-      .as[(Long, Long)].rdd
+    val edges = p.select(fnv1a64(spark, col("name_a")).as("a"),
+      fnv1a64(spark, col("name_b")).as("b"))
     val vertices = p
       .select(explode(array(col("name_a"), col("name_b"))).as("name"))
       .distinct()
-      .select(nameIdUdf(col("name")).as("id"), col("name"))
+      .select(fnv1a64(spark, col("name")).as("id"), col("name"))
 
     val ccDf = graft.spark.Cc.components(spark, edges, maxIter)
     vertices.join(ccDf, "id").select(col("name"), col("component"))
@@ -62,7 +57,7 @@ object Canonicalize {
       saltBuckets: Int = 16): DataFrame = {
     val withComp = names.join(membership, Seq("name"), "left_outer")
       .withColumn("component",
-        coalesce(col("component"), nameIdUdf(col("name"))))
+        coalesce(col("component"), fnv1a64(spark, col("name"))))
 
     // phase 1: salted partial aggregation (hot components spread over
     // saltBuckets reducers)
@@ -108,7 +103,7 @@ object Canonicalize {
         col("pred"),
         coalesce(col("canonical_name"), col("obj")).as("obj"),
         coalesce(col("entity_id"),
-          format_string("person:%016x", nameIdUdf(col("obj")))).as("obj_entity"),
+          format_string("person:%016x", fnv1a64(spark, col("obj")))).as("obj_entity"),
         col("url"), col("warc_ts"), col("confidence"))
       .dropDuplicates("subj", "pred", "obj", "url")
   }

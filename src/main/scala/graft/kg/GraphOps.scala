@@ -1,6 +1,7 @@
 package graft.kg
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -76,16 +77,18 @@ object GraphOps {
     * oracle replicates it exactly.
     *
     * Scale shape (per iteration): the edge⋈rank join shuffles only the
-    * rank side — `eo` is repartitioned on src ONCE and cached, and
-    * InMemoryRelation preserves that HashPartitioning, so Catalyst
-    * reuses it across all iterations. The contribution aggregation
-    * shuffles (dst, decimal) pairs — map-side combinable, a few bytes
-    * per edge partition per reducer. Hot dst nodes (celebrity
-    * entities) are exactly the partial-aggregation case: each map task
-    * pre-sums its contributions, so a 10^8-in-degree node receives one
-    * row per map task, not per edge. For iteration counts beyond ~10,
-    * pass `checkpointEvery` to cut the growing lineage with an eager
-    * localCheckpoint.
+    * rank side — `eo` is partitioned on src ONCE and eagerly
+    * localCheckpointed, and the checkpoint keeps that HashPartitioning,
+    * so Catalyst reuses it across all iterations. The contribution
+    * aggregation shuffles (dst, decimal) pairs — map-side combinable,
+    * a few bytes per edge partition per reducer. Hot dst nodes
+    * (celebrity entities) are exactly the partial-aggregation case:
+    * each map task pre-sums its contributions, so a 10^8-in-degree
+    * node receives one row per map task, not per edge.
+    *
+    * Materialization: the operator holds no session cache. Its state
+    * (edge⋈outdeg, node set) and its result are eager localCheckpoints,
+    * so a call neither reads nor invalidates the caller's cache entries.
     *
     * Determinism: contributions are rounded to `scale` decimal places
     * (an IEEE double op, identical everywhere), then summed as
@@ -115,13 +118,13 @@ object GraphOps {
     *   DM_t      = Σ_{u: outdeg(u)=0} decimal(pr_t(u))
     *
     * DM_t is an exact DECIMAL(38,15) sum over the dangling node set
-    * (computed once, up front, as an anti-join against the out-degree
-    * table) that rides into the per-node update as a one-row cross
-    * join — one extra scalar aggregation per iteration, never a
-    * driver-side action, and the bit-reproducibility contract holds
-    * unchanged. With `seeds`, the dangling mass follows the reset
-    * distribution (concentrated on the seed set — the standard
-    * topic-sensitive formulation) instead of 1/N.
+    * (flagged once, when the node set is built) that rides into the
+    * per-node update as a one-row cross join — one extra scalar
+    * aggregation per iteration, never a separate action, and the
+    * bit-reproducibility contract holds unchanged. With `seeds`, the
+    * dangling mass follows the reset distribution (concentrated on the
+    * seed set — the standard topic-sensitive formulation) instead of
+    * 1/N.
     * `kg_pagerank_dangling` is hash-oracled with the same
     * unrolled-CTE generator plus one scalar CTE per iteration. The
     * default stays the leak semantics (the oracle mode of the other
@@ -129,7 +132,6 @@ object GraphOps {
     */
   def pagerank(spark: SparkSession, edges: DataFrame, iters: Int = 3,
       damping: Double = 0.85, scale: Int = 12,
-      checkpointEvery: Int = Int.MaxValue,
       seeds: Option[Seq[String]] = None,
       weighted: Boolean = false,
       danglingRedistribute: Boolean = false): DataFrame = {
@@ -140,23 +142,14 @@ object GraphOps {
     // pr_t subplan per iteration — 2^iters recomputations of iteration
     // 1 by the final action (measured r8: kg_pagerank_dangling 5.6 s vs
     // kg_pagerank 2.2 s at identical graph/iters). Checkpoint every
-    // iteration in that mode (guide §1.2: don't recompute what you
-    // already have); values are unchanged — checkpointing is plan-only.
-    val ckptEvery =
-      if (danglingRedistribute) 1 else checkpointEvery
-    // try/finally: an iteration job that dies must not leave the
-    // edge⋈outdeg and node caches pinned in executor memory for the
-    // life of the session
-    try {
-      var pr = st.init
-      for (i <- 1 to iters) {
-        pr = st.step(pr)
-        if (i % ckptEvery == 0) pr = pr.localCheckpoint(true)
-      }
-      // materialize the final ranks (one (node, double) row per node)
-      // before the finally block frees the iteration caches
-      pr.localCheckpoint(true)
-    } finally st.close()
+    // iteration in that mode, and the final ranks in both; values are
+    // unchanged — checkpointing is plan-only.
+    var pr = st.init
+    for (i <- 1 to iters) {
+      pr = st.step(pr)
+      if (danglingRedistribute || i == iters) pr = pr.localCheckpoint(true)
+    }
+    pr.select("node", "rank")
   }
 
   /** Convergence-terminated PageRank for production use: iterates
@@ -178,66 +171,54 @@ object GraphOps {
     require(tol > 0, "tol must be positive")
     val st = prState(edges, damping, scale, seeds, weighted,
       danglingRedistribute)
-    try {
-      var pr = st.init.localCheckpoint(true)
-      var it = 0
-      var delta = Double.MaxValue
-      while (it < maxIters && delta > tol) {
-        val next = st.step(pr).localCheckpoint(true)
-        val d = next.as("a")
-          .join(pr.as("b"), col("a.node") === col("b.node"))
-          .agg(sum(abs(col("a.rank") - col("b.rank"))
-            .cast(DecimalType(38, 15))).as("d"))
-          .head.getDecimal(0)
-        delta = if (d == null) 0.0 else d.doubleValue()
-        pr = next
-        it += 1
-      }
-      (pr, it)
-    } finally st.close()
+    var pr = st.init.localCheckpoint(true)
+    var it = 0
+    var delta = Double.MaxValue
+    while (it < maxIters && delta > tol) {
+      val next = st.step(pr).localCheckpoint(true)
+      val d = next.as("a")
+        .join(pr.as("b"), col("a.node") === col("b.node"))
+        .agg(sum(abs(col("a.rank") - col("b.rank"))
+          .cast(DecimalType(38, 15))).as("d"))
+        .head.getDecimal(0)
+      delta = if (d == null) 0.0 else d.doubleValue()
+      pr = next
+      it += 1
+    }
+    (pr.select("node", "rank"), it)
   }
 
   /** The shared iteration machinery behind [[pagerank]] and
     * [[pagerankTol]] — ONE definition of the contribution join, the
     * rounding contract, and the dangling-mass term, so the two modes
-    * cannot drift. `close()` frees the caches the step holds.
+    * cannot drift. Rank frames carry each node's `has_out` flag, so the
+    * dangling mass is a filter, not a join.
     */
   private final case class PrState(init: DataFrame,
-      step: DataFrame => DataFrame, close: () => Unit)
+      step: DataFrame => DataFrame)
 
   private def prState(edges: DataFrame, damping: Double, scale: Int,
       seeds: Option[Seq[String]], weighted: Boolean,
       danglingRedistribute: Boolean): PrState = {
-    // cache the edge argument itself for the state build: `edges` is
-    // typically a full derivation (bigramEdges = corpus explode +
-    // groupBy) and the node set, out-degree table and dangling set
-    // each materialize it separately — 2-3 redundant derivations per
-    // pagerank call without this (r8; same class as the shortest-path
-    // edge cache). Freed in close() with the other state caches.
-    val e = edges.cache()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst")))
-      .distinct()
-      .repartition(col("node"))
-      .cache()
-    val n = nodes.count()
-    val outdeg =
-      if (weighted) e.groupBy("src").agg(sum(col("weight")).as("outdeg"))
-      else e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    // edge ⋈ outdeg once, up front; cached partitioned on src so each
-    // iteration's rank join reuses the partitioning (rank side shuffles,
-    // edges do not).
+    // edge ⋈ outdeg in ONE read of `edges` (typically a full derivation
+    // such as bigramEdges): the out-degree is a window over the edges
+    // hash-partitioned on src, and the checkpoint keeps that
+    // partitioning (unless AQE coalesced it, i.e. at small sizes), so
+    // each iteration's rank join shuffles the rank side only.
+    val bySrc = Window.partitionBy("src")
     val eCols = if (weighted) Seq("src", "dst", "weight") else Seq("src", "dst")
-    val eo = e.select(eCols.map(col): _*).join(outdeg, "src")
-      .repartition(col("src"))
-      .cache()
-    // dangling node set (no out-edges), computed once: node-keyed
-    // anti-join, a few bytes per node
-    val dangling =
-      if (danglingRedistribute)
-        Some(nodes.join(eo.select(col("src").as("node")),
-          Seq("node"), "left_anti").cache())
-      else None
+    val eo = edges.select(eCols.map(col): _*)
+      .withColumn("outdeg",
+        if (weighted) sum(col("weight")).over(bySrc)
+        else count(lit(1)).over(bySrc))
+      .localCheckpoint(true)
+    // the node set off the checkpoint, which holds every edge, flagged
+    // with whether the node has out-edges
+    val nodes = eo.select(col("src").as("node"), lit(true).as("has_out"))
+      .union(eo.select(col("dst"), lit(false)))
+      .groupBy("node").agg(max(col("has_out")).as("has_out"))
+      .localCheckpoint(true)
+    val n = nodes.count()
     val (base, init) = seeds match {
       case None =>
         (lit((1.0 - damping) / n), lit(1.0 / n))
@@ -257,46 +238,37 @@ object GraphOps {
           round(share, scale).cast(DecimalType(38, 15)).as("c"))
         .groupBy("dst").agg(sum(col("c")).as("s"))
       val recv = coalesce(col("s").cast("double"), lit(0.0))
-      dangling match {
-        case None =>
-          nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-            .select(col("node"),
-              round(base + lit(damping) * recv, scale).as("rank"))
-        case Some(dg) =>
-          // DM_t as a ONE-ROW frame (exact decimal sum; empty dangling
-          // set → 0) cross-joined into the update — no driver action
-          val dm = pr.join(dg, Seq("node"), "left_semi")
-            .agg(coalesce(sum(col("rank").cast(DecimalType(38, 15))),
-              lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 15)))
-              .as("dm"))
-          // dangling mass follows the RESET distribution: uniform 1/N
-          // unseeded; concentrated on the seed set in personalized mode
-          // (standard topic-sensitive PageRank — spreading a PPR's
-          // dangling mass uniformly would leak rank to nodes the
-          // personalization vector excludes)
-          val redist = seeds match {
-            case None => col("dm").cast("double") / n
-            case Some(s) =>
-              when(col("node").isin(s.distinct: _*),
-                col("dm").cast("double") / s.distinct.size)
-                .otherwise(lit(0.0))
-          }
-          nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-            .crossJoin(dm)
-            .select(col("node"),
-              round(base + lit(damping) * (recv + redist), scale)
-                .as("rank"))
+      val joined = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
+      if (!danglingRedistribute)
+        joined.select(col("node"),
+          round(base + lit(damping) * recv, scale).as("rank"), col("has_out"))
+      else {
+        // DM_t as a ONE-ROW frame (exact decimal sum over the rank rows
+        // without out-edges; none → 0) cross-joined into the update —
+        // no separate action
+        val dm = pr.filter(!col("has_out"))
+          .agg(coalesce(sum(col("rank").cast(DecimalType(38, 15))),
+            lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 15)))
+            .as("dm"))
+        // dangling mass follows the RESET distribution: uniform 1/N
+        // unseeded; concentrated on the seed set in personalized mode
+        // (standard topic-sensitive PageRank — spreading a PPR's
+        // dangling mass uniformly would leak rank to nodes the
+        // personalization vector excludes)
+        val redist = seeds match {
+          case None => col("dm").cast("double") / n
+          case Some(s) =>
+            when(col("node").isin(s.distinct: _*),
+              col("dm").cast("double") / s.distinct.size)
+              .otherwise(lit(0.0))
+        }
+        joined.crossJoin(dm)
+          .select(col("node"),
+            round(base + lit(damping) * (recv + redist), scale).as("rank"),
+            col("has_out"))
       }
     }
-    PrState(
-      nodes.select(col("node"), init.as("rank")),
-      step,
-      () => {
-        nodes.unpersist(blocking = false)
-        eo.unpersist(blocking = false)
-        dangling.foreach(_.unpersist(blocking = false))
-        e.unpersist(blocking = false)
-      })
+    PrState(nodes.select(col("node"), init.as("rank"), col("has_out")), step)
   }
 
   /** Triangle count per node over the UNDIRECTED simple graph induced
@@ -376,35 +348,32 @@ object GraphOps {
       edges: DataFrame, source: String, iters: Int,
       frontierSizes: scala.collection.mutable.Buffer[Long]): DataFrame = {
     import spark.implicits._
-    // cache the edge table for the loop: each round's merge is an
-    // ACTION (localCheckpoint), so an uncached `edges` argument — often
-    // a full derivation like bigramEdges — would re-run its scan +
-    // aggregation once per round (measured r8: 4 redundant corpus
-    // scans in kg_shortest_path). Freed before returning; `dist` is
-    // checkpointed so the result never re-reads the cache.
-    val e = edges.cache()
-    try {
-      var dist = Seq(source).toDF("node").select(col("node"),
-        lit(0L).as("dist"))
+    // checkpoint the edge table once for the loop: each round's merge
+    // is an ACTION (localCheckpoint), so an unmaterialized `edges`
+    // argument — often a full derivation like bigramEdges — would re-run
+    // its scan + aggregation once per round (measured r8: 4 redundant
+    // corpus scans in kg_shortest_path).
+    val e = edges.select("src", "dst", "weight").localCheckpoint(true)
+    var dist = Seq(source).toDF("node").select(col("node"),
+      lit(0L).as("dist"))
+      .localCheckpoint(true)
+    var frontier = dist
+    for (_ <- 1 to iters) {
+      if (frontierSizes != null) frontierSizes += frontier.count()
+      val relaxed = e.join(frontier, e("src") === frontier("node"))
+        .select(col("dst").as("node"),
+          (col("dist") + col("weight")).as("dist"))
+      val merged = dist.union(relaxed)
+        .groupBy("node").agg(min(col("dist")).as("dist"))
         .localCheckpoint(true)
-      var frontier = dist
-      for (_ <- 1 to iters) {
-        if (frontierSizes != null) frontierSizes += frontier.count()
-        val relaxed = e.join(frontier, e("src") === frontier("node"))
-          .select(col("dst").as("node"),
-            (col("dist") + col("weight")).as("dist"))
-        val merged = dist.union(relaxed)
-          .groupBy("node").agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
-        // next frontier: strictly-improved (or newly reached) nodes only
-        frontier = merged.as("m")
-          .join(dist.as("o"), col("m.node") === col("o.node"), "left")
-          .filter(col("o.dist").isNull || col("m.dist") < col("o.dist"))
-          .select(col("m.node").as("node"), col("m.dist").as("dist"))
-        dist = merged
-      }
-      dist
-    } finally e.unpersist(blocking = false)
+      // next frontier: strictly-improved (or newly reached) nodes only
+      frontier = merged.as("m")
+        .join(dist.as("o"), col("m.node") === col("o.node"), "left")
+        .filter(col("o.dist").isNull || col("m.dist") < col("o.dist"))
+        .select(col("m.node").as("node"), col("m.dist").as("dist"))
+      dist = merged
+    }
+    dist
   }
 
   /** Synchronous label-propagation community detection (Raghavan et
@@ -435,24 +404,24 @@ object GraphOps {
       .select(least(col("a"), col("b")).as("u"),
         greatest(col("a"), col("b")).as("v"))
       .distinct()
+    // every round reads the same neighbour table; the rounds compose
+    // into ONE plan, whose identical `und` exchanges Spark reuses, and
+    // the result is its one materialization
     val both = und.select(col("u").as("nbr"), col("v").as("node"))
       .unionByName(und.select(col("v").as("nbr"), col("u").as("node")))
-      .cache()
-    try {
-      var labels = both.select(col("node")).distinct()
-        .select(col("node"), col("node").as("label"))
-      for (_ <- 1 to rounds) {
-        val counts = both.join(labels.withColumnRenamed("node", "nbr"), "nbr")
-          .groupBy("node", "label").agg(count(lit(1)).as("cnt"))
-        // min over struct(-cnt, label): largest count, ties to the
-        // SMALLEST label — the deterministic synchronous-LPA tie-break
-        labels = counts.groupBy("node")
-          .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
-            .as("b"))
-          .select(col("node"), col("b.l").as("label"))
-      }
-      labels.localCheckpoint(true)
-    } finally both.unpersist(blocking = false)
+    var labels = both.select(col("node")).distinct()
+      .select(col("node"), col("node").as("label"))
+    for (_ <- 1 to rounds) {
+      val counts = both.join(labels.withColumnRenamed("node", "nbr"), "nbr")
+        .groupBy("node", "label").agg(count(lit(1)).as("cnt"))
+      // min over struct(-cnt, label): largest count, ties to the
+      // SMALLEST label — the deterministic synchronous-LPA tie-break
+      labels = counts.groupBy("node")
+        .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
+          .as("b"))
+        .select(col("node"), col("b.l").as("label"))
+    }
+    labels.localCheckpoint(true)
   }
 
   /** Minimum-distance BFS from `seeds`, out to `hops` edge hops.

@@ -157,9 +157,10 @@ object Main {
 
     val links = stages.stage("links", stages.outputRowsOf("triples")) {
       val vocab = Linker.nameVocab(spark, triples.as[graft.spark.Triple])
-      val lsh = Linker.candidatePairs(spark, vocab, maxDistance = 0.3)
-      val exact = Linker.exactNormLinks(spark, vocab)
-      lsh.unionByName(exact).dropDuplicates("name_a", "name_b")
+      // names with one normal form share their 3-gram set, so the LSH
+      // join already returns every exact-normal-form pair (dist 0.0),
+      // and its output is distinct
+      Linker.candidatePairs(spark, vocab, maxDistance = 0.3)
     }
 
     val nodes = stages.stage("nodes", stages.outputRowsOf("links")) {

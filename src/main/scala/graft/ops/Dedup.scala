@@ -428,13 +428,11 @@ object Dedup {
     */
   def connectedKeepers(spark: SparkSession, pairs: DataFrame,
       maxIter: Int = 20): DataFrame = {
-    import spark.implicits._
-    val edges = pairs
-      .select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .as[(Long, Long)].rdd
     // the shared CC core labels each vertex with the smallest vertex
     // id in its component — which IS the min-doc-id keeper election
-    graft.spark.Cc.components(spark, edges, maxIter)
+    graft.spark.Cc.components(spark,
+        pairs.select(col("id_a").cast("long").as("a"),
+          col("id_b").cast("long").as("b")), maxIter)
       .toDF("doc_id", "keeper")
   }
 

@@ -1,6 +1,5 @@
 package graft.spark
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,7 +27,7 @@ import org.apache.spark.sql.functions._
   *    clusters, entity alias groups ARE star-heavy) vs O(diameter)
   *    Pregel supersteps;
   *  - the plan runs under AQE: shuffle partitioning right-sizes to the
-  *    live edge volume at every scale instead of the RDD path's fixed
+  *    live edge volume at every scale instead of a fixed RDD
   *    parallelism (guide §2.2/§2.4 — fewer, right-sized exchanges);
   *  - skew in the emit join (a hot node fanning its edges back out) is
   *    AQE skew-join territory, the DataFrame analog of the old
@@ -46,7 +45,8 @@ import org.apache.spark.sql.functions._
   */
 object Cc {
 
-  /** Connected components over undirected (a, b) edge pairs.
+  /** Connected components over undirected edge pairs, a DataFrame with
+    * long columns `a` and `b`.
     *
     * @param maxIter round bound — each round is one large-star +
     *   small-star pass (a handful of small Spark jobs); the loop exits
@@ -57,25 +57,24 @@ object Cc {
     * @return (id, component) — component is the smallest vertex id in
     *   the component, i.e. the min-id election both consumers want.
     */
-  def components(spark: SparkSession, edges: RDD[(Long, Long)],
+  def components(spark: SparkSession, edges: DataFrame,
       maxIter: Int = 20): DataFrame = {
-    // checkpoint the raw pairs ONCE: the upstream pipeline that
-    // produced `edges` (e.g. the whole MinHash-LSH pass) executes
-    // exactly one time, like the old Graph.fromEdges materialization
-    val raw = spark.createDataFrame(edges).toDF("a", "b")
-      .localCheckpoint(true)
-    // node set (lazy off the checkpoint): vertices that appear ONLY in
-    // self-loops must still be emitted, labeled with themselves —
-    // GraphX emitted every vertex of every edge.
-    val nodes = raw.select(col("a").as("id"))
-      .union(raw.select(col("b")))
-      .distinct()
-    // canonical undirected simple edges (u < v)
-    var e = raw.filter(col("a") =!= col("b"))
+    // checkpoint the canonical (u <= v) distinct pairs ONCE: the
+    // upstream pipeline that produced `edges` (e.g. the whole MinHash-LSH
+    // pass) executes exactly one time, and both the node set and the
+    // edge set below derive lazily from this one table
+    val pairs = edges
       .select(least(col("a"), col("b")).as("u"),
         greatest(col("a"), col("b")).as("v"))
       .distinct()
       .localCheckpoint(true)
+    // node set: vertices that appear ONLY in self-loops must still be
+    // emitted, labeled with themselves
+    val nodes = pairs.select(col("u").as("id"))
+      .union(pairs.select(col("v")))
+      .distinct()
+    // canonical undirected simple edges (u < v)
+    var e = pairs.filter(col("u") =!= col("v"))
     // --- one alternating round, lazily composed -----------------------
     // large-star: every node connects its LARGER neighbors to the min
     // of its closed neighborhood (groupBy-min is map-side combinable;
@@ -104,7 +103,6 @@ object Cc {
         .union(smin.select(col("m").as("u"), col("x").as("v")))
         .distinct()
     }
-    val debug = sys.env.get("SPARK_GRAFT_CC_DEBUG").contains("1")
     var converged = e.isEmpty
     var round = 0
     // BATCHED rounds: two alternating rounds compose lazily into one
@@ -124,7 +122,6 @@ object Cc {
     // 30-50x. The eager localCheckpoint gives each round an opaque,
     // flat base; its extra job is small and scale-safe.
     while (!converged && round < maxIter) {
-      val tRound = System.nanoTime()
       val ss = smallStar(largeStar(e)).localCheckpoint(true)
       // Fixpoint test: `ss` is converged exactly when it is a STAR
       // FOREST — (a) no vertex appears on both the root (u) and member
@@ -145,9 +142,6 @@ object Cc {
       converged = dupV.unionByName(rootAsMember).isEmpty
       e = ss
       round += 1
-      if (debug) System.err.println(
-        f"[cc] round $round ${(System.nanoTime() - tRound) / 1e9}%.3f s " +
-          s"converged=$converged")
     }
     // At the fixpoint `e` is a star forest: (root=u, member=v) with
     // u the component min. Unconverged components are part-collapsed

@@ -11,6 +11,7 @@ class EntrySmokeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("entry() yields triples on the reference corpus") {
+    graft.corpus.RefCorpus.requirePresent()
     val df = SparkEntry.entry(spark)
     assert(Set("subj", "pred", "obj", "url").subsetOf(df.columns.toSet))
     assert(df.count() > 0)

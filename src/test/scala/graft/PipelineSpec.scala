@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.RefCorpus
 import graft.dom.Bs4Config
@@ -9,31 +8,6 @@ import graft.kg.Triples
 import graft.metrics.SpanMetrics
 import graft.spark.ExtractStage
 import graft.tag.Hmm
-
-object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** Recursive temp-dir cleanup shared by the specs (was copy-pasted
-    * nine times across the kg/io suites). Null-safe on vanished dirs.
-    */
-  def deleteRec(p: java.io.File): Unit = {
-    if (p.isDirectory) {
-      val fs = p.listFiles
-      if (fs != null) fs.foreach(deleteRec)
-    }
-    p.delete()
-  }
-}
 
 /** End-to-end Spark pipeline against the reference corpus: the triples
   * acceptance gate (BASELINE.md: (subj,pred,obj) P/R >= 0.95 vs the
@@ -65,6 +39,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("triples gate: pipeline P/R >= 0.95 vs reference test corpus") {
+    RefCorpus.requirePresent()
     import spark.implicits._
     val testIds = ConllCodec.parseDocs(new String(
       java.nio.file.Files.readAllBytes(
@@ -89,6 +64,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("HMM fit on valid, self-train + decode test: span F1 in range") {
+    RefCorpus.requirePresent()
     import spark.implicits._
     val train = ConllCodec.read(spark, s"${RefCorpus.RefData}/valid").cache()
     val test = ConllCodec.read(spark, s"${RefCorpus.RefData}/test").cache()

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression gate: the properties that make the flagship
@@ -100,26 +102,50 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("kg_pagerank and CC leave no cached tables or persistent RDDs behind") {
-    // pagerank caches its edge⋈outdeg table across iterations and
-    // GraphX caches its graphs — both must be FREED once the result
-    // materializes, or every invocation in a long-lived session (this
-    // bench suite, a multi-batch driver) pins more executor memory
+    // the graph operators materialize only through eager
+    // localCheckpoint, so a long-lived session (this bench suite, a
+    // multi-batch driver) gains no cache entry per invocation; the
+    // checkpoint blocks of the returned (and here already dropped)
+    // frames are cleaned by the ContextCleaner
     spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
     SparkEntry.queries("kg_pagerank")(spark, sfDir).collect()
     SparkEntry.queries("doc_dedup_clusters")(spark, sfDir).collect()
     assert(spark.sharedState.cacheManager.isEmpty,
       "a cached DataFrame leaked past its operator")
-    // localCheckpoint blocks of the RETURNED (and here already
-    // dropped) frames are cleaned by the ContextCleaner; what must NOT
-    // remain is any GraphX vertex/edge RDD — the graph pair is the
-    // unbounded-size leak
-    val graphRdds = spark.sparkContext.getPersistentRDDs.values
-      .filter(r => r.toString.contains("VertexRDD") ||
-        r.toString.contains("EdgeRDD"))
-    assert(graphRdds.isEmpty,
-      s"GraphX graphs leaked: ${graphRdds.map(_.toString).mkString("; ")}")
+  }
+
+  test("graph operators run beside a poisoned caller cache and leave it registered") {
+    import spark.implicits._
+    // the caller caches a read of a path that does not exist, and its
+    // first action fails: an operator that re-plans the session's cache
+    // entries (as cache()/unpersist do) would trip over this one
+    val missing = java.nio.file.Files.createTempDirectory("graft-poison")
+      .resolve("absent").toString
+    val poisoned = graft.io.ConllCodec.read(spark, missing).cache()
+    try {
+      intercept[Exception](poisoned.count())
+      val e = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "d"))
+        .toDF("src", "dst")
+      val w = e.withColumn("weight", lit(1L))
+      assert(graft.kg.GraphOps.pagerank(spark, e, iters = 2).count() == 4)
+      assert(graft.kg.GraphOps.pagerank(spark, e, iters = 2,
+        danglingRedistribute = true).count() == 4)
+      assert(graft.kg.GraphOps.pagerankTol(spark, e, tol = 1e-3)._1
+        .count() == 4)
+      assert(graft.kg.GraphOps.shortestPaths(spark, w, "a", iters = 2)
+        .count() == 4)
+      assert(graft.kg.GraphOps.labelPropagation(spark, e, rounds = 2)
+        .count() == 4)
+      val names = Seq(("ann", "anne"), ("anne", "annie"))
+        .toDF("name_a", "name_b")
+      assert(graft.kg.Canonicalize.components(spark, names)
+        .select("component").distinct().count() == 1)
+      val ids = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
+      assert(graft.ops.Dedup.connectedKeepers(spark, ids)
+        .select("keeper").distinct().count() == 2)
+      assert(poisoned.storageLevel != StorageLevel.NONE,
+        "an operator dropped the caller's cache entry")
+    } finally poisoned.unpersist()
   }
 
   test("kg_communities: LPA argmax is an aggregation, not a window sort") {

@@ -1,6 +1,7 @@
 package graft.extract
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.corpus.RefCorpus.{RefData, requirePresent}
 import graft.dom.Bs4Config
 
 /** Byte-parity of the extraction kernel against the reference goldens
@@ -32,9 +33,10 @@ class ExtractorParitySpec extends AnyFunSuite {
     bad
   }
 
-  lazy val docs = parseSplit(s"$RefDir/valid") ++ parseSplit(s"$RefDir/test")
+  lazy val docs = parseSplit(s"$RefData/valid") ++ parseSplit(s"$RefData/test")
 
   test("59 of 60 golden docs are byte-identical; only doc 36 differs") {
+    requirePresent()
     val results = docs.map(d => d.id -> compareDoc(d.lines, extractLines(d.id, GoldenConfig)))
     val failing = results.filter(_._2 > 0)
     assert(failing.map(_._1) == Vector(36),
@@ -42,6 +44,7 @@ class ExtractorParitySpec extends AnyFunSuite {
   }
 
   test("doc 36 mismatch is reference corpus drift, not extractor semantics") {
+    requirePresent()
     // the shipped 036.html has starred surnames ("Kepler*") that the golden
     // (token "Kepler") predates; all 44 differing lines trace to them
     val html = readHtml(36)
@@ -54,6 +57,7 @@ class ExtractorParitySpec extends AnyFunSuite {
   }
 
   test("notebook cell-2 golden for doc 001 (single-name label quirk)") {
+    requirePresent()
     // RNE Dataset.ipynb cell 2 has an indentation bug: only the LAST line
     // of target_names_001.txt becomes a target name
     val golden = GoldenData.cell2Golden()

@@ -10,6 +10,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("extract_tokens generator matches the kernel over SQL") {
+    graft.corpus.RefCorpus.requirePresent()
     import spark.implicits._
     GraftExtensions.register(spark)
     graft.corpus.RefCorpus.pages(spark, Seq(7, 10)).createOrReplaceTempView("pages_v")

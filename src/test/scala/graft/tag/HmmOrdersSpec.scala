@@ -16,6 +16,7 @@ class HmmOrdersSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("HMM orders 1-2 with/without self-training: end-to-end bands") {
+    RefCorpus.requirePresent()
     import spark.implicits._
     val train = ConllCodec.read(spark, s"${RefCorpus.RefData}/valid").cache()
     val test = ConllCodec.read(spark, s"${RefCorpus.RefData}/test").cache()
