@@ -14,12 +14,15 @@ import graft.tag.Hmm
   * Every stage is checkpoint-resumable (see [[Stages]]). Usage:
   *
   *   spark-submit --class graft.kg.Main <jar> <pagesParquet|ref> <outDir>
-  *     [gold|hmm|bilstm:<weightsDir>]
+  *     [gold|hmm:<conllDir>|bilstm:<weightsDir>]
   *
   * `ref` loads the reference corpus fixture; `gold` tags mentions from
-  * carried labels (dataset-construction path), `hmm` fits an HMM on the
-  * reference valid split and decodes, `bilstm:<dir>` decodes with
-  * imported Bi-LSTM-CRF weights (BiLstmWeightsIO parquet layout).
+  * carried labels (dataset-construction path), `hmm:<dir>` fits an HMM
+  * on the labeled 15-column CoNLL files in `<dir>`, self-trains on the
+  * corpus and decodes, `bilstm:<dir>` decodes with imported
+  * Bi-LSTM-CRF weights (BiLstmWeightsIO parquet layout). The run ends
+  * with one JSON line: the edge count and, per stage, its output, input
+  * and skipped rows and wall ms from the lineage table.
   */
 object Main {
 
@@ -72,6 +75,8 @@ object Main {
       tagger: String, stMinCount: Long = 1L,
       skipped: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     import spark.implicits._
+    require(tagger != "hmm",
+      "the hmm tagger trains on labeled CoNLL files: pass hmm:<conllDir>")
     val stages = new Stages(spark, outDir)
 
     // input_rows for lineage comes from an accumulator filled DURING
@@ -91,17 +96,6 @@ object Main {
         skipped = Some(skipAcc), inputPages = Some(inputPages)).toDF()
     }
 
-    // fit at most once even though two stages decode (mentions and
-    // relations); skipped entirely when both stages resume from
-    // checkpoint
-    lazy val hmmModel: graft.tag.HmmModel = {
-      val train = graft.io.ConllCodec.read(spark,
-        s"${RefCorpus.RefData}/valid")
-      val m0 = Hmm.fit(spark, train, timeSteps = 1, useFeatures = true)
-      Hmm.selfTrain(spark, m0, sents.as[graft.spark.SentenceRow],
-        minCount = stMinCount)
-    }
-
     // Stage input_rows from here on derive from the PREVIOUS stage's
     // lineage output_rows total (Stages.outputRowsOf — free in-run,
     // one tiny lineage read on resume) instead of a fresh count() over
@@ -113,9 +107,16 @@ object Main {
     // would double the dominant inference cost); gold mode uses the
     // carried labels directly
     val (tagged, tagConfidence, taggedStage) = tagger match {
-      case "hmm" =>
+      // "hmm:<conllDir>" — fit on the labeled CoNLL files in conllDir,
+      // self-train on the corpus, decode; all inside the stage block, so
+      // a checkpoint-resumed run never reads the training data
+      case h if h.startsWith("hmm:") =>
         val t = stages.stage("tagged", stages.outputRowsOf("sentences")) {
-          Triples.decodedSentences(spark, hmmModel,
+          val train = graft.io.ConllCodec.read(spark, h.stripPrefix("hmm:"))
+          val m0 = Hmm.fit(spark, train, timeSteps = 1, useFeatures = true)
+          val model = Hmm.selfTrain(spark, m0,
+            sents.as[graft.spark.SentenceRow], minCount = stMinCount)
+          Triples.decodedSentences(spark, model,
             sents.as[graft.spark.SentenceRow]).toDF()
         }
         (t, 0.9, "tagged")
@@ -212,14 +213,16 @@ object Main {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // durable checkpoint location next to the stage outputs (works for
-    // hdfs://, s3a:// outDirs too — same FileSystem resolution)
-    spark.sparkContext.setCheckpointDir(s"$outDir/_checkpoints")
     val edges = run(spark, pagesSrc, outDir, tagger)
     val n = edges.count()
-    val stages = new Stages(spark, outDir)
-    val lineageRows = stages.lineage().count()
-    println(s"""{"edges":$n,"lineage_rows":$lineageRows,"out":"$outDir"}""")
+    // input_rows, skipped_rows and wall_ms are per-stage values repeated
+    // on each of the stage's partition rows; output_rows is per partition
+    val perStage = new Stages(spark, outDir).lineage().groupBy("stage")
+      .agg(sum("output_rows").as("output_rows"),
+        max("input_rows").as("input_rows"),
+        max("skipped_rows").as("skipped_rows"), max("wall_ms").as("wall_ms"))
+      .orderBy("stage").toJSON.collect()
+    println(s"""{"edges":$n,"stages":[${perStage.mkString(",")}],"out":"$outDir"}""")
     spark.stop()
   }
 }

@@ -10,27 +10,26 @@ import org.apache.spark.sql.functions._
   *
   * Each stage materializes to `<base>/<name>` (Parquet + `_SUCCESS`);
   * re-running the pipeline skips every stage whose output already
-  * exists, so a killed job resumes from the last completed stage. A
-  * lineage row per output partition (stage, partition_id, input_rows,
-  * output_rows, wall_ms) appends to `<base>/_lineage`.
+  * exists, so a killed job resumes from the last completed stage.
   *
-  * CONCURRENCY CONTRACT: one runner per outDir at a time. run_seq is
-  * assigned by read-then-write over the shared lineage dir (max
-  * recorded + 1, floored by this runner's clock), so two runners
-  * appending the SAME stage concurrently can mint the same run_seq.
-  * That violation is now DETECTED, not silently summed: every runner
-  * stamps its rows with a per-instance `runner_nonce`, and
-  * [[outputRowsOf]] reports unknown (-1) when the latest run_seq of a
-  * stage mixes nonces — mirroring the legacy run_seq-0 guard.
-  * Sequential resumes — including from a different host with a skewed
-  * clock — are exactly what the scheme is built for; run concurrent
-  * drivers against separate outDirs.
+  * LAYOUT: the lineage table `<base>/_lineage` is partitioned by stage.
+  * Each stage owns `_lineage/stage=<name>/`, holding one row per output
+  * partition (partition_id, input_rows, skipped_rows, output_rows,
+  * wall_ms, runner_nonce). The partition is overwritten (dynamic
+  * partition overwrite) whenever the stage is computed, so a stage that
+  * was recomputed after its dir was deleted holds only its latest row
+  * set and can never be double-counted.
+  *
+  * CONCURRENCY CONTRACT: one runner per outDir at a time. Every runner
+  * stamps its rows with a per-instance `runner_nonce`; two runners that
+  * wrote the same stage concurrently can leave rows of both in one
+  * partition, and [[outputRowsOf]] then reports unknown (-1) rather
+  * than the sum. Sequential resumes, from any host, are what the
+  * layout is built for; run concurrent drivers against separate
+  * outDirs.
   */
 final class Stages(spark: SparkSession, base: String) {
 
-  // per-runner identity: stamps every lineage row this instance
-  // appends, so a concurrent-writer collision on run_seq is visible
-  // afterwards (mixed nonces within one run) instead of double-counted
   private val runnerNonce: String = java.util.UUID.randomUUID().toString
 
   private def successExists(dir: String): Boolean = {
@@ -41,28 +40,8 @@ final class Stages(spark: SparkSession, base: String) {
 
   def lineagePath: String = s"$base/_lineage"
 
-  def lineage(): DataFrame = {
-    // mergeSchema: a resumed pre-upgrade outDir mixes lineage files
-    // with fewer columns; plain read samples ONE footer for the
-    // schema, so the column set would be nondeterministic. Old rows
-    // read as null skipped_rows -> 0 (nothing was skipped back then)
-    // and null run_seq -> 0 (one implicit first run).
-    val raw = spark.read.option("mergeSchema", "true").parquet(lineagePath)
-    val withSkip =
-      if (raw.columns.contains("skipped_rows"))
-        raw.withColumn("skipped_rows", coalesce(col("skipped_rows"), lit(0L)))
-      else raw.withColumn("skipped_rows", lit(0L))
-    val withSeq =
-      if (withSkip.columns.contains("run_seq"))
-        withSkip.withColumn("run_seq", coalesce(col("run_seq"), lit(0L)))
-      else withSkip.withColumn("run_seq", lit(0L))
-    // pre-nonce rows coalesce to ONE constant (never a false mixed-
-    // nonce ambiguity on resumed old outDirs)
-    if (withSeq.columns.contains("runner_nonce"))
-      withSeq.withColumn("runner_nonce",
-        coalesce(col("runner_nonce"), lit("legacy")))
-    else withSeq.withColumn("runner_nonce", lit("legacy"))
-  }
+  /** All lineage rows; partition discovery restores the `stage` column. */
+  def lineage(): DataFrame = spark.read.parquet(lineagePath)
 
   /** output_rows totals of stages computed by THIS runner — recorded
     * for free while the lineage rows are built, so downstream stages
@@ -72,74 +51,23 @@ final class Stages(spark: SparkSession, base: String) {
   private val computedOutputRows =
     scala.collection.mutable.Map.empty[String, Long]
 
-  // wall-clock based but strictly increasing within this runner, so
-  // two same-millisecond stage writes can't share a run_seq
-  private val lastRunSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-  private def nextRunSeq(): Long =
-    lastRunSeq.updateAndGet(prev =>
-      math.max(prev + 1, System.currentTimeMillis()))
-
-  /** The largest run_seq already recorded for `name` (0 when none).
-    * A NEW stage write must exceed this even when the writing JVM's
-    * clock is behind the previous writer's (NTP step-back, a different
-    * driver host against a shared outDir) — "latest run wins" in
-    * [[outputRowsOf]] must follow write order, not wall clocks.
-    */
-  private def maxRunSeqOf(name: String): Long =
-    try {
-      val rows = lineage().filter(col("stage") === name)
-        .agg(max(col("run_seq"))).collect()
-      if (rows.isEmpty || rows(0).isNullAt(0)) 0L else rows(0).getLong(0)
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => 0L // no lineage yet
-    }
-
   /** Total output rows of stage `name` — the lineage-derived stand-in
-    * for a fresh `count()` over the stage's parquet (a pipeline of K
-    * stages would otherwise pay ~K redundant full-table scans just to
-    * record each stage's input_rows; stage N's input IS stage N-1's
-    * output, already durably recorded per partition). Resolution:
-    * recorded this run (free) -> summed from the LATEST lineage run of
-    * that stage (the resume path; one tiny-file read — the run_seq
-    * filter keeps a stage that executed more than once against the
-    * same outDir, e.g. after its dir was deleted to force a recompute,
-    * from double-counting across appends) -> -1 (unknown — e.g. a
-    * stage dir that survived a crash whose lineage write did not;
-    * callers record -1 rather than guessing).
+    * for a fresh `count()` over the stage's parquet (stage N's input IS
+    * stage N-1's output, already durably recorded per partition).
+    * Resolution: recorded this run (free) -> summed from the stage's
+    * lineage partition (the resume path; one tiny-file read) -> -1
+    * (unknown: no lineage partition, e.g. a stage dir that survived a
+    * crash whose lineage write did not, or rows from two runners).
     */
   def outputRowsOf(name: String): Long =
     computedOutputRows.getOrElseUpdate(name, {
       try {
-        val mine = lineage().filter(col("stage") === name)
-        val rows = mine
-          .join(mine.agg(max(col("run_seq")).as("run_seq")), Seq("run_seq"))
-          .agg(sum(col("output_rows")), max(col("run_seq")),
-            count(lit(1)), countDistinct(col("partition_id")),
-            sum(when(col("partition_id") === -1, 1L).otherwise(0L)),
-            countDistinct(col("runner_nonce"))).collect()
-        if (rows.isEmpty || rows(0).isNullAt(0)) -1L
-        // two concurrent runners that minted the SAME run_seq (the
-        // documented contract violation): their appends are
-        // indistinguishable by sequence but not by nonce — report
-        // unknown rather than the sum of both runs
-        else if (rows(0).getLong(5) > 1L) -1L
-        else {
-          // legacy guard: every pre-upgrade append coalesced to
-          // run_seq 0, so a stage force-recomputed more than once back
-          // then has SEVERAL appends sharing the "latest" run. Visible
-          // as duplicate partition_ids, OR as an empty-run sentinel
-          // (partition_id -1) mixed with real partition rows — a single
-          // clean append writes the sentinel ONLY when it has no other
-          // rows. Report unknown (-1) rather than an inflated stale
-          // sum; post-upgrade runs get a fresh run_seq per append and
-          // never trip this.
-          val n = rows(0).getLong(2)
-          val legacyAmbiguous = rows(0).getLong(1) == 0L &&
-            (n != rows(0).getLong(3) || (rows(0).getLong(4) >= 1L && n > 1L))
-          if (legacyAmbiguous) -1L else rows(0).getLong(0)
-        }
+        val r = spark.read.parquet(s"$lineagePath/stage=$name")
+          .agg(sum(col("output_rows")), countDistinct(col("runner_nonce")))
+          .head()
+        if (r.isNullAt(0) || r.getLong(1) > 1L) -1L else r.getLong(0)
       } catch {
-        case _: org.apache.spark.sql.AnalysisException => -1L // no lineage yet
+        case _: org.apache.spark.sql.AnalysisException => -1L // no lineage
       }
     })
 
@@ -174,9 +102,6 @@ final class Stages(spark: SparkSession, base: String) {
         .collect().map(r => (r.getInt(0), r.getLong(1)))
       val rows = if (partRows.isEmpty) Array((-1, 0L)) else partRows
       computedOutputRows(name) = partRows.map(_._2).sum
-      // run_seq marks which append is the CURRENT execution of this
-      // stage; outputRowsOf reads only the max, so a force-recomputed
-      // stage (dir deleted, lineage appended again) never double-counts
       spark.createDataFrame(rows.toIndexedSeq)
         .toDF("partition_id", "output_rows")
         .select(
@@ -186,10 +111,12 @@ final class Stages(spark: SparkSession, base: String) {
           lit(skipRows).as("skipped_rows"),
           col("output_rows"),
           lit(wallMs).as("wall_ms"),
-          lit(math.max(maxRunSeqOf(name) + 1, nextRunSeq())).as("run_seq"),
           lit(runnerNonce).as("runner_nonce"))
         .coalesce(1)
-        .write.mode("append").parquet(lineagePath)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("stage")
+        .parquet(lineagePath)
       out
     }
   }

@@ -141,4 +141,48 @@ class MainPipelineSpec extends AnyFunSuite {
     graft.TestSpark.deleteRec(new java.io.File(dir))
     graft.TestSpark.deleteRec(new java.io.File(wdir))
   }
+
+  test("hmm:<conllDir> tagger trains from the given CoNLL dir and drives the pipeline") {
+    import spark.implicits._
+    // a few labeled sentences in the 15-column format (tkn tag f0..f12),
+    // with the feature values the extractor gives the pages below
+    def line(tkn: String, tag: String): String =
+      s"$tkn $tag $tkn 0 0 0 0 0 0 0 0 0 0 div.body doc"
+    val sentence = Seq("faculty" -> "O", "page" -> "O", "zzjohn" -> "B-PER",
+      "zzdoe" -> "I-PER", "office" -> "O")
+    val conll = java.nio.file.Files.createTempDirectory("hmm_conll")
+    java.nio.file.Files.write(conll.resolve("train.conll"),
+      Seq.fill(4)(sentence.map { case (t, y) => line(t, y) }.mkString("\n"))
+        .mkString("", "\n\n", "\n").getBytes("UTF-8"))
+
+    val pages = spark.createDataset((0 until 6).map { i =>
+      val html = "<html><body><div class=\"doc\"><p>faculty page " + i +
+        " zzjohn zzdoe office</p></div></body></html>"
+      graft.spark.Page(s"doc://hmm/$i", new java.sql.Timestamp(0L),
+        html.getBytes(java.nio.charset.StandardCharsets.UTF_8), "", "en")
+    })
+    val dir = java.nio.file.Files.createTempDirectory("graft_main_hmm").toString
+    val edges = Main.runPages(spark, pages, None,
+      Some((_: String) => Seq("zzjohn zzdoe")), dir,
+      tagger = s"hmm:$conll", stMinCount = 1L)
+    val mentionEdges = edges.filter(col("pred") === "mentionsPerson").collect()
+    assert(mentionEdges.map(_.getAs[String]("obj")).toSet == Set("zzjohn zzdoe"),
+      s"decoded mentions: ${mentionEdges.mkString(", ")}")
+    assert(mentionEdges.length == 6, "one mention edge per page")
+
+    val lin = new Stages(spark, dir).lineage()
+    assert(lin.filter(col("stage") === "tagged").count() > 0,
+      "the tagged stage must record lineage rows")
+    assert(new java.io.File(s"$dir/edges/_SUCCESS").exists(),
+      "the edges stage must materialize")
+
+    // the bare form names the one it needs
+    val err = intercept[IllegalArgumentException] {
+      Main.runPages(spark, pages, None, None, dir, tagger = "hmm")
+    }
+    assert(err.getMessage.contains("hmm:<conllDir>"))
+
+    graft.TestSpark.deleteRec(new java.io.File(dir))
+    graft.TestSpark.deleteRec(conll.toFile)
+  }
 }

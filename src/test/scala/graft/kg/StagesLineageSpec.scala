@@ -4,36 +4,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-/** Lineage schema evolution: a resumed outDir written before the
-  * `skipped_rows` column mixes 5- and 6-column parquet files in
-  * `_lineage`; `lineage()` must read both deterministically (plain
-  * `spark.read.parquet` samples ONE footer for the schema) and
-  * null-fill old rows with 0.
+/** The lineage table: one `_lineage/stage=<name>` partition per stage,
+  * replaced whenever the stage is recomputed, and resume-time output
+  * totals derived from it instead of a recount of the stage's parquet.
   */
 class StagesLineageSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-
-  test("lineage() merges pre-skipped_rows files with current-format appends") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("stages_lineage").toString
-    val st = new Stages(spark, base)
-    // simulate a lineage file appended by the pre-upgrade engine
-    spark.range(1).select(
-      lit("old_stage").as("stage"), lit(0).as("partition_id"),
-      lit(10L).as("input_rows"), lit(10L).as("output_rows"),
-      lit(5L).as("wall_ms"))
-      .write.mode("append").parquet(st.lineagePath)
-    // resume: a new stage appends the 6-column format
-    st.stage("s_new", inputRows = 3L, skippedRows = 1L) {
-      Seq((1, "a"), (2, "b")).toDF("id", "v")
-    }
-    val l = st.lineage()
-    assert(l.columns.contains("skipped_rows"))
-    val byStage = l.select(col("stage"), col("skipped_rows"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(byStage("old_stage") == 0L) // null-filled, not NPE
-    assert(byStage("s_new") == 1L)
-  }
 
   test("outputRowsOf: in-run totals + lineage-derived resume, no recount") {
     import spark.implicits._
@@ -63,83 +39,36 @@ class StagesLineageSpec extends AnyFunSuite {
     assert(linC.forall(_.getAs[Long]("input_rows") == 1L))
   }
 
-  test("legacy multi-append at run_seq 0 reports unknown, not an inflated sum") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("stages_legacy").toString
-    val st = new Stages(spark, base)
-    // two pre-upgrade appends of the same stage (no run_seq column →
-    // both coalesce to 0): the "latest run" filter can't separate
-    // them, and duplicate partition_ids are the only tell — the sum
-    // 10+10=20 would be a silent double count
-    for (_ <- 1 to 2)
-      spark.range(1).select(
-        lit("old_twice").as("stage"), lit(0).as("partition_id"),
-        lit(10L).as("input_rows"), lit(10L).as("output_rows"),
-        lit(5L).as("wall_ms"))
-        .write.mode("append").parquet(st.lineagePath)
-    assert(st.outputRowsOf("old_twice") == -1L)
-    // a SINGLE legacy append stays summable (unique partition ids)
-    spark.range(2).select(
-      lit("old_once").as("stage"), col("id").cast("int").as("partition_id"),
-      lit(4L).as("input_rows"), lit(4L).as("output_rows"),
-      lit(5L).as("wall_ms"))
-      .write.mode("append").parquet(st.lineagePath)
-    assert(st.outputRowsOf("old_once") == 8L)
-    // legacy append + later legacy EMPTY recompute (sentinel only):
-    // partition ids {0, -1} are distinct, but the sentinel next to real
-    // rows is still two runs — the stale 7-row sum must not surface
-    spark.range(1).select(
-      lit("old_then_empty").as("stage"), lit(0).as("partition_id"),
-      lit(7L).as("input_rows"), lit(7L).as("output_rows"),
-      lit(5L).as("wall_ms"))
-      .write.mode("append").parquet(st.lineagePath)
-    spark.range(1).select(
-      lit("old_then_empty").as("stage"), lit(-1).as("partition_id"),
-      lit(0L).as("input_rows"), lit(0L).as("output_rows"),
-      lit(5L).as("wall_ms"))
-      .write.mode("append").parquet(st.lineagePath)
-    assert(st.outputRowsOf("old_then_empty") == -1L)
-    // a lone legacy sentinel (ran once, produced nothing) is still 0
-    spark.range(1).select(
-      lit("old_empty").as("stage"), lit(-1).as("partition_id"),
-      lit(0L).as("input_rows"), lit(0L).as("output_rows"),
-      lit(5L).as("wall_ms"))
-      .write.mode("append").parquet(st.lineagePath)
-    assert(st.outputRowsOf("old_empty") == 0L)
-  }
-
-  test("same run_seq from two concurrent runners reports unknown, not the sum") {
+  test("mixed runner nonces in one stage partition report unknown, not the sum") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("stages_race").toString
     val st = new Stages(spark, base)
-    // simulate the documented contract violation: two runners raced
-    // the read-then-write and minted the SAME run_seq — their appends
-    // carry different runner nonces
+    // simulate the documented contract violation: two runners wrote the
+    // same stage concurrently and both row sets landed in its partition
     for (nonce <- Seq("runner-a", "runner-b"))
       spark.range(1).select(
-        lit("raced").as("stage"), lit(0).as("partition_id"),
+        lit(0).as("partition_id"),
         lit(10L).as("input_rows"), lit(0L).as("skipped_rows"),
         lit(10L).as("output_rows"), lit(5L).as("wall_ms"),
-        lit(77L).as("run_seq"), lit(nonce).as("runner_nonce"))
-        .write.mode("append").parquet(st.lineagePath)
+        lit(nonce).as("runner_nonce"))
+        .write.mode("append").parquet(s"${st.lineagePath}/stage=raced")
     assert(st.outputRowsOf("raced") == -1L)
-    // one runner's multi-partition append stays summable (one nonce)
+    // one runner's multi-partition rows stay summable (one nonce)
     spark.range(2).select(
-      lit("clean").as("stage"), col("id").cast("int").as("partition_id"),
+      col("id").cast("int").as("partition_id"),
       lit(4L).as("input_rows"), lit(0L).as("skipped_rows"),
       lit(4L).as("output_rows"), lit(5L).as("wall_ms"),
-      lit(88L).as("run_seq"), lit("runner-a").as("runner_nonce"))
-      .write.mode("append").parquet(st.lineagePath)
+      lit("runner-a").as("runner_nonce"))
+      .write.mode("append").parquet(s"${st.lineagePath}/stage=clean")
     assert(st.outputRowsOf("clean") == 8L)
-    // a later SEQUENTIAL run by a different runner wins cleanly: the
-    // max run_seq has one nonce even though the stage history has two
-    spark.range(1).select(
-      lit("raced").as("stage"), lit(0).as("partition_id"),
-      lit(3L).as("input_rows"), lit(0L).as("skipped_rows"),
-      lit(3L).as("output_rows"), lit(5L).as("wall_ms"),
-      lit(99L).as("run_seq"), lit("runner-c").as("runner_nonce"))
-      .write.mode("append").parquet(st.lineagePath)
+    // a later SEQUENTIAL rerun of the raced stage replaces its
+    // partition, so it reports its own count, in-run and on resume
+    val st2 = new Stages(spark, base)
+    st2.stage("raced") { Seq(1, 2, 3).toDF("id") }
+    assert(st2.outputRowsOf("raced") == 3L)
     assert(new Stages(spark, base).outputRowsOf("raced") == 3L)
+    assert(st2.lineage().filter(col("stage") === "raced")
+      .select("runner_nonce").distinct().count() == 1L)
   }
 
   test("force-recomputed stage never double-counts across lineage appends") {
@@ -147,13 +76,62 @@ class StagesLineageSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("stages_recompute").toString
     new Stages(spark, base).stage("t") { Seq(1, 2, 3).toDF("id") }
     // the natural force-recompute gesture: delete the stage dir, keep
-    // the (append-only) lineage, re-run — lineage now holds TWO row
-    // sets for stage t; only the latest run_seq may count
+    // the lineage, re-run — the rerun replaces stage t's lineage rows
     graft.TestSpark.deleteRec(new java.io.File(s"$base/t"))
     val st2 = new Stages(spark, base)
     st2.stage("t") { Seq(1, 2, 3, 4, 5).toDF("id") }
     assert(st2.outputRowsOf("t") == 5L)
     // a THIRD runner resolves purely from lineage: latest run only
     assert(new Stages(spark, base).outputRowsOf("t") == 5L)
+    assert(st2.lineage().filter(col("stage") === "t")
+      .agg(sum("output_rows")).head().getLong(0) == 5L)
+
+    // the benchmark's resume gesture on a 4-stage chain: delete the
+    // last three stage dirs and rerun; the first stage resumes
+    val chain = java.nio.file.Files.createTempDirectory("stages_chain").toString
+    def run(st: Stages, firstRan: () => Unit): Unit = {
+      val a = st.stage("a") { firstRan(); Seq(1, 2, 3, 4).toDF("id") }
+      val b = st.stage("b", st.outputRowsOf("a")) { a.filter(col("id") > 1) }
+      val c = st.stage("c", st.outputRowsOf("b")) { b.filter(col("id") > 2) }
+      st.stage("d", st.outputRowsOf("c")) { c.filter(col("id") > 3) }
+    }
+    run(new Stages(spark, chain), () => ())
+    Seq("b", "c", "d").foreach(s =>
+      graft.TestSpark.deleteRec(new java.io.File(s"$chain/$s")))
+    var aRecomputed = false
+    val st3 = new Stages(spark, chain)
+    run(st3, () => aRecomputed = true)
+    assert(!aRecomputed, "stage a should have been resumed from checkpoint")
+    // exactly one row set per stage: one runner, distinct partition ids
+    val perStage = st3.lineage().groupBy("stage").agg(
+      count(lit(1)), countDistinct(col("partition_id")),
+      countDistinct(col("runner_nonce")), sum(col("output_rows")),
+      max(col("input_rows")))
+      .collect().map(r => r.getString(0) ->
+        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
+      .toMap
+    assert(perStage.keySet == Set("a", "b", "c", "d"))
+    perStage.foreach { case (s, (n, ids, nonces, _, _)) =>
+      assert(n == ids && nonces == 1L, s"stage $s: $n rows, $ids ids, $nonces nonces")
+    }
+    assert(perStage.map { case (s, v) => s -> v._4 } ==
+      Map("a" -> 4L, "b" -> 3L, "c" -> 2L, "d" -> 1L))
+    // the resumed b took its input_rows from a's lineage partition
+    assert(perStage("b")._5 == 4L)
+    TestSpark.deleteRec(new java.io.File(base))
+    TestSpark.deleteRec(new java.io.File(chain))
+  }
+
+  test("a lineage table from before the per-stage layout resumes as unknown") {
+    val base = java.nio.file.Files.createTempDirectory("stages_flat").toString
+    val st = new Stages(spark, base)
+    // the old append-only layout: flat files with a stage column
+    spark.range(1).select(
+      lit("old").as("stage"), lit(0).as("partition_id"),
+      lit(10L).as("input_rows"), lit(10L).as("output_rows"),
+      lit(5L).as("wall_ms"))
+      .write.mode("append").parquet(st.lineagePath)
+    assert(st.outputRowsOf("old") == -1L)
+    TestSpark.deleteRec(new java.io.File(base))
   }
 }
