@@ -1,20 +1,21 @@
 package graft.kg
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
+import org.apache.spark.unsafe.types.UTF8String
 import graft.extract.Extractor
 
 /** Entity-linking candidate generation (SURVEY §2.3 J4, north star:
   * "MinHash-LSH blocking + broadcast alias-dictionary scoring").
   *
   * Names are normalized with the reference accent-folding, shingled into
-  * character 3-grams, MinHash-bucketed, and candidate pairs come from the
-  * LSH `approxSimilarityJoin` — a bounded shuffle keyed by band hashes
-  * (never the full cross product). A broadcast alias dictionary links
-  * known aliases directly (hash semi-join against a broadcast map — no
-  * shuffle at all for the dictionary path).
+  * character 3-grams and MinHash-bucketed by spark.ml `MinHashLSH`'s rule
+  * in plain DataFrame code; candidate pairs come from an equi-join on
+  * (table, hash) — never the full cross product. A broadcast alias
+  * dictionary links known aliases directly (hash semi-join against a
+  * broadcast map — no shuffle at all for the dictionary path).
   */
 object Linker {
 
@@ -36,33 +37,45 @@ object Linker {
       .agg(count(lit(1)).as("support"))
 
   private val normUdf = udf((s: String) => normalize(s))
-  private val shinglesUdf = udf((s: String) => shingles(s))
 
-  /** LSH candidate pairs (nameA < nameB) with Jaccard distance below
-    * `maxDistance`. numHashTables trades recall vs shuffle width.
+  /** Distinct 3-gram ids, hashed as `HashingTF(1 << 18)` hashes a term:
+    * murmur3 `hashUnsafeBytes2` (seed 42) of the UTF-8 bytes, mod 2^18.
+    * SQL `hash()` (`hashUnsafeBytes`) differs on every ASCII 3-gram.
+    */
+  private val gramIdsUdf = udf((name: String) =>
+    shingles(normalize(name)).map { g =>
+      val u = UTF8String.fromString(g)
+      Math.floorMod(Murmur3_x86_32.hashUnsafeBytes2(
+        u.getBaseObject, u.getBaseOffset, u.numBytes, 42), 1 << 18)
+    }.distinct)
+
+  /** `MinHashLSH`'s prime and per-table `(a, b)`, drawn as its fit draws them. */
+  private val Prime = 2038074743L
+  private val TableCoefficients = {
+    val rand = new scala.util.Random(42)
+    Seq.fill(5)((1 + rand.nextInt(Prime.toInt - 1), rand.nextInt(Prime.toInt - 1)))
+  }
+
+  /** MinHash candidate pairs (nameA < nameB) whose Jaccard distance over
+    * the gram-id sets is below `maxDistance`: the rows, and bit for bit the
+    * `dist`, of spark.ml `MinHashLSH(5 tables, seed 42).approxSimilarityJoin`.
     */
   def candidatePairs(spark: SparkSession, names: DataFrame,
-      maxDistance: Double = 0.5, numHashTables: Int = 5,
-      numFeatures: Int = 1 << 18): DataFrame = {
-    val prepared = names
-      .withColumn("norm", normUdf(col("name")))
-      .withColumn("grams", shinglesUdf(col("norm")))
-      .filter(size(col("grams")) > 0)
-
-    val tf = new HashingTF().setInputCol("grams").setOutputCol("features")
-      .setNumFeatures(numFeatures).setBinary(true)
-    val feat = tf.transform(prepared)
-
-    val lsh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
-      .setNumHashTables(numHashTables).setSeed(42)
-    val model = lsh.fit(feat)
-
-    model.approxSimilarityJoin(feat, feat, maxDistance, "dist")
-      .filter(col("datasetA.name") < col("datasetB.name"))
-      .select(
-        col("datasetA.name").as("name_a"),
-        col("datasetB.name").as("name_b"),
-        col("dist"))
+      maxDistance: Double = 0.5): DataFrame = {
+    val tableHashes = TableCoefficients.map { case (a, b) =>
+      array_min(transform(col("ids"), i => ((i + 1L) * a + b) % Prime))
+    }
+    val keys = names.select(col("name"), gramIdsUdf(col("name")).as("ids"))
+      .select(col("name"), col("ids"),
+        posexplode(array(tableHashes: _*)).as(Seq("t", "h")))
+    val (l, r) = (keys.as("l"), keys.as("r"))
+    l.join(r, col("l.t") === col("r.t") && col("l.h") === col("r.h") &&
+        col("l.name") < col("r.name"))
+      .select(col("l.name").as("name_a"), col("r.name").as("name_b"),
+        (lit(1.0) - size(array_intersect(col("l.ids"), col("r.ids"))) /
+          size(array_union(col("l.ids"), col("r.ids")))).as("dist"))
+      .filter(col("dist") < maxDistance)
+      .distinct()
   }
 
   /** Direct links via a broadcast alias dictionary: alias-normal-form ->

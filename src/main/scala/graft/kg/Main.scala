@@ -8,7 +8,7 @@ import graft.tag.Hmm
 
 /** spark-submit entry for the full KG-construction pipeline (north rule):
   *
-  *   pages -> extract -> mentions -> triples -> link (LSH + alias dict)
+  *   pages -> extract -> mentions -> triples -> link (MinHash LSH)
   *         -> canonicalize (CC) -> materialize nodes/edges (+ lineage)
   *
   * Every stage is checkpoint-resumable (see [[Stages]]). Usage:
@@ -158,9 +158,9 @@ object Main {
 
     val links = stages.stage("links", stages.outputRowsOf("triples")) {
       val vocab = Linker.nameVocab(spark, triples.as[graft.spark.Triple])
-      // names with one normal form share their 3-gram set, so the LSH
-      // join already returns every exact-normal-form pair (dist 0.0),
-      // and its output is distinct
+      // names with one normal form share their 3-gram set, so the
+      // MinHash join already returns every exact-normal-form pair
+      // (dist 0.0), and its output is distinct
       Linker.candidatePairs(spark, vocab, maxDistance = 0.3)
     }
 

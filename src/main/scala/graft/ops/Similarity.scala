@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.spark.Scans
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`).
@@ -59,22 +60,6 @@ object Similarity {
     */
   private[ops] val MaxBroadcastProbes = 200000L
 
-  /** Spread a small scan across the cluster before a compute-heavy
-    * stage (guide §6: scan parallelism floor). The dot-product stream
-    * of every ANN join runs at the parallelism of the CORPUS SCAN —
-    * a corpus that fits one parquet split runs its entire O(n·probes)
-    * scoring on ONE task while the rest of the cluster idles (measured
-    * r8: the 4M-pair self-exhaustive scoring stage ran 1-2 tasks on 32
-    * cores). Repartitioning by the id key is deterministic, skew-free
-    * for unique ids, and a NO-OP at scale: whenever the scan already
-    * has at least `defaultParallelism` splits (any real corpus), the
-    * input is returned untouched — this is input-layout-adaptive, not
-    * a local-mode constant.
-    */
-  private[ops] def spreadSmallScan(df: DataFrame,
-      key: String = "vec_id"): DataFrame =
-    graft.spark.Scans.spread(df, col(key))
-
   /** Brute-force top-k by dot product: corpus x broadcast(probes).
     *
     * k == 1 avoids the ranking window entirely: `max(struct(score,
@@ -100,8 +85,8 @@ object Similarity {
         "use lshTopK/ivfTopK (bucketed, shuffle-joinable) or " +
         "ivfSelfTopK for corpus-sized probe sets")
     // corpus side spread before the keyless scoring join: the dot
-    // stream runs at the corpus scan's parallelism (see spreadSmallScan)
-    val joined = spreadSmallScan(corpus).as("c")
+    // stream runs at the corpus scan's parallelism (see Scans)
+    val joined = Scans.spread(corpus, col("vec_id")).as("c")
       .join(broadcast(probes.as("p")),
         col("c.vec_id") =!= col("p.vec_id"))
       .select(
@@ -508,9 +493,9 @@ object Similarity {
     // null-row semantics are unchanged (null embeddings drop out).
     // corpus spread across the cluster when its scan under-splits: the
     // cell-join's scoring stream otherwise runs at scan parallelism
-    // (no-op at scale — see spreadSmallScan). The self-join probe side
+    // (no-op at scale — see Scans). The self-join probe side
     // shares the spread frame so neither stream starves.
-    val corpusS = spreadSmallScan(corpus)
+    val corpusS = Scans.spread(corpus, col("vec_id"))
     val cb = corpusS.filter(col("embedding").isNotNull).withColumn("cell",
       coalesce(call_function("ivf_cell", col("embedding"), centroidsLit),
         lit(-1)))
@@ -729,7 +714,7 @@ object Similarity {
     // per probe and the extra exchange would cost more than it spreads
     // at the bucketed volume (measured r8: +0.4 s on sub-second
     // queries, -4 s on the exhaustive twin)
-    val cbBase = if (nBits == 0) spreadSmallScan(corpus) else corpus
+    val cbBase = if (nBits == 0) Scans.spread(corpus, col("vec_id")) else corpus
     val cb = cbBase.filter(col("embedding").isNotNull)
       .withColumn("bucket", coalesce(sigCol(col("embedding")), lit(-1)))
     val pb =

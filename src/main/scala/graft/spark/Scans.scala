@@ -9,7 +9,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * parquet split therefore runs the whole kernel on ONE task while the
   * rest of the cluster idles — measured r8: the sf0.1 `documents`
   * table is a single split, so every extraction-kernel query parsed
-  * all its pages single-threaded at local[32].
+  * all its pages single-threaded at local[32], and the 4M-pair
+  * self-exhaustive ANN scoring stage ran on 1-2 of 32 cores.
   *
   * [[spread]] hash-repartitions by a unique key to `defaultParallelism`
   * ONLY when the scan has fewer partitions than that — deterministic,

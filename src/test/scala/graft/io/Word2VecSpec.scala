@@ -78,6 +78,8 @@ class Word2VecSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("shard ended after 1"), e.getMessage)
     // header overstating the word count is the same corruption class
+    assert(new String(bytes, 0, headerEnd, "UTF-8") == "3 3\n",
+      "fixture header changed: the byte-0 overwrite below assumes \"3 3\"")
     val overstated = bytes.clone()
     overstated(0) = '9'.toByte // "3 3\n" -> "9 3\n"
     val e2 = intercept[IllegalArgumentException] {

@@ -31,6 +31,54 @@ class LinkSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1.contains("Garcia") && p._2.contains("Smith")))
   }
 
+  test("candidatePairs returns spark.ml MinHashLSH's rows with bit-identical dist") {
+    import spark.implicits._
+    import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
+    import graft.corpus.SyntheticCorpus.{FirstNames, LastNames}
+    // every first x last name (40 x 40, so each first name is a hot
+    // bucket), an accent-folded and a one-edit variant of each, then
+    // multi-byte grams and names of 0-2 characters
+    val rand = new scala.util.Random(7)
+    val full = for (f <- FirstNames; l <- LastNames) yield s"$f $l"
+    val folded = full.map(n => java.text.Normalizer
+      .normalize(n, java.text.Normalizer.Form.NFD).replaceAll("\\p{M}", ""))
+    val edited = full.map { n =>
+      n.updated(rand.nextInt(n.length), ('a' + rand.nextInt(26)).toChar)
+    }
+    val special = Seq("Łukasz Żółć", "Lukasz Zolc", "Łukasz Zolc",
+      "王小明", " 王小明", "王晓明", "山田太郎", "山田花子", "김민준", "김민지",
+      "司马相如与卓文君的故事", "司马相如与卓文君的传说",
+      "", " ", "a", "A", "ab", "Ab", "é", "xy")
+    val names = (full ++ folded ++ edited ++ special).distinct
+      .map(n => (n, 1L)).toDF("name", "support")
+    assert(names.count() > 3000)
+
+    val grams = udf((n: String) => Linker.shingles(Linker.normalize(n)))
+    val feat = new HashingTF().setInputCol("grams").setOutputCol("features")
+      .setNumFeatures(1 << 18).setBinary(true)
+      .transform(names.withColumn("grams", grams(col("name"))))
+    val model = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
+      .setNumHashTables(5).setSeed(42).fit(feat)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1),
+        java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSeq
+    for (maxDistance <- Seq(0.3, 0.4)) {
+      val expected = rows(model.approxSimilarityJoin(feat, feat, maxDistance, "dist")
+        .filter(col("datasetA.name") < col("datasetB.name"))
+        .select(col("datasetA.name"), col("datasetB.name"), col("dist"))).toSet
+      val got = Linker.candidatePairs(spark, names, maxDistance)
+      assert(got.columns.toSeq == Seq("name_a", "name_b", "dist"))
+      val gotSeq = rows(got)
+      val gotRows = gotSeq.toSet
+      assert(gotSeq.size == gotRows.size, "one row per pair")
+      assert(expected.size > 500, s"only ${expected.size} reference rows")
+      assert(expected.exists(_._1.exists(_ >= 0x3000)), "no CJK pair")
+      val (missing, extra) = (expected -- gotRows, gotRows -- expected)
+      assert(missing.size + extra.size == 0, s"maxDistance $maxDistance: " +
+        s"missing ${missing.take(5)}, extra ${extra.take(5)}")
+    }
+  }
+
   test("connected components + canonical election merge variant clusters") {
     val names = namesDf(
       ("Jose Garcia", 10L), ("José García", 3L), ("Garcia, Jose", 1L),
