@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.spark.Sessions
 
 /** Driver-run benchmark: per-query seconds at SPARK_GRAFT_SF_DIR, plus
   * the north-rule scaling evidence — the same KG pipeline job (synthetic
@@ -44,19 +45,11 @@ object Bench {
   private def session(cores: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    Sessions.session(s"graft-bench-$cores", cores)
   }
 
-  private def loadAvg(): Double =
+  /** Host 1-min load average, -1 where /proc/loadavg is unreadable. */
+  def loadAvg(): Double =
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.mkString.split(" ")(0).toDouble finally src.close()
@@ -133,6 +126,20 @@ object Bench {
     bestOf(Seq(s1, s2)).exists(tainted) ||
       (s1.sec >= 0 && s2.sec >= 0 && s2.sec > 1.5 * s1.sec)
 
+  /** `s` as a quoted JSON string. Every control character (< 0x20) is
+    * escaped: a tab or CR left raw in a harness-written string makes a
+    * strict reader such as Python's json.load reject the whole file.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** The driver-contract JSON line (pure, unit-testable — BENCH_r01 was
     * recorded `parsed:null` because sbt prefixed the line; the schema
     * itself must also stay machine-parseable).
@@ -141,21 +148,14 @@ object Bench {
       sfDir: String, scaling: String, queryEnv: String = "null",
       querySamples: String = "null", selfKnn: String = "null",
       floorSuspect: String = "null"): String = {
-    def esc(s: String): String =
-      s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
-    val qs = results.map { case (k, v) => "\"" + esc(k) + "\":" + v }
+    val qs = results.map { case (k, v) => jsonString(k) + ":" + v }
       .mkString("{", ",", "}")
     val failedJson = failed.map { case (k, v) =>
-      "\"" + esc(k) + "\":\"" + esc(v) + "\""
+      jsonString(k) + ":" + jsonString(v)
     }.mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""failed":$failedJson,"sf":"${esc(sfDir)}",""" +
+      s""""failed":$failedJson,"sf":${jsonString(sfDir)},""" +
       s""""query_env":$queryEnv,"query_samples":$querySamples,""" +
       s""""self_knn":$selfKnn,"floor_suspect":$floorSuspect,""" +
       s""""scaling":$scaling}"""
@@ -167,7 +167,7 @@ object Bench {
     // break the machine-readable line (the BENCH_r01 failure class)
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Sessions.defaultCores
     val scaleDocs = sys.env.getOrElse("SPARK_GRAFT_SCALE_DOCS", "120000").toLong
     val doScaling = sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") != "0"
     val doQueries = sys.env.getOrElse("SPARK_GRAFT_QUERY_PHASE", "1") != "0"
@@ -352,7 +352,7 @@ object Bench {
     spark.stop()
     val querySamples =
       if (!doQueries) "null"
-      else sampleLog.map { case (k, v) => "\"" + k + "\":" + v }
+      else sampleLog.map { case (k, v) => jsonString(k) + ":" + v }
         .mkString("{", ",", "}")
     // floor_suspect: the self-flag the driver can surface — `suspect`
     // goes true when >=10% of queries could not establish an untainted
@@ -361,7 +361,7 @@ object Bench {
     val floorSuspect =
       if (!doQueries) "null"
       else {
-        val names = suspects.map(n => "\"" + n + "\"").mkString("[", ",", "]")
+        val names = suspects.map(jsonString).mkString("[", ",", "]")
         val flag = suspects.size * 10 >= results.size && suspects.nonEmpty
         s"""{"suspect":$flag,"suspect_queries":$names}"""
       }

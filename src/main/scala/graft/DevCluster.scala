@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.spark.Sessions
 
 /** Multi-JVM scaling probe: runs the full KG job (synthetic pages →
   * extract → mentions → triples → count) on a `local-cluster[N,cores,
@@ -17,12 +17,7 @@ object DevCluster {
     val workers = if (args.nonEmpty) args(0).toInt else 2
     val coresPer = if (args.length > 1) args(1).toInt else 4
     val docs = if (args.length > 2) args(2).toLong else 60000L
-    val spark = SparkSession.builder()
-      .appName("graft-cluster")
-      .config("spark.sql.shuffle.partitions", workers * coresPer)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.session("graft-cluster", workers * coresPer)
     def job(n: Long): (Long, Double) =
       ScalingJob.run(spark, n, partitions = workers * coresPer * 6)
     job(docs) // warmup

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.spark.Sessions
 
 /** Scale-decade evidence: the full documents/embeddings query registry
   * timed at two corpus sizes a DECADE apart (default 5,000 -> 50,000
@@ -169,26 +170,6 @@ object ScaleDecade {
     "ann_lsh_plant_clustered" ->
       "srp_occupancy_is_cluster_bound_on_this_corpus__ivf_is_the_clustered_scale_path__law_measured_on_uniform_corpus_as_ann_lsh_plant_scaled")
 
-  private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale-decade")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private def loadAvg(): Double =
-    try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      try src.mkString.split(" ")(0).toDouble finally src.close()
-    } catch { case _: Throwable => -1.0 }
-
   private def time(fn: => DataFrame): (Double, Long) = {
     val t0 = System.nanoTime()
     val df = fn
@@ -280,7 +261,7 @@ object ScaleDecade {
     val m1 = sys.env.getOrElse("SPARK_GRAFT_DECADE_VECS", "2000").toLong
     val slack = 1.5
     val seed = 42L
-    val spark = session()
+    val spark = Sessions.session("graft-scale-decade")
 
     val dir1 = s"$base/decade1x"
     val dir10 = s"$base/decade10x"
@@ -323,7 +304,7 @@ object ScaleDecade {
       val (a1, _) = time(fn(spark, dir1))
       val (b1, rows1) = time(fn(spark, dir1))
       var s1 = math.min(a1, b1)
-      val l10 = loadAvg()
+      val l10 = Bench.loadAvg()
       var (s10, rows10) = time(fn(spark, dir10))
       var resampled = false
       // the PRE-resample ratio stays in the artifact: a suppressed flag
@@ -375,7 +356,7 @@ object ScaleDecade {
         val (a1, _) = time(fn(spark, dir1))
         val (b1, _) = time(fn(spark, dir1))
         var s1 = math.min(a1, b1)
-        val l100 = loadAvg()
+        val l100 = Bench.loadAvg()
         var (s100, rows100) = time(fn(spark, dir100))
         val ratioPre = s100 / math.max(s1, 1e-3)
         var resampled = false

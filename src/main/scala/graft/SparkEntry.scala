@@ -1299,8 +1299,7 @@ object SparkEntry {
       // volume instead of the batch engine's default (32 state
       // partitions x 5 micro-batches = 160 state-store commits for 500
       // rows). Scale-adaptive, not a local[32] constant: the count
-      // derives from the observed row volume and is env-overridable
-      // for production (see streamSession).
+      // derives from the observed row volume (see streamSession).
       val ss = streamSession(s, rows.length.toLong)
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
       val in = org.apache.spark.sql.execution.streaming.runtime
@@ -1625,22 +1624,17 @@ object SparkEntry {
     *
     * Scale policy (guide §2.2 applied to streaming state): one state
     * partition per ~1000 in-flight rows, floored at 1 and capped at the
-    * context's default parallelism locally; a production deployment
-    * overrides via SPARK_GRAFT_STREAM_PARTITIONS (state partitioning is
-    * a per-pipeline capacity decision — it must scale with key
-    * cardinality/ingest rate, and CANNOT be changed after the first
-    * checkpoint, which is exactly why it should not silently inherit a
-    * batch-engine constant). At the suite's 500-row replay the old
+    * context's default parallelism. Both streaming queries write to a
+    * memory sink with no durable checkpoint, so the count is derived
+    * afresh on every run. At the suite's 500-row replay the old
     * inherited 32 partitions meant 32 state-store commits per
     * micro-batch — 160 near-empty store files per run whose fsync/commit
     * latency, not computation, dominated both streaming queries.
     */
   private def streamSession(s: SparkSession, rows: Long): SparkSession = {
     val ss = s.newSession()
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS")
-      .map(_.toInt)
-      .getOrElse(math.max(1L, math.min(rows / 1000L,
-        s.sparkContext.defaultParallelism.toLong)).toInt)
+    val parts = math.max(1L, math.min(rows / 1000L,
+      s.sparkContext.defaultParallelism.toLong)).toInt
     ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
     ss
   }

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import graft.spark.Sessions
 
 /** Hot-bucket stress at realistic degenerate scale (BASELINE.md
   * "hot-bucket stress"): the bounded three-branch pairing
@@ -49,16 +50,7 @@ object StressBench {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_STRESS_N", "300000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stress")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.session("graft-stress")
 
     val hotChain = 4
     val template = "the same boilerplate navigation text repeated on " +

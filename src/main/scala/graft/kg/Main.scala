@@ -3,7 +3,7 @@ package graft.kg
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.RefCorpus
-import graft.spark.{ExtractStage, Page}
+import graft.spark.{ExtractStage, Page, Sessions}
 import graft.tag.Hmm
 
 /** spark-submit entry for the full KG-construction pipeline (north rule):
@@ -13,8 +13,8 @@ import graft.tag.Hmm
   *
   * Every stage is checkpoint-resumable (see [[Stages]]). Usage:
   *
-  *   spark-submit --class graft.kg.Main <jar> <pagesParquet|ref> <outDir>
-  *     [gold|hmm:<conllDir>|bilstm:<weightsDir>]
+  *   spark-submit [--master <url>] --class graft.kg.Main <jar>
+  *     <pagesParquet|ref> <outDir> [gold|hmm:<conllDir>|bilstm:<weightsDir>]
   *
   * `ref` loads the reference corpus fixture; `gold` tags mentions from
   * carried labels (dataset-construction path), `hmm:<dir>` fits an HMM
@@ -202,17 +202,7 @@ object Main {
     val pagesSrc = if (args.length > 0) args(0) else "ref"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_kg"
     val tagger = if (args.length > 2) args(2) else "gold"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-kg")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.session("graft-kg")
     val edges = run(spark, pagesSrc, outDir, tagger)
     val n = edges.count()
     // input_rows, skipped_rows and wall_ms are per-stage values repeated

@@ -1,20 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.spark.Sessions
 
 /** The one local SparkSession the specs share. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.session("graft-test", 8)
 
   /** Recursive temp-dir cleanup shared by the specs (was copy-pasted
     * nine times across the kg/io suites). Null-safe on vanished dirs.
