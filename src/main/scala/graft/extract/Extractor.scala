@@ -254,14 +254,8 @@ object Extractor {
 
   // --- labeling + gazetteer flags (util/html_segmenter.py:148-227) ------
 
-  /** emitBPer=false matches the golden files (zero B-PER occurrences:
-    * the dataset was generated before the IOB1 B-PER rule was added at
-    * `util/html_segmenter.py:184-191`); true matches the current
-    * reference source.
-    */
   def assignCorrectLabels(tokens: ArrayBuffer[HtmlToken],
-      correctNames: Seq[String], gaz: Gazetteers,
-      emitBPer: Boolean = false): Unit = {
+      correctNames: Seq[String], gaz: Gazetteers): Unit = {
     val names: Seq[Array[String]] = correctNames.map(_.split(" ", -1))
 
     var i = 0
@@ -281,9 +275,11 @@ object Extractor {
       }
       if (size == 0) i += 1
       else {
-        val prev = if (i > 0) tokens(i - 1).bio else "O"
-        tokens(i).bio = if (emitBPer && prev == "I-PER") "B-PER" else "I-PER"
-        var j = i + 1
+        // every name token is I-PER, never B-PER: this matches the
+        // golden files (zero B-PER occurrences — the dataset was
+        // generated before the IOB1 B-PER rule was added at
+        // `util/html_segmenter.py:184-191`)
+        var j = i
         while (j < i + size) { tokens(j).bio = "I-PER"; j += 1 }
         i += size
       }

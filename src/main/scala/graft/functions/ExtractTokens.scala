@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -59,75 +58,4 @@ case class ExtractTokens(child: Expression)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): ExtractTokens =
     copy(child = newChildren.head)
-}
-
-/** Session extensions: `spark.sql.extensions=graft.functions.GraftExtensions`
-  * (or GraftExtensions.register(spark)) installs the graft SQL functions.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction(GraftExtensions.extractTokensDescriptor)
-    e.injectFunction(GraftExtensions.fnv1a64Descriptor)
-    e.injectFunction(GraftExtensions.dotF32Descriptor)
-    e.injectFunction(GraftExtensions.simhash64Descriptor)
-    e.injectFunction(GraftExtensions.minhashSigDescriptor)
-    e.injectFunction(GraftExtensions.srpSigDescriptor)
-    e.injectFunction(GraftExtensions.ivfCellDescriptor)
-  }
-}
-
-object GraftExtensions {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-  val extractTokensDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("extract_tokens"),
-    new ExpressionInfo(classOf[ExtractTokens].getName, "extract_tokens"),
-    (exprs: Seq[Expression]) => ExtractTokens(exprs.head))
-
-  val fnv1a64Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("fnv1a64"),
-    new ExpressionInfo(classOf[Fnv1a64].getName, "fnv1a64"),
-    (exprs: Seq[Expression]) => Fnv1a64(exprs.head))
-
-  val simhash64Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("simhash64"),
-    new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-    (exprs: Seq[Expression]) => SimHash64(exprs.head))
-
-  val minhashSigDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("minhash_sig"),
-    new ExpressionInfo(classOf[MinhashSig].getName, "minhash_sig"),
-    (exprs: Seq[Expression]) => {
-      GraftFunctions.arity("minhash_sig", 3)(exprs)
-      MinhashSig(exprs.head, exprs(1), exprs(2))
-    })
-
-  val dotF32Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("dot_f32"),
-    new ExpressionInfo(classOf[DotF32].getName, "dot_f32"),
-    (exprs: Seq[Expression]) => {
-      GraftFunctions.arity("dot_f32", 2)(exprs); DotF32(exprs.head, exprs(1))
-    })
-
-  val srpSigDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("srp_sig"),
-    new ExpressionInfo(classOf[SrpSig].getName, "srp_sig"),
-    (exprs: Seq[Expression]) => {
-      GraftFunctions.arity("srp_sig", 2)(exprs); SrpSig(exprs.head, exprs(1))
-    })
-
-  val ivfCellDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("ivf_cell"),
-    new ExpressionInfo(classOf[IvfCell].getName, "ivf_cell"),
-    (exprs: Seq[Expression]) => {
-      GraftFunctions.arity("ivf_cell", 2)(exprs); IvfCell(exprs.head, exprs(1))
-    })
-
-  /** Imperative registration for an existing session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "extract_tokens", exprs => ExtractTokens(exprs.head), "built-in")
-    GraftFunctions.register(spark)
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -42,68 +41,4 @@ object Fnv1a64 {
 
   def hashString(s: String): Long =
     hashBytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-}
-
-/** Column helpers for graft-native expressions. Expressions are
-  * registered in the session function registry and invoked through the
-  * public `call_function` API (the Column(Expression) constructor is
-  * private[sql] in Spark 4).
-  */
-object GraftFunctions {
-  private[functions] def arity(name: String, n: Int)(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Unit =
-    require(exprs.length == n,
-      s"$name requires exactly $n argument(s), got ${exprs.length}")
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fnv1a64", { exprs => arity("fnv1a64", 1)(exprs); Fnv1a64(exprs.head) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f32", { exprs => arity("dot_f32", 2)(exprs); DotF32(exprs.head, exprs(1)) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", { exprs => arity("simhash64", 1)(exprs); SimHash64(exprs.head) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", { exprs =>
-        arity("minhash_sig", 3)(exprs)
-        MinhashSig(exprs.head, exprs(1), exprs(2))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "srp_sig", { exprs =>
-        arity("srp_sig", 2)(exprs); SrpSig(exprs.head, exprs(1))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ivf_cell", { exprs =>
-        arity("ivf_cell", 2)(exprs); IvfCell(exprs.head, exprs(1))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "canonical_url", { exprs =>
-        arity("canonical_url", 1)(exprs); CanonicalUrl(exprs.head)
-      }, "built-in")
-    // Spark's OWN runtime-filter expression (the one AQE injects for
-    // shuffle pruning), surfaced by name: bloom_might_contain(<foldable
-    // binary bloom blob>, <xxhash64 long>). Registering it keeps the
-    // Bloom prefilter of bloomContamination inside codegen instead of
-    // a per-gram Scala UDF — same class the engine trusts for its own
-    // runtime filters, zero custom kernel code.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain", { exprs =>
-        arity("bloom_might_contain", 2)(exprs)
-        org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(exprs.head, exprs(1))
-      }, "built-in")
-  }
-
-  def fnv1a64(spark: org.apache.spark.sql.SparkSession, c: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("fnv1a64", c)
-  }
-
-  def dotF32(spark: org.apache.spark.sql.SparkSession,
-      a: Column, b: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("dot_f32", a, b)
-  }
 }

@@ -1,6 +1,5 @@
 package graft.kg
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
@@ -13,9 +12,8 @@ import graft.extract.Extractor
   * Names are normalized with the reference accent-folding, shingled into
   * character 3-grams and MinHash-bucketed by spark.ml `MinHashLSH`'s rule
   * in plain DataFrame code; candidate pairs come from an equi-join on
-  * (table, hash) — never the full cross product. A broadcast alias
-  * dictionary links known aliases directly (hash semi-join against a
-  * broadcast map — no shuffle at all for the dictionary path).
+  * (table, hash) — never the full cross product. Names sharing one
+  * normal form link directly through [[exactNormLinks]].
   */
 object Linker {
 
@@ -76,23 +74,6 @@ object Linker {
           size(array_union(col("l.ids"), col("r.ids")))).as("dist"))
       .filter(col("dist") < maxDistance)
       .distinct()
-  }
-
-  /** Direct links via a broadcast alias dictionary: alias-normal-form ->
-    * canonical name. Pure map lookup inside the executors (broadcast
-    * hash semi-join).
-    */
-  def aliasLinks(spark: SparkSession, names: DataFrame,
-      aliasDict: Broadcast[Map[String, String]]): DataFrame = {
-    val lookup = udf((norm: String) => aliasDict.value.get(norm))
-    names
-      .withColumn("norm", normUdf(col("name")))
-      .withColumn("canonical", lookup(col("norm")))
-      .filter(col("canonical").isNotNull && col("canonical") =!= col("name"))
-      .select(
-        least(col("name"), col("canonical")).as("name_a"),
-        greatest(col("name"), col("canonical")).as("name_b"),
-        lit(0.0).as("dist"))
   }
 
   /** Exact-normal-form links: names whose normalization collides are the

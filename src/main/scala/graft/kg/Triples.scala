@@ -52,21 +52,17 @@ object Triples {
     * triple path.
     */
   def fromMentions(spark: SparkSession,
-      mentions: Dataset[Mention],
-      alreadyDeduped: Boolean = false): Dataset[Triple] = {
+      mentions: Dataset[Mention]): Dataset[Triple] = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     // relational projection (not a closure) so Catalyst can prune/fold
-    val t = mentions.select(
+    mentions.select(
       col("url").as("subj"),
       lit(MentionsPerson).as("pred"),
       col("name").as("obj"),
       col("url"),
       col("warc_ts"),
       col("confidence")).as[Triple]
-    // when the producer deduped page-locally (urls unique), the
-    // (subj,pred,obj,url) key is already distinct — skip the shuffle
-    if (alreadyDeduped) t
-    else t.dropDuplicates("subj", "pred", "obj", "url")
+      .dropDuplicates("subj", "pred", "obj", "url")
   }
 }

@@ -110,10 +110,8 @@ object Multimodal {
   /** REAL multi-frame decode via javax.imageio: one row per frame of a
     * multi-image container (the JDK's TIFF plugin reads/writes true
     * multi-page grayscale losslessly; animated GIFs decode through the
-    * same `getNumImages(true)` path). This makes the frame-sampling
-    * seam real for JDK-supported containers; byte-range [[frameSample]]
-    * remains the declared stub for true video codecs, which no JDK
-    * library decodes. Undecodable payloads surface as ONE
+    * same `getNumImages(true)` path). True video codecs, which no JDK
+    * library decodes, stay outside it. Undecodable payloads surface as ONE
     * status='error' row (frame_id -1); a container whose HEADER
     * decodes but where an individual frame then fails (e.g. truncated
     * mid-stream) keeps its good frames and reports a per-frame
@@ -322,7 +320,6 @@ object Multimodal {
     bos.toByteArray
   }
 
-  final case class MediaMeta(width: Int, height: Int, channels: Int, format: String)
   final case class Decoded(
       media_id: Long, width: Int, height: Int, channels: Int,
       format: String, feature: Array[Float])
@@ -431,55 +428,5 @@ object Multimodal {
           batch.iterator.map { case (id, bytes) => resizeBoxOne(id, bytes, fx, fy) }
         }
       }
-  }
-
-  /** Resize to (targetW x targetH) over an OPAQUE binary payload: the
-    * metadata arithmetic is real; the pixel resample is a stride-sample
-    * of the source bytes. With [[resizeImage]] now doing the REAL
-    * area-average resample for every JDK-decodable image, this remains
-    * only as the declared seam for codecs the JDK cannot decode (true
-    * video) — same status as [[frameSample]].
-    */
-  def resize(spark: SparkSession, media: DataFrame,
-      targetW: Int, targetH: Int, channels: Int = 3,
-      batchSize: Int = 64): DataFrame = {
-    import spark.implicits._
-    require(targetW > 0 && targetH > 0 && channels > 0,
-      "target dims and channels must be positive")
-    val outLen = targetW * targetH * channels
-    media.select(col("media_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          batch.iterator.map { case (id, bytes) =>
-            val b = if (bytes == null) Array.empty[Byte] else bytes
-            val out = new Array[Byte](outLen)
-            if (b.nonEmpty) {
-              var i = 0
-              while (i < outLen) {
-                out(i) = b((i.toLong * b.length / outLen).toInt)
-                i += 1
-              }
-            }
-            (id, targetW, targetH, channels, out)
-          }
-        }
-      }.toDF("media_id", "width", "height", "channels", "media")
-  }
-
-  /** Frame sampling for "video" blobs: split bytes into n equal frames
-    * (schema/plumbing demo; a real impl samples keyframes).
-    */
-  def frameSample(spark: SparkSession, media: DataFrame, n: Int): DataFrame = {
-    import spark.implicits._
-    media.select(col("media_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) =>
-        val b = if (bytes == null) Array.empty[Byte] else bytes
-        val step = math.max(1, b.length / n)
-        (0 until n).iterator.takeWhile(i => i * step < b.length).map { i =>
-          (id, i, b.slice(i * step, math.min(b.length, (i + 1) * step)))
-        }
-      }.toDF("media_id", "frame_id", "frame")
   }
 }

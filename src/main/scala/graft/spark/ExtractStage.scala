@@ -24,8 +24,7 @@ object ExtractStage {
   final case class Config(
       bs4: Bs4Config = Bs4Config(),
       maxHtmlBytes: Int = 8 * 1024 * 1024,
-      annotateGazetteer: Boolean = false,
-      emitBPer: Boolean = false)
+      annotateGazetteer: Boolean = false)
 
   def sentences(
       spark: SparkSession,
@@ -60,71 +59,6 @@ object ExtractStage {
                 tkns = s.map(_.tkn),
                 feats = s.map(_.features.toSeq),
                 bio = s.map(_.bio))
-            }
-          } catch {
-            case _: Throwable =>
-              skipped.foreach(_.add(1))
-              Iterator.empty
-          }
-        }
-      }
-    }
-  }
-
-  /** Fused extract -> label/decode -> mentions kernel: sentences (and
-    * their 13-feature vectors) never leave the partition, so nothing
-    * pays the nested-array encoder. This is the at-scale mention path —
-    * Catalyst cannot prune through an opaque kernel, so the kernel only
-    * emits what downstream needs. Tagging is either carried gold labels
-    * or an in-kernel Viterbi decode with broadcast weights.
-    */
-  def mentions(
-      spark: SparkSession,
-      pages: Dataset[Page],
-      targetNames: Option[Broadcast[Map[String, Seq[String]]]] = None,
-      targetNamesFn: Option[String => Seq[String]] = None,
-      gaz: Option[Broadcast[Gazetteers]] = None,
-      model: Option[Broadcast[graft.tag.HmmModel]] = None,
-      config: Config = Config(),
-      skipped: Option[LongAccumulator] = None,
-      dedupePerPage: Boolean = false): Dataset[graft.spark.Mention] = {
-    import spark.implicits._
-    val cfg = config
-    pages.mapPartitions { it =>
-      val emptyGaz = Gazetteers()
-      it.flatMap { p =>
-        if (p.html == null || p.html.length > cfg.maxHtmlBytes) {
-          skipped.foreach(_.add(1))
-          Iterator.empty
-        } else {
-          val html = Py.universalNewlines(
-            new String(p.html, StandardCharsets.UTF_8))
-          val names = targetNames.map(_.value.getOrElse(p.url, Nil))
-            .orElse(targetNamesFn.map(_(p.url))).getOrElse(Nil)
-          val g = gaz.map(_.value).getOrElse(emptyGaz)
-          try {
-            val sents = Extractor.tokenize(html, names, g, cfg.bs4,
-              annotateGazetteer = cfg.annotateGazetteer)
-            sents.iterator.zipWithIndex.flatMap { case (sent, si) =>
-              val tags: Seq[String] = model match {
-                case Some(m) =>
-                  graft.tag.Hmm.decode(m.value, sent.map(_.features.toSeq))
-                    .map(graft.tag.Hmm.Labels(_)).toSeq
-                case None => sent.map(_.bio)
-              }
-              val conf = if (model.isDefined) 0.9 else 1.0
-              graft.metrics.SpanMetrics.namedEntities(tags).iterator.map {
-                case (start, end, _) =>
-                  graft.spark.Mention(p.url, p.warc_ts, p.lang, si, start, end,
-                    sent.slice(start, end + 1).map(_.tkn).mkString(" "), conf)
-              }
-            } match {
-              case ms if !dedupePerPage => ms
-              case ms =>
-                // the triple dedup key (subj,pred,obj,url) is page-local
-                // when urls are unique, so dedup here instead of a shuffle
-                val seen = scala.collection.mutable.HashSet[String]()
-                ms.filter(m => seen.add(m.name))
             }
           } catch {
             case _: Throwable =>

@@ -66,10 +66,3 @@ final case class Triple(
     url: String,
     warc_ts: Timestamp,
     confidence: Double)
-
-final case class LineageRow(
-    stage: String,
-    partition_id: Int,
-    input_rows: Long,
-    output_rows: Long,
-    wall_ms: Long)

@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The SQL surface: extract_tokens as a LATERAL VIEW generator must
-  * reproduce the kernel's token stream from plain SQL.
+  * reproduce the kernel's token stream from plain SQL, and the session
+  * extension must install the same functions as `register`.
   */
 class SqlSurfaceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -12,7 +13,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
   test("extract_tokens generator matches the kernel over SQL") {
     graft.corpus.RefCorpus.requirePresent()
     import spark.implicits._
-    GraftExtensions.register(spark)
+    GraftFunctions.register(spark)
     graft.corpus.RefCorpus.pages(spark, Seq(7, 10)).createOrReplaceTempView("pages_v")
 
     val viaSql = spark.sql(
@@ -35,14 +36,14 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("fnv1a64 is usable from SQL and matches the scala impl") {
-    GraftExtensions.register(spark)
+    GraftFunctions.register(spark)
     val got = spark.sql("SELECT fnv1a64('graft')").collect().head.getLong(0)
     assert(got == Fnv1a64.hashString("graft"))
   }
 
   test("dot_f32 matches the zip_with/aggregate formulation bit-for-bit") {
     import spark.implicits._
-    GraftExtensions.register(spark)
+    GraftFunctions.register(spark)
     // irrational-ish values so summation order matters at the ULP level
     val rows = (0 until 50).map { i =>
       val a = Array.tabulate(64)(d => (math.sin(i * 131 + d) * 3.7).toFloat)
@@ -64,7 +65,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
 
   test("dot_f32 rejects length mismatch and propagates null") {
     import spark.implicits._
-    GraftExtensions.register(spark)
+    GraftFunctions.register(spark)
     val df = Seq((Array(1f, 2f), Array(1f, 2f, 3f))).toDF("a", "b")
     intercept[Exception] { df.selectExpr("dot_f32(a, b)").collect() }
     val n = Seq((Some(Array(1f)), Option.empty[Array[Float]]))
@@ -73,7 +74,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("dot_f32 null elements poison like zip_with; double arrays accepted") {
-    GraftExtensions.register(spark)
+    GraftFunctions.register(spark)
     // null element anywhere -> NULL (the zip_with formulation's semantics)
     val withNullElem = spark.sql(
       "SELECT dot_f32(array(1.0F, CAST(NULL AS FLOAT)), array(2.0F, 3.0F)) AS d")
@@ -93,5 +94,27 @@ class SqlSurfaceSpec extends AnyFunSuite {
       spark.sql("SELECT dot_f32(array(1.0F))").collect()
     }
     assert(e.getMessage.contains("dot_f32"))
+  }
+
+  test("GraftExtensions injects exactly the functions register installs") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+    val injected = scala.collection.mutable.ArrayBuffer[String]()
+    val recorder = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: (FunctionIdentifier, ExpressionInfo,
+          Seq[Expression] => Expression)): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    }
+    new GraftExtensions()(recorder)
+    val fresh = spark.newSession()
+    def names = fresh.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).toSet
+    val before = names
+    GraftFunctions.register(fresh)
+    val registered = names -- before
+    assert(registered.nonEmpty)
+    assert(injected.sorted.toSeq == registered.toSeq.sorted)
   }
 }

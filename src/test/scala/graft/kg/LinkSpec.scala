@@ -209,16 +209,6 @@ class LinkSpec extends AnyFunSuite {
     }
   }
 
-  test("alias dictionary links resolve through the broadcast map") {
-    val names = namesDf(("Bill Gates", 5L), ("William Gates", 2L), ("Ada L", 1L))
-    val dict = spark.sparkContext.broadcast(Map(
-      Linker.normalize("William Gates") -> "Bill Gates"))
-    val links = Linker.aliasLinks(spark, names, dict).collect()
-    assert(links.length == 1)
-    assert(links.head.getString(0) == "Bill Gates")
-    assert(links.head.getString(1) == "William Gates")
-  }
-
   test("pipeline stages resume from checkpoint with identical output") {
     import java.nio.file.Files
     val dir = Files.createTempDirectory("graft_kg_test").toString

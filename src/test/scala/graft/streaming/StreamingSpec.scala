@@ -6,7 +6,9 @@ import graft.TestSpark
 import graft.corpus.SyntheticCorpus
 
 /** Incremental ingest: two micro-batches of pages through the streaming
-  * pipeline accumulate exactly the triples of the batch pipeline.
+  * pipeline accumulate exactly the triples kg.Main writes for the same
+  * pages, and a page repeated within a micro-batch yields its triples
+  * once.
   */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -38,19 +40,37 @@ class StreamingSpec extends AnyFunSuite {
     q.processAllAvailable()
     q.stop()
 
-    val streamed = spark.read.parquet(triplesDir)
-      .select("subj", "obj").distinct().count()
+    val streamed = spark.read.parquet(triplesDir).select("subj", "obj")
 
-    // batch reference over the union of all written pages
-    val allPages = spark.read.parquet(pagesDir)
-      .as[graft.spark.Page].dropDuplicates("url").as[graft.spark.Page]
-    val batchTriples = graft.kg.Triples.fromMentions(spark,
-      graft.spark.ExtractStage.mentions(spark, allPages,
-        targetNamesFn = Some(SyntheticCorpus.targetNamesFn()),
-        dedupePerPage = true), alreadyDeduped = true)
-      .select("subj", "obj").distinct().count()
+    // batch reference: kg.Main's triples stage over all written pages
+    val allPages = spark.read.parquet(pagesDir).as[graft.spark.Page]
+    graft.kg.Main.runPages(spark, allPages, None,
+      Some(SyntheticCorpus.targetNamesFn()), s"$base/kg", tagger = "gold")
+    val batch = spark.read.parquet(s"$base/kg/triples").select("subj", "obj")
 
-    assert(streamed == batchTriples,
-      s"streamed $streamed != batch $batchTriples")
+    assert(streamed.count() == batch.count(),
+      s"streamed ${streamed.count()} != batch ${batch.count()}")
+    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
+      "streamed and batch triples differ")
+    graft.TestSpark.deleteRec(new java.io.File(base))
+  }
+
+  test("a page repeated within one micro-batch writes its triples once") {
+    val base = Files.createTempDirectory("graft_stream_dup").toString
+    val pages = SyntheticCorpus.pages(spark, 20, numPartitions = 2)
+    // one write before the query starts: both copies land in batch 0
+    pages.union(pages).write.parquet(s"$base/pages")
+
+    val q = IncrementalIngest.start(spark, s"$base/pages", s"$base/triples",
+      s"$base/ckpt", targetNamesFn = Some(SyntheticCorpus.targetNamesFn()))
+    q.processAllAvailable()
+    q.stop()
+
+    val triples = spark.read.parquet(s"$base/triples")
+    assert(triples.select("batch_id").distinct().count() == 1)
+    val n = triples.count()
+    val distinct = triples.select("subj", "obj").distinct().count()
+    assert(n > 0 && n == distinct, s"$n triples, $distinct distinct")
+    graft.TestSpark.deleteRec(new java.io.File(base))
   }
 }
