@@ -428,7 +428,7 @@ object SparkEntry {
       // per row instead of whole documents (md5 collisions are not a
       // practical concern below ~2^60 docs; equal texts always digest
       // equally, so the count can only be exact).
-      d.select(graft.ops.TextAnalysis.fingerprint(s, col("text")).as("fp"),
+      d.select(graft.ops.TextAnalysis.fingerprint(col("text")).as("fp"),
           unhex(md5(col("text"))).as("text_digest"))
         .agg(count(lit(1)).as("n_docs"),
           countDistinct(col("fp")).as("n_distinct_fp"),
@@ -528,7 +528,7 @@ object SparkEntry {
       // the hot-path kernel; UrlsSpec separately pins it byte-equal to
       // the column-composition reference
       urls.select(col("doc_id"),
-        graft.ops.Urls.canonicalizeNative(s, col("url")).as("url_canonical"),
+        graft.ops.Urls.canonicalizeNative(col("url")).as("url_canonical"),
         graft.ops.Urls.host(col("url")).as("host"),
         graft.ops.Urls.scheme(col("url")).as("scheme"))
         .orderBy("doc_id")

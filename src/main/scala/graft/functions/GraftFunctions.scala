@@ -1,18 +1,20 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftColumns, SparkSession,
+  SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 
-/** The graft SQL functions, one table for both ways of installing them:
-  * [[register]] on an existing session, or
-  * `spark.sql.extensions=graft.functions.GraftExtensions` at session
-  * build. Expressions are invoked through the public `call_function`
-  * API (the Column(Expression) constructor is private[sql] in Spark 4).
+/** The graft native expressions, one table for every way of reaching
+  * them. Library code builds them as Columns with [[column]], which
+  * never reads or writes a session's function registry. SQL reaches
+  * them by name once they are installed: [[register]] on an existing
+  * session, or `spark.sql.extensions=graft.functions.GraftExtensions`
+  * at session build.
   */
 object GraftFunctions {
 
-  /** (name, arity, builder): every function graft puts in a session. */
+  /** (name, arity, builder): every graft function. */
   val table: Seq[(String, Int, Seq[Expression] => Expression)] = Seq(
     ("extract_tokens", 1, e => ExtractTokens(e.head)),
     ("fnv1a64", 1, e => Fnv1a64(e.head)),
@@ -24,9 +26,9 @@ object GraftFunctions {
     ("canonical_url", 1, e => CanonicalUrl(e.head)),
     // Spark's OWN runtime-filter expression (the one AQE injects for
     // shuffle pruning), surfaced by name: bloom_might_contain(<foldable
-    // binary bloom blob>, <xxhash64 long>). Registering it keeps the
-    // Bloom prefilter of bloomContamination inside codegen instead of
-    // a per-gram Scala UDF — same class the engine trusts for its own
+    // binary bloom blob>, <xxhash64 long>). It keeps the Bloom
+    // prefilter of bloomContamination inside codegen instead of a
+    // per-gram Scala UDF — same class the engine trusts for its own
     // runtime filters, zero custom kernel code.
     ("bloom_might_contain", 2, e => BloomFilterMightContain(e.head, e(1))))
 
@@ -41,19 +43,24 @@ object GraftFunctions {
       build(exprs)
     }
 
+  /** The [[table]] function `name` applied to `args`: the same
+    * expression that SQL gets from [[register]], with no session
+    * involved.
+    */
+  def column(name: String, args: Column*): Column = {
+    val (_, n, build) = table.find(_._1 == name).getOrElse(
+      throw new IllegalArgumentException(s"no graft function named $name"))
+    GraftColumns.column(
+      checked(name, n, build)(args.map(GraftColumns.expression)))
+  }
+
+  /** Installs every [[table]] function in `spark`'s registry, replacing
+    * any function of the same name: the SQL surface, for callers who
+    * ask for it. Library code uses [[column]] instead.
+    */
   def register(spark: SparkSession): Unit = table.foreach { case (name, n, build) =>
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, checked(name, n, build), "built-in")
-  }
-
-  def fnv1a64(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("fnv1a64", c)
-  }
-
-  def dotF32(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("dot_f32", a, b)
   }
 }
 

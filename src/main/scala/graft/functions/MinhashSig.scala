@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * word w-shingles hashed with FNV-1a, k universal-hash permutations,
   * computed in one generated-code call per row — the banded-LSH
   * pipeline's signature stage without deserializing rows into a typed
-  * Dataset. Bit-identical to
-  * `Dedup.minhashSignature(Dedup.shingleHashes(text, w), k)`.
+  * Dataset. Bit-identical to `signature(shingles(text, w), k)` of the
+  * companion object.
   */
 case class MinhashSig(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {

@@ -1,8 +1,8 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.fnv1a64
+import graft.functions.GraftFunctions
 
 /** Canonicalization: connected components over the link graph, then
   * per-component canonical-name election.
@@ -20,12 +20,16 @@ import graft.functions.GraftFunctions.fnv1a64
 object Canonicalize {
 
   /** name -> stable 64-bit vertex id: FNV-1a over UTF-8 bytes, the
-    * plain-Scala twin of the native `fnv1a64` expression the operators
-    * below use. Collision-safe enough for vocabulary-sized vertex sets;
-    * a production run would carry the name through instead of relying
-    * on hash uniqueness.
+    * plain-Scala twin of [[nameIdCol]], which the operators below use.
+    * Collision-safe enough for vocabulary-sized vertex sets; a
+    * production run would carry the name through instead of relying on
+    * hash uniqueness.
     */
   def nameId(name: String): Long = graft.functions.Fnv1a64.hashString(name)
+
+  /** [[nameId]] as the native `fnv1a64` expression. */
+  private def nameIdCol(name: Column): Column =
+    GraftFunctions.column("fnv1a64", name)
 
   /** Connected components over (name_a, name_b) pairs; returns
     * (name, component) for every name that appears in a link.
@@ -38,12 +42,12 @@ object Canonicalize {
     // re-executed it a second time (r8 measured). Cc itself then
     // checkpoints only its canonical id pairs.
     val p = pairs.select(col("name_a"), col("name_b")).localCheckpoint(true)
-    val edges = p.select(fnv1a64(spark, col("name_a")).as("a"),
-      fnv1a64(spark, col("name_b")).as("b"))
+    val edges = p.select(nameIdCol(col("name_a")).as("a"),
+      nameIdCol(col("name_b")).as("b"))
     val vertices = p
       .select(explode(array(col("name_a"), col("name_b"))).as("name"))
       .distinct()
-      .select(fnv1a64(spark, col("name")).as("id"), col("name"))
+      .select(nameIdCol(col("name")).as("id"), col("name"))
 
     val ccDf = graft.spark.Cc.components(spark, edges, maxIter)
     vertices.join(ccDf, "id").select(col("name"), col("component"))
@@ -57,7 +61,7 @@ object Canonicalize {
       saltBuckets: Int = 16): DataFrame = {
     val withComp = names.join(membership, Seq("name"), "left_outer")
       .withColumn("component",
-        coalesce(col("component"), fnv1a64(spark, col("name"))))
+        coalesce(col("component"), nameIdCol(col("name"))))
 
     // phase 1: salted partial aggregation (hot components spread over
     // saltBuckets reducers)
@@ -103,7 +107,7 @@ object Canonicalize {
         col("pred"),
         coalesce(col("canonical_name"), col("obj")).as("obj"),
         coalesce(col("entity_id"),
-          format_string("person:%016x", fnv1a64(spark, col("obj")))).as("obj_entity"),
+          format_string("person:%016x", nameIdCol(col("obj")))).as("obj_entity"),
         col("url"), col("warc_ts"), col("confidence"))
       .dropDuplicates("subj", "pred", "obj", "url")
   }

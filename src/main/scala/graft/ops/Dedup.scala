@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.Fnv1a64
+import graft.functions.{Fnv1a64, GraftFunctions}
 
 /** Deduplication family for large-scale training-data pipelines: exact
   * (content-hash groupBy), word-set Jaccard, MinHash+LSH near-dup
@@ -221,7 +221,8 @@ object Dedup {
   }
 
   /** Distinct word n-grams of a text as a column. Texts shorter than n
-    * fall back to the whole text, mirroring [[shingleHashes]].
+    * fall back to the whole text, mirroring
+    * [[graft.functions.MinhashSig.shingles]].
     *
     * Built by shift-and-zip — gram i = w(i) ++ w(i+1) ++ ... — NOT by
     * `transform(sequence(...), i -> slice(w, i, n))`: higher-order
@@ -254,17 +255,6 @@ object Dedup {
 
   // --- MinHash + LSH ----------------------------------------------------
 
-  /** Word w-shingles of a text (distinct, hashed to longs) — the
-    * native `minhash_sig` expression's kernel, re-exported for direct
-    * use and tests.
-    */
-  def shingleHashes(text: String, w: Int): Array[Long] =
-    graft.functions.MinhashSig.shingles(text, w)
-
-  /** k-permutation minhash signature (see [[shingleHashes]]). */
-  def minhashSignature(shingles: Array[Long], k: Int): Array[Long] =
-    graft.functions.MinhashSig.signature(shingles, k)
-
   /** Near-duplicate candidate pairs via banded MinHash LSH:
     * shingle -> k-minhash -> b bands of r rows -> groupBy band key ->
     * within-bucket pairs -> Jaccard-verified. The shuffle is keyed by
@@ -289,7 +279,6 @@ object Dedup {
     // shuffle and re-shuffling the corpus 16x at 100 TB). Signatures
     // come from the native codegen `minhash_sig` expression: no row
     // deserialization into a typed Dataset for the hash stage.
-    graft.functions.GraftFunctions.register(spark)
     // NO scan-parallelism spread here (measured negative result, r8):
     // the codegen minhash kernel is cheap relative to an exchange that
     // would carry every TEXT — alternating same-JVM A/B over 5 samples
@@ -299,7 +288,8 @@ object Dedup {
     // and on real (multi-split) corpora the kernel parallelism comes
     // from the scan itself.
     val sigs = base.select(col("id"),
-      call_function("minhash_sig", col("text"), lit(w), lit(k)).as("sig"))
+      GraftFunctions.column("minhash_sig", col("text"), lit(w), lit(k))
+        .as("sig"))
 
     val banded = sigs.select(col("id"), xxhash64(col("sig")).as("sighash"),
       posexplode(expr(s"transform(sequence(0, ${bands - 1}), " +
@@ -358,16 +348,14 @@ object Dedup {
       hotChain: Int = 20, metrics: Option[Observation] = None): DataFrame = {
     // native codegen srp_sig: the bucketing pass touches every vector
     // once — no per-row Seq[Float] boxing (same planes/accumulation as
-    // Similarity.srpSignature, so buckets are identical). Registered on
-    // the frame's own session too (call_function resolves there in a
-    // multi-session app); a NULL embedding row null-propagates to a
-    // null bucket and drops out of the pair results rather than killing
-    // the job — validate upstream if absence must be loud.
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
+    // Similarity.srpSignature, so buckets are identical). A NULL
+    // embedding row null-propagates to a null bucket and drops out of
+    // the pair results rather than killing the job — validate upstream
+    // if absence must be loud.
     val b = embeddings.select(col("vec_id").cast("long").as("id"),
         col("embedding"))
-      .withColumn("bucket", call_function("srp_sig", col("embedding"), lit(nBits)))
+      .withColumn("bucket",
+        GraftFunctions.column("srp_sig", col("embedding"), lit(nBits)))
     val candidates = boundedBucketPairs(
       b.select(col("bucket"),
         struct(xxhash64(col("embedding")).as("ekey"), col("id")).as("m")),
@@ -386,7 +374,7 @@ object Dedup {
       // duplicate vec_ids would fan a candidate pair out; keep one
       // representative per id pair like the MinHash verify does
       .dropDuplicates("id_a", "id_b")
-      .withColumn("cosine", call_function("dot_f32", col("emb_a"), col("emb_b"))
+      .withColumn("cosine", Similarity.dotCol(col("emb_a"), col("emb_b"))
         / (col("norm_a") * col("norm_b")))
       .filter(col("cosine") >= minCosine)
       .select("id_a", "id_b", "cosine")
@@ -475,14 +463,13 @@ object Dedup {
     // generated loop over the scan — no row deserialization, no
     // String.split, no per-row array allocations (the Dataset-map
     // formulation paid all three)
-    graft.functions.GraftFunctions.register(spark)
     // NO scan-parallelism spread (same measured negative result as
     // minhashLshPairs: same-JVM A/B median 3.38 vs 2.15 s — the 64-bit
     // codegen hash is far cheaper than exchanging the texts)
     val hashed = docs
       .select(col(idCol).cast("long").as("id"), col(textCol))
       .select(col("id"),
-        call_function("simhash64", col(textCol)).as("simhash"))
+        GraftFunctions.column("simhash64", col(textCol)).as("simhash"))
     val blocked = hashed.select(col("id"), col("simhash"),
       explode(expr("transform(sequence(0, 3), b -> " +
         "struct(b as blk, shiftright(simhash, b * 16) & 65535 as key))")).as("e"))

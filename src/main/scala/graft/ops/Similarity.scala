@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.GraftFunctions
 import graft.spark.Scans
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -10,8 +11,8 @@ import graft.spark.Scans
   *
   *  - Brute force: block-nested-loop join with the PROBE side broadcast
   *    (queries are small; the corpus side streams — no corpus shuffle),
-  *    dot/cosine computed with codegen'd `zip_with`/`aggregate` higher-
-  *    order functions, top-k by ranking window.
+  *    dot/cosine computed by the native `dot_f32` expression, top-k by
+  *    ranking window.
   *  - Scale path: signed-random-projection LSH — `nBits` deterministic
   *    hyperplanes bucket the corpus; probes only join their own bucket
   *    (+ optional multi-probe neighbors), bounding the pair count.
@@ -22,26 +23,11 @@ object Similarity {
     * native codegen'd `graft.functions.DotF32` expression (a primitive
     * loop in the generated code; the higher-order-function
     * `aggregate(zip_with(...))` formulation allocates a boxed array
-    * per pair and is ~7x slower on the brute-force join).
-    *
-    * Column construction is session-free, but `call_function` resolves
-    * through the session function registry, so the expression is
-    * registered on the active session here and on the input frames'
-    * own sessions in [[bruteForceTopK]]/[[lshTopK]] (they may differ
-    * in multi-session apps). With no session at all this falls back to
-    * the pure-Column higher-order-function formulation, which is
-    * semantically identical.
+    * per pair and is ~7x slower on the brute-force join). Built as a
+    * Column directly, so it needs no session.
     */
   def dotCol(a: Column, b: Column): Column =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
-      case Some(s) =>
-        graft.functions.GraftFunctions.register(s)
-        call_function("dot_f32", a, b)
-      case None =>
-        aggregate(
-          zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-          lit(0.0), (acc, v) => acc + v)
-    }
+    GraftFunctions.column("dot_f32", a, b)
 
   def normCol(a: Column): Column = sqrt(dotCol(a, a))
 
@@ -77,7 +63,6 @@ object Similarity {
   def bruteForceTopK(corpus: DataFrame, probes: DataFrame, k: Int,
       metric: (Column, Column) => Column = dotCol,
       maxBroadcastProbes: Long = MaxBroadcastProbes): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val nProbes = boundedCount(probes, maxBroadcastProbes)
     require(nProbes <= maxBroadcastProbes,
       s"bruteForceTopK probe set exceeds $maxBroadcastProbes rows (> " +
@@ -387,8 +372,6 @@ object Similarity {
   def fitQuantizerLloyd(spark: SparkSession, corpus: DataFrame,
       nlist: Int, iters: Int, scale: Int = 9, idCol: String = "vec_id")
       : org.apache.spark.broadcast.Broadcast[Array[Array[Double]]] = {
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val c = corpus.filter(col("embedding").isNotNull)
     // fixed deterministic init: the nlist smallest ids (a global top-k,
     // one narrow pass — TakeOrderedAndProject, no full sort)
@@ -402,8 +385,9 @@ object Similarity {
     for (_ <- 1 to iters) {
       val centroidsLit = typedlit(cents.map(_.toSeq).toSeq)
       val sums = c
-        .select(call_function("ivf_cell", col("embedding"), centroidsLit)
-          .as("cell"),
+        .select(
+          GraftFunctions.column("ivf_cell", col("embedding"), centroidsLit)
+            .as("cell"),
           posexplode(col("embedding")).as(Seq("pos", "v")))
         .groupBy("cell", "pos")
         .agg(sum(col("v").cast("double")
@@ -451,21 +435,14 @@ object Similarity {
       lloydIters: Int,
       metrics: Option[org.apache.spark.sql.Observation] = None,
       maxBroadcastProbes: Long = MaxBroadcastProbes): DataFrame = {
-    // register on the input frames' OWN sessions too: call_function
-    // resolves against the frame's session registry at analysis, which
-    // in a multi-session app may differ from `spark` (the same reason
-    // bruteForceTopK registers on corpus.sparkSession). NULL embedding
-    // rows drop out of results on EVERY path: the corpus side
-    // null-propagates through the native expressions into null
-    // cells/buckets, the probe-side UDFs return zero cells/buckets
+    // NULL embedding rows drop out of results on EVERY path: the
+    // corpus side null-propagates through the native expressions into
+    // null cells/buckets, the probe-side UDFs return zero cells/buckets
     // for null input (explode drops the row — matters doubly in the
     // self-join, where the corpus IS the probe side), and the
     // quantizer fit filters them. One malformed row must not kill a
     // 10^12-row job; validate embeddings upstream if absence must be
     // loud.
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    probes.foreach(p => graft.functions.GraftFunctions.register(p.sparkSession))
     val bc = fitQuantizerLloyd(spark, corpus, nlist, lloydIters)
     // corpus-side cell assignment through the native codegen ivf_cell
     // expression (centroids ride as a nested-array literal) — the one
@@ -497,7 +474,8 @@ object Similarity {
     // shares the spread frame so neither stream starves.
     val corpusS = Scans.spread(corpus, col("vec_id"))
     val cb = corpusS.filter(col("embedding").isNotNull).withColumn("cell",
-      coalesce(call_function("ivf_cell", col("embedding"), centroidsLit),
+      coalesce(
+        GraftFunctions.column("ivf_cell", col("embedding"), centroidsLit),
         lit(-1)))
     val pbRaw = probes.getOrElse(corpusS)
       .withColumn("cell", explode(cellsUdf(col("embedding")))).as("p")
@@ -561,9 +539,7 @@ object Similarity {
       nlist: Int = 16, maxIter: Int = 20, idCol: String = "vec_id",
       metrics: Option[org.apache.spark.sql.Observation] = None,
       lloydIters: Int = 2): DataFrame = {
-    // frame-session registration + null-row semantics: see ivfCellTopK
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
+    // null-row semantics: see ivfCellTopK
     val bc = fitQuantizerLloyd(spark, corpus, nlist, lloydIters,
       idCol = idCol)
     val centroidsLit = typedlit(bc.value.map(_.toSeq).toSeq)
@@ -583,7 +559,8 @@ object Similarity {
         // cell self-join would otherwise push down as a SECOND
         // ivf_cell evaluation per row (see ivfCellTopK); unreachable
         // behind the isNotNull filter above
-        coalesce(call_function("ivf_cell", col("embedding"), centroidsLit),
+        coalesce(
+          GraftFunctions.column("ivf_cell", col("embedding"), centroidsLit),
           lit(-1)).as("cell"))
     val a = unit.select(col("cell"), col("id").as("id_a"), col("e").as("e_a"))
     val b = unit.select(col("cell"), col("id").as("id_b"), col("e").as("e_b"))
@@ -632,9 +609,6 @@ object Similarity {
       metrics: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
     require(nBits >= 1 && nTables >= 1 && nBits * nTables <= 30,
       s"wide signature nBits*nTables = ${nBits * nTables} must fit an INT")
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    graft.functions.GraftFunctions.register(probes.sparkSession)
     val wide = nBits * nTables
     val mask = (1 << nBits) - 1
     def slices(c: Column) = explode(array((0 until nTables).map { t =>
@@ -642,7 +616,8 @@ object Similarity {
         shiftright(c, t * nBits).bitwiseAND(lit(mask)).as("b"))
     }: _*))
     def keyed(df: DataFrame) = df
-      .withColumn("sig", call_function("srp_sig", col("embedding"), lit(wide)))
+      .withColumn("sig",
+        GraftFunctions.column("srp_sig", col("embedding"), lit(wide)))
       .withColumn("tb", slices(col("sig")))
       .select(col("vec_id"), col("embedding"),
         col("tb.t").as("t"), col("tb.b").as("b"))
@@ -690,15 +665,12 @@ object Similarity {
       k: Int, nBits: Int = 8, multiProbe: Int = 0,
       maxBroadcastProbes: Long = MaxBroadcastProbes,
       metrics: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
-    // frame-session registration + null-row semantics: see ivfCellTopK
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    graft.functions.GraftFunctions.register(probes.sparkSession)
+    // null-row semantics: see ivfCellTopK
     // corpus bucketing through the native codegen srp_sig expression —
     // the UDF formulation boxed every embedding into a Seq[Float] on
     // the one pass that touches EVERY corpus vector; multi-probe stays
     // a UDF (probe-side only, bounded probe sets, returns an array)
-    def sigCol(c: Column) = call_function("srp_sig", c, lit(nBits))
+    def sigCol(c: Column) = GraftFunctions.column("srp_sig", c, lit(nBits))
     // null guard: a null embedding probes zero buckets (empty array →
     // explode drops the row) instead of NPEing the multi-probe path
     val probeUdf = udf((v: Seq[Float]) =>

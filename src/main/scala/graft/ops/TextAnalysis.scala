@@ -65,8 +65,7 @@ object TextAnalysis {
       .cast("long")
 
   /** Rolling-hash fingerprint via the native Fnv1a64 expression. */
-  def fingerprint(spark: SparkSession, text: Column): Column =
-    GraftFunctions.fnv1a64(spark, text)
+  def fingerprint(text: Column): Column = GraftFunctions.column("fnv1a64", text)
 
   /** Deterministic train/val/test assignment — the sharding primitive
     * every dataset build ends with. The split key is the md5 of the
@@ -339,12 +338,10 @@ object TextAnalysis {
     val nGrams = math.max(bset.count(), 1L)
     // the filter is built over xxhash64(gram) longs and probed through
     // Spark's OWN BloomFilterMightContain expression (the runtime-
-    // filter class AQE injects, registered as bloom_might_contain in
-    // GraftFunctions) — the per-gram hot path stays inside codegen;
-    // the serialized blob rides the plan as a foldable binary literal
-    // exactly like an AQE-injected runtime filter
-    GraftFunctions.register(spark)
-    GraftFunctions.register(docs.sparkSession)
+    // filter class AQE injects; GraftFunctions builds it as
+    // bloom_might_contain) — the per-gram hot path stays inside
+    // codegen; the serialized blob rides the plan as a foldable binary
+    // literal exactly like an AQE-injected runtime filter
     val bf = bset.select(xxhash64(col("gram")).as("h"))
       .stat.bloomFilter("h", nGrams, fpp)
     val blob = {
@@ -355,7 +352,7 @@ object TextAnalysis {
     val cand = docs
       .select(col(idCol).as("doc_id"),
         explode(Dedup.ngramSet(col(textCol), n)).as("gram"))
-      .filter(call_function("bloom_might_contain", lit(blob),
+      .filter(GraftFunctions.column("bloom_might_contain", lit(blob),
         xxhash64(col("gram"))))
     val hits = cand.join(broadcast(bset), Seq("gram"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared_grams"))

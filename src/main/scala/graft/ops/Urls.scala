@@ -75,14 +75,12 @@ object Urls {
     * ([[graft.functions.CanonicalUrl]]) — same rules and output as
     * [[canonicalize]] (byte-equality asserted over edges + fuzz in
     * UrlsSpec), but zero per-row regex evaluations and no interpreted
-    * lambda nodes: the version for full-corpus passes. Registers the
-    * function on the column's eventual session via the given one.
+    * lambda nodes: the version for full-corpus passes. Built as a
+    * Column directly, so a caller's own `canonical_url` function, if it
+    * has one, is left alone.
     */
-  def canonicalizeNative(spark: org.apache.spark.sql.SparkSession,
-      url: Column): Column = {
-    graft.functions.GraftFunctions.register(spark)
-    call_function("canonical_url", url)
-  }
+  def canonicalizeNative(url: Column): Column =
+    graft.functions.GraftFunctions.column("canonical_url", url)
 
   /** The canonical form under the rules above; NULL for schemeless
     * input. REFERENCE implementation (pure built-in column

@@ -58,7 +58,7 @@ object Monitors {
     import spark.implicits._
     val keyed = pages
       .select(struct(pages.columns.map(col): _*).as("_1"),
-        coalesce(graft.ops.Urls.canonicalizeNative(spark, col("url")),
+        coalesce(graft.ops.Urls.canonicalizeNative(col("url")),
           col("url")).as("_2"))
       .as[(Page, String)]
     firstSeenKeyed(spark, keyed, stateTimeout)

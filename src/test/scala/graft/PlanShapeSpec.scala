@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -146,6 +146,49 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(poisoned.storageLevel != StorageLevel.NONE,
         "an operator dropped the caller's cache entry")
     } finally poisoned.unpersist()
+  }
+
+  test("library ops leave the caller's function registry alone") {
+    // graft's native expressions share names with functions a caller
+    // may own; library calls build them as Columns and must neither
+    // replace those nor add any function to the session
+    val s = spark.newSession()
+    import s.implicits._
+    s.udf.register("canonical_url", (_: String) => "mine")
+    s.udf.register("fnv1a64", (_: String) => 7L)
+    val registry = s.sessionState.functionRegistry
+    val before = registry.listFunction().toSet
+    val docs = Seq((1L, "the quick brown fox jumps over"),
+      (2L, "the quick brown fox jumps over"), (3L, "an unrelated line"))
+      .toDF("doc_id", "text")
+    val vecs = Seq((1L, Seq(1f, 0f)), (2L, Seq(0.9f, 0.1f)),
+      (3L, Seq(0f, 1f))).toDF("vec_id", "embedding")
+    val url = Seq("HTTP://A.com:80").toDF("url")
+      .select(graft.ops.Urls.canonicalizeNative(col("url"))).head().getString(0)
+    assert(url == "http://a.com/")
+    docs.select(graft.ops.TextAnalysis.fingerprint(col("text"))).collect()
+    assert(graft.ops.Dedup.minhashLshPairs(s, docs).count() == 1)
+    graft.ops.Similarity.lshTopK(s, vecs, vecs, k = 1).collect()
+    graft.ops.TextAnalysis.bloomContamination(s, docs, docs.limit(1)).collect()
+    val mine = s.sql("SELECT canonical_url('http://b.com'), fnv1a64('x')").head()
+    assert(mine.getString(0) == "mine" && mine.getLong(1) == 7L,
+      s"a library call replaced the caller's functions: $mine")
+    assert(registry.listFunction().toSet == before,
+      "a library call changed the session's function registry")
+  }
+
+  test("q3_window_topk: top-k pushes down to WindowGroupLimit on both sides of the exchange") {
+    // rk <= 3 over row_number lets Spark cut each partition to its top
+    // 3 rows per supplier before the shuffle (Partial) and again after
+    // it (Final), so the exchange carries at most 3 rows per supplier
+    // per map task instead of every lineitem row
+    val lines = planOf("q3_window_topk").linesIterator.toIndexedSeq
+    def at(p: String => Boolean) = lines.indexWhere(p)
+    val fin = at(l => l.contains("WindowGroupLimit") && l.contains("Final"))
+    val part = at(l => l.contains("WindowGroupLimit") && l.contains("Partial"))
+    val exch = at(l => l.contains("Exchange hashpartitioning(l_suppkey"))
+    assert(fin >= 0 && exch > fin && part > exch,
+      s"expected Final above, Partial below the l_suppkey exchange:\n${lines.mkString("\n")}")
   }
 
   test("kg_communities: LPA argmax is an aggregation, not a window sort") {

@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The SQL surface: extract_tokens as a LATERAL VIEW generator must
-  * reproduce the kernel's token stream from plain SQL, and the session
-  * extension must install the same functions as `register`.
+  * reproduce the kernel's token stream from plain SQL, the session
+  * extension must install the same functions as `register`, and
+  * `column` must build them with no session registry at all.
   */
 class SqlSurfaceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -39,6 +40,20 @@ class SqlSurfaceSpec extends AnyFunSuite {
     GraftFunctions.register(spark)
     val got = spark.sql("SELECT fnv1a64('graft')").collect().head.getLong(0)
     assert(got == Fnv1a64.hashString("graft"))
+  }
+
+  test("column builds a table function without any registry; bad calls fail cleanly") {
+    import org.apache.spark.sql.functions.lit
+    val fresh = spark.newSession() // nothing registered here
+    val got = fresh.range(1)
+      .select(GraftFunctions.column("fnv1a64", lit("graft"))).head().getLong(0)
+    assert(got == Fnv1a64.hashString("graft"))
+    val arity = intercept[IllegalArgumentException](
+      GraftFunctions.column("dot_f32", lit(1)))
+    assert(arity.getMessage.contains("dot_f32"))
+    val unknown = intercept[IllegalArgumentException](
+      GraftFunctions.column("no_such_fn", lit(1)))
+    assert(unknown.getMessage.contains("no_such_fn"))
   }
 
   test("dot_f32 matches the zip_with/aggregate formulation bit-for-bit") {

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.functions.{GraftFunctions, MinhashSig}
 
 /** Training-data ops: planted-duplicate recall for MinHash-LSH and
   * SimHash, LSH-ANN recall vs brute force, multimodal plumbing
@@ -492,8 +493,7 @@ class OpsSpec extends AnyFunSuite {
           .mkString(" ") + (if (rng.nextBoolean()) " " else "")
       }
     val got = cases.toDF("s")
-      .select(org.apache.spark.sql.functions.call_function("simhash64",
-        col("s")).as("h"))
+      .select(GraftFunctions.column("simhash64", col("s")).as("h"))
       .collect().map(_.getLong(0)).toSeq
     assert(got == cases.map(Dedup.simhash),
       "native simhash64 must replicate String.split(\" \") semantics exactly")
@@ -503,12 +503,12 @@ class OpsSpec extends AnyFunSuite {
     import spark.implicits._
     val cases = Seq("", "a", "one two", "one two three four five", "a b a b a")
     val got = cases.toDF("s")
-      .select(org.apache.spark.sql.functions.call_function("minhash_sig",
-        col("s"), lit(3), lit(8)).as("sig"))
+      .select(GraftFunctions.column("minhash_sig", col("s"), lit(3), lit(8))
+        .as("sig"))
       .collect()
       .map(_.getAs[scala.collection.Seq[Long]](0).toSeq).toSeq
     val want = cases.map(s =>
-      Dedup.minhashSignature(Dedup.shingleHashes(s, 3), 8).toSeq)
+      MinhashSig.signature(MinhashSig.shingles(s, 3), 8).toSeq)
     assert(got == want)
   }
 
@@ -580,11 +580,11 @@ class OpsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(13)
     val vecs = (0 until 300).map(i =>
       (i.toLong, Seq.fill(2 + rnd.nextInt(62))(rnd.nextFloat() * 2 - 1)))
-    graft.functions.GraftFunctions.register(spark)
     Seq(0, 1, 4, 6, 12).foreach { nBits =>
       val native = vecs.toDF("vec_id", "embedding")
         .select(col("vec_id"),
-          call_function("srp_sig", col("embedding"), lit(nBits)).as("b"))
+          GraftFunctions.column("srp_sig", col("embedding"), lit(nBits))
+            .as("b"))
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       vecs.foreach { case (id, v) =>
         assert(native(id) == Similarity.srpSignature(v, nBits),
@@ -690,10 +690,9 @@ class OpsSpec extends AnyFunSuite {
     val centroids = Array.fill(9, dim)(rnd.nextDouble() * 2 - 1)
     val vecs = (0 until 300).map(i =>
       (i.toLong, Seq.fill(dim)(rnd.nextFloat() * 2 - 1)))
-    graft.functions.GraftFunctions.register(spark)
     val native = vecs.toDF("vec_id", "embedding")
-      .select(col("vec_id"), call_function("ivf_cell", col("embedding"),
-        typedlit(centroids.map(_.toSeq).toSeq)).as("cell"))
+      .select(col("vec_id"), GraftFunctions.column("ivf_cell",
+        col("embedding"), typedlit(centroids.map(_.toSeq).toSeq)).as("cell"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     vecs.foreach { case (id, v) =>
       assert(native(id) == Similarity.nearestCells(centroids, v, 1).head,
@@ -721,8 +720,7 @@ class OpsSpec extends AnyFunSuite {
   test("fnv1a64 native expression matches the scala implementation") {
     import spark.implicits._
     val df = Seq("hello", "", "Ærøskøbing").toDF("s")
-    val got = df.select(graft.functions.GraftFunctions
-        .fnv1a64(spark, col("s")).as("h"))
+    val got = df.select(TextAnalysis.fingerprint(col("s")).as("h"))
       .collect().map(_.getLong(0)).toSeq
     val want = Seq("hello", "", "Ærøskøbing")
       .map(graft.functions.Fnv1a64.hashString)

@@ -78,7 +78,7 @@ class UrlsSpec extends AnyFunSuite {
     val both = (edges ++ fuzz).toDF("url").select(
       col("url"),
       Urls.canonicalize(col("url")).as("ref"),
-      Urls.canonicalizeNative(spark, col("url")).as("nat"))
+      Urls.canonicalizeNative(col("url")).as("nat"))
       .collect()
     both.foreach { r =>
       assert(Option(r.getString(1)) == Option(r.getString(2)),
