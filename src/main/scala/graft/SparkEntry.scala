@@ -396,7 +396,7 @@ object SparkEntry {
     // docs at minimum hit their own grams).
     "doc_contamination" -> ((s, dir) => {
       val d = t(s, dir, "documents")
-      graft.ops.TextAnalysis.contamination(s, d,
+      graft.ops.TextAnalysis.contamination(d,
           d.filter(col("doc_id") % 50 === 0), n = 3)
         .orderBy("doc_id")
     }),
@@ -737,7 +737,7 @@ object SparkEntry {
       val e = t(s, dir, "embeddings").select("vec_id", "embedding")
       val planted = e.select((col("vec_id") + lit(1099511627776L)).as("vec_id"),
         col("embedding"))
-      graft.ops.Dedup.embeddingCosinePairs(s, e.unionByName(planted),
+      graft.ops.Dedup.embeddingCosinePairs(e.unionByName(planted),
           minCosine = 0.75)
         .select(col("id_a"), col("id_b"),
           round(col("cosine"), 6).as("cosine"))
@@ -1084,7 +1084,7 @@ object SparkEntry {
           substring(col("prev"), 1, 1) === substring(col("name"), 1, 1))
         .select(col("prev").as("name_a"), col("name").as("name_b"))
       val membership = graft.kg.Canonicalize.components(s, links)
-      graft.kg.Canonicalize.entities(s, names, membership)
+      graft.kg.Canonicalize.entities(names, membership)
         .select(col("canonical_name"),
           size(col("aliases")).cast("long").as("n_aliases"),
           col("support"))
@@ -1516,11 +1516,11 @@ object SparkEntry {
       // the whole extraction kernel
       val triples = graft.kg.Triples.fromMentions(s, mentions)
         .localCheckpoint(true)
-      val vocab = graft.kg.Linker.nameVocab(s, triples)
-      val links = graft.kg.Linker.exactNormLinks(s, vocab)
+      val vocab = graft.kg.Linker.nameVocab(triples)
+      val links = graft.kg.Linker.exactNormLinks(vocab)
       val membership = graft.kg.Canonicalize.components(s, links)
-      val nodes = graft.kg.Canonicalize.entities(s, vocab, membership)
-      val edges = graft.kg.Canonicalize.canonicalEdges(s, triples, nodes)
+      val nodes = graft.kg.Canonicalize.entities(vocab, membership)
+      val edges = graft.kg.Canonicalize.canonicalEdges(triples, nodes)
         .select(col("subj").as("src"), col("obj_entity").as("dst"))
         .distinct()
       graft.kg.GraphOps.pagerank(s, edges,
@@ -1563,7 +1563,7 @@ object SparkEntry {
     // any join or shuffle.
     "doc_bloom_contamination" -> ((s, dir) => {
       val d = t(s, dir, "documents")
-      graft.ops.TextAnalysis.bloomContamination(s, d,
+      graft.ops.TextAnalysis.bloomContamination(d,
           d.filter(col("doc_id") % 50 === 0), n = 3)
         .orderBy("doc_id")
     }),

@@ -117,7 +117,7 @@ object StressBench {
       .select(col("vec_id"), vec.as("embedding"))
     val obs3 = Observation("stress_cosine")
     val t0 = System.nanoTime()
-    val cos = graft.ops.Dedup.embeddingCosinePairs(spark,
+    val cos = graft.ops.Dedup.embeddingCosinePairs(
         base.unionByName(planted), minCosine = 0.999,
         hotChain = hotChain, metrics = Some(obs3))
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)

@@ -57,7 +57,7 @@ object Canonicalize {
     * highest-support member (ties by name), aliases = all members.
     * Singleton names (no links) become their own entities.
     */
-  def entities(spark: SparkSession, names: DataFrame, membership: DataFrame,
+  def entities(names: DataFrame, membership: DataFrame,
       saltBuckets: Int = 16): DataFrame = {
     val withComp = names.join(membership, Seq("name"), "left_outer")
       .withColumn("component",
@@ -89,7 +89,7 @@ object Canonicalize {
   }
 
   /** edges table: triples with obj rewritten to the canonical entity. */
-  def canonicalEdges(spark: SparkSession, triples: Dataset[graft.spark.Triple],
+  def canonicalEdges(triples: Dataset[graft.spark.Triple],
       nodes: DataFrame): DataFrame = {
     // No broadcast hint: the exploded alias->entity table grows with
     // the entity vocabulary, which at 10^12 documents outgrows the
@@ -118,7 +118,7 @@ object Canonicalize {
     * address), id-tagged by predicate so edges keep a uniform
     * (subj, pred, obj, obj_entity, url, warc_ts, confidence) schema.
     */
-  def canonicalSubjectEdges(spark: SparkSession,
+  def canonicalSubjectEdges(
       relations: Dataset[graft.spark.Triple], nodes: DataFrame): DataFrame = {
     // Unhinted for the same reason as [[canonicalEdges]]: the alias
     // table scales with the entity vocabulary; AQE chooses the strategy.

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
@@ -10,10 +10,11 @@ import graft.extract.Extractor
   * "MinHash-LSH blocking + broadcast alias-dictionary scoring").
   *
   * Names are normalized with the reference accent-folding, shingled into
-  * character 3-grams and MinHash-bucketed by spark.ml `MinHashLSH`'s rule
-  * in plain DataFrame code; candidate pairs come from an equi-join on
-  * (table, hash) — never the full cross product. Names sharing one
-  * normal form link directly through [[exactNormLinks]].
+  * character 3-grams and linked by spark.ml `MinHashLSH`'s rule in plain
+  * DataFrame code; candidate pairs come from an equi-join on the grams
+  * of a prefix filter, then the MinHash collision test — never the full
+  * cross product. Names sharing one normal form link directly through
+  * [[exactNormLinks]].
   */
 object Linker {
 
@@ -30,7 +31,7 @@ object Linker {
   /** Distinct names with support counts — the linking working set is the
     * name vocabulary (much smaller than the mention stream).
     */
-  def nameVocab(spark: SparkSession, triples: Dataset[graft.spark.Triple]): DataFrame =
+  def nameVocab(triples: Dataset[graft.spark.Triple]): DataFrame =
     triples.groupBy(col("obj").as("name"))
       .agg(count(lit(1)).as("support"))
 
@@ -57,23 +58,63 @@ object Linker {
   /** MinHash candidate pairs (nameA < nameB) whose Jaccard distance over
     * the gram-id sets is below `maxDistance`: the rows, and bit for bit the
     * `dist`, of spark.ml `MinHashLSH(5 tables, seed 42).approxSimilarityJoin`.
+    * `names` holds one row per name, as [[nameVocab]] gives it.
+    *
+    * That join returns a pair when (a) the names collide in at least one
+    * table and (b) `dist = 1 - J` is below `maxDistance`. Rather than
+    * self-joining on every (table, hash) and verifying each colliding
+    * pair, this finds the pairs that can pass (b) first, by prefix
+    * filtering (Chaudhuri et al., ICDE 2006; Bayardo et al., WWW 2007):
+    *  - grams are ordered globally by how many names hold them, rarest
+    *    first, ties by id; the order is collected to the driver (at most
+    *    2^18 ids) and each name keeps its first `n - ceil(tau * n) + 1`
+    *    grams in that order, clamped to `[1, n]`;
+    *  - a pair with `J >= tau` shares its rarest common gram within both
+    *    prefixes (every gram ranked before it in either name is one the
+    *    other lacks, and there are at most `n - ceil(tau * n)` of those),
+    *    so the self-join on prefix grams finds it; it is emitted once, at
+    *    its first shared prefix gram;
+    *  - `tau` is `1 - maxDistance` less 1e-9. The computed `dist` is off
+    *    from `1 - J` by a few ulps at most, so a pair whose `dist` passes
+    *    has `J` above `tau` by far more than `ceil` can round; a lower
+    *    `tau` only lengthens prefixes, which costs candidates, not rows.
+    * The pairs left are then held to (a) by comparing the five per-name
+    * table hashes. A collision means the names share a gram, since
+    * `((i + 1) * a + b) mod p` is injective on ids below 2^18 < p: so
+    * a pair that passes (b) sharing no gram, possible only above
+    * `maxDistance` 1 (where every gram is a prefix gram), never collides
+    * either, and the rule stays exact at any `maxDistance`. `dist` is
+    * the join's own expression, so its bits match.
     */
-  def candidatePairs(spark: SparkSession, names: DataFrame,
-      maxDistance: Double = 0.5): DataFrame = {
+  def candidatePairs(names: DataFrame, maxDistance: Double = 0.5): DataFrame = {
     val tableHashes = TableCoefficients.map { case (a, b) =>
       array_min(transform(col("ids"), i => ((i + 1L) * a + b) % Prime))
     }
     val keys = names.select(col("name"), gramIdsUdf(col("name")).as("ids"))
-      .select(col("name"), col("ids"),
-        posexplode(array(tableHashes: _*)).as(Seq("t", "h")))
-    val (l, r) = (keys.as("l"), keys.as("r"))
-    l.join(r, col("l.t") === col("r.t") && col("l.h") === col("r.h") &&
-        col("l.name") < col("r.name"))
+      .select(col("name"), col("ids"), array(tableHashes: _*).as("hashes"))
+    // rank(id): position in the global order, rarest gram first
+    val rank = new Array[Int](1 << 18)
+    keys.select(explode(col("ids")).as("id")).groupBy("id").count()
+      .collect().map(r => (r.getLong(1), r.getInt(0))).sorted
+      .zipWithIndex.foreach { case ((_, id), i) => rank(id) = i }
+    val tau = 1.0 - maxDistance - 1e-9
+    val prefixUdf = udf { (ids: Seq[Int]) =>
+      val n = ids.size
+      val len = math.min(n, math.max(1, n - math.ceil(tau * n).toInt + 1))
+      ids.sortBy(rank(_)).take(len)
+    }
+    val byPrefix = keys.withColumn("prefix", prefixUdf(col("ids")))
+      .withColumn("g", explode(col("prefix")))
+    val (l, r) = (byPrefix.as("l"), byPrefix.as("r"))
+    val collides = (0 until TableCoefficients.size)
+      .map(t => col("l.hashes")(t) === col("r.hashes")(t)).reduce(_ || _)
+    l.join(r, col("l.g") === col("r.g") && col("l.name") < col("r.name"))
+      .filter(element_at(array_intersect(col("l.prefix"), col("r.prefix")), 1)
+        === col("l.g") && collides)
       .select(col("l.name").as("name_a"), col("r.name").as("name_b"),
         (lit(1.0) - size(array_intersect(col("l.ids"), col("r.ids"))) /
           size(array_union(col("l.ids"), col("r.ids")))).as("dist"))
       .filter(col("dist") < maxDistance)
-      .distinct()
   }
 
   /** Exact-normal-form links: names whose normalization collides are the
@@ -86,7 +127,7 @@ object Linker {
     * of materializing one unbounded aggregation row. Same discipline as
     * `Dedup.boundedBucketPairs`'s hot-bucket branch.
     */
-  def exactNormLinks(spark: SparkSession, names: DataFrame): DataFrame = {
+  def exactNormLinks(names: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("norm").orderBy("name")
     names

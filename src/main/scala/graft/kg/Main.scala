@@ -157,23 +157,22 @@ object Main {
     }
 
     val links = stages.stage("links", stages.outputRowsOf("triples")) {
-      val vocab = Linker.nameVocab(spark, triples.as[graft.spark.Triple])
+      val vocab = Linker.nameVocab(triples.as[graft.spark.Triple])
       // names with one normal form share their 3-gram set, so the
       // MinHash join already returns every exact-normal-form pair
       // (dist 0.0), and its output is distinct
-      Linker.candidatePairs(spark, vocab, maxDistance = 0.3)
+      Linker.candidatePairs(vocab, maxDistance = 0.3)
     }
 
     val nodes = stages.stage("nodes", stages.outputRowsOf("links")) {
-      val vocab = Linker.nameVocab(spark, triples.as[graft.spark.Triple])
+      val vocab = Linker.nameVocab(triples.as[graft.spark.Triple])
       val membership = Canonicalize.components(spark, links)
-      Canonicalize.entities(spark, vocab, membership)
+      Canonicalize.entities(vocab, membership)
     }
 
     val edges = stages.stage("edges", stages.outputRowsOf("nodes")) {
-      Canonicalize.canonicalEdges(spark,
-          triples.as[graft.spark.Triple], nodes)
-        .unionByName(Canonicalize.canonicalSubjectEdges(spark,
+      Canonicalize.canonicalEdges(triples.as[graft.spark.Triple], nodes)
+        .unionByName(Canonicalize.canonicalSubjectEdges(
           relations.as[graft.spark.Triple], nodes))
     }
 

@@ -1,6 +1,8 @@
 package graft.kg
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,12 +15,16 @@ import org.apache.spark.sql.functions._
   * exists, so a killed job resumes from the last completed stage.
   *
   * LAYOUT: the lineage table `<base>/_lineage` is partitioned by stage.
-  * Each stage owns `_lineage/stage=<name>/`, holding one row per output
-  * partition (partition_id, input_rows, skipped_rows, output_rows,
-  * wall_ms, runner_nonce). The partition is overwritten (dynamic
-  * partition overwrite) whenever the stage is computed, so a stage that
-  * was recomputed after its dir was deleted holds only its latest row
-  * set and can never be double-counted.
+  * Each stage owns `_lineage/stage=<name>/`, holding one row per write
+  * task that wrote rows (partition_id, input_rows, skipped_rows,
+  * output_rows, wall_ms, runner_nonce). `partition_id` is the write
+  * task's partition, and `output_rows` is read from the footers of its
+  * part files, so recording lineage never scans the stage's output; the
+  * stage's frame is read back with the schema it was written with, so
+  * no schema-inference job runs either. The partition is overwritten
+  * (dynamic partition overwrite) whenever the stage is computed, so a
+  * stage that was recomputed after its dir was deleted holds only its
+  * latest row set and can never be double-counted.
   *
   * CONCURRENCY CONTRACT: one runner per outDir at a time. Every runner
   * stamps its rows with a per-instance `runner_nonce`; two runners that
@@ -85,24 +91,17 @@ final class Stages(spark: SparkSession, base: String) {
       val df = compute
       df.write.mode("overwrite").parquet(dir)
       val wallMs = (System.nanoTime() - t0) / 1000000L
-      val out = spark.read.parquet(dir)
       val inRows = inputRows
       val skipRows = skippedRows
-      // ONE scan produces both the per-partition lineage rows and the
-      // stage's output total: the aggregate collects to the driver
-      // (bounded — one (int, long) pair per output partition), the
-      // total feeds outputRowsOf, and the lineage parquet is written
-      // from the local rows without a second scan. An empty stage
-      // still writes one sentinel row (partition_id -1, 0 rows) so the
-      // resume path can distinguish "ran, produced nothing" from
-      // "never ran".
-      val partRows: Array[(Int, Long)] = out
-        .groupBy(spark_partition_id().as("partition_id"))
-        .agg(count(lit(1)).as("output_rows"))
-        .collect().map(r => (r.getInt(0), r.getLong(1)))
-      val rows = if (partRows.isEmpty) Array((-1, 0L)) else partRows
+      // The lineage rows come from the footers of the part files just
+      // written, read on the driver: no scan of the stage's parquet.
+      // An empty stage still writes one sentinel row (partition_id -1,
+      // 0 rows) so the resume path can distinguish "ran, produced
+      // nothing" from "never ran".
+      val partRows = footerRowCounts(dir)
+      val rows = if (partRows.isEmpty) Seq((-1, 0L)) else partRows
       computedOutputRows(name) = partRows.map(_._2).sum
-      spark.createDataFrame(rows.toIndexedSeq)
+      spark.createDataFrame(rows)
         .toDF("partition_id", "output_rows")
         .select(
           lit(name).as("stage"),
@@ -117,7 +116,28 @@ final class Stages(spark: SparkSession, base: String) {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("stage")
         .parquet(lineagePath)
-      out
+      // the schema just written, so the read plans no inference job
+      spark.read.schema(df.schema).parquet(dir)
     }
+  }
+
+  /** (partition_id, rows) per write task of the parquet at `dir`, from
+    * the part files' footers; a task's partition id is the number in
+    * its `part-<id>-…` file names, and tasks that wrote no rows are
+    * left out.
+    */
+  private def footerRowCounts(dir: String): Seq[(Int, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(dir)
+    path.getFileSystem(conf).listStatus(path).toSeq
+      .filter(_.getPath.getName.startsWith("part-"))
+      .map { st =>
+        val file = st.getPath.getName
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try (file.substring(5, file.indexOf('-', 5)).toInt, reader.getRecordCount)
+        finally reader.close()
+      }
+      .groupMapReduce(_._1)(_._2)(_ + _).toSeq
+      .filter(_._2 > 0L).sorted
   }
 }

@@ -343,7 +343,7 @@ object Dedup {
     * to repair duplicate inputs; run `doc_dedup_exact`-style keying
     * upstream if ids can repeat.
     */
-  def embeddingCosinePairs(spark: SparkSession, embeddings: DataFrame,
+  def embeddingCosinePairs(embeddings: DataFrame,
       minCosine: Double, nBits: Int = 6, maxBucket: Int = 500,
       hotChain: Int = 20, metrics: Option[Observation] = None): DataFrame = {
     // native codegen srp_sig: the bucketing pass touches every vector

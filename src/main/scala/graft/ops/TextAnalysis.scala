@@ -111,7 +111,7 @@ object TextAnalysis {
     *         a decontamination filter must surface clean docs, not
     *         drop them).
     */
-  def contamination(spark: SparkSession, docs: DataFrame,
+  def contamination(docs: DataFrame,
       benchmark: DataFrame, n: Int = 3,
       textCol: String = "text", idCol: String = "doc_id",
       maxBroadcastGrams: Long = 10000000L): DataFrame = {
@@ -326,7 +326,7 @@ object TextAnalysis {
     * negatives) — `doc_bloom_contamination` shares doc_contamination's
     * oracle SQL verbatim.
     */
-  def bloomContamination(spark: SparkSession, docs: DataFrame,
+  def bloomContamination(docs: DataFrame,
       benchmark: DataFrame, n: Int = 3, fpp: Double = 0.01,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val bset = benchmark

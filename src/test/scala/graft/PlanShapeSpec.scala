@@ -169,7 +169,7 @@ class PlanShapeSpec extends AnyFunSuite {
     docs.select(graft.ops.TextAnalysis.fingerprint(col("text"))).collect()
     assert(graft.ops.Dedup.minhashLshPairs(s, docs).count() == 1)
     graft.ops.Similarity.lshTopK(s, vecs, vecs, k = 1).collect()
-    graft.ops.TextAnalysis.bloomContamination(s, docs, docs.limit(1)).collect()
+    graft.ops.TextAnalysis.bloomContamination(docs, docs.limit(1)).collect()
     val mine = s.sql("SELECT canonical_url('http://b.com'), fnv1a64('x')").head()
     assert(mine.getString(0) == "mine" && mine.getLong(1) == 7L,
       s"a library call replaced the caller's functions: $mine")

@@ -11,10 +11,19 @@ import graft.TestSpark
 class SqlSurfaceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** A session of its own with graft's SQL functions registered, so
+    * suites that run later never see them by name in the shared one.
+    */
+  private def registeredSession() = {
+    val s = spark.newSession()
+    GraftFunctions.register(s)
+    s
+  }
+
   test("extract_tokens generator matches the kernel over SQL") {
     graft.corpus.RefCorpus.requirePresent()
+    val spark = registeredSession()
     import spark.implicits._
-    GraftFunctions.register(spark)
     graft.corpus.RefCorpus.pages(spark, Seq(7, 10)).createOrReplaceTempView("pages_v")
 
     val viaSql = spark.sql(
@@ -37,7 +46,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("fnv1a64 is usable from SQL and matches the scala impl") {
-    GraftFunctions.register(spark)
+    val spark = registeredSession()
     val got = spark.sql("SELECT fnv1a64('graft')").collect().head.getLong(0)
     assert(got == Fnv1a64.hashString("graft"))
   }
@@ -57,8 +66,8 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("dot_f32 matches the zip_with/aggregate formulation bit-for-bit") {
+    val spark = registeredSession()
     import spark.implicits._
-    GraftFunctions.register(spark)
     // irrational-ish values so summation order matters at the ULP level
     val rows = (0 until 50).map { i =>
       val a = Array.tabulate(64)(d => (math.sin(i * 131 + d) * 3.7).toFloat)
@@ -79,8 +88,8 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("dot_f32 rejects length mismatch and propagates null") {
+    val spark = registeredSession()
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq((Array(1f, 2f), Array(1f, 2f, 3f))).toDF("a", "b")
     intercept[Exception] { df.selectExpr("dot_f32(a, b)").collect() }
     val n = Seq((Some(Array(1f)), Option.empty[Array[Float]]))
@@ -89,7 +98,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("dot_f32 null elements poison like zip_with; double arrays accepted") {
-    GraftFunctions.register(spark)
+    val spark = registeredSession()
     // null element anywhere -> NULL (the zip_with formulation's semantics)
     val withNullElem = spark.sql(
       "SELECT dot_f32(array(1.0F, CAST(NULL AS FLOAT)), array(2.0F, 3.0F)) AS d")

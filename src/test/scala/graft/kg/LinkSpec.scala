@@ -21,7 +21,7 @@ class LinkSpec extends AnyFunSuite {
       ("Jose Garcia", 10L), ("José García", 3L), ("Jose  Garcia", 1L),
       ("John Smith", 5L), ("John Smith Jr", 2L),
       ("Wolfgang Pauli", 4L), ("Xinyi Zhang", 4L))
-    val pairs = Linker.candidatePairs(spark, names, maxDistance = 0.4)
+    val pairs = Linker.candidatePairs(names, maxDistance = 0.4)
       .select("name_a", "name_b").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(pairs.contains(("Jose Garcia", "José García")) ||
@@ -31,52 +31,87 @@ class LinkSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1.contains("Garcia") && p._2.contains("Smith")))
   }
 
-  test("candidatePairs returns spark.ml MinHashLSH's rows with bit-identical dist") {
+  /** Every first x last name (40 x 40, so each first name is a hot
+    * bucket).
+    */
+  private lazy val fullNames = {
+    import graft.corpus.SyntheticCorpus.{FirstNames, LastNames}
+    for (f <- FirstNames; l <- LastNames) yield s"$f $l"
+  }
+
+  /** Asserts that `Linker.candidatePairs` returns exactly the rows of
+    * spark.ml `MinHashLSH(5 tables, seed 42).approxSimilarityJoin` over
+    * `names`, with bit-identical `dist`, at each of `distances`; returns
+    * the reference rows per distance.
+    */
+  private def assertMatchesMinHashLsh(names: Seq[String],
+      distances: Seq[Double]): Seq[Set[(String, String, Long)]] = {
     import spark.implicits._
     import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
-    import graft.corpus.SyntheticCorpus.{FirstNames, LastNames}
-    // every first x last name (40 x 40, so each first name is a hot
-    // bucket), an accent-folded and a one-edit variant of each, then
-    // multi-byte grams and names of 0-2 characters
+    val df = names.distinct.map(n => (n, 1L)).toDF("name", "support")
+    val grams = udf((n: String) => Linker.shingles(Linker.normalize(n)))
+    val feat = new HashingTF().setInputCol("grams").setOutputCol("features")
+      .setNumFeatures(1 << 18).setBinary(true)
+      .transform(df.withColumn("grams", grams(col("name"))))
+    val model = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
+      .setNumHashTables(5).setSeed(42).fit(feat)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1),
+        java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSeq
+    distances.map { maxDistance =>
+      val expected = rows(model.approxSimilarityJoin(feat, feat, maxDistance, "dist")
+        .filter(col("datasetA.name") < col("datasetB.name"))
+        .select(col("datasetA.name"), col("datasetB.name"), col("dist"))).toSet
+      val got = Linker.candidatePairs(df, maxDistance)
+      assert(got.columns.toSeq == Seq("name_a", "name_b", "dist"))
+      val gotSeq = rows(got)
+      val gotRows = gotSeq.toSet
+      assert(gotSeq.size == gotRows.size, "one row per pair")
+      val (missing, extra) = (expected -- gotRows, gotRows -- expected)
+      assert(missing.size + extra.size == 0, s"maxDistance $maxDistance: " +
+        s"missing ${missing.take(5)}, extra ${extra.take(5)}")
+      expected
+    }
+  }
+
+  test("candidatePairs returns spark.ml MinHashLSH's rows with bit-identical dist") {
+    // the full names, an accent-folded and a one-edit variant of each,
+    // then multi-byte grams and names of 0-2 characters
     val rand = new scala.util.Random(7)
-    val full = for (f <- FirstNames; l <- LastNames) yield s"$f $l"
-    val folded = full.map(n => java.text.Normalizer
+    val folded = fullNames.map(n => java.text.Normalizer
       .normalize(n, java.text.Normalizer.Form.NFD).replaceAll("\\p{M}", ""))
-    val edited = full.map { n =>
+    val edited = fullNames.map { n =>
       n.updated(rand.nextInt(n.length), ('a' + rand.nextInt(26)).toChar)
     }
     val special = Seq("Łukasz Żółć", "Lukasz Zolc", "Łukasz Zolc",
       "王小明", " 王小明", "王晓明", "山田太郎", "山田花子", "김민준", "김민지",
       "司马相如与卓文君的故事", "司马相如与卓文君的传说",
       "", " ", "a", "A", "ab", "Ab", "é", "xy")
-    val names = (full ++ folded ++ edited ++ special).distinct
-      .map(n => (n, 1L)).toDF("name", "support")
-    assert(names.count() > 3000)
-
-    val grams = udf((n: String) => Linker.shingles(Linker.normalize(n)))
-    val feat = new HashingTF().setInputCol("grams").setOutputCol("features")
-      .setNumFeatures(1 << 18).setBinary(true)
-      .transform(names.withColumn("grams", grams(col("name"))))
-    val model = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
-      .setNumHashTables(5).setSeed(42).fit(feat)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1),
-        java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSeq
-    for (maxDistance <- Seq(0.3, 0.4)) {
-      val expected = rows(model.approxSimilarityJoin(feat, feat, maxDistance, "dist")
-        .filter(col("datasetA.name") < col("datasetB.name"))
-        .select(col("datasetA.name"), col("datasetB.name"), col("dist"))).toSet
-      val got = Linker.candidatePairs(spark, names, maxDistance)
-      assert(got.columns.toSeq == Seq("name_a", "name_b", "dist"))
-      val gotSeq = rows(got)
-      val gotRows = gotSeq.toSet
-      assert(gotSeq.size == gotRows.size, "one row per pair")
+    val names = (fullNames ++ folded ++ edited ++ special).distinct
+    assert(names.size > 3000)
+    for (expected <- assertMatchesMinHashLsh(names, Seq(0.1, 0.3, 0.4, 0.5))) {
       assert(expected.size > 500, s"only ${expected.size} reference rows")
       assert(expected.exists(_._1.exists(_ >= 0x3000)), "no CJK pair")
-      val (missing, extra) = (expected -- gotRows, gotRows -- expected)
-      assert(missing.size + extra.size == 0, s"maxDistance $maxDistance: " +
-        s"missing ${missing.take(5)}, extra ${extra.take(5)}")
     }
+  }
+
+  test("candidatePairs matches MinHashLSH when prefixes hold only hot grams") {
+    // every word of 2-9 letters over the letters of the full names'
+    // most frequent gram: each gram such a word holds is held by more
+    // names than any other gram, so its rarest-first prefix is made of
+    // the vocabulary's hottest grams, join keys shared by hundreds of names
+    def grams(ns: Seq[String]) = ns.flatMap(n => Linker.shingles(Linker.normalize(n)))
+    val letters = grams(fullNames).groupBy(identity).maxBy(_._2.size)._1
+      .filter(_.isLetter).distinct
+    val words = (2 to 9).flatMap(k =>
+      (1 to k).foldLeft(Seq(""))((ws, _) => for (w <- ws; c <- letters) yield w + c))
+    val names = words.map(_.capitalize) ++ fullNames
+    val df = grams(names).groupBy(identity).view.mapValues(_.size).toMap
+    val hot = grams(words).toSet
+    assert(hot.map(df).min > (df.keySet -- hot).map(df).max)
+    val counts = assertMatchesMinHashLsh(names, Seq(0.1, 0.3, 0.4, 0.5))
+      .map(_.size)
+    assert(counts.last > 1000, s"reference rows per distance: $counts")
   }
 
   test("connected components + canonical election merge variant clusters") {
@@ -87,7 +122,7 @@ class LinkSpec extends AnyFunSuite {
       ("Jose Garcia", "José García", 0.1),
       ("Garcia, Jose", "Jose Garcia", 0.2))).toDF("name_a", "name_b", "dist")
     val membership = Canonicalize.components(spark, pairs)
-    val nodes = Canonicalize.entities(spark, names, membership)
+    val nodes = Canonicalize.entities(names, membership)
     val rows = nodes.collect()
     assert(rows.length == 3) // garcia cluster + 2 singletons
     val garcia = rows.find(_.getAs[scala.collection.Seq[String]]("aliases").length == 3).get
@@ -106,7 +141,7 @@ class LinkSpec extends AnyFunSuite {
       .select(least(col("name_a"), col("name_b")).as("name_a"),
         greatest(col("name_a"), col("name_b")).as("name_b"), col("dist"))
     val membership = Canonicalize.components(spark, pairs)
-    val nodes = Canonicalize.entities(spark, names, membership, saltBuckets = 16)
+    val nodes = Canonicalize.entities(names, membership, saltBuckets = 16)
     val rows = nodes.collect()
     assert(rows.length == 1)
     assert(rows.head.getAs[String]("canonical_name") == "Hot Wang")
@@ -121,7 +156,7 @@ class LinkSpec extends AnyFunSuite {
     val names = namesDf(
       ("jose garcia", 5L), ("José García", 3L), ("JOSE GARCIA", 1L),
       ("Ada L", 1L))
-    val links = Linker.exactNormLinks(spark, names)
+    val links = Linker.exactNormLinks(names)
     val membership = Canonicalize.components(spark, links)
     val comps = membership.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -193,7 +228,7 @@ class LinkSpec extends AnyFunSuite {
           format_string("person:%03d", monotonically_increasing_id())
             .as("entity_id"),
           col("canonical_name"), col("aliases"))
-      val edges = Canonicalize.canonicalEdges(spark, triples, nodes)
+      val edges = Canonicalize.canonicalEdges(triples, nodes)
       // execute the edges plan ITSELF (count() would build a separate
       // aggregate plan and leave edges' adaptive plan non-final)
       val n = edges.collect().length

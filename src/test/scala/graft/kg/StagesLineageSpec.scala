@@ -39,6 +39,46 @@ class StagesLineageSpec extends AnyFunSuite {
     assert(linC.forall(_.getAs[Long]("input_rows") == 1L))
   }
 
+  test("lineage rows: one per write task, summing to the parquet's count") {
+    val base = java.nio.file.Files.createTempDirectory("stages_parts").toString
+    val st = new Stages(spark, base)
+    val out = st.stage("r") { spark.range(0, 1000, 1, 7).toDF() }
+    val parquet = spark.read.parquet(s"$base/r")
+    // read back with the written schema, so no inference job ran
+    assert(out.schema == parquet.schema)
+    val lin = st.lineage().filter(col("stage") === "r")
+      .select("partition_id", "output_rows").collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toSeq
+    assert(lin.map(_._1).distinct.size == lin.size, s"partition ids: $lin")
+    assert(lin.size == 7 && lin.forall(_._2 > 0L), s"rows: $lin")
+    assert(lin.map(_._2).sum == parquet.count())
+    assert(st.outputRowsOf("r") == 1000L)
+    TestSpark.deleteRec(new java.io.File(base))
+  }
+
+  test("a stage over a local frame runs two jobs: its write and its lineage write") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("stages_jobs").toString
+    val st = new Stages(spark, base)
+    val sc = spark.sparkContext
+    val group = s"stages-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "stage bookkeeping job count")
+      try st.stage("local") { Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v") }
+      finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      assert(jobs.get == 2)
+    } finally sc.removeSparkListener(listener)
+    assert(st.outputRowsOf("local") == 3L)
+    TestSpark.deleteRec(new java.io.File(base))
+  }
+
   test("mixed runner nonces in one stage partition report unknown, not the sum") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("stages_race").toString

@@ -115,9 +115,9 @@ class MergeRankingSpec extends AnyFunSuite {
       (0L, "a b c d e"), (1L, "c d e f g"), (2L, "x y z w q"),
       (3L, "a b"), (4L, "")).toDF("doc_id", "text")
     val bench = Seq((100L, "c d e")).toDF("doc_id", "text")
-    val exact = TextAnalysis.contamination(spark, docs, bench, n = 3)
+    val exact = TextAnalysis.contamination(docs, bench, n = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val bloom = TextAnalysis.bloomContamination(spark, docs, bench, n = 3)
+    val bloom = TextAnalysis.bloomContamination(docs, bench, n = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(bloom === exact)
     assert(exact(0L) === 1L && exact(1L) === 1L && exact(2L) === 0L)

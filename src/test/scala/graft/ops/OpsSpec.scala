@@ -280,7 +280,7 @@ class OpsSpec extends AnyFunSuite {
     // plant exact copies with shifted ids: cosine 1.0, same SRP bucket
     val planted = e.select((col("vec_id") + 1000000).as("vec_id"),
       col("embedding"))
-    val pairs = Dedup.embeddingCosinePairs(spark, e.unionByName(planted),
+    val pairs = Dedup.embeddingCosinePairs(e.unionByName(planted),
         minCosine = 0.999)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val n = e.count()
@@ -406,7 +406,7 @@ class OpsSpec extends AnyFunSuite {
       .unionByName(spark.range(600).select((col("id") + 10000).as("vec_id"),
         typedlit(vb).as("embedding")))
     val obs = new org.apache.spark.sql.Observation("cos_hot")
-    val pairs = Dedup.embeddingCosinePairs(spark, df, minCosine = 0.999,
+    val pairs = Dedup.embeddingCosinePairs(df, minCosine = 0.999,
         maxBucket = 100, hotChain = 4, metrics = Some(obs))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.size <= 1200 * 5, s"hot cosine bucket exploded: ${pairs.size}")
@@ -755,7 +755,7 @@ class OpsSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val bench = Seq((100L, "a quick brown fox runs"), (101L, "ab"))
       .toDF("doc_id", "text")
-    val out = TextAnalysis.contamination(spark, docs, bench, n = 3)
+    val out = TextAnalysis.contamination(docs, bench, n = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // doc 1: trigrams {the quick brown, quick brown fox, brown fox jumps};
     // bench has {a quick brown, quick brown fox, brown fox runs} -> 1 hit
@@ -772,14 +772,14 @@ class OpsSpec extends AnyFunSuite {
     val big = spark.range(5000).select(col("id").as("doc_id"),
       concat(lit("quick brown fox word"), col("id").cast("string"),
         lit(" tail word"), col("id").cast("string")).as("text"))
-    val guarded = TextAnalysis.contamination(spark, docs, big, n = 3,
+    val guarded = TextAnalysis.contamination(docs, big, n = 3,
       maxBroadcastGrams = 100)
     // the semi-join on the over-cap side carries no broadcast HINT
     // (ResolvedHint/broadcast) in the analyzed plan
     val analyzed = guarded.queryExecution.analyzed.toString
     assert(!analyzed.contains("ResolvedHint"),
       s"over-cap benchmark still hinted:\n$analyzed")
-    val small = TextAnalysis.contamination(spark, docs, big, n = 3)
+    val small = TextAnalysis.contamination(docs, big, n = 3)
     assert(guarded.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       small.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
   }
