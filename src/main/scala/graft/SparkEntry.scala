@@ -26,9 +26,9 @@ object SparkEntry {
     sum(c.cast("decimal(18,2)")).cast("double")
 
   /** Unit-normalize the embedding column, so a plain dot IS the cosine
-    * — one dot product per candidate pair instead of cosineCol's three
-    * (it recomputes both norms per PAIR; normalizing each side once is
-    * the scale-correct place to pay the norm). The norm must NOT be
+    * — one dot product per candidate pair instead of three (a pairwise
+    * cosine recomputes both norms per PAIR; normalizing each side once
+    * is the scale-correct place to pay the norm). The norm must NOT be
     * referenced from inside a higher-order lambda, not even via its
     * own aliased column: Catalyst's CollapseProject inlines a
     * single-use alias back into the lambda, where it re-evaluates once
@@ -1285,9 +1285,9 @@ object SparkEntry {
     // independently. Arrival order is controlled (contiguous ascending
     // id ranges), so "first observed" and "min (warc_ts, url)" agree
     // and the result is deterministic. The driver-side collect is the
-    // REPLAY HARNESS ONLY, bounded by the sf corpus (production ingest
-    // streams from crawl file-drops via IncrementalIngest; MemoryStream
-    // is the only way to pin cross-micro-batch arrival order).
+    // REPLAY HARNESS ONLY, bounded by the sf corpus (MemoryStream is
+    // the only way to pin cross-micro-batch arrival order;
+    // stream_first_seen_files below replays from a file source).
     "stream_first_seen" -> ((s, dir) => {
       import s.implicits._
       val rows: Array[(Long, String)] = t(s, dir, "documents")
@@ -1306,7 +1306,7 @@ object SparkEntry {
         .MemoryStream[graft.spark.Page]
       val name = "stream_first_seen_" + streamSeq.incrementAndGet()
       val q = graft.streaming.Monitors
-        .firstSeenByContent(ss, in.toDS(), stateTimeout = None)
+        .firstSeenByContent(ss, in.toDS())
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       try {
@@ -1325,12 +1325,12 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // §2.8 the PRODUCTION-shaped replay of the same keyed-state
-    // first-seen dedup: a FILE SOURCE (the IncrementalIngest
-    // crawl-drop shape) — documents spooled as ascending doc_id-range
-    // parquet chunks with ascending mtimes, consumed with
-    // maxFilesPerTrigger=1 under Trigger.AvailableNow — NOTHING ever
-    // collects to the driver, unlike the MemoryStream harness above.
+    // §2.8 the file-source replay of the same keyed-state first-seen
+    // dedup: a FILE SOURCE (the crawl-drop shape) — documents spooled
+    // as ascending doc_id-range parquet chunks with ascending mtimes,
+    // consumed with maxFilesPerTrigger=1 under Trigger.AvailableNow —
+    // NOTHING ever collects to the driver, unlike the MemoryStream
+    // harness above.
     // Result is batching-placement-independent by construction: the
     // within-batch winner is min (warc_ts, url) and warc_ts encodes
     // doc_id, so however Spark buckets the files into micro-batches
@@ -1383,7 +1383,7 @@ object SparkEntry {
           .as[graft.spark.Page]
         val name = "stream_first_seen_files_" + streamSeq.incrementAndGet()
         val q = graft.streaming.Monitors
-          .firstSeenByContent(ss, pages, stateTimeout = None)
+          .firstSeenByContent(ss, pages)
           .writeStream.format("memory").queryName(name)
           .outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1778,7 +1778,7 @@ object SparkEntry {
     }
     // dangling mode: one exact-decimal scalar CTE per iteration (the
     // rank parked on out-degree-0 nodes), folded into the update the
-    // same way GraphOps.prState's step does: d * (recv + DM/N)
+    // same way GraphOps.pagerank's step does: d * (recv + DM/N)
     val recvSql =
       if (dangling)
         "(CAST(COALESCE(s.c, 0) AS DOUBLE) + CAST(dm%d.dm AS DOUBLE)/nn.n)"

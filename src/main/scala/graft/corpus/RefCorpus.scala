@@ -37,9 +37,6 @@ object RefCorpus {
 
   def urlOf(id: Int): String = urls.getOrElse(id, s"doc://$id")
 
-  def idOf(url: String): Option[Int] =
-    urls.collectFirst { case (i, u) if u == url => i }
-
   def warcTs(id: Int): Timestamp =
     new Timestamp(1546300800000L + id * 3600L * 1000L) // 2019-01-01 + id hours
 

@@ -88,29 +88,6 @@ final class Tag(
     }
   }
 
-  /** bs4 find_all(name): descendant Tags with the given name.
-    * (Index loops: ArrayBuffer.foreach allocates an iterator per call
-    * in 2.13, and this runs for every tag of every page.)
-    */
-  def findAll(tagName: String): Vector[Tag] = {
-    val out = Vector.newBuilder[Tag]
-    def rec(t: Tag): Unit = {
-      val cs = t.contents
-      var i = 0
-      while (i < cs.length) {
-        cs(i) match {
-          case c: Tag =>
-            if (c.name == tagName) out += c
-            rec(c)
-          case _ =>
-        }
-        i += 1
-      }
-    }
-    rec(this)
-    out.result()
-  }
-
   /** Any Tag descendant exists (bs4 findChildren() nonempty). A tag
     * descendant at any depth implies a tag child, so direct children
     * suffice.

@@ -369,9 +369,9 @@ object Extractor {
     val soup = Bs4TreeBuilder.parse(html, config)
 
     // remove script and style subtrees, then mark childless <br> as 'BR'
-    // — one fused traversal (three findAll passes walked the tree three
-    // times); extraction/marking order matches the original: scripts,
-    // then styles, then the br childless-check after extraction
+    // — one fused traversal, not one find_all walk per tag name;
+    // extraction/marking order matches the original: scripts, then
+    // styles, then the br childless-check after extraction
     val scripts = new ArrayBuffer[graft.dom.Tag]()
     val styles = new ArrayBuffer[graft.dom.Tag]()
     val brs = new ArrayBuffer[graft.dom.Tag]()
@@ -439,23 +439,5 @@ object Extractor {
     if (sentence.nonEmpty) sentences ++= splitSentence(sentence)
 
     sentences.map(_.toSeq).toSeq
-  }
-
-  /** CoNLL serialization of one page (`util/html_segmenter.py:351-355`):
-    * `tkn bio f0..f12`, sentences separated by a blank line.
-    */
-  def toConll(sentences: Seq[Seq[HtmlToken]]): String = {
-    val sb = new StringBuilder
-    var si = 0
-    sentences.foreach { s =>
-      s.foreach { t =>
-        sb.append(t.tkn).append(' ').append(t.bio)
-        t.features.foreach { f => sb.append(' ').append(f) }
-        sb.append('\n')
-      }
-      si += 1
-      if (si < sentences.length) sb.append('\n')
-    }
-    sb.toString
   }
 }

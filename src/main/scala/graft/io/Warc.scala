@@ -250,34 +250,7 @@ object Warc {
     * — they are products of the extraction pipeline, not the crawl.
     * Only file PATHS flow through Spark; each task streams its file
     * from the Hadoop filesystem (works for file://, hdfs://, s3a://
-    * with default or cluster-provided configuration).
-    */
-  def pages(spark: SparkSession, path: String,
-      maxRecordBytes: Long = 64L * 1024 * 1024,
-      skipped: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[Page] =
-    warcDataset(spark, path, maxRecordBytes, "response", skipped) { r =>
-      r.targetUri.map { uri =>
-        Page(uri, parseDate(r.date), httpBody(r.payload), "", "")
-      }
-    }
-
-  /** WET variant (Common Crawl's extracted-text sibling format): the
-    * `conversion` records carry plain UTF-8 text, no HTTP head — they
-    * land in the `text` column with empty `html` (the extraction kernel
-    * is bypassed; WET is the crawl's own extraction, useful for the
-    * dedup/quality/ANN ops that consume `documents`-shaped text).
-    */
-  def wetPages(spark: SparkSession, path: String,
-      maxRecordBytes: Long = 64L * 1024 * 1024,
-      skipped: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[Page] =
-    warcDataset(spark, path, maxRecordBytes, "conversion", skipped) { r =>
-      r.targetUri.map { uri =>
-        Page(uri, parseDate(r.date), Array.emptyByteArray,
-          new String(r.payload, StandardCharsets.UTF_8), "")
-      }
-    }
-
-  /** Shared task plumbing for [[pages]]/[[wetPages]]:
+    * with default or cluster-provided configuration):
     *  - the SESSION Hadoop configuration (spark.hadoop.* credentials,
     *    endpoints) is broadcast to tasks as key/value pairs — a blank
     *    `new Configuration()` on the executor would not see them;
@@ -287,10 +260,9 @@ object Warc {
     *  - oversized-record skips are counted in the optional accumulator
     *    and logged, never silent.
     */
-  private def warcDataset(spark: SparkSession, path: String, cap: Long,
-      wantedType: String,
-      skipped: Option[org.apache.spark.util.LongAccumulator])(
-      project: Record => Option[Page]): Dataset[Page] = {
+  def pages(spark: SparkSession, path: String,
+      maxRecordBytes: Long = 64L * 1024 * 1024,
+      skipped: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[Page] = {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
     val confKv: Array[(String, String)] =
@@ -308,13 +280,15 @@ object Warc {
           Option(org.apache.spark.TaskContext.get()).foreach(
             _.addTaskCompletionListener[Unit](_ =>
               try raw.close() catch { case _: Throwable => () }))
-          records(raw, file.endsWith(".gz"), cap, len => {
+          records(raw, file.endsWith(".gz"), maxRecordBytes, len => {
             skipped.foreach(_.add(1))
-            org.slf4j.LoggerFactory.getLogger(Warc.getClass)
-              .warn(s"skipping oversized WARC record ($len bytes > $cap) in $file")
+            org.slf4j.LoggerFactory.getLogger(Warc.getClass).warn(
+              s"skipping oversized WARC record ($len bytes > $maxRecordBytes) in $file")
           })
-            .filter(_.warcType == wantedType)
-            .flatMap(project)
+            .filter(_.warcType == "response")
+            .flatMap(r => r.targetUri.map { uri =>
+              Page(uri, parseDate(r.date), httpBody(r.payload), "", "")
+            })
         }
       }
   }

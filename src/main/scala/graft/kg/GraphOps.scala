@@ -135,71 +135,6 @@ object GraphOps {
       seeds: Option[Seq[String]] = None,
       weighted: Boolean = false,
       danglingRedistribute: Boolean = false): DataFrame = {
-    val st = prState(edges, damping, scale, seeds, weighted,
-      danglingRedistribute)
-    // Dangling mode references pr TWICE per step (the DM scalar and the
-    // contribution join), so an un-checkpointed lineage doubles the
-    // pr_t subplan per iteration — 2^iters recomputations of iteration
-    // 1 by the final action (measured r8: kg_pagerank_dangling 5.6 s vs
-    // kg_pagerank 2.2 s at identical graph/iters). Checkpoint every
-    // iteration in that mode, and the final ranks in both; values are
-    // unchanged — checkpointing is plan-only.
-    var pr = st.init
-    for (i <- 1 to iters) {
-      pr = st.step(pr)
-      if (danglingRedistribute || i == iters) pr = pr.localCheckpoint(true)
-    }
-    pr.select("node", "rank")
-  }
-
-  /** Convergence-terminated PageRank for production use: iterates
-    * [[pagerank]]'s exact step until the L1 rank delta — an exact
-    * DECIMAL(38,15) sum of per-node |pr_t+1 - pr_t|, so the stopping
-    * decision is itself bit-reproducible at any parallelism — falls to
-    * `tol` or `maxIters` is hit. Fixed-iteration mode stays the oracle
-    * surface; PagerankTolSpec proves this returns EXACTLY
-    * `pagerank(iters = k)` where k is the first iteration whose delta
-    * crosses tol. Each iteration eagerly checkpoints (the delta
-    * aggregation is an action anyway) so lineage stays flat at any
-    * iteration count. Returns (ranks, iterations run).
-    */
-  def pagerankTol(spark: SparkSession, edges: DataFrame, tol: Double,
-      maxIters: Int = 50, damping: Double = 0.85, scale: Int = 12,
-      seeds: Option[Seq[String]] = None,
-      weighted: Boolean = false,
-      danglingRedistribute: Boolean = false): (DataFrame, Int) = {
-    require(tol > 0, "tol must be positive")
-    val st = prState(edges, damping, scale, seeds, weighted,
-      danglingRedistribute)
-    var pr = st.init.localCheckpoint(true)
-    var it = 0
-    var delta = Double.MaxValue
-    while (it < maxIters && delta > tol) {
-      val next = st.step(pr).localCheckpoint(true)
-      val d = next.as("a")
-        .join(pr.as("b"), col("a.node") === col("b.node"))
-        .agg(sum(abs(col("a.rank") - col("b.rank"))
-          .cast(DecimalType(38, 15))).as("d"))
-        .head.getDecimal(0)
-      delta = if (d == null) 0.0 else d.doubleValue()
-      pr = next
-      it += 1
-    }
-    (pr.select("node", "rank"), it)
-  }
-
-  /** The shared iteration machinery behind [[pagerank]] and
-    * [[pagerankTol]] — ONE definition of the contribution join, the
-    * rounding contract, and the dangling-mass term, so the two modes
-    * cannot drift. Rank frames carry each node's `has_out` flag, so the
-    * dangling mass is a filter, not a join.
-    */
-  private final case class PrState(init: DataFrame,
-      step: DataFrame => DataFrame)
-
-  private def prState(edges: DataFrame, damping: Double, scale: Int,
-      seeds: Option[Seq[String]], weighted: Boolean,
-      danglingRedistribute: Boolean): PrState = {
     // edge ⋈ outdeg in ONE read of `edges` (typically a full derivation
     // such as bigramEdges): the out-degree is a window over the edges
     // hash-partitioned on src, and the checkpoint keeps that
@@ -268,7 +203,19 @@ object GraphOps {
             col("has_out"))
       }
     }
-    PrState(nodes.select(col("node"), init.as("rank"), col("has_out")), step)
+    // Dangling mode references pr TWICE per step (the DM scalar and the
+    // contribution join), so an un-checkpointed lineage doubles the
+    // pr_t subplan per iteration — 2^iters recomputations of iteration
+    // 1 by the final action (measured r8: kg_pagerank_dangling 5.6 s vs
+    // kg_pagerank 2.2 s at identical graph/iters). Checkpoint every
+    // iteration in that mode, and the final ranks in both; values are
+    // unchanged — checkpointing is plan-only.
+    var pr = nodes.select(col("node"), init.as("rank"), col("has_out"))
+    for (i <- 1 to iters) {
+      pr = step(pr)
+      if (danglingRedistribute || i == iters) pr = pr.localCheckpoint(true)
+    }
+    pr.select("node", "rank")
   }
 
   /** Triangle count per node over the UNDIRECTED simple graph induced

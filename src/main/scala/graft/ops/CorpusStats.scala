@@ -20,17 +20,11 @@ import org.apache.spark.sql.functions._
   *     whose global index range contains a wanted rank run the fetch,
   *     each stopping at its last wanted row. At most 2 * |probs|
   *     scalars return.
-  * Two modes:
-  *  - [[tokenCardSketch]] is the 10^12-row DEFAULT: one mergeable
-  *    single-scan aggregation, no shuffle-sort, rank error bounded by
-  *    n/accuracy — but its sketch output is engine-specific and cannot
-  *    be cross-checked exactly;
-  *  - [[tokenCard]] / [[exactQuantiles]] is the ORACLE mode: exact,
-  *    bit-comparable to DuckDB's `quantile_cont` (this is what the
-  *    driver hash-checks), scalable in the sense that no partition
-  *    ever holds more than its share and the driver never sees data —
-  *    but it costs a range-repartition + sort of the value column,
-  *    which a mere stats call shouldn't pay at corpus scale.
+  * The result is bit-comparable to DuckDB's `quantile_cont` (the
+  * registry hash-checks it), and scalable in the sense that no
+  * partition ever holds more than its share and the driver never sees
+  * data — at the cost of a range-repartition + sort of the value
+  * column.
   *
   * Lineage guard: a map-stage recomputation between the two jobs over
   * NONDETERMINISTIC input would shift ranks; the fetch fails fast when
@@ -154,38 +148,5 @@ object CorpusStats {
       s.quantiles.getOrElse(0.9, Double.NaN)))
       .toDF("n_docs", "total_tokens", "min_tokens", "max_tokens",
         "p50_tokens", "p90_tokens")
-  }
-
-  /** Sketch-mode dataset card — the scale default. ONE map-side-
-    * combinable aggregation (count/sum/min/max plus a mergeable
-    * Greenwald-Khanna `percentile_approx` sketch), so the whole card
-    * costs a single scan and a partials-merge: no range repartition, no
-    * sort, nothing driver-side. Unlike the exact mode this is a LAZY
-    * one-row DataFrame (composable into a larger plan); same schema as
-    * [[tokenCard]].
-    *
-    * Error contract: the sketch guarantees RANK error <= n/accuracy,
-    * and each returned quantile is an actual data value whose rank sits
-    * within that window of `p*(n-1)` (asserted end-to-end in
-    * CorpusStatsSpec). The scalar columns are exact. For the
-    * hash-oracle surface use [[tokenCard]] — sketch output is
-    * engine-specific by nature.
-    */
-  def tokenCardSketch(docs: DataFrame, tokenCol: String = "n_tokens",
-      accuracy: Int = 10000): DataFrame = {
-    require(accuracy > 0, s"accuracy must be positive: $accuracy")
-    val v = col(tokenCol).cast("double")
-    docs
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(v).cast("long").as("total_tokens"),
-        min(v).cast("long").as("min_tokens"),
-        max(v).cast("long").as("max_tokens"),
-        percentile_approx(v, array(lit(0.5), lit(0.9)), lit(accuracy))
-          .as("q"))
-      .select(col("n_docs"), col("total_tokens"), col("min_tokens"),
-        col("max_tokens"),
-        col("q").getItem(0).as("p50_tokens"),
-        col("q").getItem(1).as("p90_tokens"))
   }
 }

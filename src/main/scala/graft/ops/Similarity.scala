@@ -31,9 +31,6 @@ object Similarity {
 
   def normCol(a: Column): Column = sqrt(dotCol(a, a))
 
-  def cosineCol(a: Column, b: Column): Column =
-    dotCol(a, b) / (normCol(a) * normCol(b))
-
   /** Probe-set rows above which the probe-side broadcast is withheld.
     * At the default, a 64-dim float probe set broadcasts ~50 MB — fine
     * on any executor; past the cap the bucketed paths (lsh/ivf) fall

@@ -1,6 +1,6 @@
 package graft.tag
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Parquet save/load for [[BiLstmCrfScorer]] weights — the import half
@@ -99,8 +99,4 @@ object BiLstmWeightsIO {
       transition = mat("transition").map(_.map(_.toDouble)),
       charLstm = charLstm)
   }
-
-  /** The tensor table as a DataFrame (inspection / SQL surface). */
-  def tensorTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/tensors")
 }

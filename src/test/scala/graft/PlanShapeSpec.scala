@@ -130,8 +130,6 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(graft.kg.GraphOps.pagerank(spark, e, iters = 2).count() == 4)
       assert(graft.kg.GraphOps.pagerank(spark, e, iters = 2,
         danglingRedistribute = true).count() == 4)
-      assert(graft.kg.GraphOps.pagerankTol(spark, e, tol = 1e-3)._1
-        .count() == 4)
       assert(graft.kg.GraphOps.shortestPaths(spark, w, "a", iters = 2)
         .count() == 4)
       assert(graft.kg.GraphOps.labelPropagation(spark, e, rounds = 2)

@@ -107,22 +107,6 @@ class WarcSpec extends AnyFunSuite {
     graft.TestSpark.deleteRec(dir.toFile)
   }
 
-  test("wetPages: conversion records project extracted text, no html") {
-    val dir = java.nio.file.Files.createTempDirectory("wet_test")
-    val wet =
-      record("warcinfo", "", "2024-03-01T00:00:00Z", "fmt: WET".getBytes("UTF-8")) ++
-      record("conversion", "https://x.edu/a", "2024-03-01T10:00:00Z",
-        "alpha beta gamma".getBytes("UTF-8")) ++
-      record("conversion", "https://x.edu/b", "2024-03-01T11:00:00Z",
-        "delta epsilon".getBytes("UTF-8"))
-    java.nio.file.Files.write(dir.resolve("part-0.warc.wet"), wet)
-    val pages = Warc.wetPages(spark, dir.toString + "/*").collect().sortBy(_.url)
-    assert(pages.length == 2)
-    assert(pages.map(_.text).toSeq == Seq("alpha beta gamma", "delta epsilon"))
-    assert(pages.forall(_.html.isEmpty))
-    graft.TestSpark.deleteRec(dir.toFile)
-  }
-
   test("pages: response-only projection, date parsing, gzip; extraction runs") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("warc_test")

@@ -158,26 +158,6 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(run(1) === run(7))
   }
 
-  test("pagerankTol: equals fixed-iteration pagerank at the crossing iteration") {
-    val base = docs(
-      "a b c a d e b f g a", "c a d b e f", "g a b c d", "f e d c b a")
-    val e = GraphOps.bigramEdges(base)
-    val (prTol, it) = GraphOps.pagerankTol(spark, e, tol = 1e-3,
-      maxIters = 50)
-    assert(it > 1 && it < 50, s"tol must terminate the loop, ran $it")
-    val tolMap = prTol.collect()
-      .map(r => (r.getString(0), r.getDouble(1))).toMap
-    val fixedMap = GraphOps.pagerank(spark, e, iters = it)
-      .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
-    assert(tolMap === fixedMap) // exact ==: same step machinery
-    // the stopping condition: the final step's L1 delta (iter it vs
-    // it-1) is the first one at or under tol
-    val prev = GraphOps.pagerank(spark, e, iters = it - 1)
-      .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
-    val l1 = tolMap.map { case (k, v) => math.abs(v - prev(k)) }.sum
-    assert(l1 <= 1e-3)
-  }
-
   test("triangles: counts per node on K4 minus an edge; hub orientation safe") {
     // K4 on {a,b,c,d} minus edge (c,d): triangles abc and abd only.
     // a and b sit on 2 each; c and d on 1 each. Edges given DIRECTED

@@ -42,38 +42,4 @@ class CorpusStatsSpec extends AnyFunSuite {
     assert(math.abs(row.getAs[Double]("p90_tokens") - expect.getDouble(1)) < 1e-9)
     assert(row.getAs[Long]("total_tokens") == expect.getLong(2))
   }
-
-  test("tokenCardSketch: exact scalars, rank-bounded quantiles, no sort in the plan") {
-    import spark.implicits._
-    // values are a permutation of 1..n, so value == rank + 1 and the
-    // sketch's n/accuracy rank-error bound is directly checkable
-    val n = 10000
-    val docs = spark.range(n).select(
-      (pmod(col("id") * 7919 + 13, lit(n)) + 1).cast("long").as("n_tokens"))
-    val accuracy = 100 // rank error <= n/accuracy = 100
-    val row = CorpusStats.tokenCardSketch(docs, accuracy = accuracy)
-      .collect()(0)
-    // scalar columns are exact
-    assert(row.getAs[Long]("n_docs") == n)
-    assert(row.getAs[Long]("total_tokens") == n.toLong * (n + 1) / 2)
-    assert(row.getAs[Long]("min_tokens") == 1L)
-    assert(row.getAs[Long]("max_tokens") == n.toLong)
-    // quantiles are data values within the guaranteed rank window
-    // (+2 slack: rank->value offset and the p*(n-1) vs p*n convention)
-    val bound = n.toDouble / accuracy + 2
-    assert(math.abs(row.getAs[Double]("p50_tokens") - 0.5 * (n - 1)) <= bound)
-    assert(math.abs(row.getAs[Double]("p90_tokens") - 0.9 * (n - 1)) <= bound)
-    // scale shape: one aggregation, no range repartition, no sort —
-    // the whole point of the sketch mode vs the exact oracle mode
-    val plan = CorpusStats.tokenCardSketch(docs)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("RangePartitioning") && !plan.toLowerCase.contains("sortexec"),
-      s"sketch card must not sort:\n$plan")
-    // agrees with exact mode on the same input (tight data: every
-    // value appears once, sketch error window is ~1% of the range)
-    val exact = CorpusStats.tokenCard(spark, docs).collect()(0)
-    assert(row.getAs[Long]("total_tokens") == exact.getAs[Long]("total_tokens"))
-    assert(math.abs(row.getAs[Double]("p50_tokens") -
-      exact.getAs[Double]("p50_tokens")) <= bound)
-  }
 }

@@ -250,33 +250,4 @@ class BiLstmSpec extends AnyFunSuite {
     assert(loaded.logitsOf(Seq("aza")).map(_.toSeq).toSeq ==
       scorer.logitsOf(Seq("aza")).map(_.toSeq).toSeq)
   }
-
-  test("glove import: vocab filter, alignment, zero rows, parquet round-trip") {
-    val dir = java.nio.file.Files.createTempDirectory("glove_test")
-    val f = dir.resolve("glove.txt")
-    java.nio.file.Files.writeString(f,
-      "alice 0.1 0.2\nbob 0.3 0.4\nzebra 9.0 9.0\nbroken 1.0\n")
-    val vocab = Seq("alice", "bob", "carol")
-    val (idx, m) = graft.io.Glove.loadMatrix(spark, f.toString, vocab, 2)
-    assert(idx == Map("alice" -> 0, "bob" -> 1, "carol" -> 2))
-    assert(m.length == 4) // vocab + OOV row
-    assert(m(0).toSeq == Seq(0.1f, 0.2f))
-    assert(m(1).toSeq == Seq(0.3f, 0.4f))
-    assert(m(2).toSeq == Seq(0.0f, 0.0f)) // missing from file -> zeros
-    assert(m(3).toSeq == Seq(0.0f, 0.0f)) // OOV
-    // parquet round-trip through the table form
-    val pq = dir.resolve("emb.parquet").toString
-    graft.io.Glove.toTable(spark, f.toString, vocab, 2)
-      .write.mode("overwrite").parquet(pq)
-    val (idx2, m2) = graft.io.Glove.matrixFromTable(
-      spark.read.parquet(pq), vocab, 2)
-    assert(idx2 == idx)
-    assert(m.zip(m2).forall { case (a, b) => a.sameElements(b) })
-    // matrix rows plug into the scorer seam
-    val scorer = LinearScorer(idx, m,
-      dense = Array(Array(1.0, 0.0), Array(0.0, 1.0)), bias = Array(0.0, 0.0))
-    val logits = scorer.logitsOf(Seq("alice", "nope"))
-    assert(math.abs(logits(0)(0) - 0.1) < 1e-6)
-    assert(logits(1).toSeq == Seq(0.0, 0.0))
-  }
 }

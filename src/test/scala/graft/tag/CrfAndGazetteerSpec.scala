@@ -84,8 +84,13 @@ class GazetteerSpec extends AnyFunSuite {
   }
 
   test("vocab codec: OOV bucket = size") {
+    // the scorers' word-id lookup: an unseen term takes id = vocab size,
+    // the one row below the vocabulary in the embedding matrix
     val v = Map("a" -> 0, "b" -> 1)
-    assert(graft.io.Vocab.indexOf(v, "a") == 0)
-    assert(graft.io.Vocab.indexOf(v, "zzz") == 2)
+    val emb = Array(Array(1f, 0f, 0f), Array(0f, 1f, 0f), Array(0f, 0f, 1f))
+    val eye = Array.tabulate(3, 3)((i, j) => if (i == j) 1.0 else 0.0)
+    val logits = LinearScorer(v, emb, eye, Array(0.0, 0.0, 0.0))
+      .logitsOf(Seq("a", "zzz", "b"))
+    assert(logits.map(_.indexOf(1.0)).toSeq == Seq(0, v.size, 1))
   }
 }
