@@ -337,7 +337,7 @@ object SparkEntry {
       val pairs = graft.ops.Dedup.minhashLshPairs(s,
           d.unionByName(p1).unionByName(p2), minJaccard = 0.7)
         .filter(col("id_b") === col("id_a") + lit(1099511627776L))
-      graft.ops.Dedup.connectedKeepers(s, pairs)
+      graft.ops.Dedup.connectedKeepers(pairs)
         .orderBy("doc_id")
     }),
 
@@ -1083,7 +1083,7 @@ object SparkEntry {
         .filter(col("prev").isNotNull &&
           substring(col("prev"), 1, 1) === substring(col("name"), 1, 1))
         .select(col("prev").as("name_a"), col("name").as("name_b"))
-      val membership = graft.kg.Canonicalize.components(s, links)
+      val membership = graft.kg.Canonicalize.components(links)
       graft.kg.Canonicalize.entities(names, membership)
         .select(col("canonical_name"),
           size(col("aliases")).cast("long").as("n_aliases"),
@@ -1418,7 +1418,7 @@ object SparkEntry {
     // fixed-iteration PageRank, bit-reproducible at any parallelism
     // (decimal-summed contributions; see GraphOps.pagerank scaladoc)
     "kg_pagerank" -> ((s, dir) => {
-      graft.kg.GraphOps.pagerank(s,
+      graft.kg.GraphOps.pagerank(
           graft.kg.GraphOps.bigramEdges(t(s, dir, "documents")),
           iters = 3)
         .select(col("node"), round(col("rank"), 10).as("rank"))
@@ -1428,7 +1428,7 @@ object SparkEntry {
     // weighted PageRank (TextRank proper): outgoing rank split by
     // bigram co-occurrence count instead of uniformly
     "kg_pagerank_weighted" -> ((s, dir) => {
-      graft.kg.GraphOps.pagerank(s,
+      graft.kg.GraphOps.pagerank(
           graft.kg.GraphOps.bigramEdges(t(s, dir, "documents")),
           iters = 3, weighted = true)
         .select(col("node"), round(col("rank"), 10).as("rank"))
@@ -1438,7 +1438,7 @@ object SparkEntry {
     // personalized PageRank: reset mass concentrated on two seed
     // tokens — topic-sensitive salience, same decimal-sum determinism
     "kg_ppr" -> ((s, dir) => {
-      graft.kg.GraphOps.pagerank(s,
+      graft.kg.GraphOps.pagerank(
           graft.kg.GraphOps.bigramEdges(t(s, dir, "documents")),
           iters = 3, seeds = Some(Seq("spark", "query")))
         .select(col("node"), round(col("rank"), 10).as("rank"))
@@ -1479,7 +1479,7 @@ object SparkEntry {
     // none; the oracle filters the same edge and adds one exact
     // decimal scalar CTE per iteration.
     "kg_pagerank_dangling" -> ((s, dir) => {
-      graft.kg.GraphOps.pagerank(s,
+      graft.kg.GraphOps.pagerank(
           graft.kg.GraphOps.bigramEdges(t(s, dir, "documents"))
             .filter(col("src") =!= "spark"),
           iters = 3, danglingRedistribute = true)
@@ -1518,12 +1518,12 @@ object SparkEntry {
         .localCheckpoint(true)
       val vocab = graft.kg.Linker.nameVocab(triples)
       val links = graft.kg.Linker.exactNormLinks(vocab)
-      val membership = graft.kg.Canonicalize.components(s, links)
+      val membership = graft.kg.Canonicalize.components(links)
       val nodes = graft.kg.Canonicalize.entities(vocab, membership)
       val edges = graft.kg.Canonicalize.canonicalEdges(triples, nodes)
         .select(col("subj").as("src"), col("obj_entity").as("dst"))
         .distinct()
-      graft.kg.GraphOps.pagerank(s, edges,
+      graft.kg.GraphOps.pagerank(edges,
           iters = 3, danglingRedistribute = true)
         .select(col("node"), round(col("rank"), 10).as("rank"))
         .orderBy("node")

@@ -151,7 +151,7 @@ object StressBench {
     val chainPairs = graft.ops.Dedup.boundedBucketPairs(bucket, Seq("b"),
         maxBucket = 500, hotChain = 20, metrics = None)
       .select(col("m_a.id").as("id_a"), col("m_b.id").as("id_b"))
-    val keepers = graft.ops.Dedup.connectedKeepers(spark, chainPairs, maxIter = 20)
+    val keepers = graft.ops.Dedup.connectedKeepers(chainPairs, maxIter = 20)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val nAssigned = keepers.count()
     val nKeepers = keepers.select("keeper").distinct().count()
@@ -227,12 +227,12 @@ object StressBench {
     val g2 = spark.range(n).select(
       concat(lit("n"), col("id")).as("src"), lit("n0").as("dst"))
     val pgEdges = g1.unionByName(g2).distinct()
-    val prA = graft.kg.GraphOps.pagerank(spark, pgEdges, iters = 3)
+    val prA = graft.kg.GraphOps.pagerank(pgEdges, iters = 3)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val prMass = prA.agg(sum(col("rank"))).collect()(0).getDouble(0)
     val hotRank = prA.filter(col("node") === "n0")
       .collect()(0).getDouble(1)
-    val prB = graft.kg.GraphOps.pagerank(spark, pgEdges.repartition(3),
+    val prB = graft.kg.GraphOps.pagerank(pgEdges.repartition(3),
       iters = 3)
     val prDiff = prA.except(prB).count()
     val prSecs = (System.nanoTime() - tP) / 1e9

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 
@@ -8,10 +8,11 @@ import graft.functions.GraftFunctions
   * per-component canonical-name election.
   *
   * Skew strategy:
-  *  - CC runs on the alternating large-star/small-star DataFrame core
-  *    ([[graft.spark.Cc]]) whose neighborhood-min aggregations are
-  *    map-side combinable — a hot vertex's edges pre-reduce per map
-  *    task, and AQE splits the skewed emit join.
+  *  - CC runs on [[graft.spark.Cc]]: a per-partition union-find
+  *    contraction, then alternating large-star/small-star rounds whose
+  *    neighborhood-min aggregations are map-side combinable — a hot
+  *    vertex's edges pre-reduce per map task, and AQE splits the
+  *    skewed emit join.
   *  - the per-component alias aggregation is two-phase: a salted
   *    partial `collect_set`/`sum` (component, salt) followed by the
   *    final merge on component — a hot entity's aliases never funnel
@@ -34,7 +35,7 @@ object Canonicalize {
   /** Connected components over (name_a, name_b) pairs; returns
     * (name, component) for every name that appears in a link.
     */
-  def components(spark: SparkSession, pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def components(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // Materialize the pair pipeline ONCE: both the id pairs for the
     // shared graft.spark.Cc core and the vertex name table derive from
     // `pairs`, which is typically a full upstream derivation (the linker
@@ -49,7 +50,7 @@ object Canonicalize {
       .distinct()
       .select(nameIdCol(col("name")).as("id"), col("name"))
 
-    val ccDf = graft.spark.Cc.components(spark, edges, maxIter)
+    val ccDf = graft.spark.Cc.components(edges, maxIter)
     vertices.join(ccDf, "id").select(col("name"), col("component"))
   }
 

@@ -1,9 +1,10 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{Decimal, DecimalType}
 
 /** Graph analytics over the materialized KG edge tables — the query
   * layer a knowledge-graph construction pipeline feeds (north star:
@@ -89,6 +90,8 @@ object GraphOps {
     * Materialization: the operator holds no session cache. Its state
     * (edge⋈outdeg, node set) and its result are eager localCheckpoints,
     * so a call neither reads nor invalidates the caller's cache entries.
+    * N is not counted by a job of its own: the node-set checkpoint
+    * observes it (an `Observation`, filled by that checkpoint's action).
     *
     * Determinism: contributions are rounded to `scale` decimal places
     * (an IEEE double op, identical everywhere), then summed as
@@ -118,10 +121,14 @@ object GraphOps {
     *   DM_t      = Σ_{u: outdeg(u)=0} decimal(pr_t(u))
     *
     * DM_t is an exact DECIMAL(38,15) sum over the dangling node set
-    * (flagged once, when the node set is built) that rides into the
-    * per-node update as a one-row cross join — one extra scalar
-    * aggregation per iteration, never a separate action, and the
-    * bit-reproducibility contract holds unchanged. With `seeds`, the
+    * (flagged once, when the node set is built). It runs no job of its
+    * own: iteration t's checkpoint action observes DM_t over its rank
+    * rows, and iteration t+1 takes DM_t / N as a literal, converted to
+    * double and divided exactly as the columns did it.
+    * DM_0 sums one constant, so it is the node-set checkpoint's count
+    * of dangling nodes (dangling seeds, personalized) times that
+    * constant's DECIMAL(38,15) cast, multiplied exactly on the driver.
+    * The bit-reproducibility contract holds unchanged. With `seeds`, the
     * dangling mass follows the reset distribution (concentrated on the
     * seed set — the standard topic-sensitive formulation) instead of
     * 1/N.
@@ -130,7 +137,7 @@ object GraphOps {
     * default stays the leak semantics (the oracle mode of the other
     * five pagerank queries).
     */
-  def pagerank(spark: SparkSession, edges: DataFrame, iters: Int = 3,
+  def pagerank(edges: DataFrame, iters: Int = 3,
       damping: Double = 0.85, scale: Int = 12,
       seeds: Option[Seq[String]] = None,
       weighted: Boolean = false,
@@ -147,73 +154,83 @@ object GraphOps {
         if (weighted) sum(col("weight")).over(bySrc)
         else count(lit(1)).over(bySrc))
       .localCheckpoint(true)
+    val seedSet = seeds.map { s =>
+      require(s.nonEmpty, "personalized pagerank needs ≥1 seed")
+      s.distinct
+    }
+    val inSeed = seedSet.map(s => col("node").isin(s: _*))
     // the node set off the checkpoint, which holds every edge, flagged
-    // with whether the node has out-edges
+    // with whether the node has out-edges; its checkpoint action also
+    // counts N and the dangling nodes that start with rank (all of them
+    // unseeded, the dangling seeds personalized)
+    val nodeCounts = Observation()
     val nodes = eo.select(col("src").as("node"), lit(true).as("has_out"))
       .union(eo.select(col("dst"), lit(false)))
       .groupBy("node").agg(max(col("has_out")).as("has_out"))
+      .observe(nodeCounts, count(lit(1)).as("n"),
+        count_if(!col("has_out") && inSeed.getOrElse(lit(true))).as("dangling"))
       .localCheckpoint(true)
-    val n = nodes.count()
-    val (base, init) = seeds match {
+    val n = nodeCounts.get("n").asInstanceOf[Long]
+    val (base, init) = seedSet match {
       case None =>
         (lit((1.0 - damping) / n), lit(1.0 / n))
       case Some(s) =>
-        require(s.nonEmpty, "personalized pagerank needs ≥1 seed")
-        val inSeed = col("node").isin(s.distinct: _*)
-        val nS = s.distinct.size
-        (when(inSeed, lit((1.0 - damping) / nS)).otherwise(lit(0.0)),
-          when(inSeed, lit(1.0 / nS)).otherwise(lit(0.0)))
+        val nS = s.size
+        (when(inSeed.get, lit((1.0 - damping) / nS)).otherwise(lit(0.0)),
+          when(inSeed.get, lit(1.0 / nS)).otherwise(lit(0.0)))
     }
-    def step(pr: DataFrame): DataFrame = {
+    val dec = DecimalType(38, 15)
+    // DM_t: the exact DECIMAL(38,15) sum of the ranks without out-edges
+    val danglingSum = coalesce(sum(when(!col("has_out"), col("rank").cast(dec))),
+      lit(java.math.BigDecimal.ZERO).cast(dec))
+    // DM_0 sums one constant, the initial rank of a dangling node that
+    // has one, over the `dangling` count: that count times the
+    // constant's DECIMAL(38,15) cast, exact on the driver
+    val dangling = nodeCounts.get("dangling").asInstanceOf[Long]
+    val dm0 =
+      if (dangling == 0L) java.math.BigDecimal.ZERO
+      else Cast(Literal(seedSet.fold(1.0 / n)(s => 1.0 / s.size)), dec).eval()
+        .asInstanceOf[Decimal].toJavaBigDecimal
+        .multiply(java.math.BigDecimal.valueOf(dangling))
+    def step(pr: DataFrame, dm: java.math.BigDecimal): DataFrame = {
       val share =
         if (weighted) col("rank") * col("weight") / col("outdeg")
         else col("rank") / col("outdeg")
       val contrib = eo.join(pr, eo("src") === pr("node"))
         .select(col("dst"),
-          round(share, scale).cast(DecimalType(38, 15)).as("c"))
+          round(share, scale).cast(dec).as("c"))
         .groupBy("dst").agg(sum(col("c")).as("s"))
       val recv = coalesce(col("s").cast("double"), lit(0.0))
-      val joined = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-      if (!danglingRedistribute)
-        joined.select(col("node"),
-          round(base + lit(damping) * recv, scale).as("rank"), col("has_out"))
-      else {
-        // DM_t as a ONE-ROW frame (exact decimal sum over the rank rows
-        // without out-edges; none → 0) cross-joined into the update —
-        // no separate action
-        val dm = pr.filter(!col("has_out"))
-          .agg(coalesce(sum(col("rank").cast(DecimalType(38, 15))),
-            lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 15)))
-            .as("dm"))
-        // dangling mass follows the RESET distribution: uniform 1/N
-        // unseeded; concentrated on the seed set in personalized mode
-        // (standard topic-sensitive PageRank — spreading a PPR's
-        // dangling mass uniformly would leak rank to nodes the
-        // personalization vector excludes)
-        val redist = seeds match {
-          case None => col("dm").cast("double") / n
+      // dangling mass follows the RESET distribution: uniform 1/N
+      // unseeded; concentrated on the seed set in personalized mode
+      // (standard topic-sensitive PageRank — spreading a PPR's
+      // dangling mass uniformly would leak rank to nodes the
+      // personalization vector excludes). DM_t's `doubleValue` is the
+      // conversion Spark's decimal-to-double cast makes, and the division
+      // the same IEEE op a column would do.
+      val mass =
+        if (!danglingRedistribute) recv
+        else recv + (seedSet match {
+          case None => lit(dm.doubleValue / n)
           case Some(s) =>
-            when(col("node").isin(s.distinct: _*),
-              col("dm").cast("double") / s.distinct.size)
-              .otherwise(lit(0.0))
-        }
-        joined.crossJoin(dm)
-          .select(col("node"),
-            round(base + lit(damping) * (recv + redist), scale).as("rank"),
-            col("has_out"))
-      }
+            when(inSeed.get, lit(dm.doubleValue / s.size)).otherwise(lit(0.0))
+        })
+      nodes.join(contrib, nodes("node") === contrib("dst"), "left")
+        .select(col("node"),
+          round(base + lit(damping) * mass, scale).as("rank"), col("has_out"))
     }
-    // Dangling mode references pr TWICE per step (the DM scalar and the
-    // contribution join), so an un-checkpointed lineage doubles the
-    // pr_t subplan per iteration — 2^iters recomputations of iteration
-    // 1 by the final action (measured r8: kg_pagerank_dangling 5.6 s vs
-    // kg_pagerank 2.2 s at identical graph/iters). Checkpoint every
-    // iteration in that mode, and the final ranks in both; values are
-    // unchanged — checkpointing is plan-only.
+    // Dangling mode checkpoints every iteration, because that action
+    // observes DM_t for the next step; the final ranks are checkpointed
+    // in both modes. Values are unchanged — checkpointing is plan-only.
     var pr = nodes.select(col("node"), init.as("rank"), col("has_out"))
+    var dm = dm0
     for (i <- 1 to iters) {
-      pr = step(pr)
-      if (danglingRedistribute || i == iters) pr = pr.localCheckpoint(true)
+      pr = step(pr, dm)
+      if (danglingRedistribute) {
+        val dmT = Observation()
+        pr = pr.observe(dmT, danglingSum.as("dm")).localCheckpoint(true)
+        dm = dmT.get("dm").asInstanceOf[java.math.BigDecimal]
+      } else if (i == iters) pr = pr.localCheckpoint(true)
     }
     pr.select("node", "rank")
   }

@@ -90,8 +90,12 @@ object Linker {
     val tableHashes = TableCoefficients.map { case (a, b) =>
       array_min(transform(col("ids"), i => ((i + 1L) * a + b) % Prime))
     }
+    // checkpointed once: the gram-frequency collect and the self-join
+    // below would each re-plan `names` (typically a groupBy over a whole
+    // table) and the gram-id UDF
     val keys = names.select(col("name"), gramIdsUdf(col("name")).as("ids"))
       .select(col("name"), col("ids"), array(tableHashes: _*).as("hashes"))
+      .localCheckpoint(true)
     // rank(id): position in the global order, rarest gram first
     val rank = new Array[Int](1 << 18)
     keys.select(explode(col("ids")).as("id")).groupBy("id").count()

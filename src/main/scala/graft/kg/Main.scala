@@ -166,7 +166,7 @@ object Main {
 
     val nodes = stages.stage("nodes", stages.outputRowsOf("links")) {
       val vocab = Linker.nameVocab(triples.as[graft.spark.Triple])
-      val membership = Canonicalize.components(spark, links)
+      val membership = Canonicalize.components(links)
       Canonicalize.entities(vocab, membership)
     }
 
@@ -188,7 +188,7 @@ object Main {
     // shrink every rank by the entity-mass fraction each round). The
     // same shape is hash-oracled as `kg_entity_pagerank`.
     stages.stage("entity_rank", stages.outputRowsOf("edges")) {
-      GraphOps.pagerank(spark,
+      GraphOps.pagerank(
         edges.select(col("subj").as("src"), col("obj_entity").as("dst"))
           .distinct(),
         iters = 3, danglingRedistribute = true)

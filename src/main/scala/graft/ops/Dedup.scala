@@ -403,7 +403,7 @@ object Dedup {
     * split into several keepers, never into a wrong merge — same
     * contract as `kg.Canonicalize.components`.
     *
-    * NOTE: the CC convergence loop runs its own actions, so calling
+    * NOTE: the CC core checkpoints its pairs, an action, so calling
     * this EXECUTES the upstream pair pipeline immediately (same as
     * `kg_canonicalize`) — it is not a lazily-composable DataFrame
     * transform.
@@ -414,11 +414,10 @@ object Dedup {
     *         full assignment — that keeps this output proportional to
     *         the DUPLICATED subset, a vanishing fraction at scale).
     */
-  def connectedKeepers(spark: SparkSession, pairs: DataFrame,
-      maxIter: Int = 20): DataFrame = {
+  def connectedKeepers(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // the shared CC core labels each vertex with the smallest vertex
     // id in its component — which IS the min-doc-id keeper election
-    graft.spark.Cc.components(spark,
+    graft.spark.Cc.components(
         pairs.select(col("id_a").cast("long").as("a"),
           col("id_b").cast("long").as("b")), maxIter)
       .toDF("doc_id", "keeper")

@@ -570,7 +570,7 @@ object Similarity {
       case Some(obs) => pairs.observe(obs,
         coalesce(count(lit(1)), lit(0L)).as("dup_pairs"))
     }
-    val keepers = Dedup.connectedKeepers(spark, observed, maxIter)
+    val keepers = Dedup.connectedKeepers(observed, maxIter)
       .withColumnRenamed("doc_id", "id")
     corpus.select(col(idCol).cast("long").as("id"))
       .join(keepers, Seq("id"), "left")

@@ -127,8 +127,8 @@ class PlanShapeSpec extends AnyFunSuite {
       val e = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "d"))
         .toDF("src", "dst")
       val w = e.withColumn("weight", lit(1L))
-      assert(graft.kg.GraphOps.pagerank(spark, e, iters = 2).count() == 4)
-      assert(graft.kg.GraphOps.pagerank(spark, e, iters = 2,
+      assert(graft.kg.GraphOps.pagerank(e, iters = 2).count() == 4)
+      assert(graft.kg.GraphOps.pagerank(e, iters = 2,
         danglingRedistribute = true).count() == 4)
       assert(graft.kg.GraphOps.shortestPaths(spark, w, "a", iters = 2)
         .count() == 4)
@@ -136,10 +136,10 @@ class PlanShapeSpec extends AnyFunSuite {
         .count() == 4)
       val names = Seq(("ann", "anne"), ("anne", "annie"))
         .toDF("name_a", "name_b")
-      assert(graft.kg.Canonicalize.components(spark, names)
+      assert(graft.kg.Canonicalize.components(names)
         .select("component").distinct().count() == 1)
       val ids = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-      assert(graft.ops.Dedup.connectedKeepers(spark, ids)
+      assert(graft.ops.Dedup.connectedKeepers(ids)
         .select("keeper").distinct().count() == 2)
       assert(poisoned.storageLevel != StorageLevel.NONE,
         "an operator dropped the caller's cache entry")

@@ -43,7 +43,7 @@ class GraphOpsSpec extends AnyFunSuite {
     // N=3, pr0 = 1/3 each, d = 0.85.
     // iter1: contrib a = pr(b)/1 = 1/3; b = pr(a)/2; c = pr(a)/2
     //   pr1(a) = .05 + .85/3 ≈ .33333; pr1(b) = pr1(c) = .05 + .85/6
-    val pr = GraphOps.pagerank(spark,
+    val pr = GraphOps.pagerank(
         edges(("a", "b"), ("b", "a"), ("a", "c")), iters = 1)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
     val third = 1.0 / 3
@@ -55,7 +55,7 @@ class GraphOpsSpec extends AnyFunSuite {
   test("pagerank: rank mass is conserved (no dangling nodes) and hubs outrank leaves") {
     // star into hub h from l1..l4, plus h->l1 so every node has out-edges
     val e = edges(("l1", "h"), ("l2", "h"), ("l3", "h"), ("l4", "h"), ("h", "l1"))
-    val pr = GraphOps.pagerank(spark, e, iters = 10)
+    val pr = GraphOps.pagerank(e, iters = 10)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
     assert(math.abs(pr.values.sum - 1.0) < 1e-6)
     assert(pr("h") > pr("l2") * 3)
@@ -67,9 +67,9 @@ class GraphOpsSpec extends AnyFunSuite {
       "a b c a d e b f g a", "c a d b e f", "g a b c d", "f e d c b a")
     val e1 = GraphOps.bigramEdges(base.repartition(1))
     val e7 = GraphOps.bigramEdges(base.repartition(7))
-    val r1 = GraphOps.pagerank(spark, e1, iters = 4)
+    val r1 = GraphOps.pagerank(e1, iters = 4)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
-    val r7 = GraphOps.pagerank(spark, e7, iters = 4)
+    val r7 = GraphOps.pagerank(e7, iters = 4)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
     assert(r1 === r7) // exact ==, not tolerance: the decimal-sum contract
   }
@@ -79,7 +79,7 @@ class GraphOpsSpec extends AnyFunSuite {
     // a->b w=3, a->c w=1 (3:1 split), b->a w=1, c->a w=1
     val e = Seq(("a", "b", 3L), ("a", "c", 1L), ("b", "a", 1L), ("c", "a", 1L))
       .toDF("src", "dst", "weight")
-    val pr = GraphOps.pagerank(spark, e, iters = 1, weighted = true)
+    val pr = GraphOps.pagerank(e, iters = 1, weighted = true)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
     val third = 1.0 / 3
     assert(math.abs(pr("a") - (0.15 / 3 + 0.85 * (third + third))) < 1e-9)
@@ -92,13 +92,13 @@ class GraphOpsSpec extends AnyFunSuite {
     // chain a->b->c->d->a (cycle). Seeded at a: after 1 iteration only
     // a (reset) and b (a's walk) hold mass; d holds 0.
     val e = edges(("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"))
-    val pr1 = GraphOps.pagerank(spark, e, iters = 1, seeds = Some(Seq("a")))
+    val pr1 = GraphOps.pagerank(e, iters = 1, seeds = Some(Seq("a")))
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
     assert(pr1("a") === 0.15)           // pure reset mass
     assert(math.abs(pr1("b") - 0.85) < 1e-9) // the whole walk mass
     assert(pr1("c") === 0.0 && pr1("d") === 0.0)
     // more iterations: mass propagates around the cycle, total stays 1
-    val pr3 = GraphOps.pagerank(spark, e, iters = 3, seeds = Some(Seq("a")))
+    val pr3 = GraphOps.pagerank(e, iters = 3, seeds = Some(Seq("a")))
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
     assert(math.abs(pr3.values.sum - 1.0) < 1e-9)
     assert(pr3("a") > pr3("c"))
@@ -110,19 +110,19 @@ class GraphOpsSpec extends AnyFunSuite {
     // form — and total rank stays exactly 1 per iteration.
     val e = edges(("a", "b"), ("b", "a"), ("a", "c"))
     val third = 1.0 / 3
-    val pr = GraphOps.pagerank(spark, e, iters = 1,
+    val pr = GraphOps.pagerank(e, iters = 1,
         danglingRedistribute = true)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
     assert(math.abs(pr("a") - (0.15 / 3 + 0.85 * (third + third / 3))) < 1e-9)
     assert(math.abs(pr("b") - (0.15 / 3 + 0.85 * (third / 2 + third / 3))) < 1e-9)
     assert(pr("b") === pr("c"))
-    val pr5 = GraphOps.pagerank(spark, e, iters = 5,
+    val pr5 = GraphOps.pagerank(e, iters = 5,
         danglingRedistribute = true)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
     assert(math.abs(pr5.values.sum - 1.0) < 1e-9,
       s"dangling mode must conserve rank mass, got ${pr5.values.sum}")
     // leak mode (the oracle default) keeps shrinking on the same graph
-    val leak = GraphOps.pagerank(spark, e, iters = 5)
+    val leak = GraphOps.pagerank(e, iters = 5)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
     assert(leak.values.sum < 0.9)
   }
@@ -133,7 +133,7 @@ class GraphOpsSpec extends AnyFunSuite {
     // total mass stays 1 and a non-walk node like a fresh 'd' (only
     // reachable via d->a edge's source side) never receives reset mass.
     val e = edges(("a", "b"), ("b", "c"), ("d", "a"))
-    val pr = GraphOps.pagerank(spark, e, iters = 6,
+    val pr = GraphOps.pagerank(e, iters = 6,
         seeds = Some(Seq("a")), danglingRedistribute = true)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
     assert(math.abs(pr.values.sum - 1.0) < 1e-8,
@@ -141,7 +141,7 @@ class GraphOpsSpec extends AnyFunSuite {
     // d: not the seed, no in-edges -> rank exactly 0 at every iteration
     assert(pr("d") === 0.0)
     // leak mode on the same graph keeps shrinking
-    val leak = GraphOps.pagerank(spark, e, iters = 6,
+    val leak = GraphOps.pagerank(e, iters = 6,
         seeds = Some(Seq("a")))
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
     assert(leak.values.sum < 0.9)
@@ -150,12 +150,31 @@ class GraphOpsSpec extends AnyFunSuite {
   test("dangling redistribution: bit-identical across partition counts") {
     val base = docs(
       "a b c a d e b f g a", "c a d b e f", "g a b c d", "f e d c b a")
-    def run(parts: Int) = GraphOps.pagerank(spark,
+    def run(parts: Int) = GraphOps.pagerank(
         GraphOps.bigramEdges(base.repartition(parts))
           .filter(col("src") =!= "a"), // planted dangling hub
         iters = 3, danglingRedistribute = true)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
     assert(run(1) === run(7))
+  }
+
+  test("pagerank over an empty edge set returns no rows in every mode") {
+    val none = edges()
+    for (dangling <- Seq(false, true); seeds <- Seq(None, Some(Seq("a"))))
+      assert(GraphOps.pagerank(none, seeds = seeds,
+        danglingRedistribute = dangling).isEmpty)
+  }
+
+  test("dangling pagerank reads N and each DM_t off its own checkpoints") {
+    val e = edges(("a", "b"), ("b", "a"), ("a", "c"), ("b", "d"), ("d", "c"))
+    var pr = spark.emptyDataFrame
+    val jobs = TestSpark.jobsIn {
+      pr = GraphOps.pagerank(e, iters = 3, danglingRedistribute = true)
+    }
+    // edge x outdeg, node set and three iterations: each a checkpoint of
+    // its shuffles, with no count and no per-iteration DM aggregate
+    assert(jobs == 17)
+    assert(math.abs(pr.agg(sum("rank")).head().getDouble(0) - 1.0) < 1e-9)
   }
 
   test("triangles: counts per node on K4 minus an edge; hub orientation safe") {

@@ -121,7 +121,7 @@ class LinkSpec extends AnyFunSuite {
     val pairs = namesDf().sparkSession.createDataFrame(Seq(
       ("Jose Garcia", "José García", 0.1),
       ("Garcia, Jose", "Jose Garcia", 0.2))).toDF("name_a", "name_b", "dist")
-    val membership = Canonicalize.components(spark, pairs)
+    val membership = Canonicalize.components(pairs)
     val nodes = Canonicalize.entities(names, membership)
     val rows = nodes.collect()
     assert(rows.length == 3) // garcia cluster + 2 singletons
@@ -140,7 +140,7 @@ class LinkSpec extends AnyFunSuite {
       .toDF("name_a", "name_b", "dist")
       .select(least(col("name_a"), col("name_b")).as("name_a"),
         greatest(col("name_a"), col("name_b")).as("name_b"), col("dist"))
-    val membership = Canonicalize.components(spark, pairs)
+    val membership = Canonicalize.components(pairs)
     val nodes = Canonicalize.entities(names, membership, saltBuckets = 16)
     val rows = nodes.collect()
     assert(rows.length == 1)
@@ -157,7 +157,7 @@ class LinkSpec extends AnyFunSuite {
       ("jose garcia", 5L), ("José García", 3L), ("JOSE GARCIA", 1L),
       ("Ada L", 1L))
     val links = Linker.exactNormLinks(names)
-    val membership = Canonicalize.components(spark, links)
+    val membership = Canonicalize.components(links)
     val comps = membership.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(comps.size == 3) // the three garcia variants linked
@@ -175,7 +175,7 @@ class LinkSpec extends AnyFunSuite {
     // being generous; the labels must be the min-id election.
     val chain = (1 until 12).map(i => (f"cc node $i%02d", f"cc node ${i + 1}%02d"))
     val pairs = chain.toDF("name_a", "name_b")
-    val membership = Canonicalize.components(spark, pairs, maxIter = 8)
+    val membership = Canonicalize.components(pairs, maxIter = 8)
     val comps = membership.collect().map(r => (r.getString(0), r.getLong(1)))
     assert(comps.length == 12)
     assert(comps.map(_._2).distinct.length == 1, "one chain component")

@@ -60,21 +60,9 @@ class StagesLineageSpec extends AnyFunSuite {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("stages_jobs").toString
     val st = new Stages(spark, base)
-    val sc = spark.sparkContext
-    val group = s"stages-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "stage bookkeeping job count")
-      try st.stage("local") { Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v") }
-      finally sc.clearJobGroup()
-      org.apache.spark.ListenerBusAccess.drain(sc)
-      assert(jobs.get == 2)
-    } finally sc.removeSparkListener(listener)
+    assert(TestSpark.jobsIn {
+      st.stage("local") { Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v") }
+    } == 2)
     assert(st.outputRowsOf("local") == 3L)
     TestSpark.deleteRec(new java.io.File(base))
   }

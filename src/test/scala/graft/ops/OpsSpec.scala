@@ -860,7 +860,7 @@ class OpsSpec extends AnyFunSuite {
     // an isolated pair 10-11, and order-reversed edge 21-20
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (21L, 20L))
       .toDF("id_a", "id_b")
-    val got = Dedup.connectedKeepers(spark, pairs)
+    val got = Dedup.connectedKeepers(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
@@ -883,7 +883,7 @@ class OpsSpec extends AnyFunSuite {
       .persist()
     val nPairs = pairs.count()
     assert(nPairs <= n.toLong * 20, s"pair bound broken: $nPairs")
-    val keepers = Dedup.connectedKeepers(spark, pairs, maxIter = 20)
+    val keepers = Dedup.connectedKeepers(pairs, maxIter = 20)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     pairs.unpersist()
     assert(keepers.length == n, s"only ${keepers.length} of $n ids labeled")
