@@ -219,7 +219,7 @@ object ScaleDecade {
     // measured ~12.5x — ceil keeps per-bucket occupancy <= the 1x size
     val nBits = 6 + math.max(0,
       math.ceil(math.log(m / 2000.0) / math.log(2)).toInt)
-    graft.ops.Similarity.lshTopK(s, e.unionByName(planted), planted,
+    graft.ops.Similarity.lshTopK(e.unionByName(planted), planted,
       k = 1, nBits = nBits)
   }
 

@@ -179,10 +179,7 @@ object SparkEntry {
     // A9-style exact dedup over documents: md5 content key, min doc id
     // survives (hash-groupBy; at scale this is one shuffle on the digest).
     "doc_dedup_exact" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .groupBy(md5(col("text")).as("content_key"))
-        .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("copies"))
-        .orderBy("content_key")
+      graft.ops.Dedup.exact(t(s, dir, "documents")).orderBy("content_key")
     }),
 
     // Grouping-sets / rollup with subtotal rows (absent in the
@@ -492,7 +489,7 @@ object SparkEntry {
           lit("\nsubscribe to our newsletter"),
           when(col("doc_id") % 2 === 0, lit("\nfollow us on social media"))
             .otherwise(lit(""))).as("text"))
-      graft.ops.Dedup.removeBoilerplateLines(s, varied, minDocs = 3)
+      graft.ops.Dedup.removeBoilerplateLines(varied, minDocs = 3)
         .orderBy("doc_id")
     }),
 
@@ -503,7 +500,7 @@ object SparkEntry {
     // token runs across docs (small vocab), so the report is
     // non-trivial; the oracle recomputes it gram-by-gram in SQL.
     "doc_substring_dedup" -> ((s, dir) => {
-      graft.ops.SubstringDedup.duplicatedSpans(s, t(s, dir, "documents"), k = 13)
+      graft.ops.SubstringDedup.duplicatedSpans(t(s, dir, "documents"), k = 13)
         .orderBy("doc_id")
     }),
 
@@ -546,7 +543,7 @@ object SparkEntry {
     // distributed train->broadcast->apply pipeline end-to-end.
     "doc_bpe_real" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val merges = graft.ops.Bpe.trainMerges(s, docs, numMerges = 200)
+      val merges = graft.ops.Bpe.trainMerges(docs, numMerges = 200)
       val withOov = docs.select(col("doc_id"),
         concat(col("text"), lit(" zxzx")).as("text"))
       graft.ops.Bpe.tokenCounts(s, withOov, merges).orderBy("doc_id")
@@ -574,7 +571,7 @@ object SparkEntry {
     "ann_lsh_topk" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").select("vec_id", "embedding")
       val probes = e.filter(col("vec_id") < 500)
-      graft.ops.Similarity.lshTopK(s, e, probes, k = 5, nBits = 6)
+      graft.ops.Similarity.lshTopK(e, probes, k = 5, nBits = 6)
         .select("query_id", "neighbor_id", "rk")
         .orderBy("query_id", "rk")
     }),
@@ -590,7 +587,7 @@ object SparkEntry {
     "ann_lsh_multiprobe_topk" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").select("vec_id", "embedding")
       val probes = e.filter(col("vec_id") < 500)
-      graft.ops.Similarity.lshTopK(s, e, probes, k = 5, nBits = 6,
+      graft.ops.Similarity.lshTopK(e, probes, k = 5, nBits = 6,
           multiProbe = 2)
         .select("query_id", "neighbor_id", "rk")
         .orderBy("query_id", "rk")
@@ -603,7 +600,7 @@ object SparkEntry {
     "ann_lsh_multitable_topk" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").select("vec_id", "embedding")
       val probes = e.filter(col("vec_id") < 500)
-      graft.ops.Similarity.lshTopKTables(s, e, probes, k = 5, nBits = 6,
+      graft.ops.Similarity.lshTopKTables(e, probes, k = 5, nBits = 6,
           nTables = 4)
         .select("query_id", "neighbor_id", "rk")
         .orderBy("query_id", "rk")
@@ -639,7 +636,7 @@ object SparkEntry {
     "ann_lsh_exhaustive_topk" -> ((s, dir) => {
       val e = t(s, dir, "embeddings").select("vec_id", "embedding")
       val probes = e.filter(col("vec_id") < 500)
-      graft.ops.Similarity.lshTopK(s, e, probes, k = 5, nBits = 0)
+      graft.ops.Similarity.lshTopK(e, probes, k = 5, nBits = 0)
         .select("query_id", "neighbor_id", "rk")
         .orderBy("query_id", "rk")
     }),
@@ -668,7 +665,7 @@ object SparkEntry {
       val e = annUnit(t(s, dir, "embeddings").select("vec_id", "embedding"))
       val planted = e.select((col("vec_id") + lit(1099511627776L)).as("vec_id"),
         col("embedding"))
-      graft.ops.Similarity.lshTopK(s, e.unionByName(planted), planted,
+      graft.ops.Similarity.lshTopK(e.unionByName(planted), planted,
           k = 1, nBits = 6)
         .select(col("query_id"), col("neighbor_id"))
         .orderBy("query_id")
@@ -846,7 +843,7 @@ object SparkEntry {
         .select(col("doc_id"), length(col("text")).as("len"))
         .as[(Long, Int)]
         .map { case (id, len) =>
-          (id, graft.ops.Multimodal.syntheticWav(id, 50 + len % 97, 8000))
+          (id, graft.ops.Multimodal.syntheticWav(id, 50 + len % 97))
         }.toDF("media_id", "media")
       graft.ops.Multimodal.decodeAudio(s, media).toDF()
         .select(col("media_id").as("doc_id"), col("status"),
@@ -1448,7 +1445,7 @@ object SparkEntry {
     // per-node triangle counts (compact-forward: degree-ordered
     // orientation bounds wedge fan-out at hub nodes)
     "kg_triangles" -> ((s, dir) => {
-      graft.kg.GraphOps.triangles(s,
+      graft.kg.GraphOps.triangles(
           graft.kg.GraphOps.bigramEdges(t(s, dir, "documents")))
         .orderBy("node")
     }),
@@ -1456,7 +1453,7 @@ object SparkEntry {
     // deterministic label-propagation communities (min-label
     // tie-break; 2 synchronous rounds)
     "kg_communities" -> ((s, dir) => {
-      graft.kg.GraphOps.labelPropagation(s,
+      graft.kg.GraphOps.labelPropagation(
           graft.kg.GraphOps.bigramEdges(t(s, dir, "documents")),
           rounds = 2)
         .orderBy("node")
@@ -1491,13 +1488,11 @@ object SparkEntry {
     // `entity_rank` stage shape (Main.scala), end-to-end through the
     // REAL path: planted-mention extraction → gold mentions → triples
     // → name vocab → exact-norm linking → CC → canonical
-    // entities → canonicalEdges → pagerank over (page → obj_entity).
-    // Entity nodes are pure sinks (a page→entity bipartite graph), so
-    // this runs the dangling-redistribution mode — the semantics a
-    // real crawl ranking needs. The oracle rebuilds the edge table in
-    // closed form (the kg_triples plant) with the entity ids as
-    // generator-computed FNV constants, then replays the same unrolled
-    // dangling PageRank.
+    // entities → canonicalEdges → GraphOps.entityRank (dangling-
+    // redistributing PageRank over page → obj_entity). The oracle
+    // rebuilds the edge table in closed form (the kg_triples plant)
+    // with the entity ids as generator-computed FNV constants, then
+    // replays the same unrolled dangling PageRank.
     "kg_entity_pagerank" -> ((s, dir) => {
       val varied = t(s, dir, "documents").select(
         col("doc_id"), col("source"), col("lang"),
@@ -1520,11 +1515,8 @@ object SparkEntry {
       val links = graft.kg.Linker.exactNormLinks(vocab)
       val membership = graft.kg.Canonicalize.components(links)
       val nodes = graft.kg.Canonicalize.entities(vocab, membership)
-      val edges = graft.kg.Canonicalize.canonicalEdges(triples, nodes)
-        .select(col("subj").as("src"), col("obj_entity").as("dst"))
-        .distinct()
-      graft.kg.GraphOps.pagerank(edges,
-          iters = 3, danglingRedistribute = true)
+      graft.kg.GraphOps.entityRank(
+          graft.kg.Canonicalize.canonicalEdges(triples, nodes))
         .select(col("node"), round(col("rank"), 10).as("rank"))
         .orderBy("node")
     }),
@@ -1570,7 +1562,7 @@ object SparkEntry {
 
     // BM25 relevance of every doc against a fixed query-term set
     "doc_bm25" -> ((s, dir) => {
-      graft.ops.Ranking.bm25(s, t(s, dir, "documents"),
+      graft.ops.Ranking.bm25(t(s, dir, "documents"),
           terms = Seq("spark", "query", "fast"))
         .orderBy("doc_id")
     }),

@@ -151,7 +151,7 @@ object StressBench {
     val chainPairs = graft.ops.Dedup.boundedBucketPairs(bucket, Seq("b"),
         maxBucket = 500, hotChain = 20, metrics = None)
       .select(col("m_a.id").as("id_a"), col("m_b.id").as("id_b"))
-    val keepers = graft.ops.Dedup.connectedKeepers(chainPairs, maxIter = 20)
+    val keepers = graft.ops.Dedup.connectedKeepers(chainPairs)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val nAssigned = keepers.count()
     val nKeepers = keepers.select("keeper").distinct().count()
@@ -176,7 +176,7 @@ object StressBench {
       expr("substr(md5(cast(id as string)), 1, 8)").as("w"),
       expr("cast(1 + least(200, cast(200000 / (id + 1) as int)) as int)").as("f"))
       .select(expr("array_join(array_repeat(w, f), ' ')").as("text"))
-    val bpeMerges = graft.ops.Bpe.trainMerges(spark, bpeDocs,
+    val bpeMerges = graft.ops.Bpe.trainMerges(bpeDocs,
       numMerges = 500, maxWords = nWords)
     val bpeSecs = (System.nanoTime() - tB) / 1e9
     assert(bpeMerges.size == 500,
@@ -195,7 +195,7 @@ object StressBench {
     val lineDocs = spark.range(n).select(col("id").as("doc_id"),
       concat(lit("unique line "), col("id"),
         lit("\nsubscribe to our newsletter")).as("text"))
-    val cleaned = graft.ops.Dedup.removeBoilerplateLines(spark, lineDocs,
+    val cleaned = graft.ops.Dedup.removeBoilerplateLines(lineDocs,
         minDocs = 3)
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val nDocs = cleaned.count()

@@ -10,8 +10,8 @@ import graft.spark.Page
   * Target names are a pure function of the url, so the labeling path
   * needs no broadcast map at any scale.
   *
-  * Skew knob: the hot alias appears on `hotEvery`-th pages (default every
-  * 5th page => ~20% of pages mention the same entity).
+  * Each page lists 25 names; the hot alias appears on every 5th page
+  * (~20% of pages mention the same entity).
   */
 object SyntheticCorpus {
 
@@ -32,6 +32,8 @@ object SyntheticCorpus {
     "Jansen", "Kowalski", "Løkken", "Martínez", "Novák")
 
   val HotAlias = "Wei Wang"
+  private val NamesPerPage = 25
+  private val HotEvery = 5
 
   val Titles: Vector[String] = Vector(
     "Professor", "Dr.", "Prof.", "Mr.", "Mrs.", "Lecturer")
@@ -54,23 +56,23 @@ object SyntheticCorpus {
     url.substring(url.lastIndexOf('/') + 1).toLong
 
   /** Deterministic member names of one page. */
-  def namesOf(id: Long, namesPerPage: Int, seed: Long, hotEvery: Int): Seq[String] = {
+  def namesOf(id: Long, seed: Long): Seq[String] = {
     val base = mix(seed ^ (id * 0x9e3779b97f4a7c15L))
-    val names = (0 until namesPerPage).map { i =>
+    val names = (0 until NamesPerPage).map { i =>
       val h = mix(base + i)
       val f = FirstNames(((h >>> 8) % FirstNames.length).toInt.abs)
       val l = LastNames(((h >>> 24) % LastNames.length).toInt.abs)
       s"$f $l"
     }
-    if (hotEvery > 0 && id % hotEvery == 0) names :+ HotAlias else names
+    if (id % HotEvery == 0) names :+ HotAlias else names
   }
 
   /** One page's HTML: a head block, nav list, and a faculty table with
     * titles, emails, and occasional inline markup — enough structure to
     * exercise the DOM parser, block segmentation, and context features.
     */
-  def htmlOf(id: Long, namesPerPage: Int, seed: Long, hotEvery: Int): String = {
-    val names = namesOf(id, namesPerPage, seed, hotEvery)
+  def htmlOf(id: Long, seed: Long): String = {
+    val names = namesOf(id, seed)
     val h = mix(seed ^ id)
     val dept = Depts((h % Depts.length).toInt.abs)
     val sb = new StringBuilder
@@ -98,18 +100,16 @@ object SyntheticCorpus {
   }
 
   /** Distributed page generation. */
-  def pages(spark: SparkSession, n: Long, namesPerPage: Int = 25,
-      seed: Long = 42L, hotEvery: Int = 5,
+  def pages(spark: SparkSession, n: Long, seed: Long = 42L,
       numPartitions: Int = 0): Dataset[Page] = {
     import spark.implicits._
-    val npp = namesPerPage
     val parts = if (numPartitions > 0) numPartitions
       else spark.sparkContext.defaultParallelism * 4
     spark.range(0L, n, 1L, parts).mapPartitions(_.map { id =>
       Page(
         url = urlOf(id),
         warc_ts = new Timestamp(1700000000000L + id * 1000L),
-        html = htmlOf(id, npp, seed, hotEvery)
+        html = htmlOf(id, seed)
           .getBytes(java.nio.charset.StandardCharsets.UTF_8),
         text = null,
         lang = "en")
@@ -119,9 +119,8 @@ object SyntheticCorpus {
   /** The label provider for the synthetic corpus: pure function of the
     * url (reference CLI tokenization applied, like RefCorpus).
     */
-  def targetNamesFn(namesPerPage: Int = 25, seed: Long = 42L,
-      hotEvery: Int = 5): String => Seq[String] = { url =>
-    namesOf(idOfUrl(url), namesPerPage, seed, hotEvery)
+  def targetNamesFn(seed: Long = 42L): String => Seq[String] = { url =>
+    namesOf(idOfUrl(url), seed)
       .map(graft.extract.Extractor.normalizeTargetName)
   }
 }

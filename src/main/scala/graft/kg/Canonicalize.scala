@@ -58,16 +58,15 @@ object Canonicalize {
     * highest-support member (ties by name), aliases = all members.
     * Singleton names (no links) become their own entities.
     */
-  def entities(names: DataFrame, membership: DataFrame,
-      saltBuckets: Int = 16): DataFrame = {
+  def entities(names: DataFrame, membership: DataFrame): DataFrame = {
     val withComp = names.join(membership, Seq("name"), "left_outer")
       .withColumn("component",
         coalesce(col("component"), nameIdCol(col("name"))))
 
     // phase 1: salted partial aggregation (hot components spread over
-    // saltBuckets reducers)
+    // 16 reducers)
     val salted = withComp
-      .withColumn("salt", pmod(hash(col("name")), lit(saltBuckets)))
+      .withColumn("salt", pmod(hash(col("name")), lit(16)))
       .groupBy("component", "salt")
       .agg(
         collect_set(col("name")).as("alias_part"),

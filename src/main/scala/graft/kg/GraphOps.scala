@@ -28,15 +28,16 @@ import org.apache.spark.sql.types.{Decimal, DecimalType}
   */
 object GraphOps {
 
-  /** Directed token co-occurrence edges (w_i -> w_{i+1}) with counts.
+  /** Directed token co-occurrence edges (w_i -> w_{i+1}) of the `text`
+    * column with counts.
     * Shift-and-zip (`zip_with(w, slice(w, 2, n))`) builds the pairs
     * without a posexplode self-join; the only shuffle is the final
     * (src, dst) groupBy. zip_with pads the shorter side with NULL, so
     * the trailing (last_token, NULL) pair is filtered before explode —
     * single-token and empty docs contribute no edges.
     */
-  def bigramEdges(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val w = split(col(textCol), " ")
+  def bigramEdges(docs: DataFrame): DataFrame = {
+    val w = split(col("text"), " ")
     val pairs = filter(
       zip_with(w, slice(w, lit(2), size(w)),
         (a, b) => struct(a.as("src"), b.as("dst"))),
@@ -68,8 +69,10 @@ object GraphOps {
   /** Fixed-iteration PageRank as iterative DataFrame joins:
     *
     *   pr_0(v)   = 1/N
-    *   pr_t+1(v) = round((1-d)/N + d * S_t(v), scale)
-    *   S_t(v)    = Σ_{u→v} decimal(round(pr_t(u)/outdeg(u), scale))
+    *   pr_t+1(v) = round((1-d)/N + d * S_t(v), 12)
+    *   S_t(v)    = Σ_{u→v} decimal(round(pr_t(u)/outdeg(u), 12))
+    *
+    * with damping d = 0.85.
     *
     * Dangling mass (nodes with no out-edges) is NOT redistributed —
     * total rank leaks by the dangling fraction per iteration. That is
@@ -93,7 +96,7 @@ object GraphOps {
     * N is not counted by a job of its own: the node-set checkpoint
     * observes it (an `Observation`, filled by that checkpoint's action).
     *
-    * Determinism: contributions are rounded to `scale` decimal places
+    * Determinism: contributions are rounded to 12 decimal places
     * (an IEEE double op, identical everywhere), then summed as
     * DECIMAL(38,15) — exact, order-independent — so the result is
     * bit-identical at any parallelism. DuckDB replicates the same
@@ -108,7 +111,7 @@ object GraphOps {
     * `weighted = true` splits each node's outgoing rank proportionally
     * to the LONG `weight` edge column instead of uniformly (the
     * TextRank formulation — co-occurrence counts as transition mass):
-    * contribution = round(rank * w / Σw_out, scale), with Σw_out an
+    * contribution = round(rank * w / Σw_out, 12), with Σw_out an
     * exact long sum. Same determinism; `kg_pagerank_weighted` is
     * hash-oracled.
     *
@@ -117,7 +120,7 @@ object GraphOps {
     * real crawl graph, where 20-30% of nodes are dangling and the
     * leak-by-default semantics shrink total rank per iteration):
     *
-    *   pr_t+1(v) = round(base + d * (S_t(v) + DM_t / N), scale)
+    *   pr_t+1(v) = round(base + d * (S_t(v) + DM_t / N), 12)
     *   DM_t      = Σ_{u: outdeg(u)=0} decimal(pr_t(u))
     *
     * DM_t is an exact DECIMAL(38,15) sum over the dangling node set
@@ -138,10 +141,11 @@ object GraphOps {
     * five pagerank queries).
     */
   def pagerank(edges: DataFrame, iters: Int = 3,
-      damping: Double = 0.85, scale: Int = 12,
       seeds: Option[Seq[String]] = None,
       weighted: Boolean = false,
       danglingRedistribute: Boolean = false): DataFrame = {
+    val damping = 0.85
+    val scale = 12
     // edge ⋈ outdeg in ONE read of `edges` (typically a full derivation
     // such as bigramEdges): the out-degree is a window over the edges
     // hash-partitioned on src, and the checkpoint keeps that
@@ -235,6 +239,20 @@ object GraphOps {
     pr.select("node", "rank")
   }
 
+  /** Entity salience over a canonical edge table (`subj` page,
+    * `obj_entity` entity): PageRank over the distinct page→entity
+    * edges, 3 iterations. Entity nodes are pure sinks in this bipartite
+    * graph, so the dangling mass is redistributed (total rank conserved
+    * per iteration — the classic crawl-graph semantics; leak mode would
+    * shrink every rank by the entity-mass fraction each round). kg.Main's
+    * `entity_rank` stage and the `kg_entity_pagerank` query both rank
+    * through here.
+    */
+  def entityRank(edges: DataFrame): DataFrame =
+    pagerank(
+      edges.select(col("subj").as("src"), col("obj_entity").as("dst")).distinct(),
+      iters = 3, danglingRedistribute = true)
+
   /** Triangle count per node over the UNDIRECTED simple graph induced
     * by the edge list (direction and weight dropped, self-loops
     * removed). Classic compact-forward: orient every undirected edge
@@ -246,7 +264,7 @@ object GraphOps {
     * fans out on low-degree vertices only — a 10^6-degree celebrity
     * node contributes ZERO wedges instead of 10^12.
     */
-  def triangles(spark: SparkSession, edges: DataFrame): DataFrame = {
+  def triangles(edges: DataFrame): DataFrame = {
     // undirected simple edges as canonical (lo, hi) pairs
     val und = edges.select(col("src").as("a"), col("dst").as("b"))
       .filter(col("a") =!= col("b"))
@@ -361,8 +379,7 @@ object GraphOps {
     * exact at any parallelism; `kg_communities` is hash-oracled via
     * unrolled SQL.
     */
-  def labelPropagation(spark: SparkSession, edges: DataFrame,
-      rounds: Int): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     val und = edges.select(col("src").as("a"), col("dst").as("b"))
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("u"),

@@ -181,17 +181,10 @@ object Main {
     // a pipeline stage so every output ships a rank table. Resumable
     // like every stage; bit-reproducible across cluster sizes (the
     // decimal-sum contract in GraphOps.pagerank), so an N- and a
-    // 4N-executor run emit identical ranks. Entity nodes are pure
-    // sinks in this bipartite graph, so the dangling-mass
-    // redistribution mode applies (total rank conserved per
-    // iteration — the classic crawl-graph semantics; leak mode would
-    // shrink every rank by the entity-mass fraction each round). The
-    // same shape is hash-oracled as `kg_entity_pagerank`.
+    // 4N-executor run emit identical ranks. The same function is
+    // hash-oracled as `kg_entity_pagerank`.
     stages.stage("entity_rank", stages.outputRowsOf("edges")) {
-      GraphOps.pagerank(
-        edges.select(col("subj").as("src"), col("obj_entity").as("dst"))
-          .distinct(),
-        iters = 3, danglingRedistribute = true)
+      GraphOps.entityRank(edges)
     }
 
     edges

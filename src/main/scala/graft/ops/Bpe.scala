@@ -69,10 +69,10 @@ object Bpe {
     *   a driver OOM at web scale; the Zipf head dominates every pair
     *   count, so the cutoff does not move early merges.
     */
-  def trainMerges(spark: SparkSession, docs: DataFrame, numMerges: Int,
-      maxWords: Int = 1000000, textCol: String = "text"): Seq[(String, String)] = {
+  def trainMerges(docs: DataFrame, numMerges: Int,
+      maxWords: Int = 1000000): Seq[(String, String)] = {
     val wordCounts: Array[(Array[String], Long)] = docs
-      .select(explode(split(col(textCol), " ")).as("word"))
+      .select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("word").asc)
@@ -198,12 +198,11 @@ object Bpe {
     * @return (doc_id, n_tokens); null/empty text counts 0.
     */
   def tokenCounts(spark: SparkSession, docs: DataFrame,
-      merges: Seq[(String, String)], textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
+      merges: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(
       merges.zipWithIndex.map { case (p, i) => p -> i }.toMap)
-    docs.select(col(idCol).cast("long"), col(textCol))
+    docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .mapPartitions { it =>
         val ranks = bc.value

@@ -131,17 +131,16 @@ object CorpusStats {
       probs: Seq[Double]): Map[Double, Double] =
     summarize(spark, df, valueCol, probs).quantiles
 
-  /** One-row dataset card over a per-doc token-count column:
+  /** One-row dataset card over the per-doc `n_tokens` column:
     * (n_docs, total_tokens, min_tokens, p50_tokens, p90_tokens,
     * max_tokens). `n_docs` counts EVERY row (COUNT(*) semantics — a
     * NULL token count still is a document; one metadata-cheap count()
     * job); the other five statistics are over the non-null values and
     * all come from the ONE summarize pass.
     */
-  def tokenCard(spark: SparkSession, docs: DataFrame,
-      tokenCol: String = "n_tokens"): DataFrame = {
+  def tokenCard(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val s = summarize(spark, docs, tokenCol, Seq(0.5, 0.9))
+    val s = summarize(spark, docs, "n_tokens", Seq(0.5, 0.9))
     val nDocs = docs.count()
     Seq((nDocs, s.sum.toLong, s.min.toLong, s.max.toLong,
       s.quantiles.getOrElse(0.5, Double.NaN),

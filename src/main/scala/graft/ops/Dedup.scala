@@ -42,9 +42,9 @@ import graft.functions.{Fnv1a64, GraftFunctions}
 object Dedup {
 
   /** Exact dedup on a content digest: one shuffle on the digest. */
-  def exact(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    docs.groupBy(md5(col(textCol)).as("content_key"))
-      .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("copies"))
+  def exact(docs: DataFrame): DataFrame =
+    docs.groupBy(md5(col("text")).as("content_key"))
+      .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("copies"))
 
   /** C4-style LINE-level corpus dedup: a line occurring in at least
     * `minDocs` DISTINCT documents is boilerplate (nav bars, cookie
@@ -74,11 +74,10 @@ object Dedup {
     *         vanish: posexplode_outer keeps the null-text row as one
     *         null line, which the reassembly filters out).
     */
-  def removeBoilerplateLines(spark: SparkSession, docs: DataFrame,
-      minDocs: Long = 3, sep: String = "\n",
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val lines = docs.select(col(idCol).cast("long").as("doc_id"),
-        posexplode_outer(split(col(textCol), java.util.regex.Pattern.quote(sep)))
+  def removeBoilerplateLines(docs: DataFrame,
+      minDocs: Long = 3, sep: String = "\n"): DataFrame = {
+    val lines = docs.select(col("doc_id").cast("long").as("doc_id"),
+        posexplode_outer(split(col("text"), java.util.regex.Pattern.quote(sep)))
           .as(Seq("pos", "line")))
       .withColumn("h", md5(col("line")))
     val hot = lines.groupBy("h")
@@ -256,22 +255,21 @@ object Dedup {
   // --- MinHash + LSH ----------------------------------------------------
 
   /** Near-duplicate candidate pairs via banded MinHash LSH:
-    * shingle -> k-minhash -> b bands of r rows -> groupBy band key ->
-    * within-bucket pairs -> Jaccard-verified. The shuffle is keyed by
+    * word 3-gram shingles -> 64 minhashes -> 16 bands of 4 rows ->
+    * groupBy band key -> within-bucket pairs -> Jaccard-verified. The
+    * shuffle is keyed by
     * (band index, band hash); buckets over `maxBucket` switch to chain
     * pairing on the full-signature hash (byte-identical docs adjacent;
     * see the class doc for what hot-bucket recall does and does not
     * guarantee), so a hot key is bounded AND still connected.
     */
   def minhashLshPairs(spark: SparkSession, docs: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id",
-      w: Int = 3, bands: Int = 16, rows: Int = 4,
       minJaccard: Double = 0.7, maxBucket: Int = 1000, hotChain: Int = 20,
       metrics: Option[Observation] = None): DataFrame = {
     import spark.implicits._
-    val k = bands * rows
-    val base = docs.select(col(idCol).cast("long").as("id"),
-      col(textCol).as("text"))
+    val bands = 16
+    val rows = 4
+    val base = docs.select(col("doc_id").cast("long").as("id"), col("text"))
     // Texts never enter the band shuffle: the banded stream is
     // (id, sighash, band, bandkey) — 4 numeric columns — so the LSH
     // exchange moves ~32 bytes x bands per document instead of `bands`
@@ -288,7 +286,7 @@ object Dedup {
     // and on real (multi-split) corpora the kernel parallelism comes
     // from the scan itself.
     val sigs = base.select(col("id"),
-      GraftFunctions.column("minhash_sig", col("text"), lit(w), lit(k))
+      GraftFunctions.column("minhash_sig", col("text"), lit(3), lit(bands * rows))
         .as("sig"))
 
     val banded = sigs.select(col("id"), xxhash64(col("sig")).as("sighash"),
@@ -344,7 +342,7 @@ object Dedup {
     * upstream if ids can repeat.
     */
   def embeddingCosinePairs(embeddings: DataFrame,
-      minCosine: Double, nBits: Int = 6, maxBucket: Int = 500,
+      minCosine: Double, maxBucket: Int = 500,
       hotChain: Int = 20, metrics: Option[Observation] = None): DataFrame = {
     // native codegen srp_sig: the bucketing pass touches every vector
     // once — no per-row Seq[Float] boxing (same planes/accumulation as
@@ -355,7 +353,7 @@ object Dedup {
     val b = embeddings.select(col("vec_id").cast("long").as("id"),
         col("embedding"))
       .withColumn("bucket",
-        GraftFunctions.column("srp_sig", col("embedding"), lit(nBits)))
+        GraftFunctions.column("srp_sig", col("embedding"), lit(6)))
     val candidates = boundedBucketPairs(
       b.select(col("bucket"),
         struct(xxhash64(col("embedding")).as("ekey"), col("id")).as("m")),
@@ -393,12 +391,12 @@ object Dedup {
     * component, the same election as [[exact]]. Only ids ever enter
     * the graph — 16 bytes per edge regardless of document size.
     *
-    * `maxIter` bounds the alternating large-star/small-star rounds of
-    * the shared [[graft.spark.Cc]] core (r8: replaced GraphX Pregel),
-    * which converges in O(log n) rounds with an early exit — the
+    * The shared [[graft.spark.Cc]] core (r8: replaced GraphX Pregel)
+    * runs at most 20 alternating large-star/small-star rounds and
+    * converges in O(log n) rounds with an early exit — the
     * hot-bucket chain pairing's exponential offsets keep a degenerate
     * bucket's component diameter at ~hotChain hops, well inside the
-    * default maxIter=20 — asserted degenerate at n=300k in StressBench
+    * 20-round bound — asserted degenerate at n=300k in StressBench
     * and specced in OpsSpec. Components wider than the bound still
     * split into several keepers, never into a wrong merge — same
     * contract as `kg.Canonicalize.components`.
@@ -414,12 +412,12 @@ object Dedup {
     *         full assignment — that keeps this output proportional to
     *         the DUPLICATED subset, a vanishing fraction at scale).
     */
-  def connectedKeepers(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def connectedKeepers(pairs: DataFrame): DataFrame = {
     // the shared CC core labels each vertex with the smallest vertex
     // id in its component — which IS the min-doc-id keeper election
     graft.spark.Cc.components(
         pairs.select(col("id_a").cast("long").as("a"),
-          col("id_b").cast("long").as("b")), maxIter)
+          col("id_b").cast("long").as("b")))
       .toDF("doc_id", "keeper")
   }
 
@@ -454,7 +452,6 @@ object Dedup {
     * template-identical texts) costs O(n*hotChain), not O(n^2).
     */
   def simhashPairs(spark: SparkSession, docs: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id",
       maxHamming: Int = 3, maxBucket: Int = 1000, hotChain: Int = 20,
       metrics: Option[Observation] = None): DataFrame = {
     import spark.implicits._
@@ -466,9 +463,9 @@ object Dedup {
     // minhashLshPairs: same-JVM A/B median 3.38 vs 2.15 s — the 64-bit
     // codegen hash is far cheaper than exchanging the texts)
     val hashed = docs
-      .select(col(idCol).cast("long").as("id"), col(textCol))
+      .select(col("doc_id").cast("long").as("id"), col("text"))
       .select(col("id"),
-        GraftFunctions.column("simhash64", col(textCol)).as("simhash"))
+        GraftFunctions.column("simhash64", col("text")).as("simhash"))
     val blocked = hashed.select(col("id"), col("simhash"),
       explode(expr("transform(sequence(0, 3), b -> " +
         "struct(b as blk, shiftright(simhash, b * 16) & 65535 as key))")).as("e"))

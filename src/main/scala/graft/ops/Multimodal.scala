@@ -255,12 +255,13 @@ object Multimodal {
       }
   }
 
-  /** Deterministic 8-bit unsigned PCM mono WAV: sample i of clip `seed`
-    * is `(seed*31 + i*7) mod 256`, framed by the JDK's own WAVE writer
-    * (lossless PCM — a decode reads the exact samples back).
+  /** Deterministic 8 kHz 8-bit unsigned PCM mono WAV: sample i of clip
+    * `seed` is `(seed*31 + i*7) mod 256`, framed by the JDK's own WAVE
+    * writer (lossless PCM — a decode reads the exact samples back).
     */
-  def syntheticWav(seed: Long, nSamples: Int, sampleRate: Int = 8000): Array[Byte] = {
-    require(nSamples > 0 && sampleRate > 0, "samples and rate must be positive")
+  def syntheticWav(seed: Long, nSamples: Int): Array[Byte] = {
+    require(nSamples > 0, "samples must be positive")
+    val sampleRate = 8000f
     val samples = new Array[Byte](nSamples)
     var i = 0
     while (i < nSamples) {
@@ -269,7 +270,7 @@ object Multimodal {
     }
     val fmt = new javax.sound.sampled.AudioFormat(
       javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED,
-      sampleRate.toFloat, 8, 1, 1, sampleRate.toFloat, false)
+      sampleRate, 8, 1, 1, sampleRate, false)
     val ais = new javax.sound.sampled.AudioInputStream(
       new java.io.ByteArrayInputStream(samples), fmt, nSamples.toLong)
     val bos = new java.io.ByteArrayOutputStream()

@@ -36,10 +36,10 @@ import org.apache.spark.sql.functions._
   * totals collect) — it is not a lazily-composable plan, and the
   * returned frame's plan is an opaque LogicalRDD.
   *
+  * @param docs     (doc_id, n_tokens): rows with <= 0 or NULL
+  *                 n_tokens contribute nothing to the stream and emit
+  *                 no row; NULL ids are dropped
   * @param seqLen   tokens per training sequence (> 0)
-  * @param tokenCol per-doc token count column (rows with <= 0 or NULL
-  *                 tokens contribute nothing to the stream and emit no
-  *                 row; NULL ids are dropped)
   * @return (doc_id, seq_id, tok_from, tok_to): doc `doc_id`'s tokens
   *         [tok_from, tok_to) (doc-relative, exclusive end) belong to
   *         training sequence `seq_id`. Per doc, the spans partition
@@ -48,17 +48,17 @@ import org.apache.spark.sql.functions._
   */
 object Packing {
 
-  def chunkAssignments(spark: SparkSession, docs: DataFrame, seqLen: Long,
-      tokenCol: String = "n_tokens", idCol: String = "doc_id"): DataFrame = {
+  def chunkAssignments(spark: SparkSession, docs: DataFrame,
+      seqLen: Long): DataFrame = {
     import spark.implicits._
     require(seqLen > 0, s"seqLen must be positive (got $seqLen)")
     val sorted = docs
-      .filter(col(idCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"),
+      .filter(col("doc_id").isNotNull)
+      .select(col("doc_id").cast("long").as("id"),
         // NULL-safe: under ANSI configs size(split(NULL)) is NULL, and
         // a NULL in a non-nullable Dataset field would NPE the job —
         // NULL token counts mean "contributes nothing", like <= 0
-        coalesce(col(tokenCol).cast("long"), lit(0L)).as("n"))
+        coalesce(col("n_tokens").cast("long"), lit(0L)).as("n"))
       .repartitionByRange(col("id"))
       .sortWithinPartitions("id")
       .as[(Long, Long)]

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -30,16 +30,16 @@ object Ranking {
     * variant) of every document containing at least one query term.
     *
     *   idf(t)  = ln((N - df + 0.5)/(df + 0.5) + 1)
-    *   s(d, t) = idf(t) * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
+    *   s(d, t) = idf(t) * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)),
+    *             k1 = 1.2, b = 0.75
     *   bm25(d) = round(Σ_t round(s(d, t), 9), 6)
     *
     * @return (doc_id, bm25) for docs with ≥1 query-term occurrence.
     */
-  def bm25(spark: SparkSession, docs: DataFrame, terms: Seq[String],
-      k1: Double = 1.2, b: Double = 0.75,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val toks = docs.select(col(idCol).as("doc_id"),
-      split(col(textCol), " ").as("w"))
+  def bm25(docs: DataFrame, terms: Seq[String]): DataFrame = {
+    val k1 = 1.2
+    val b = 0.75
+    val toks = docs.select(col("doc_id"), split(col("text"), " ").as("w"))
     val dl = toks.select(col("doc_id"), size(col("w")).cast("long").as("dl"))
 
     // corpus constants: two scalars to the driver (one count job)

@@ -58,7 +58,6 @@ object Similarity {
     * the executors.
     */
   def bruteForceTopK(corpus: DataFrame, probes: DataFrame, k: Int,
-      metric: (Column, Column) => Column = dotCol,
       maxBroadcastProbes: Long = MaxBroadcastProbes): DataFrame = {
     val nProbes = boundedCount(probes, maxBroadcastProbes)
     require(nProbes <= maxBroadcastProbes,
@@ -74,7 +73,7 @@ object Similarity {
       .select(
         col("p.vec_id").as("query_id"),
         col("c.vec_id").as("neighbor_id"),
-        metric(col("p.embedding"), col("c.embedding")).as("score"))
+        dotCol(col("p.embedding"), col("c.embedding")).as("score"))
     if (k == 1) {
       joined.groupBy("query_id")
         .agg(max(struct(col("score"), (-col("neighbor_id")).as("neg"),
@@ -350,7 +349,7 @@ object Similarity {
     * init (the `nlist` lowest-id vectors) and order-independent
     * centroid updates — per-dimension sums run through DECIMAL(38,15)
     * (exact, so the sum is parallelism-invariant), then the mean
-    * divides that sum as a DOUBLE and rounds to `scale` decimals (a
+    * divides that sum as a DOUBLE and rounds to 9 decimals (a
     * deterministic function of the exact sum, though not itself exact
     * rational arithmetic) — so the fitted centroids are bit-identical
     * at any parallelism and fully replicable in SQL (the
@@ -367,14 +366,14 @@ object Similarity {
     * calling; the fit itself never collects corpus data.
     */
   def fitQuantizerLloyd(spark: SparkSession, corpus: DataFrame,
-      nlist: Int, iters: Int, scale: Int = 9, idCol: String = "vec_id")
+      nlist: Int, iters: Int)
       : org.apache.spark.broadcast.Broadcast[Array[Array[Double]]] = {
     val c = corpus.filter(col("embedding").isNotNull)
     // fixed deterministic init: the nlist smallest ids (a global top-k,
     // one narrow pass — TakeOrderedAndProject, no full sort)
     var cents: Array[Array[Double]] = c
-      .select(col(idCol), col("embedding"))
-      .orderBy(col(idCol)).limit(nlist)
+      .select(col("vec_id"), col("embedding"))
+      .orderBy(col("vec_id")).limit(nlist)
       .collect()
       .map(_.getAs[scala.collection.Seq[Float]](1).map(_.toDouble).toArray)
     require(cents.length == nlist,
@@ -398,7 +397,7 @@ object Similarity {
         val s = r.getDecimal(2).doubleValue()
         val cnt = r.getLong(3)
         next(cell)(pos) = BigDecimal(s / cnt)
-          .setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
+          .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
       }
       cents = next
     }
@@ -533,12 +532,11 @@ object Similarity {
     * oracle is closed-form.
     */
   def semanticDedup(spark: SparkSession, corpus: DataFrame, tau: Double,
-      nlist: Int = 16, maxIter: Int = 20, idCol: String = "vec_id",
+      nlist: Int = 16,
       metrics: Option[org.apache.spark.sql.Observation] = None,
       lloydIters: Int = 2): DataFrame = {
     // null-row semantics: see ivfCellTopK
-    val bc = fitQuantizerLloyd(spark, corpus, nlist, lloydIters,
-      idCol = idCol)
+    val bc = fitQuantizerLloyd(spark, corpus, nlist, lloydIters)
     val centroidsLit = typedlit(bc.value.map(_.toSeq).toSeq)
     // unit-normalize via zip_with against array_repeat: the norm stays
     // in an ordinary argument position — evaluated once per ROW — with
@@ -548,7 +546,7 @@ object Similarity {
     val nrm = normCol(col("embedding"))
     val safe = when(nrm > 0, nrm).otherwise(lit(1.0))
     val unit = corpus.filter(col("embedding").isNotNull)
-      .select(col(idCol).cast("long").as("id"),
+      .select(col("vec_id").cast("long").as("id"),
         zip_with(col("embedding"),
           array_repeat(safe, size(col("embedding"))),
           (x, n) => (x / n).cast("float")).as("e"),
@@ -570,9 +568,9 @@ object Similarity {
       case Some(obs) => pairs.observe(obs,
         coalesce(count(lit(1)), lit(0L)).as("dup_pairs"))
     }
-    val keepers = Dedup.connectedKeepers(observed, maxIter)
+    val keepers = Dedup.connectedKeepers(observed)
       .withColumnRenamed("doc_id", "id")
-    corpus.select(col(idCol).cast("long").as("id"))
+    corpus.select(col("vec_id").cast("long").as("id"))
       .join(keepers, Seq("id"), "left")
       .select(col("id"), coalesce(col("keeper"), col("id")).as("keeper"))
   }
@@ -600,7 +598,7 @@ object Similarity {
     * (`ann_lsh_multitable_topk`): the oracle slices the same wide
     * plane-literal signature per table in SQL.
     */
-  def lshTopKTables(spark: SparkSession, corpus: DataFrame,
+  def lshTopKTables(corpus: DataFrame,
       probes: DataFrame, k: Int, nBits: Int = 6, nTables: Int = 4,
       maxBroadcastProbes: Long = MaxBroadcastProbes,
       metrics: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
@@ -658,7 +656,7 @@ object Similarity {
     * the candidate-pair count — the same raise-the-alarm signal as
     * [[ivfSelfTopK]].
     */
-  def lshTopK(spark: SparkSession, corpus: DataFrame, probes: DataFrame,
+  def lshTopK(corpus: DataFrame, probes: DataFrame,
       k: Int, nBits: Int = 8, multiProbe: Int = 0,
       maxBroadcastProbes: Long = MaxBroadcastProbes,
       metrics: Option[org.apache.spark.sql.Observation] = None): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Cross-document EXACT-SUBSTRING deduplication — the "this 50-token
@@ -79,22 +79,21 @@ object SubstringDedup {
     *         docs, not drop them). `dup_tokens` is the size of the
     *         union of covered token positions.
     */
-  def duplicatedSpans(spark: SparkSession, docs: DataFrame, k: Int = 13,
-      minDocs: Int = 2, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
+  def duplicatedSpans(docs: DataFrame, k: Int = 13,
+      minDocs: Int = 2): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     // limit -1: trailing empty tokens survive, matching DuckDB's
     // string_split — position arithmetic must agree with the oracle
-    val toks = split(col(textCol), " ", -1)
+    val toks = split(col("text"), " ", -1)
     // scan-parallelism floor (graft.spark.Scans): the per-token
     // fingerprint kernel runs twice over this frame (dup-set agg + hit
     // join, the documented two-pass trade) at the parallelism of the
     // docs scan — a single-split corpus would hash every token
     // single-threaded, twice; no-op on well-split inputs
-    val grams = graft.spark.Scans.spread(docs, col(idCol))
-      .filter(col(textCol).isNotNull && size(toks) >= k)
-      .select(col(idCol).as("doc_id"),
+    val grams = graft.spark.Scans.spread(docs, col("doc_id"))
+      .filter(col("text").isNotNull && size(toks) >= k)
+      .select(col("doc_id"),
         posexplode(gramFingerprints(toks, k)).as(Seq("pos", "gh")))
     val dup = grams.groupBy("gh")
       .agg(countDistinct("doc_id").as("nd"))
@@ -122,7 +121,7 @@ object SubstringDedup {
       .agg(spanAgg(sort_array(collect_list(col("pos")))).as("sp"))
       .select(col("doc_id"), col("sp._1").as("dup_spans"),
         col("sp._2").as("dup_tokens"))
-    docs.select(col(idCol).as("doc_id"))
+    docs.select(col("doc_id"))
       .join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("dup_spans"), lit(0L)).as("dup_spans"),

@@ -72,21 +72,15 @@ object TextAnalysis {
     * salted doc id compared against hex-string thresholds: pure
     * codegen'd column expressions, reproducible across engines and
     * runs, independent of row order and partitioning, and re-saltable
-    * for independent re-splits. Thresholds are (name, upper-bound hex
-    * prefix) pairs evaluated in order; the last split takes the rest —
-    * e.g. `("train", "f0"), ("val", "f8")` + default "test" gives a
-    * ~93.75 / 3.125 / 3.125 split (hex space is uniform under md5).
-    * No shuffle: the assignment is a per-row projection.
+    * for independent re-splits. A key below hex prefix "f0" is "train",
+    * below "f8" "val", and the rest "test": a ~93.75 / 3.125 / 3.125
+    * split (hex space is uniform under md5). No shuffle: the assignment
+    * is a per-row projection.
     */
-  def assignSplit(docs: DataFrame,
-      thresholds: Seq[(String, String)] = Seq("train" -> "f0", "val" -> "f8"),
-      lastSplit: String = "test",
-      salt: String = "split:", idCol: String = "doc_id"): DataFrame = {
-    val key = md5(concat(lit(salt), col(idCol).cast("string")))
-    val split = thresholds.foldRight(lit(lastSplit): Column) {
-      case ((name, upper), rest) => when(key < upper, lit(name)).otherwise(rest)
-    }
-    docs.withColumn("split", split)
+  def assignSplit(docs: DataFrame, salt: String = "split:"): DataFrame = {
+    val key = md5(concat(lit(salt), col("doc_id").cast("string")))
+    docs.withColumn("split", when(key < "f0", lit("train"))
+      .otherwise(when(key < "f8", lit("val")).otherwise(lit("test"))))
   }
 
   /** Benchmark decontamination — the standard eval-set hygiene step of
@@ -113,7 +107,6 @@ object TextAnalysis {
     */
   def contamination(docs: DataFrame,
       benchmark: DataFrame, n: Int = 3,
-      textCol: String = "text", idCol: String = "doc_id",
       maxBroadcastGrams: Long = 10000000L): DataFrame = {
     // materialize the benchmark gram set ONCE (eager localCheckpoint)
     // before the guard probe: the probe and the semi-join then see the
@@ -126,11 +119,11 @@ object TextAnalysis {
     // for an eval-set-sized frame, which is what the broadcast guard
     // exists to verify.
     val bset = benchmark
-      .select(explode(Dedup.ngramSet(col(textCol), n)).as("gram"))
+      .select(explode(Dedup.ngramSet(col("text"), n)).as("gram"))
       .distinct()
       .localCheckpoint(true)
-    val dg = docs.select(col(idCol).as("doc_id"),
-      explode(Dedup.ngramSet(col(textCol), n)).as("gram"))
+    val dg = docs.select(col("doc_id"),
+      explode(Dedup.ngramSet(col("text"), n)).as("gram"))
     // the probe now reads checkpointed blocks — one scalar per
     // partition, no re-execution of the gram pipeline
     val semi =
@@ -139,7 +132,7 @@ object TextAnalysis {
       else dg.join(bset, Seq("gram"), "left_semi")
     val hits = semi
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared_grams"))
-    docs.select(col(idCol).as("doc_id"))
+    docs.select(col("doc_id"))
       .join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_shared_grams"), lit(0L)).as("n_shared_grams"))
@@ -198,10 +191,9 @@ object TextAnalysis {
     *
     * @return (doc_id, text_redacted, n_emails, n_urls, n_ips, n_phones)
     */
-  def redactPii(spark: SparkSession, docs: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def redactPii(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(textCol))
+    docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, text) =>
         var nEmails = 0
@@ -237,10 +229,9 @@ object TextAnalysis {
     * @return (doc_id, n_words, dup_word_frac, top_bigram_frac) —
     *         fractions 0.0 for docs too short to have them.
     */
-  def repetition(spark: SparkSession, docs: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def repetition(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(textCol))
+    docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, text) =>
         val ws =
@@ -286,10 +277,9 @@ object TextAnalysis {
     *
     * @return (doc_id, n_tokens, avg_logp)
     */
-  def unigramLogProb(docs: DataFrame, topK: Int = 50000,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val words = docs.select(col(idCol).as("doc_id"),
-      explode(split(col(textCol), " ")).as("word"))
+  def unigramLogProb(docs: DataFrame, topK: Int = 50000): DataFrame = {
+    val words = docs.select(col("doc_id"),
+      explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0)
     val counts = words.groupBy("word").agg(count(lit(1)).as("cnt"))
     val total = counts.agg(sum(col("cnt")).cast("double").as("total"))
@@ -307,7 +297,7 @@ object TextAnalysis {
     // a zero-token document must SURFACE (n_tokens = 0, null score),
     // not vanish: the op is a quality filter, and the worst-quality
     // docs are exactly the ones that would otherwise silently bypass it
-    docs.select(col(idCol).as("doc_id")).distinct()
+    docs.select(col("doc_id")).distinct()
       .join(scored, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
@@ -317,7 +307,7 @@ object TextAnalysis {
   /** [[contamination]] with a Bloom prefilter — the 100 TB shape when
     * even the exploded doc-gram stream is too wide to semi-join raw: a
     * Bloom filter over the benchmark grams (one aggregation job; MBs
-    * for an eval-set-sized input at the given fpp) broadcasts, and the
+    * for an eval-set-sized input at fpp 0.01) broadcasts, and the
     * corpus-side gram stream is filtered through `mightContain` BEFORE
     * any join, cutting the join input to true hits + an fpp-sized
     * trickle of false positives. Those FPs are then removed by the
@@ -327,10 +317,9 @@ object TextAnalysis {
     * oracle SQL verbatim.
     */
   def bloomContamination(docs: DataFrame,
-      benchmark: DataFrame, n: Int = 3, fpp: Double = 0.01,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+      benchmark: DataFrame, n: Int = 3): DataFrame = {
     val bset = benchmark
-      .select(explode(Dedup.ngramSet(col(textCol), n)).as("gram"))
+      .select(explode(Dedup.ngramSet(col("text"), n)).as("gram"))
       .distinct()
       .localCheckpoint(true)
     // expectedNumItems from the checkpointed blocks — a cheap count,
@@ -343,30 +332,31 @@ object TextAnalysis {
     // codegen; the serialized blob rides the plan as a foldable binary
     // literal exactly like an AQE-injected runtime filter
     val bf = bset.select(xxhash64(col("gram")).as("h"))
-      .stat.bloomFilter("h", nGrams, fpp)
+      .stat.bloomFilter("h", nGrams, 0.01)
     val blob = {
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
       bos.toByteArray
     }
     val cand = docs
-      .select(col(idCol).as("doc_id"),
-        explode(Dedup.ngramSet(col(textCol), n)).as("gram"))
+      .select(col("doc_id"),
+        explode(Dedup.ngramSet(col("text"), n)).as("gram"))
       .filter(GraftFunctions.column("bloom_might_contain", lit(blob),
         xxhash64(col("gram"))))
     val hits = cand.join(broadcast(bset), Seq("gram"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared_grams"))
-    docs.select(col(idCol).as("doc_id"))
+    docs.select(col("doc_id"))
       .join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_shared_grams"), lit(0L)).as("n_shared_grams"))
   }
 
-  /** Per-domain corpus rollup (docs, chars, tokens, length extremes) as
-    * an EXPLICIT two-stage salted aggregation: stage 1 aggregates on
-    * (domain, salt) — a crawl's hot domains (a handful of hosts owning
-    * double-digit corpus percentages is the norm) fan out over `salts`
-    * reducers — stage 2 merges the ≤ salts partial rows per domain.
+  /** Per-domain corpus rollup (docs, chars, tokens, length extremes) of
+    * the `source` column as an EXPLICIT two-stage salted aggregation:
+    * stage 1 aggregates on (domain, doc_id mod 8) — a crawl's hot
+    * domains (a handful of hosts owning double-digit corpus percentages
+    * is the norm) fan out over 8 reducers — stage 2 merges the ≤ 8
+    * partial rows per domain.
     * All measures are algebraic (sum/count/min/max of longs), so the
     * two-stage split is exact; the oracle is the plain single GROUP BY.
     *
@@ -375,14 +365,12 @@ object TextAnalysis {
     * on one reducer regardless of combiners — the same pattern the
     * canonicalization alias-merge uses.)
     */
-  def domainStats(docs: DataFrame, domainCol: String = "source",
-      salts: Int = 8, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    val nTok = size(split(col(textCol), " ")).cast("long")
-    val len = length(col(textCol)).cast("long")
+  def domainStats(docs: DataFrame): DataFrame = {
+    val nTok = size(split(col("text"), " ")).cast("long")
+    val len = length(col("text")).cast("long")
     val partial = docs
-      .withColumn("__salt", pmod(col(idCol).cast("long"), lit(salts)))
-      .groupBy(col(domainCol).as("domain"), col("__salt"))
+      .withColumn("__salt", pmod(col("doc_id").cast("long"), lit(8)))
+      .groupBy(col("source").as("domain"), col("__salt"))
       .agg(count(lit(1)).as("n"), sum(len).as("chars"),
         sum(nTok).as("toks"), min(len).as("mn"), max(len).as("mx"))
     partial.groupBy("domain")
@@ -398,12 +386,11 @@ object TextAnalysis {
     * per-row predicate, no shuffle, reproducible across runs/cluster
     * sizes, and exactly replicable in SQL. Rates are expressed as
     * 2-hex-digit thresholds (granularity 1/256): a row survives iff
-    * md5(salt || id) < threshold(stratum). Strata missing from `rates`
+    * md5("strat:" || doc_id) < threshold(stratum). Strata missing from `rates`
     * fall back to `defaultThreshold`.
     */
   def stratifiedSample(docs: DataFrame, strataCol: String,
-      rates: Seq[(String, String)], defaultThreshold: String,
-      salt: String = "strat:", idCol: String = "doc_id"): DataFrame = {
+      rates: Seq[(String, String)], defaultThreshold: String): DataFrame = {
     // thresholds compare LEXICOGRAPHICALLY against 32-char lowercase
     // md5 hex — an uppercase "C0" (sorts between '9' and 'a') or a
     // 1/3-digit string would silently produce a very different keep
@@ -414,7 +401,7 @@ object TextAnalysis {
         s"stratifiedSample threshold '$t' must be exactly 2 lowercase " +
           "hex digits (granularity 1/256)")
     }
-    val key = md5(concat(lit(salt), col(idCol).cast("string")))
+    val key = md5(concat(lit("strat:"), col("doc_id").cast("string")))
     val thr = rates.foldRight(lit(defaultThreshold): Column) {
       case ((stratum, t), rest) =>
         when(col(strataCol) === stratum, lit(t)).otherwise(rest)

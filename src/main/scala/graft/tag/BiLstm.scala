@@ -307,16 +307,15 @@ object BiLstmCrf {
   /** Sentences with `bio` replaced by Bi-LSTM-CRF-decoded tags — the
     * neural analog of [[graft.kg.Triples.decodedSentences]]: ONE decode
     * pass feeds every downstream projection (mentions AND relations).
-    * Tag ids map through `labels` (default: the engine's O/B-PER/I-PER
-    * order, so a 3-tag scorer plugs straight into the KG pipeline).
+    * Tag ids map through the engine's O/B-PER/I-PER order
+    * ([[Hmm.Labels]]), so a 3-tag scorer plugs straight into the KG
+    * pipeline.
     */
   def decodedSentences(spark: SparkSession, scorer: BiLstmCrfScorer,
-      sents: Dataset[SentenceRow], useFeatures: Boolean = false,
-      labels: Int => String = Hmm.Labels(_)): Dataset[SentenceRow] = {
+      sents: Dataset[SentenceRow], useFeatures: Boolean = false): Dataset[SentenceRow] = {
     import spark.implicits._
-    val lbl = labels
     predict(spark, scorer, sents, useFeatures)
-      .map { case (s, tags) => s.copy(bio = tags.map(lbl)) }
+      .map { case (s, tags) => s.copy(bio = tags.map(Hmm.Labels(_))) }
   }
 
   /** Does this scorer expect the 7 numeric features appended to its

@@ -16,7 +16,7 @@ package graft.tag
   *    commented-out block at :60-72.
   *  - [[layerNorm]]: `normalize` (:47-54) — last-axis population
   *    moments, `(x - mean) / (var + eps)^0.5 * gamma + beta`, with
-  *    epsilon INSIDE the root, default 1e-8.
+  *    epsilon 1e-8 INSIDE the root.
   *  - [[scaledDotProductAttention]]: `scaled_dot_product_attention`
   *    (:189-225) with `mask` (:227-257) — scores `Q K^T / sqrt(d_k)`;
   *    KEY masking first (keys whose |.|_1 is 0 score -2^32+1 toward
@@ -75,10 +75,10 @@ object Transformer {
   }
 
   /** Last-axis layer norm of one vector: population moments, epsilon
-    * inside the square root (the reference's `(var + eps) ** .5`).
+    * 1e-8 inside the square root (the reference's `(var + eps) ** .5`).
     */
   def layerNorm(x: Array[Double], gamma: Array[Double],
-      beta: Array[Double], eps: Double = 1e-8): Array[Double] = {
+      beta: Array[Double]): Array[Double] = {
     require(gamma.length == x.length && beta.length == x.length,
       "gamma/beta must match the feature dim")
     var mean = 0.0
@@ -93,7 +93,7 @@ object Transformer {
       i += 1
     }
     variance /= x.length
-    val inv = 1.0 / math.pow(variance + eps, 0.5)
+    val inv = 1.0 / math.pow(variance + 1e-8, 0.5)
     Array.tabulate(x.length)(j => (x(j) - mean) * inv * gamma(j) + beta(j))
   }
 

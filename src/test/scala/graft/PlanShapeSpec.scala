@@ -132,7 +132,7 @@ class PlanShapeSpec extends AnyFunSuite {
         danglingRedistribute = true).count() == 4)
       assert(graft.kg.GraphOps.shortestPaths(spark, w, "a", iters = 2)
         .count() == 4)
-      assert(graft.kg.GraphOps.labelPropagation(spark, e, rounds = 2)
+      assert(graft.kg.GraphOps.labelPropagation(e, rounds = 2)
         .count() == 4)
       val names = Seq(("ann", "anne"), ("anne", "annie"))
         .toDF("name_a", "name_b")
@@ -166,7 +166,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(url == "http://a.com/")
     docs.select(graft.ops.TextAnalysis.fingerprint(col("text"))).collect()
     assert(graft.ops.Dedup.minhashLshPairs(s, docs).count() == 1)
-    graft.ops.Similarity.lshTopK(s, vecs, vecs, k = 1).collect()
+    graft.ops.Similarity.lshTopK(vecs, vecs, k = 1).collect()
     graft.ops.TextAnalysis.bloomContamination(docs, docs.limit(1)).collect()
     val mine = s.sql("SELECT canonical_url('http://b.com'), fnv1a64('x')").head()
     assert(mine.getString(0) == "mine" && mine.getLong(1) == 7L,

@@ -183,14 +183,14 @@ class GraphOpsSpec extends AnyFunSuite {
     // and with a duplicate + self-loop to exercise normalization.
     val e = edges(("a", "b"), ("b", "a"), ("a", "c"), ("c", "b"),
       ("a", "d"), ("d", "b"), ("a", "a"))
-    val t = GraphOps.triangles(spark, e)
+    val t = GraphOps.triangles(e)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(t === Map("a" -> 2L, "b" -> 2L, "c" -> 1L, "d" -> 1L))
   }
 
   test("triangles: triangle-free graph returns no rows") {
     val e = edges(("a", "b"), ("b", "c"), ("c", "d")) // path: no triangles
-    assert(GraphOps.triangles(spark, e).count() === 0L)
+    assert(GraphOps.triangles(e).count() === 0L)
   }
 
   test("shortestPaths: min-plus relaxation takes the cheaper 2-hop route") {
@@ -230,7 +230,7 @@ class GraphOpsSpec extends AnyFunSuite {
     // triangle {a1,a2,a3} + triangle {b1,b2,b3} + bridge a3-b1
     val e = edges(("a1", "a2"), ("a2", "a3"), ("a1", "a3"),
       ("b1", "b2"), ("b2", "b3"), ("b1", "b3"), ("a3", "b1"))
-    val l = GraphOps.labelPropagation(spark, e, rounds = 3)
+    val l = GraphOps.labelPropagation(e, rounds = 3)
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
     // min-label tie-break pulls each clique to its smallest member
     assert(Set("a1", "a2", "a3").map(l) === Set("a1"))
@@ -243,10 +243,10 @@ class GraphOpsSpec extends AnyFunSuite {
   test("labelPropagation: deterministic across partition counts") {
     val base = docs(
       "a b c a d e b f g a", "c a d b e f", "g a b c d", "f e d c b a")
-    val l1 = GraphOps.labelPropagation(spark,
+    val l1 = GraphOps.labelPropagation(
         GraphOps.bigramEdges(base.repartition(1)), rounds = 2)
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
-    val l7 = GraphOps.labelPropagation(spark,
+    val l7 = GraphOps.labelPropagation(
         GraphOps.bigramEdges(base.repartition(7)), rounds = 2)
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
     assert(l1 === l7)

@@ -141,7 +141,7 @@ class LinkSpec extends AnyFunSuite {
       .select(least(col("name_a"), col("name_b")).as("name_a"),
         greatest(col("name_a"), col("name_b")).as("name_b"), col("dist"))
     val membership = Canonicalize.components(pairs)
-    val nodes = Canonicalize.entities(names, membership, saltBuckets = 16)
+    val nodes = Canonicalize.entities(names, membership)
     val rows = nodes.collect()
     assert(rows.length == 1)
     assert(rows.head.getAs[String]("canonical_name") == "Hot Wang")

@@ -38,13 +38,13 @@ class BpeSpec extends AnyFunSuite {
     //  4: (lo,w)=7               -> low
     //  5: (e,w)=6 ties (n,e),(w,est) -> lex -> ew
     //  6: (ew,est)=6 ties (n,ew) -> lex ("ew" < "n") -> ewest
-    val merges = Bpe.trainMerges(spark, sennrichDocs, numMerges = 6)
+    val merges = Bpe.trainMerges(sennrichDocs, numMerges = 6)
     assert(merges == Seq(("e", "s"), ("es", "t"), ("l", "o"),
       ("lo", "w"), ("e", "w"), ("ew", "est")))
   }
 
   test("greedy lowest-rank apply reproduces training segmentation; OOV falls to chars") {
-    val merges = Bpe.trainMerges(spark, sennrichDocs, numMerges = 6)
+    val merges = Bpe.trainMerges(sennrichDocs, numMerges = 6)
     val ranks = merges.zipWithIndex.map { case (p, i) => p -> i }.toMap
     assert(Bpe.tokenizeWord("newest", ranks).toSeq == Seq("n", "ewest"))
     assert(Bpe.tokenizeWord("widest", ranks).toSeq == Seq("w", "i", "d", "est"))
@@ -73,7 +73,7 @@ class BpeSpec extends AnyFunSuite {
     // every learned symbol must be a well-formed string (no symbol
     // starts or ends mid-surrogate-pair)
     val docs = Seq.tabulate(4)(i => (i.toLong, s"$word $word ab")).toDF("doc_id", "text")
-    val merges = Bpe.trainMerges(spark, docs, numMerges = 1)
+    val merges = Bpe.trainMerges(docs, numMerges = 1)
     assert(merges == Seq((bA, bB)))
     def wellFormed(s: String): Boolean = {
       var i = 0
@@ -97,7 +97,7 @@ class BpeSpec extends AnyFunSuite {
     import spark.implicits._
     // 4+2+6+6 = sum(len-1) = 18 merges suffice; ask for far more and
     // rely on the early stop
-    val merges = Bpe.trainMerges(spark, sennrichDocs, numMerges = 100)
+    val merges = Bpe.trainMerges(sennrichDocs, numMerges = 100)
     assert(merges.size <= 18, s"early stop failed: ${merges.size} merges")
     val ranks = merges.zipWithIndex.map { case (p, i) => p -> i }.toMap
     for (w <- Seq("low", "lower", "newest", "widest"))
@@ -114,7 +114,7 @@ class BpeSpec extends AnyFunSuite {
     val docs = Seq((1L, "aa bb aa cc bb aa")).toDF("doc_id", "text")
     // top-2 words by (count, word): aa(3), bb(2) — cc never trains, so
     // (c,c) is not a merge and "cc" stays characters
-    val merges = Bpe.trainMerges(spark, docs, numMerges = 10, maxWords = 2)
+    val merges = Bpe.trainMerges(docs, numMerges = 10, maxWords = 2)
     val ranks = merges.zipWithIndex.map { case (p, i) => p -> i }.toMap
     assert(Bpe.tokenizeWord("aa", ranks).length == 1)
     assert(Bpe.tokenizeWord("bb", ranks).length == 1)

@@ -86,7 +86,7 @@ class MergeRankingSpec extends AnyFunSuite {
     // N=2, avgdl=3.5, df_x=1, idf = ln((2-1+.5)/(1+.5)+1) = ln 2
     // s(0,x) = ln2 * 2*2.2 / (2 + 1.2*(.25 + .75*3/3.5))
     val docs = Seq((0L, "x x y"), (1L, "y z z z")).toDF("doc_id", "text")
-    val out = Ranking.bm25(spark, docs, Seq("x"))
+    val out = Ranking.bm25(docs, Seq("x"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     val k1 = 1.2; val b = 0.75
     val idf = math.log(2.0)
@@ -101,7 +101,7 @@ class MergeRankingSpec extends AnyFunSuite {
     val docs = Seq(
       (0L, "rare common"), (1L, "common pad"), (2L, "common pad"),
       (3L, "pad pad")).toDF("doc_id", "text")
-    val out = Ranking.bm25(spark, docs, Seq("rare", "common"))
+    val out = Ranking.bm25(docs, Seq("rare", "common"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     // doc0 holds rare+common, doc1 only common → doc0 strictly higher
     assert(out(0L) > out(1L))
@@ -128,7 +128,7 @@ class MergeRankingSpec extends AnyFunSuite {
     val docs = (0L until 200L).map(i =>
         (i, ("tok " * (i % 7 + 1).toInt).trim, s"d${i % 3}"))
       .toDF("doc_id", "text", "source")
-    val salted = TextAnalysis.domainStats(docs, salts = 8)
+    val salted = TextAnalysis.domainStats(docs)
       .collect().map(r => (r.getString(0),
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
       .toMap

@@ -108,7 +108,7 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("WAV roundtrip: header fields + exact 8-bit PCM sample sum") {
-    val bytes = Multimodal.syntheticWav(seed = 11L, nSamples = 123, sampleRate = 8000)
+    val bytes = Multimodal.syntheticWav(seed = 11L, nSamples = 123)
     val d = Multimodal.decodeAudioOne(5L, bytes)
     assert(d.status == "ok")
     assert((d.sample_rate, d.channels, d.bits, d.frames) == ((8000, 1, 8, 123L)))

@@ -11,7 +11,9 @@ import graft.functions.{GraftFunctions, MinhashSig}
   */
 class OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  val sf = "/root/testdata/sf0.001"
+  // the sf0.001 tables committed with the benchmark; forked test JVMs
+  // run in the repository root
+  val sf = "kgbench/data/sf0.001"
 
   def documents = spark.read.parquet(s"$sf/documents.parquet")
   def embeddings = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -56,7 +58,7 @@ class OpsSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val bc = Similarity.lshTopK(spark, e, e, k = 3, nBits = 4)
+    val bc = Similarity.lshTopK(e, e, k = 3, nBits = 4)
     // with the auto-broadcast threshold OFF, only the forced hint can
     // broadcast: the under-cap path must still carry it, the over-cap
     // path must run the equi-key join as a shuffle — and agree. (With
@@ -66,14 +68,14 @@ class OpsSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val sh = Similarity.lshTopK(spark, e, e, k = 3, nBits = 4,
+      val sh = Similarity.lshTopK(e, e, k = 3, nBits = 4,
         maxBroadcastProbes = 2)
       assert(rows(bc) == rows(sh), "broadcast and shuffle joins must agree")
       sh.collect() // AQE finalizes only after execution
       val shPlan = sh.queryExecution.executedPlan.toString
       assert(!shPlan.contains("BroadcastExchange"),
         s"over-cap probe set must not broadcast:\n$shPlan")
-      val forced = Similarity.lshTopK(spark, e, e, k = 3, nBits = 4)
+      val forced = Similarity.lshTopK(e, e, k = 3, nBits = 4)
       forced.collect()
       assert(forced.queryExecution.executedPlan.toString
         .contains("BroadcastExchange"),
@@ -103,7 +105,7 @@ class OpsSpec extends AnyFunSuite {
     // (searching half the corpus per probe); with real 2^-nBits
     // occupancy the bucketed search must beat CHANCE, not a constant
     val obs = new org.apache.spark.sql.Observation
-    val lsh = Similarity.lshTopK(spark, e, e, k = 5, nBits = 4,
+    val lsh = Similarity.lshTopK(e, e, k = 5, nBits = 4,
         metrics = Some(obs))
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -120,7 +122,7 @@ class OpsSpec extends AnyFunSuite {
     // multi-probe (flip the 2 lowest-margin bits per probe) widens the
     // candidate set along the most-likely-wrong hyperplanes: recall
     // must dominate single-probe, with candidates still bucket-bounded
-    val mp = Similarity.lshTopK(spark, e, e, k = 5, nBits = 4, multiProbe = 2)
+    val mp = Similarity.lshTopK(e, e, k = 5, nBits = 4, multiProbe = 2)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val mpRecall = mp.intersect(brute).size.toDouble / brute.size
@@ -147,10 +149,10 @@ class OpsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     def recallOf(s: Set[(Long, Long)]) =
       s.intersect(brute).size.toDouble / brute.size
-    val one = Similarity.lshTopK(spark, e, e, k = 5, nBits = 6)
+    val one = Similarity.lshTopK(e, e, k = 5, nBits = 6)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val multi = Similarity.lshTopKTables(spark, e, e, k = 5, nBits = 6,
+    val multi = Similarity.lshTopKTables(e, e, k = 5, nBits = 6,
         nTables = 4)
       .select("query_id", "neighbor_id", "rk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
@@ -314,7 +316,7 @@ class OpsSpec extends AnyFunSuite {
       (2L, "twice\nnav\ngamma"),
       (3L, "delta\nnav"),
       (4L, "nav")).toDF("doc_id", "text")
-    val got = Dedup.removeBoilerplateLines(spark, docs, minDocs = 3)
+    val got = Dedup.removeBoilerplateLines(docs, minDocs = 3)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
     assert(got == Map(
       1L -> (("alpha\ntwice\nbeta", 1L)),
@@ -323,14 +325,14 @@ class OpsSpec extends AnyFunSuite {
       4L -> (("", 1L))))
     // custom separator: same semantics over e.g. sentence-split docs
     val dot = Seq((1L, "a.x.b"), (2L, "x.c"), (3L, "x")).toDF("doc_id", "text")
-    val got2 = Dedup.removeBoilerplateLines(spark, dot, minDocs = 3, sep = ".")
+    val got2 = Dedup.removeBoilerplateLines(dot, minDocs = 3, sep = ".")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got2 == Map(1L -> "a.b", 2L -> "c", 3L -> ""))
     // NULL-text docs surface (empty clean text, 0 removed) — they must
     // not vanish from the per-doc output
     val withNull = Seq((1L, "x\ny"), (2L, "x"), (3L, "x"),
       (4L, null.asInstanceOf[String])).toDF("doc_id", "text")
-    val got3 = Dedup.removeBoilerplateLines(spark, withNull, minDocs = 3)
+    val got3 = Dedup.removeBoilerplateLines(withNull, minDocs = 3)
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
     assert(got3 == Map(1L -> (("y", 1L)), 2L -> (("", 1L)),
       3L -> (("", 1L)), 4L -> (("", 0L))))
@@ -678,7 +680,7 @@ class OpsSpec extends AnyFunSuite {
     val ivf = ids(Similarity.ivfTopK(spark, withNull, withNull, k = 2,
       nlist = 4, nprobe = 2))
     assert(!ivf.contains(999999L) && ivf.nonEmpty)
-    val lsh = ids(Similarity.lshTopK(spark, withNull, withNull, k = 2,
+    val lsh = ids(Similarity.lshTopK(withNull, withNull, k = 2,
       nBits = 4, multiProbe = 2))
     assert(!lsh.contains(999999L) && lsh.nonEmpty)
   }
@@ -883,7 +885,7 @@ class OpsSpec extends AnyFunSuite {
       .persist()
     val nPairs = pairs.count()
     assert(nPairs <= n.toLong * 20, s"pair bound broken: $nPairs")
-    val keepers = Dedup.connectedKeepers(pairs, maxIter = 20)
+    val keepers = Dedup.connectedKeepers(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     pairs.unpersist()
     assert(keepers.length == n, s"only ${keepers.length} of $n ids labeled")

@@ -16,7 +16,7 @@ class SubstringDedupSpec extends AnyFunSuite {
   private def run(docs: Seq[(Long, String)], k: Int,
       minDocs: Int = 2): Map[Long, (Long, Long)] = {
     import spark.implicits._
-    SubstringDedup.duplicatedSpans(spark,
+    SubstringDedup.duplicatedSpans(
         docs.toDF("doc_id", "text").repartition(3), k, minDocs)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap

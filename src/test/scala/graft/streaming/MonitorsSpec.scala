@@ -50,7 +50,7 @@ class MonitorsSpec extends AnyFunSuite {
     // the real sf corpus replayed in doc_id order, plus planted exact
     // copies of the first 5 docs arriving LAST (under fresh ids) so the
     // equivalence is provably non-vacuous: those must be suppressed
-    val docs = graft.io.Tables.table(spark, "/root/testdata/sf0.001", "documents")
+    val docs = graft.io.Tables.table(spark, "kgbench/data/sf0.001", "documents")
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .collect().sortBy(_._1)
     val all = docs ++ docs.take(5).map { case (id, t) => (id + 1000000L, t) }
