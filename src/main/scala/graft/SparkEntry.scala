@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
@@ -20,6 +20,28 @@ object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.table(s, dir, name)
+
+  /** The documents table as pages, with `word` planted at every token
+    * position `i` where `i % modulus == pos`, for each `(pos, word)` of
+    * `plants`. The planted-token oracles rebuild the same positions in
+    * closed form.
+    */
+  private def plantedPages(s: SparkSession, dir: String, modulus: Int,
+      plants: Seq[(Int, String)]): Dataset[graft.spark.Page] = {
+    val cases = plants.map { case (pos, word) =>
+      s"WHEN i % $modulus = $pos THEN '$word'"
+    }.mkString(" ")
+    graft.corpus.SynthPages.fromDocuments(s,
+      t(s, dir, "documents").select(col("doc_id"), col("source"), col("lang"),
+        expr(s"array_join(transform(split(text, ' '), (t, i) -> " +
+          s"CASE $cases ELSE t END), ' ')").as("text")))
+  }
+
+  /** [[plantedPages]] extracted with `names` as every page's target names. */
+  private def plantedSentences(s: SparkSession, dir: String, modulus: Int,
+      plants: Seq[(Int, String)], names: Seq[String]) =
+    graft.spark.ExtractStage.sentences(s, plantedPages(s, dir, modulus, plants),
+      targetNamesFn = Some((_: String) => names))
 
   /** Exact decimal sum of a double column, returned as double. */
   private def dsum(c: org.apache.spark.sql.Column) =
@@ -224,16 +246,9 @@ object SparkEntry {
     // variant of the same path is `entry` + PipelineSpec's P/R gate.
     // Corpus assumptions as documented at kg_relations_counts.
     "kg_triples" -> ((s, dir) => {
-      val varied = t(s, dir, "documents").select(
-        col("doc_id"), col("source"), col("lang"),
-        expr("""array_join(transform(split(text, ' '), (t, i) ->
-          CASE WHEN i % 31 = 5 THEN 'zzjohn'
-               WHEN i % 31 = 6 THEN 'zzdoe'
-               WHEN i % 31 = 20 THEN 'zzann'
-               ELSE t END), ' ')""").as("text"))
-      val pages = graft.corpus.SynthPages.fromDocuments(s, varied)
-      val sents = graft.spark.ExtractStage.sentences(s, pages,
-        targetNamesFn = Some((_: String) => Seq("zzjohn zzdoe", "zzann")))
+      val sents = plantedSentences(s, dir, 31,
+        Seq(5 -> "zzjohn", 6 -> "zzdoe", 20 -> "zzann"),
+        Seq("zzjohn zzdoe", "zzann"))
       val mentions = graft.kg.Triples.goldMentions(s, sents)
       graft.kg.Triples.fromMentions(s, mentions).toDF()
         .select("subj", "pred", "obj", "url")
@@ -247,17 +262,9 @@ object SparkEntry {
     // per pattern occurrence; occurrences of the same planted pattern
     // in one doc yield identical rows).
     "kg_relations" -> ((s, dir) => {
-      val varied = t(s, dir, "documents").select(
-        col("doc_id"), col("source"), col("lang"),
-        expr("""array_join(transform(split(text, ' '), (t, i) ->
-          CASE WHEN i % 37 = 10 THEN 'dr.zz'
-               WHEN i % 37 = 11 THEN 'zzjohn'
-               WHEN i % 37 = 12 THEN 'zzdoe'
-               WHEN i % 37 = 20 THEN 'zz@zz.aa'
-               ELSE t END), ' ')""").as("text"))
-      val pages = graft.corpus.SynthPages.fromDocuments(s, varied)
-      val sents = graft.spark.ExtractStage.sentences(s, pages,
-        targetNamesFn = Some((_: String) => Seq("zzjohn zzdoe")))
+      val sents = plantedSentences(s, dir, 37,
+        Seq(10 -> "dr.zz", 11 -> "zzjohn", 12 -> "zzdoe", 20 -> "zz@zz.aa"),
+        Seq("zzjohn zzdoe"))
       graft.kg.Relations.goldRelations(s, sents).toDF()
         .select("subj", "pred", "obj", "url")
         .orderBy("url", "pred", "obj")
@@ -289,7 +296,7 @@ object SparkEntry {
       val d = t(s, dir, "documents")
       val planted = d.select((col("doc_id") + lit(1099511627776L)).as("doc_id"),
         col("text"))
-      graft.ops.Dedup.minhashLshPairs(s, d.select("doc_id", "text")
+      graft.ops.Dedup.minhashLshPairs(d.select("doc_id", "text")
         .unionByName(planted.select("doc_id", "text")), minJaccard = 0.7)
         .filter(col("id_b") === col("id_a") + lit(1099511627776L))
         .orderBy("id_a", "id_b")
@@ -303,7 +310,7 @@ object SparkEntry {
       val d = t(s, dir, "documents")
       val planted = d.select((col("doc_id") + lit(1099511627776L)).as("doc_id"),
         col("text"))
-      graft.ops.Dedup.simhashPairs(s, d.select("doc_id", "text")
+      graft.ops.Dedup.simhashPairs(d.select("doc_id", "text")
         .unionByName(planted.select("doc_id", "text")), maxHamming = 3)
         .filter(col("id_b") === col("id_a") + lit(1099511627776L))
         .orderBy("id_a", "id_b")
@@ -331,7 +338,7 @@ object SparkEntry {
         col("text"))
       val p2 = d.select((col("doc_id") + lit(2199023255552L)).as("doc_id"),
         col("text"))
-      val pairs = graft.ops.Dedup.minhashLshPairs(s,
+      val pairs = graft.ops.Dedup.minhashLshPairs(
           d.unionByName(p1).unionByName(p2), minJaccard = 0.7)
         .filter(col("id_b") === col("id_a") + lit(1099511627776L))
       graft.ops.Dedup.connectedKeepers(pairs)
@@ -961,19 +968,13 @@ object SparkEntry {
     // weights (banker's rounding avoided by count choice) re-derived in
     // SQL per token.
     "kg_gazetteer" -> ((s, dir) => {
-      val varied = t(s, dir, "documents").select(
-        col("doc_id"), col("source"), col("lang"),
-        expr("""array_join(transform(split(text, ' '), (t, i) ->
-          CASE WHEN i % 23 = 3 THEN 'zzalpha'
-               WHEN i % 23 = 4 THEN 'zzbeta'
-               ELSE t END), ' ')""").as("text"))
-      val pages = graft.corpus.SynthPages.fromDocuments(s, varied)
+      val pages = plantedPages(s, dir, 23, Seq(3 -> "zzalpha", 4 -> "zzbeta"))
       val gaz = s.sparkContext.broadcast(graft.extract.Gazetteers(
         exact = Map("zzalpha zzbeta" -> 1),
         partial = Map("zzalpha" -> 2, "zzbeta" -> 7),
         word = Map("zzbeta" -> 7)))
       val sents = graft.spark.ExtractStage.sentences(s, pages, gaz = Some(gaz),
-        config = graft.spark.ExtractStage.Config(annotateGazetteer = true))
+        annotateGazetteer = true)
       graft.spark.ExtractStage.tokens(s, sents).toDF()
         .filter(col("html_ctx") === "div.body")
         .select(
@@ -1010,15 +1011,8 @@ object SparkEntry {
     // IOB labeling -> goldMentions spans; per-doc mention count equals
     // the closed-form position formula.
     "kg_mention_counts" -> ((s, dir) => {
-      val varied = t(s, dir, "documents").select(
-        col("doc_id"), col("source"), col("lang"),
-        expr("""array_join(transform(split(text, ' '), (t, i) ->
-          CASE WHEN i % 31 = 5 THEN 'zzjohn'
-               WHEN i % 31 = 6 THEN 'zzdoe'
-               ELSE t END), ' ')""").as("text"))
-      val pages = graft.corpus.SynthPages.fromDocuments(s, varied)
-      val sents = graft.spark.ExtractStage.sentences(s, pages,
-        targetNamesFn = Some((_: String) => Seq("zzjohn zzdoe")))
+      val sents = plantedSentences(s, dir, 31, Seq(5 -> "zzjohn", 6 -> "zzdoe"),
+        Seq("zzjohn zzdoe"))
       graft.kg.Triples.goldMentions(s, sents).toDF()
         .select(expr("CAST(substring_index(url, '/', -1) AS BIGINT)").as("doc_id"),
           col("name"))
@@ -1041,17 +1035,9 @@ object SparkEntry {
     // honorific tokens, and no 'zz*' words — so every doc stays ONE
     // sentence and only the planted anchors fire.
     "kg_relations_counts" -> ((s, dir) => {
-      val varied = t(s, dir, "documents").select(
-        col("doc_id"), col("source"), col("lang"),
-        expr("""array_join(transform(split(text, ' '), (t, i) ->
-          CASE WHEN i % 37 = 10 THEN 'dr.zz'
-               WHEN i % 37 = 11 THEN 'zzjohn'
-               WHEN i % 37 = 12 THEN 'zzdoe'
-               WHEN i % 37 = 20 THEN 'zz@zz.aa'
-               ELSE t END), ' ')""").as("text"))
-      val pages = graft.corpus.SynthPages.fromDocuments(s, varied)
-      val sents = graft.spark.ExtractStage.sentences(s, pages,
-        targetNamesFn = Some((_: String) => Seq("zzjohn zzdoe")))
+      val sents = plantedSentences(s, dir, 37,
+        Seq(10 -> "dr.zz", 11 -> "zzjohn", 12 -> "zzdoe", 20 -> "zz@zz.aa"),
+        Seq("zzjohn zzdoe"))
       graft.kg.Relations.goldRelations(s, sents).toDF()
         .select(expr("CAST(substring_index(url, '/', -1) AS BIGINT)").as("doc_id"),
           col("pred"))
@@ -1487,23 +1473,17 @@ object SparkEntry {
     // PageRank over the CANONICAL ENTITY graph — the pipeline's
     // `entity_rank` stage shape (Main.scala), end-to-end through the
     // REAL path: planted-mention extraction → gold mentions → triples
-    // → name vocab → exact-norm linking → CC → canonical
-    // entities → canonicalEdges → GraphOps.entityRank (dangling-
-    // redistributing PageRank over page → obj_entity). The oracle
+    // → name vocab → MinHash linking (Linker.candidatePairs, the links
+    // stage's rule) → CC → canonical entities → canonicalEdges →
+    // GraphOps.entityRank (dangling-redistributing PageRank over page
+    // → obj_entity). The oracle
     // rebuilds the edge table in closed form (the kg_triples plant)
     // with the entity ids as generator-computed FNV constants, then
     // replays the same unrolled dangling PageRank.
     "kg_entity_pagerank" -> ((s, dir) => {
-      val varied = t(s, dir, "documents").select(
-        col("doc_id"), col("source"), col("lang"),
-        expr("""array_join(transform(split(text, ' '), (t, i) ->
-          CASE WHEN i % 31 = 5 THEN 'zzjohn'
-               WHEN i % 31 = 6 THEN 'zzdoe'
-               WHEN i % 31 = 20 THEN 'zzann'
-               ELSE t END), ' ')""").as("text"))
-      val pages = graft.corpus.SynthPages.fromDocuments(s, varied)
-      val sents = graft.spark.ExtractStage.sentences(s, pages,
-        targetNamesFn = Some((_: String) => Seq("zzjohn zzdoe", "zzann")))
+      val sents = plantedSentences(s, dir, 31,
+        Seq(5 -> "zzjohn", 6 -> "zzdoe", 20 -> "zzann"),
+        Seq("zzjohn zzdoe", "zzann"))
       val mentions = graft.kg.Triples.goldMentions(s, sents)
       // materialize triples ONCE (the kg.Main pipeline persists them as
       // a stage): vocab and the canonical-edge join both consume this
@@ -1512,7 +1492,7 @@ object SparkEntry {
       val triples = graft.kg.Triples.fromMentions(s, mentions)
         .localCheckpoint(true)
       val vocab = graft.kg.Linker.nameVocab(triples)
-      val links = graft.kg.Linker.exactNormLinks(vocab)
+      val links = graft.kg.Linker.candidatePairs(vocab)
       val membership = graft.kg.Canonicalize.components(links)
       val nodes = graft.kg.Canonicalize.entities(vocab, membership)
       graft.kg.GraphOps.entityRank(
@@ -1708,10 +1688,11 @@ object SparkEntry {
 
   /** Closed-form page→entity edge table for `kg_entity_pagerank`: the
     * kg_triples plant (docs with ≥7 tokens mention 'zzjohn zzdoe',
-    * ≥21 also 'zzann'; both names are singleton entities under
-    * exact-norm linking, so obj_entity is the FNV-1a constant the
-    * generator computes — the same closed-form device as the planted
-    * ANN oracles).
+    * ≥21 also 'zzann'). The two names' padded 3-gram sets share only
+    * " zz" (Jaccard 1/15, distance ≈ 0.93, far above the 0.3 link
+    * threshold), so both are singleton entities and obj_entity is the
+    * FNV-1a constant the generator computes — the same closed-form
+    * device as the planted ANN oracles.
     */
   private def entityEdgesCte: String = {
     val e1 = f"person:${graft.kg.Canonicalize.nameId("zzjohn zzdoe")}%016x"

@@ -91,10 +91,10 @@ object StressBench {
     // hotChain is passed EXPLICITLY to every op so the N*hotChain bound
     // asserted above cannot silently decouple from the Dedup defaults
     val minhashJson = degenerate("minhash", obs =>
-      graft.ops.Dedup.minhashLshPairs(spark, docs, minJaccard = 0.7,
+      graft.ops.Dedup.minhashLshPairs(docs, minJaccard = 0.7,
         hotChain = hotChain, metrics = Some(obs)))
     val simhashJson = degenerate("simhash", obs =>
-      graft.ops.Dedup.simhashPairs(spark, docs, maxHamming = 3,
+      graft.ops.Dedup.simhashPairs(docs, maxHamming = 3,
         hotChain = hotChain, metrics = Some(obs)))
 
     // cosine: every SRP bucket hot + a planted exact-copy run of 301

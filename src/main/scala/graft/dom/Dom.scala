@@ -11,12 +11,14 @@ import graft.extract.Py
   * attribute splitting, whitespace-only-string collapsing, Python `==`
   * structural equality of tags, `find_all` / `extract` / `string=`.
   *
-  * bs4 changed two relevant behaviors across releases; both are exposed as
-  * [[Bs4Config]] toggles and pinned by golden-file tests:
-  *  - `_popToTag` on an unmatched end tag: old versions pop all the way to
-  *    the root, 4.9.1+ (open_tag_counter) ignore the end tag.
-  *  - "class" attribute splitting: old `\s+`-split (keeps empty strings),
-  *    4.7+ `\S+`-findall.
+  * The reference ran an old bs4, and the golden files pin its behavior
+  * where later releases changed it:
+  *  - `_popToTag` on an unmatched end tag pops all the way to the root
+  *    (4.9.1+ ignores the end tag);
+  *  - "class" attribute values are `\s+`-split, keeping empty strings
+  *    (4.7+ `\S+`-findalls them);
+  *  - entity and charref events resolve as old bs4's `handle_entityref`
+  *    and `handle_charref` did: the HTML4 table, cp1252 below 256.
   */
 object TextKind {
   val NavigableString = 0
@@ -42,10 +44,6 @@ final class Tag(
     var attrs: Map[String, AttrValue],
     val canBeEmpty: Boolean) extends BNode {
   val contents: ArrayBuffer[BNode] = ArrayBuffer.empty
-  /** open-tag counter cell, set at push time (saves the name lookup at
-    * pop time)
-    */
-  private[dom] var openCellRef: Array[Int] = _
 
   def hasAttr(key: String): Boolean = attrs.contains(key)
 
@@ -132,19 +130,8 @@ object Dom {
   }
 }
 
-final case class Bs4Config(
-    /** true = pre-4.9.1 _popToTag (unmatched end tag pops to root). */
-    popUnmatchedToRoot: Boolean = true,
-    /** true = pre-4.7 class splitting (`\s+` split keeping empties). */
-    classWhitespaceSplit: Boolean = true,
-    /** false = old bs4 html.parser mode: entity/charref events resolved
-      * against the HTML4 table (miss -> "&name" passthrough), numeric
-      * refs < 256 via cp1252. Golden files pin this to false.
-      */
-    convertCharrefs: Boolean = false)
-
 /** The bs4 layer: consumes [[HtmlEvents]], builds the [[Tag]] tree. */
-final class Bs4TreeBuilder(config: Bs4Config = Bs4Config()) extends HtmlEvents {
+final class Bs4TreeBuilder extends HtmlEvents {
   import Bs4TreeBuilder._
 
   val root = new Tag("[document]", Map.empty, canBeEmpty = false)
@@ -152,14 +139,6 @@ final class Bs4TreeBuilder(config: Bs4Config = Bs4Config()) extends HtmlEvents {
   private val preserveWsStack = ArrayBuffer[Tag]()
   private val currentData = ListBuffer[String]()
   private val alreadyClosedEmptyElement = ListBuffer[String]()
-  // one mutable cell per tag name: single hash lookup per push/pop, no
-  // Integer boxing (this map is touched twice per element)
-  private val openTagCounter = new java.util.HashMap[String, Array[Int]]()
-  private def openCell(name: String): Array[Int] = {
-    var c = openTagCounter.get(name)
-    if (c == null) { c = new Array[Int](1); openTagCounter.put(name, c) }
-    c
-  }
 
   private def currentTag: Tag = tagStack.last
 
@@ -191,55 +170,46 @@ final class Bs4TreeBuilder(config: Bs4Config = Bs4Config()) extends HtmlEvents {
     tag.parent = currentTag
     currentTag.contents += tag
     tagStack += tag
-    val cell = openCell(tag.name)
-    cell(0) += 1
-    tag.openCellRef = cell
     if (PreserveWhitespaceTags.contains(tag.name)) preserveWsStack += tag
   }
 
   private def popTag(): Unit = {
     val tag = tagStack.remove(tagStack.length - 1)
-    tag.openCellRef(0) -= 1
     if (preserveWsStack.nonEmpty && (preserveWsStack.last eq tag))
       preserveWsStack.remove(preserveWsStack.length - 1)
   }
 
+  /** Old-bs4 `_popToTag`: pops until a tag of this name is popped, so an
+    * end tag with no open match pops everything up to the root.
+    */
   private def popToTag(name: String): Unit = {
     if (name == "[document]") return
     var i = tagStack.length - 1
     var done = false
     while (i >= 1 && !done) {
-      if (!config.popUnmatchedToRoot && {
-        val c = openTagCounter.get(name); c == null || c(0) <= 0
-      }) {
-        done = true // modern bs4: nothing open with this name -> ignore
-      } else {
-        val t = tagStack(i)
-        if (t.name == name) { popTag(); done = true }
-        else popTag()
-        i -= 1
-      }
+      if (tagStack(i).name == name) done = true
+      popTag()
+      i -= 1
     }
   }
 
-  private def splitCdataList(value: String): Vector[String] =
-    if (config.classWhitespaceSplit) {
-      // re.split(r'\s+', value) — keeps leading/trailing empty strings
-      val out = Vector.newBuilder[String]
-      var start = 0
-      var i = 0
-      val n = value.length
-      while (i < n) {
-        if (Py.isSpace(value.charAt(i))) {
-          out += value.substring(start, i)
-          while (i + 1 < n && Py.isSpace(value.charAt(i + 1))) i += 1
-          start = i + 1
-        }
-        i += 1
+  /** `re.split(r'\s+', value)`: keeps leading/trailing empty strings. */
+  private def splitCdataList(value: String): Vector[String] = {
+    val out = Vector.newBuilder[String]
+    var start = 0
+    var i = 0
+    val n = value.length
+    while (i < n) {
+      if (Py.isSpace(value.charAt(i))) {
+        out += value.substring(start, i)
+        while (i + 1 < n && Py.isSpace(value.charAt(i + 1))) i += 1
+        start = i + 1
       }
-      out += value.substring(start, n)
-      out.result()
-    } else Py.whitespaceSplit(value) // re.findall(r'\S+', value)
+      i += 1
+    }
+    out += value.substring(start, n)
+    out.result()
+  }
 
   private def makeAttrs(name: String, attrDict: List[(String, String)]): Map[String, AttrValue] = {
     if (attrDict.isEmpty) return Map.empty
@@ -395,9 +365,9 @@ object Bs4TreeBuilder {
     "output" -> Set("for"))
 
   /** Parse markup into a bs4-equivalent tree. */
-  def parse(markup: String, config: Bs4Config = Bs4Config()): Tag = {
-    val builder = new Bs4TreeBuilder(config)
-    new HtmlParser(builder, config.convertCharrefs).parse(markup)
+  def parse(markup: String): Tag = {
+    val builder = new Bs4TreeBuilder
+    new HtmlParser(builder).parse(markup)
     builder.finish()
   }
 }

@@ -3,8 +3,9 @@ package graft.dom
 import java.util.regex.Pattern
 
 /** HTML5 character-reference decoding with CPython `html.unescape`
-  * semantics (the reference parses via bs4 + html.parser with
-  * convert_charrefs, so all text/attribute values pass through this).
+  * semantics (html.parser unescapes every attribute value with it; text
+  * goes through old bs4's entity and charref events instead, see
+  * [[html4]]).
   *
   * Data source: the public WHATWG named-character-reference table
   * (shipped as a resource, incl. the semicolon-less legacy names).
@@ -90,7 +91,7 @@ object Entities {
 
   /** HTML4 entity table (Python html.entities.name2codepoint, 252
     * case-sensitive names) — what old bs4 resolves handle_entityref
-    * against in non-convert_charrefs mode.
+    * against.
     */
   val html4: Map[String, Int] = {
     val in = getClass.getResourceAsStream("/graft/html4_entities.tsv")

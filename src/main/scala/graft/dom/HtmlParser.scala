@@ -20,18 +20,20 @@ trait HtmlEvents {
 }
 
 /** Scala re-implementation of CPython's `html.parser.HTMLParser`
-  * tokenization semantics (convert_charrefs=True, the bs4 default), which
-  * is what the reference uses via `BeautifulSoup(html, 'html.parser')`
-  * (`util/html_segmenter.py:259`). This is deliberately NOT an HTML5-spec
-  * tokenizer: html.parser's tolerant regex-driven behavior (bogus
-  * comments, junk-in-tag recovery, cdata raw-text for script/style,
-  * charref decoding with the legacy no-semicolon names) is part of the
-  * byte-parity contract.
+  * tokenization semantics as the reference's old bs4 drove it via
+  * `BeautifulSoup(html, 'html.parser')` (`util/html_segmenter.py:259`):
+  * convert_charrefs off, so text between tags is passed through raw and
+  * every `&name;` / `&#n;` reaches the sink as its own entity or charref
+  * event. This is deliberately NOT an HTML5-spec tokenizer: html.parser's
+  * tolerant regex-driven behavior (bogus comments, junk-in-tag recovery,
+  * cdata raw-text for script/style, the EOF quirks of its `&` dispatch)
+  * is part of the byte-parity contract. Attribute values are still
+  * `html.unescape`d, as CPython always does.
   *
   * The whole document is parsed in one pass with EOF ("close()")
   * recovery semantics inlined.
   */
-final class HtmlParser(events: HtmlEvents, convertCharrefs: Boolean = true) {
+final class HtmlParser(events: HtmlEvents) {
   import HtmlParser._
 
   private var cdataElem: String = null
@@ -50,18 +52,13 @@ final class HtmlParser(events: HtmlEvents, convertCharrefs: Boolean = true) {
       var j = 0
       var breakLoop = false
       if (cdataElem == null) {
-        if (convertCharrefs) {
-          j = rawdata.indexOf('<', i)
-          if (j < 0) j = n
-        } else {
-          // interesting_normal = [&<]
-          val lt = rawdata.indexOf('<', i)
-          if (ampCache < i) {
-            val a = rawdata.indexOf('&', i)
-            ampCache = if (a < 0) n else a
-          }
-          j = math.min(if (lt < 0) n else lt, ampCache)
+        // interesting_normal = [&<]
+        val lt = rawdata.indexOf('<', i)
+        if (ampCache < i) {
+          val a = rawdata.indexOf('&', i)
+          ampCache = if (a < 0) n else a
         }
+        j = math.min(if (lt < 0) n else lt, ampCache)
       } else {
         val m = interestingCdata.matcher(rawdata)
         if (m.find(i)) j = m.start()
@@ -69,13 +66,9 @@ final class HtmlParser(events: HtmlEvents, convertCharrefs: Boolean = true) {
       }
       if (breakLoop) { i = n }
       else {
-        if (i < j) {
-          if (cdataElem == null && convertCharrefs)
-            events.handleData(Entities.unescape(rawdata.substring(i, j)))
-          else events.handleData(rawdata.substring(i, j))
-        }
+        if (i < j) events.handleData(rawdata.substring(i, j))
         i = j
-        if (i < n && rawdata.charAt(i) == '&' && cdataElem == null && !convertCharrefs) {
+        if (i < n && rawdata.charAt(i) == '&' && cdataElem == null) {
           i = handleAmp(rawdata, i)
         } else if (i < n) {
           // dispatch on the construct at '<'
@@ -93,10 +86,7 @@ final class HtmlParser(events: HtmlEvents, convertCharrefs: Boolean = true) {
               k = rawdata.indexOf('<', i + 1)
               if (k < 0) k = i + 1
             } else k += 1
-            // CPython gates the recovery unescape on convert_charrefs too
-            if (cdataElem == null && convertCharrefs)
-              events.handleData(Entities.unescape(rawdata.substring(i, k)))
-            else events.handleData(rawdata.substring(i, k))
+            events.handleData(rawdata.substring(i, k))
           }
           i = k
         }
@@ -105,7 +95,7 @@ final class HtmlParser(events: HtmlEvents, convertCharrefs: Boolean = true) {
     // trailing data in cdata mode is dropped (html.parser close() semantics)
   }
 
-  /** Non-convert-charrefs '&' dispatch (CPython goahead branches).
+  /** '&' dispatch (CPython goahead's convert_charrefs-off branches).
     * Returns the new position; n means stop (EOF quirks mirrored).
     */
   private def handleAmp(rawdata: String, i: Int): Int = {
@@ -173,7 +163,7 @@ final class HtmlParser(events: HtmlEvents, convertCharrefs: Boolean = true) {
     val endpos = checkForWholeStartTag(rawdata, i)
     if (endpos < 0) return endpos
 
-    var attrs = List.newBuilder[(String, Option[String])]
+    val attrs = List.newBuilder[(String, Option[String])]
     val tn = TagScanner.scanTagName(rawdata, i + 1)
     val nameEnd = (tn >>> 32).toInt
     var k = (tn & 0xffffffffL).toInt

@@ -159,7 +159,7 @@ object TagScanner {
         if (nameEnd < 0) go = false
         else {
           val v = scanValue(s, nameEnd)
-          var after = if (v == null) nameEnd else skipTrailingCommas(s, v._3)
+          val after = if (v == null) nameEnd else skipTrailingCommas(s, v._3)
           j = skipSeparators(s, after)
         }
       }

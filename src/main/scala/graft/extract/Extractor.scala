@@ -2,7 +2,7 @@ package graft.extract
 
 import java.util.regex.Pattern
 import scala.collection.mutable.ArrayBuffer
-import graft.dom.{BNode, Bs4Config, Bs4TreeBuilder, Dom, Tag, TextNode, TextKind}
+import graft.dom.{Bs4TreeBuilder, Dom, Tag, TextNode, TextKind}
 
 /** One extracted token with its 13-slot feature vector and IOB tag.
   *
@@ -364,9 +364,8 @@ object Extractor {
 
   def tokenize(html: String, correctNames: Seq[String] = Nil,
       gaz: Gazetteers = Gazetteers(),
-      config: Bs4Config = Bs4Config(),
       annotateGazetteer: Boolean = false): Seq[Seq[HtmlToken]] = {
-    val soup = Bs4TreeBuilder.parse(html, config)
+    val soup = Bs4TreeBuilder.parse(html)
 
     // remove script and style subtrees, then mark childless <br> as 'BR'
     // — one fused traversal, not one find_all walk per tag name;

@@ -97,24 +97,6 @@ object Py {
     sb.toString
   }
 
-  /** Python `str.split()` with no args: split on runs of [[isSpace]],
-    * dropping leading/trailing; "".split() == [].
-    */
-  def whitespaceSplit(s: String): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    var i = 0
-    val n = s.length
-    while (i < n) {
-      while (i < n && isSpace(s.charAt(i))) i += 1
-      if (i < n) {
-        val start = i
-        while (i < n && !isSpace(s.charAt(i))) i += 1
-        out += s.substring(start, i)
-      }
-    }
-    out.result()
-  }
-
   /** Python 3 `round()` on a double: banker's (half-even) rounding, as an
     * int (reference: `round(log(count))`, `util/html_segmenter.py:205`).
     */

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.dom.Bs4Config
 import graft.extract.{Extractor, Py}
 
 /** SQL surface for the extraction kernel (SURVEY §2.9): a Catalyst
@@ -42,7 +41,7 @@ case class ExtractTokens(child: Expression)
       case other => Py.universalNewlines(other.toString)
     }
     try {
-      val sents = Extractor.tokenize(html, config = Bs4Config())
+      val sents = Extractor.tokenize(html)
       sents.iterator.zipWithIndex.flatMap { case (sent, si) =>
         sent.iterator.zipWithIndex.map { case (t, ti) =>
           InternalRow(si, ti,

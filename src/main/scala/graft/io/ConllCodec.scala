@@ -49,7 +49,7 @@ object ConllCodec {
   def read(spark: SparkSession, path: String): Dataset[SentenceRow] = {
     import spark.implicits._
     spark.sparkContext.wholeTextFiles(path).flatMap { case (_, content) =>
-      parseDocs(content).iterator.flatMap { case (id, url, sents) =>
+      parseDocs(content).iterator.flatMap { case (_, url, sents) =>
         sents.iterator.zipWithIndex.map { case (s, si) =>
           SentenceRow(
             url = url, warc_ts = new java.sql.Timestamp(0L), lang = "en",

@@ -13,8 +13,8 @@ import graft.extract.Extractor
   * character 3-grams and linked by spark.ml `MinHashLSH`'s rule in plain
   * DataFrame code; candidate pairs come from an equi-join on the grams
   * of a prefix filter, then the MinHash collision test — never the full
-  * cross product. Names sharing one normal form link directly through
-  * [[exactNormLinks]].
+  * cross product. Names sharing one normal form share their gram set, so
+  * they link at `dist` 0.0 through the same join.
   */
 object Linker {
 
@@ -35,8 +35,6 @@ object Linker {
     triples.groupBy(col("obj").as("name"))
       .agg(count(lit(1)).as("support"))
 
-  private val normUdf = udf((s: String) => normalize(s))
-
   /** Distinct 3-gram ids, hashed as `HashingTF(1 << 18)` hashes a term:
     * murmur3 `hashUnsafeBytes2` (seed 42) of the UTF-8 bytes, mod 2^18.
     * SQL `hash()` (`hashUnsafeBytes`) differs on every ASCII 3-gram.
@@ -56,8 +54,10 @@ object Linker {
   }
 
   /** MinHash candidate pairs (nameA < nameB) whose Jaccard distance over
-    * the gram-id sets is below `maxDistance`: the rows, and bit for bit the
-    * `dist`, of spark.ml `MinHashLSH(5 tables, seed 42).approxSimilarityJoin`.
+    * the gram-id sets is below `maxDistance` (by default 0.3, the link
+    * threshold of `kg.Main` and `kg_entity_pagerank`): the rows, and bit
+    * for bit the `dist`, of spark.ml `MinHashLSH(5 tables, seed
+    * 42).approxSimilarityJoin`.
     * `names` holds one row per name, as [[nameVocab]] gives it.
     *
     * That join returns a pair when (a) the names collide in at least one
@@ -86,7 +86,7 @@ object Linker {
     * either, and the rule stays exact at any `maxDistance`. `dist` is
     * the join's own expression, so its bits match.
     */
-  def candidatePairs(names: DataFrame, maxDistance: Double = 0.5): DataFrame = {
+  def candidatePairs(names: DataFrame, maxDistance: Double = 0.3): DataFrame = {
     val tableHashes = TableCoefficients.map { case (a, b) =>
       array_min(transform(col("ids"), i => ((i + 1L) * a + b) % Prime))
     }
@@ -96,16 +96,19 @@ object Linker {
     val keys = names.select(col("name"), gramIdsUdf(col("name")).as("ids"))
       .select(col("name"), col("ids"), array(tableHashes: _*).as("hashes"))
       .localCheckpoint(true)
-    // rank(id): position in the global order, rarest gram first
+    // rank(id): position in the global order, rarest gram first;
+    // broadcast, as 1 MB would otherwise ride in every task binary
     val rank = new Array[Int](1 << 18)
     keys.select(explode(col("ids")).as("id")).groupBy("id").count()
       .collect().map(r => (r.getLong(1), r.getInt(0))).sorted
       .zipWithIndex.foreach { case ((_, id), i) => rank(id) = i }
+    val rankBc = keys.sparkSession.sparkContext.broadcast(rank)
     val tau = 1.0 - maxDistance - 1e-9
     val prefixUdf = udf { (ids: Seq[Int]) =>
       val n = ids.size
       val len = math.min(n, math.max(1, n - math.ceil(tau * n).toInt + 1))
-      ids.sortBy(rank(_)).take(len)
+      val r = rankBc.value
+      ids.sortBy(r(_)).take(len)
     }
     val byPrefix = keys.withColumn("prefix", prefixUdf(col("ids")))
       .withColumn("g", explode(col("prefix")))
@@ -119,28 +122,5 @@ object Linker {
         (lit(1.0) - size(array_intersect(col("l.ids"), col("r.ids"))) /
           size(array_union(col("l.ids"), col("r.ids")))).as("dist"))
       .filter(col("dist") < maxDistance)
-  }
-
-  /** Exact-normal-form links: names whose normalization collides are the
-    * same entity (accent/case variants). Chain-paired via `lead()` over
-    * a (norm, name) sort — sorted-adjacent neighbors connect the whole
-    * variant group for the downstream connected components exactly like
-    * a star pairing would, but with NO `collect_list` row: a degenerate
-    * normal form shared by millions of names streams through the
-    * spillable external sort (O(n) pairs, O(1) state per row) instead
-    * of materializing one unbounded aggregation row. Same discipline as
-    * `Dedup.boundedBucketPairs`'s hot-bucket branch.
-    */
-  def exactNormLinks(names: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("norm").orderBy("name")
-    names
-      .withColumn("norm", normUdf(col("name")))
-      .withColumn("next_name", lead(col("name"), 1).over(w))
-      .filter(col("next_name").isNotNull)
-      .select(
-        least(col("name"), col("next_name")).as("name_a"),
-        greatest(col("name"), col("next_name")).as("name_b"),
-        lit(0.0).as("dist"))
   }
 }

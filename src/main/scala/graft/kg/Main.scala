@@ -159,9 +159,9 @@ object Main {
     val links = stages.stage("links", stages.outputRowsOf("triples")) {
       val vocab = Linker.nameVocab(triples.as[graft.spark.Triple])
       // names with one normal form share their 3-gram set, so the
-      // MinHash join already returns every exact-normal-form pair
-      // (dist 0.0), and its output is distinct
-      Linker.candidatePairs(vocab, maxDistance = 0.3)
+      // MinHash join returns every exact-normal-form pair (dist 0.0)
+      // along with the fuzzy ones; its output is distinct
+      Linker.candidatePairs(vocab)
     }
 
     val nodes = stages.stage("nodes", stages.outputRowsOf("links")) {

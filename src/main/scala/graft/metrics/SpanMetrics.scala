@@ -1,6 +1,6 @@
 package graft.metrics
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Span-level P/R/F1 with the reference's phrase semantics
@@ -86,9 +86,7 @@ object SpanMetrics {
     def outputEncoder: Encoder[Result] = Encoders.product[Result]
   }
 
-  def evaluate(spark: SparkSession,
-      pairs: Dataset[(Seq[String], Seq[String])]): Result = {
-    import spark.implicits._
+  def evaluate(pairs: Dataset[(Seq[String], Seq[String])]): Result = {
     pairs.select(agg.toColumn).head()
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{Fnv1a64, GraftFunctions}
@@ -263,10 +263,9 @@ object Dedup {
     * see the class doc for what hot-bucket recall does and does not
     * guarantee), so a hot key is bounded AND still connected.
     */
-  def minhashLshPairs(spark: SparkSession, docs: DataFrame,
+  def minhashLshPairs(docs: DataFrame,
       minJaccard: Double = 0.7, maxBucket: Int = 1000, hotChain: Int = 20,
       metrics: Option[Observation] = None): DataFrame = {
-    import spark.implicits._
     val bands = 16
     val rows = 4
     val base = docs.select(col("doc_id").cast("long").as("id"), col("text"))
@@ -451,10 +450,9 @@ object Dedup {
     * adjacent), so one degenerate 16-bit key (e.g. a corpus of empty or
     * template-identical texts) costs O(n*hotChain), not O(n^2).
     */
-  def simhashPairs(spark: SparkSession, docs: DataFrame,
+  def simhashPairs(docs: DataFrame,
       maxHamming: Int = 3, maxBucket: Int = 1000, hotChain: Int = 20,
       metrics: Option[Observation] = None): DataFrame = {
-    import spark.implicits._
     // native codegen simhash: the hash stays inside the whole-stage
     // generated loop over the scan — no row deserialization, no
     // String.split, no per-row array allocations (the Dataset-map

@@ -4,7 +4,6 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.util.LongAccumulator
-import graft.dom.Bs4Config
 import graft.extract.{Extractor, Gazetteers, Py}
 
 /** pages → sentences/tokens extraction stage.
@@ -15,33 +14,33 @@ import graft.extract.{Extractor, Gazetteers, Py}
   * maps — the relational equivalent is a broadcast join (SURVEY.md §2.3
   * J1-J3).
   *
-  * Scale guards: pages larger than `maxHtmlBytes` are skipped (counted in
-  * the skipped accumulator + lineage); the DOM is bounded per page and
+  * Scale guards: pages larger than [[MaxHtmlBytes]] are skipped (counted
+  * in the skipped accumulator + lineage); the DOM is bounded per page and
   * freed between pages.
   */
 object ExtractStage {
 
-  final case class Config(
-      bs4: Bs4Config = Bs4Config(),
-      maxHtmlBytes: Int = 8 * 1024 * 1024,
-      annotateGazetteer: Boolean = false)
+  /** Largest page, in bytes, the kernel parses. */
+  val MaxHtmlBytes: Int = 8 * 1024 * 1024
 
+  /** `annotateGazetteer` runs the gazetteer flags on pages that carry no
+    * target names (labels gate them otherwise, as in the reference).
+    */
   def sentences(
       spark: SparkSession,
       pages: Dataset[Page],
       targetNames: Option[Broadcast[Map[String, Seq[String]]]] = None,
       gaz: Option[Broadcast[Gazetteers]] = None,
       targetNamesFn: Option[String => Seq[String]] = None,
-      config: Config = Config(),
+      annotateGazetteer: Boolean = false,
       skipped: Option[LongAccumulator] = None,
       inputPages: Option[LongAccumulator] = None): Dataset[SentenceRow] = {
     import spark.implicits._
-    val cfg = config
     pages.mapPartitions { it =>
       val emptyGaz = Gazetteers()
       it.flatMap { p =>
         inputPages.foreach(_.add(1))
-        if (p.html == null || p.html.length > cfg.maxHtmlBytes) {
+        if (p.html == null || p.html.length > MaxHtmlBytes) {
           skipped.foreach(_.add(1))
           Iterator.empty
         } else {
@@ -51,8 +50,7 @@ object ExtractStage {
             .orElse(targetNamesFn.map(_(p.url))).getOrElse(Nil)
           val g = gaz.map(_.value).getOrElse(emptyGaz)
           try {
-            val sents = Extractor.tokenize(html, names, g, cfg.bs4,
-              annotateGazetteer = cfg.annotateGazetteer)
+            val sents = Extractor.tokenize(html, names, g, annotateGazetteer)
             sents.iterator.zipWithIndex.map { case (s, si) =>
               SentenceRow(
                 url = p.url, warc_ts = p.warc_ts, lang = p.lang, sent_id = si,

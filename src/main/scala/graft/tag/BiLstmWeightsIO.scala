@@ -1,7 +1,6 @@
 package graft.tag
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Parquet save/load for [[BiLstmCrfScorer]] weights — the import half
   * of the "score with reference-trained weights" contract. One generic

@@ -347,7 +347,6 @@ object Hmm {
         if (k >= NumFeatures) Array.fill(NumLabels)(Map("$UNK" -> 1.0)) else t
     })
     val b = spark.sparkContext.broadcast(reset)
-    import spark.implicits._
     val secondary = Array.fill(NumAll)(false)
     secondary(NumFeatures) = true
     secondary(NumFeatures + 1) = true

@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.RefCorpus
-import graft.dom.Bs4Config
 import graft.io.ConllCodec
 import graft.kg.Triples
 import graft.metrics.SpanMetrics
@@ -15,10 +14,6 @@ import graft.tag.Hmm
   */
 class PipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-
-  val GoldenCfg = ExtractStage.Config(
-    bs4 = Bs4Config(popUnmatchedToRoot = true, classWhitespaceSplit = true,
-      convertCharrefs = false))
 
   /** Gold triples derived from the reference's own emitted data: every
     * labeled span in data/test -> (url, mentionsPerson, name).
@@ -48,8 +43,7 @@ class PipelineSpec extends AnyFunSuite {
 
     val pages = RefCorpus.pages(spark, testIds)
     val names = spark.sparkContext.broadcast(RefCorpus.targetNameMap(testIds))
-    val sents = ExtractStage.sentences(spark, pages, Some(names),
-      config = GoldenCfg)
+    val sents = ExtractStage.sentences(spark, pages, Some(names))
     val mentions = Triples.goldMentions(spark, sents)
     val triples = Triples.fromMentions(spark, mentions)
     val got = triples.map(t => (t.subj, t.pred, t.obj)).collect().toSet
@@ -76,7 +70,7 @@ class PipelineSpec extends AnyFunSuite {
       val pairs = Hmm.predict(spark, m1, test).map { case (s, pred) =>
         (pred.map(Hmm.Labels(_)): Seq[String], s.bio)
       }
-      val res = SpanMetrics.evaluate(spark, pairs)
+      val res = SpanMetrics.evaluate(pairs)
       info(f"HMM-1+feat+ST (fit on valid): P=${res.precision}%.4f " +
         f"R=${res.recall}%.4f F1=${res.f1}%.4f acc=${res.accuracy}%.4f")
       // published reference: 0.866 trained on data/train (missing blob);
@@ -86,7 +80,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("span metrics agree with conlleval-style counts on a fixture") {
-    import spark.implicits._
     // Main.ipynb cell-6 style sanity: hand fixture with known counts
     val pred = Seq("O", "I-PER", "I-PER", "O", "I-PER")
     val gold = Seq("O", "I-PER", "I-PER", "O", "O")

@@ -165,7 +165,7 @@ class PlanShapeSpec extends AnyFunSuite {
       .select(graft.ops.Urls.canonicalizeNative(col("url"))).head().getString(0)
     assert(url == "http://a.com/")
     docs.select(graft.ops.TextAnalysis.fingerprint(col("text"))).collect()
-    assert(graft.ops.Dedup.minhashLshPairs(s, docs).count() == 1)
+    assert(graft.ops.Dedup.minhashLshPairs(docs).count() == 1)
     graft.ops.Similarity.lshTopK(vecs, vecs, k = 1).collect()
     graft.ops.TextAnalysis.bloomContamination(docs, docs.limit(1)).collect()
     val mine = s.sql("SELECT canonical_url('http://b.com'), fnv1a64('x')").head()

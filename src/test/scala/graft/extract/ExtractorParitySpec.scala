@@ -2,7 +2,6 @@ package graft.extract
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.RefCorpus.{RefData, requirePresent}
-import graft.dom.Bs4Config
 
 /** Byte-parity of the extraction kernel against the reference goldens
   * (`/root/reference/data/{valid,test}`, 60 docs) and the notebook
@@ -13,11 +12,6 @@ import graft.dom.Bs4Config
   */
 class ExtractorParitySpec extends AnyFunSuite {
   import GoldenData._
-
-  /** bs4/html.parser behavior profile pinned by the goldens. */
-  val GoldenConfig: Bs4Config = Bs4Config(
-    popUnmatchedToRoot = true, classWhitespaceSplit = true,
-    convertCharrefs = false)
 
   def compareDoc(golden: Vector[String], mine: Vector[String]): Int = {
     val n = math.max(golden.length, mine.length)
@@ -37,7 +31,7 @@ class ExtractorParitySpec extends AnyFunSuite {
 
   test("59 of 60 golden docs are byte-identical; only doc 36 differs") {
     requirePresent()
-    val results = docs.map(d => d.id -> compareDoc(d.lines, extractLines(d.id, GoldenConfig)))
+    val results = docs.map(d => d.id -> compareDoc(d.lines, extractLines(d.id)))
     val failing = results.filter(_._2 > 0)
     assert(failing.map(_._1) == Vector(36),
       s"unexpected failing docs: ${failing.mkString(", ")}")
@@ -52,7 +46,7 @@ class ExtractorParitySpec extends AnyFunSuite {
     val golden = docs.find(_.id == 36).get.lines
     assert(golden.exists(_.startsWith("Kepler I-PER")))
     assert(!golden.exists(_.contains("Kepler*")))
-    val bad = compareDoc(golden, extractLines(36, GoldenConfig))
+    val bad = compareDoc(golden, extractLines(36))
     assert(bad <= 44, s"doc 36 drifted further than expected: $bad lines")
   }
 
@@ -62,7 +56,7 @@ class ExtractorParitySpec extends AnyFunSuite {
     // of target_names_001.txt becomes a target name
     val golden = GoldenData.cell2Golden()
     val names = readTargetNames(1).takeRight(1)
-    val sentences = Extractor.tokenize(readHtml(1), names, config = GoldenConfig)
+    val sentences = Extractor.tokenize(readHtml(1), names)
     val mine = toLines(sentences)
     assert(compareDoc(golden, mine) == 0)
   }
@@ -70,7 +64,7 @@ class ExtractorParitySpec extends AnyFunSuite {
 
 /** Unit tests for the Python-parity primitives (SURVEY.md §5 quirk list). */
 class PyParitySpec extends AnyFunSuite {
-  import graft.dom.Entities
+  import graft.dom.{Bs4TreeBuilder, Entities, LVal, Tag, TextNode}
 
   test("remove_accents maps the reference 80-char table") {
     assert(Extractor.removeAccents("Ærøskøbing") == "eroskobing")
@@ -142,7 +136,7 @@ class PyParitySpec extends AnyFunSuite {
     assert(!Py.anyDigit("abc"))
   }
 
-  test("html.unescape semantics (convert_charrefs mode)") {
+  test("html.unescape semantics (attribute values)") {
     assert(Entities.unescape("a &amp; b") == "a & b")
     assert(Entities.unescape("&copy 2020") == "\u00a9 2020") // legacy no-semicolon
     assert(Entities.unescape("&#151;") == "\u2014") // cp1252 remap
@@ -152,14 +146,27 @@ class PyParitySpec extends AnyFunSuite {
   }
 
   test("old-bs4 entity mode: HTML4 table, passthrough on miss") {
-    val cfg = Bs4Config(convertCharrefs = false)
     def text(html: String): String = {
-      val sents = Extractor.tokenize(html, config = cfg)
+      val sents = Extractor.tokenize(html)
       sents.flatten.map(_.tkn).mkString(" ")
     }
     assert(text("<p>A &amp; B</p>") == "A & B")
     assert(text("<p>FACULTY &AMP; STAFF</p>") == "FACULTY &AMP STAFF")
     assert(text("<p>x &#151; y</p>") == "x \u2014 y")
     assert(text("<p>caf&eacute;</p>") == "caf\u00e9")
+  }
+
+  test("old-bs4 _popToTag: an unmatched end tag pops to the root") {
+    val soup = Bs4TreeBuilder.parse("<div><p>a</span>b</p></div>")
+    val b = soup.descendants.collect {
+      case t: TextNode if t.value == "b" => t
+    }.toSeq
+    assert(b.map(_.parent.name) == Seq("[document]"))
+  }
+
+  test("old-bs4 class split: \\s+ keeps leading and trailing empties") {
+    val soup = Bs4TreeBuilder.parse("<p class=\" a  b \">x</p>")
+    val p = soup.descendants.collect { case t: Tag => t }.toSeq
+    assert(p.map(_.attrs("class")) == Seq(LVal(Vector("", "a", "b", ""))))
   }
 }

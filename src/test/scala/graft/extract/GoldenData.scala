@@ -2,11 +2,9 @@ package graft.extract
 
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
-import scala.jdk.CollectionConverters._
 import graft.corpus.RefCorpus.RefData
-import graft.dom.Bs4Config
 
-/** Golden-file access for the reference corpus (dev/test harness only). */
+/** Golden-file access for the reference corpus. */
 object GoldenData {
   final case class GoldenDoc(id: Int, url: String, lines: Vector[String])
 
@@ -47,10 +45,10 @@ object GoldenData {
   /** Run our extractor on one reference doc, CoNLL lines (with "" between
     * sentences).
     */
-  def extractLines(id: Int, config: Bs4Config): Vector[String] = {
+  def extractLines(id: Int): Vector[String] = {
     val html = readHtml(id)
     val names = readTargetNames(id)
-    toLines(Extractor.tokenize(html, names, config = config))
+    toLines(Extractor.tokenize(html, names))
   }
 
   /** Serialize extractor output to CoNLL lines with "" separators. */
@@ -101,60 +99,5 @@ object GoldenData {
       while (i <= 6) { m(i) = g(i); i += 1 }
       m.mkString(" ")
     } else mine
-  }
-}
-
-/** Dev main: run extractor parity against all golden docs, per config. */
-object ParityCheck {
-  import GoldenData._
-
-  def main(args: Array[String]): Unit = {
-    val docs = parseSplit(s"$RefData/valid") ++ parseSplit(s"$RefData/test")
-    println(s"golden docs: ${docs.length}")
-    val configs = Seq(
-      "new-pop/new-class" -> Bs4Config(false, false),
-      "new-pop/old-class" -> Bs4Config(false, true),
-      "old-pop/new-class" -> Bs4Config(true, false),
-      "old-pop/old-class" -> Bs4Config(true, true))
-    val detail = args.contains("-v")
-    val only: Option[Int] = args.find(_.forall(_.isDigit)).map(_.toInt)
-
-    configs.foreach { case (label, cfg) =>
-      var okDocs = 0
-      var totalBad = 0L
-      var firstBad: List[String] = Nil
-      docs.foreach { d =>
-        if (only.forall(_ == d.id)) {
-          val mine =
-            try extractLines(d.id, cfg)
-            catch { case e: Throwable =>
-              Vector(s"<EXTRACT CRASH: ${e.getClass.getSimpleName}: ${e.getMessage}>")
-            }
-          var bad = 0
-          val n = math.max(mine.length, d.lines.length)
-          var i = 0
-          var reported = 0
-          while (i < n) {
-            val g = if (i < d.lines.length) d.lines(i) else "<EOF>"
-            val m0 = if (i < mine.length) mine(i) else "<EOF>"
-            val m = if (g != "<EOF>" && m0 != "<EOF>") normalizeGaz(m0, g) else m0
-            if (m != g) {
-              bad += 1
-              if (detail && reported < 4 && firstBad.length < 1500) {
-                firstBad ::= s"doc ${d.id} line $i:\n  mine : $m\n  gold : $g"
-                reported += 1
-              }
-            }
-            i += 1
-          }
-          if (bad == 0) okDocs += 1
-          else totalBad += bad
-          if (bad > 0 && detail)
-            firstBad ::= s"doc ${d.id}: $bad/${n} lines differ"
-        }
-      }
-      println(f"$label%-20s docs OK: $okDocs%3d / ${docs.count(d => only.forall(_ == d.id))}  bad lines: $totalBad")
-      if (detail) firstBad.reverse.take(2000).foreach(println)
-    }
   }
 }

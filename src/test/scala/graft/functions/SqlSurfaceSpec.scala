@@ -23,7 +23,6 @@ class SqlSurfaceSpec extends AnyFunSuite {
   test("extract_tokens generator matches the kernel over SQL") {
     graft.corpus.RefCorpus.requirePresent()
     val spark = registeredSession()
-    import spark.implicits._
     graft.corpus.RefCorpus.pages(spark, Seq(7, 10)).createOrReplaceTempView("pages_v")
 
     val viaSql = spark.sql(
@@ -34,9 +33,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
 
     val kernel = graft.spark.ExtractStage.tokens(spark,
       graft.spark.ExtractStage.sentences(spark,
-        graft.corpus.RefCorpus.pages(spark, Seq(7, 10)),
-        config = graft.spark.ExtractStage.Config(
-          bs4 = graft.dom.Bs4Config()))).collect()
+        graft.corpus.RefCorpus.pages(spark, Seq(7, 10)))).collect()
 
     assert(viaSql.length == kernel.length)
     val sqlSet = viaSql.map(r => (r.getString(0), r.getInt(1), r.getInt(2),

@@ -149,14 +149,14 @@ class LinkSpec extends AnyFunSuite {
     assert(rows.head.getAs[Long]("support") == 100500L)
   }
 
-  test("exact-norm chain links connect all variants of one normal form") {
-    // accent/case variants of one name + an unrelated name: the lead()
-    // chain pairing must connect the whole variant group (CC needs
-    // connectivity, not the star shape) without any collect_list row
+  test("candidate pairs connect all variants of one normal form") {
+    // accent/case variants of one name + an unrelated name: the variants
+    // share one 3-gram set, so they pair at dist 0.0 and connect into one
+    // component; the unrelated name gets no link, not even to itself
     val names = namesDf(
       ("jose garcia", 5L), ("José García", 3L), ("JOSE GARCIA", 1L),
       ("Ada L", 1L))
-    val links = Linker.exactNormLinks(names)
+    val links = Linker.candidatePairs(names)
     val membership = Canonicalize.components(links)
     val comps = membership.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -247,7 +247,6 @@ class LinkSpec extends AnyFunSuite {
   test("pipeline stages resume from checkpoint with identical output") {
     import java.nio.file.Files
     val dir = Files.createTempDirectory("graft_kg_test").toString
-    val ids = Seq(7, 10, 19) // three small test docs
     val spark2 = spark
     import spark2.implicits._
 

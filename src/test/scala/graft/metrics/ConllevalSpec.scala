@@ -18,7 +18,6 @@ class ConllevalSpec extends AnyFunSuite {
   test("SpanMetrics agrees with the official conlleval scorer") {
     assume(Files.exists(conlleval), "conlleval not present")
     assume(new java.io.File("/usr/bin/perl").exists, "perl not present")
-    import spark.implicits._
 
     val train = ConllCodec.read(spark, s"${RefCorpus.RefData}/valid").cache()
     val test = ConllCodec.read(spark, s"${RefCorpus.RefData}/test").cache()

@@ -30,7 +30,6 @@ class CorpusStatsSpec extends AnyFunSuite {
   }
 
   test("tokenCard: one summary row, quantiles agree with Spark's own percentile") {
-    import spark.implicits._
     val docs = spark.range(500).select(
       (pmod(col("id") * 37 + 11, lit(90)) + 1).cast("long").as("n_tokens"))
     val row = CorpusStats.tokenCard(spark, docs).collect()(0)

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 

@@ -22,7 +22,7 @@ class OpsSpec extends AnyFunSuite {
     val d = documents.select("doc_id", "text")
     val planted = d.select((col("doc_id") + 1000000).as("doc_id"),
       concat(col("text"), lit(" tail")).as("text"))
-    val pairs = Dedup.minhashLshPairs(spark, d.unionByName(planted),
+    val pairs = Dedup.minhashLshPairs(d.unionByName(planted),
         minJaccard = 0.7)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val nDocs = d.count()
@@ -35,7 +35,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("minhash-lsh never reports pairs below the jaccard threshold") {
     val d = documents.select("doc_id", "text")
-    val verified = Dedup.minhashLshPairs(spark, d, minJaccard = 0.7)
+    val verified = Dedup.minhashLshPairs(d, minJaccard = 0.7)
     assert(verified.filter(col("jaccard") < 0.7).count() == 0)
   }
 
@@ -44,14 +44,13 @@ class OpsSpec extends AnyFunSuite {
     val d = documents.select("doc_id", "text").limit(100)
     val planted = d.select((col("doc_id") + 1000000).as("doc_id"),
       col("text")) // exact copies
-    val pairs = Dedup.simhashPairs(spark, d.unionByName(planted), maxHamming = 0)
+    val pairs = Dedup.simhashPairs(d.unionByName(planted), maxHamming = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val found = (0L until 100L).count(i => pairs.contains((i, i + 1000000)))
     assert(found == 100, s"exact copies must collide: $found/100")
   }
 
   test("probe-broadcast guard: over-cap probes shuffle (lsh/ivf) or fail fast (brute)") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val e = embeddings.select("vec_id", "embedding")
     // bucketed paths: identical results either side of the cap, and the
     // over-cap plan carries NO broadcast exchange on the probe side
@@ -277,7 +276,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("embedding-cosine near-dup finds planted duplicate vectors") {
-    import spark.implicits._
     val e = embeddings.select("vec_id", "embedding")
     // plant exact copies with shifted ids: cosine 1.0, same SRP bucket
     val planted = e.select((col("vec_id") + 1000000).as("vec_id"),
@@ -339,12 +337,11 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("minhash-lsh hot bucket: bounded chain pairs, connected, counted") {
-    import spark.implicits._
     val n = 3000
     val hot = spark.range(n).select(col("id").as("doc_id"),
       lit("the same boilerplate navigation footer text on every page").as("text"))
     val obs = new org.apache.spark.sql.Observation("lsh_hot")
-    val pairs = Dedup.minhashLshPairs(spark, hot, minJaccard = 0.7,
+    val pairs = Dedup.minhashLshPairs(hot, minJaccard = 0.7,
         maxBucket = 100, hotChain = 4, metrics = Some(obs))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // bounded: chain pairing caps at ~n*hotChain (not n^2/2 = 4.5M)
@@ -359,7 +356,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("degenerate key at 1e5 identical docs: bounded, complete exact recall") {
-    import spark.implicits._
     // 100k byte-identical documents: every band of every doc lands in
     // ONE bucket. The old formulation collected the whole bucket into a
     // single aggregation row; the bounded path must stream it (lead()
@@ -369,7 +365,7 @@ class OpsSpec extends AnyFunSuite {
     val hot = spark.range(n).select(col("id").as("doc_id"),
       lit("boilerplate nav footer copyright terms privacy contact").as("text"))
     val obs = new org.apache.spark.sql.Observation("lsh_degenerate")
-    val pairs = Dedup.minhashLshPairs(spark, hot, minJaccard = 0.7,
+    val pairs = Dedup.minhashLshPairs(hot, minJaccard = 0.7,
         maxBucket = 1000, hotChain = 4, metrics = Some(obs))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.size <= n.toLong * 5,
@@ -382,12 +378,11 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("simhash hot bucket: degenerate key is bounded, not quadratic") {
-    import spark.implicits._
     val n = 2500
     val hot = spark.range(n).select(col("id").as("doc_id"),
       lit("identical template page").as("text"))
     val obs = new org.apache.spark.sql.Observation("simhash_hot")
-    val pairs = Dedup.simhashPairs(spark, hot, maxHamming = 3,
+    val pairs = Dedup.simhashPairs(hot, maxHamming = 3,
         maxBucket = 100, hotChain = 4, metrics = Some(obs))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.size <= n * 5, s"degenerate simhash key exploded: ${pairs.size}")
@@ -396,7 +391,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("embedding-cosine hot bucket: exact copies still pair via chain") {
-    import spark.implicits._
     // 600 copies each of two distinct vectors: both groups blow past
     // maxBucket=100, so the chain path runs; identical embeddings share
     // a content hash and sort adjacent, so copy-pairs must survive
@@ -730,7 +724,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("assignSplit: deterministic, order-independent, salt-sensitive") {
-    import spark.implicits._
     val docs = spark.range(0, 1000).toDF("doc_id")
     val a = TextAnalysis.assignSplit(docs)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap

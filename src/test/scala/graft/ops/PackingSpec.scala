@@ -24,7 +24,6 @@ class PackingSpec extends AnyFunSuite {
   }
 
   test("invariants: spans cover each doc; every full sequence holds exactly seqLen") {
-    import spark.implicits._
     val docs = spark.range(500).select(col("id").as("doc_id"),
       (pmod(col("id") * 37 + 11, lit(90)) + 1).as("n_tokens"))
     val B = 64L

@@ -216,10 +216,6 @@ class BiLstmSpec extends AnyFunSuite {
   }
 
   test("char-LSTM reps wire into the scorer (LSTMc variant) and round-trip") {
-    val rng = new scala.util.Random(23)
-    def cell(in: Int, u: Int) = BiLstm.CellWeights(
-      Array.fill(in + u, 4 * u)((rng.nextDouble() - 0.5).toFloat),
-      Array.fill(4 * u)((rng.nextDouble() - 0.5).toFloat))
     // char LSTM that saturates on 'a'-words (emb +4) vs 'z'-words (-4)
     val satCell = BiLstm.CellWeights(
       kernel = Array(Array(2f, 2f, 2f, 2f), Array(0f, 0f, 0f, 0f)),

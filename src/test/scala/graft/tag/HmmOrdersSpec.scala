@@ -27,7 +27,7 @@ class HmmOrdersSpec extends AnyFunSuite {
         val pairs = Hmm.predict(spark, model, test).map { case (s, pred) =>
           (pred.map(Hmm.Labels(_)): Seq[String], s.bio)
         }
-        SpanMetrics.evaluate(spark, pairs)
+        SpanMetrics.evaluate(pairs)
       }
 
       val results = for (t <- Seq(1, 2); st <- Seq(false, true)) yield {
