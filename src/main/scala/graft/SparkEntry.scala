@@ -47,34 +47,6 @@ object SparkEntry {
   private def dsum(c: org.apache.spark.sql.Column) =
     sum(c.cast("decimal(18,2)")).cast("double")
 
-  /** Unit-normalize the embedding column, so a plain dot IS the cosine
-    * — one dot product per candidate pair instead of three (a pairwise
-    * cosine recomputes both norms per PAIR; normalizing each side once
-    * is the scale-correct place to pay the norm). The norm must NOT be
-    * referenced from inside a higher-order lambda, not even via its
-    * own aliased column: Catalyst's CollapseProject inlines a
-    * single-use alias back into the lambda, where it re-evaluates once
-    * PER ELEMENT (the repo's recurring HOF trap). zip_with against
-    * array_repeat keeps the norm in an ordinary argument position —
-    * evaluated once per ROW — and only lambda variables inside.
-    */
-  private def annUnit(df: DataFrame): DataFrame = {
-    // zero-norm guard: an all-zero row divides by 1 (passes through
-    // unscaled) instead of producing NaN components (0/0), so a
-    // degenerate row can never poison OTHER rows' rankings with NaN
-    // score propagation. (It does NOT make a zero-vector PROBE satisfy
-    // the planted-twin rank-1 oracle — a zero probe ties every
-    // neighbor at 0.0 and the tie-break picks the smallest vec_id; the
-    // driver-generated embeddings tables contain no zero vectors,
-    // verified at all SFs.)
-    val nrm = graft.ops.Similarity.normCol(col("embedding"))
-    val safe = when(nrm > 0, nrm).otherwise(lit(1.0))
-    df.select(col("vec_id"),
-      zip_with(col("embedding"),
-        array_repeat(safe, size(col("embedding"))),
-        (x, n) => (x / n).cast("float")).as("embedding"))
-  }
-
   /** Flagship: the full KG extraction path on the reference corpus —
     * pages -> parity DOM extract -> labeled mentions -> triples. (The
     * `kg_triples` query below runs the same path over planted SynthPages
@@ -665,11 +637,12 @@ object SparkEntry {
     // ~1.0 while every other (distinct, non-parallel) vector scores
     // strictly below — so rank 1 per probe is the twin, closed-form in
     // SQL, while the query exercises the REAL approximate path
-    // (bucketing / quantizer cells / ranking window) end-to-end. The
+    // (bucketing / quantizer cells / top-1 cut) end-to-end. The
     // k=5 dot-ranked variants above stay as the honest approximate
     // surface (recall vs brute force asserted in OpsSpec).
     "ann_lsh_plant_top1" -> ((s, dir) => {
-      val e = annUnit(t(s, dir, "embeddings").select("vec_id", "embedding"))
+      val e = t(s, dir, "embeddings").select(col("vec_id"),
+        graft.ops.Similarity.unitCol(col("embedding")).as("embedding"))
       val planted = e.select((col("vec_id") + lit(1099511627776L)).as("vec_id"),
         col("embedding"))
       graft.ops.Similarity.lshTopK(e.unionByName(planted), planted,
@@ -678,7 +651,8 @@ object SparkEntry {
         .orderBy("query_id")
     }),
     "ann_ivf_plant_top1" -> ((s, dir) => {
-      val e = annUnit(t(s, dir, "embeddings").select("vec_id", "embedding"))
+      val e = t(s, dir, "embeddings").select(col("vec_id"),
+        graft.ops.Similarity.unitCol(col("embedding")).as("embedding"))
       val planted = e.select((col("vec_id") + lit(1099511627776L)).as("vec_id"),
         col("embedding"))
       // One Lloyd round: the rank-1 answer is the planted twin for ANY
@@ -697,7 +671,8 @@ object SparkEntry {
     // copy — so the WHOLE output (both directions of every twin pair)
     // is closed-form.
     "ann_self_top1" -> ((s, dir) => {
-      val e = annUnit(t(s, dir, "embeddings").select("vec_id", "embedding"))
+      val e = t(s, dir, "embeddings").select(col("vec_id"),
+        graft.ops.Similarity.unitCol(col("embedding")).as("embedding"))
       val planted = e.select((col("vec_id") + lit(1099511627776L)).as("vec_id"),
         col("embedding"))
       // One Lloyd round: same twin-share argument as

@@ -253,6 +253,16 @@ object GraphOps {
       edges.select(col("subj").as("src"), col("obj_entity").as("dst")).distinct(),
       iters = 3, danglingRedistribute = true)
 
+  /** The undirected simple graph of `edges` (direction and weight
+    * dropped, self-loops removed) as distinct canonical (u < v) pairs.
+    */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("a"), col("dst").as("b"))
+      .filter(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("u"),
+        greatest(col("a"), col("b")).as("v"))
+      .distinct()
+
   /** Triangle count per node over the UNDIRECTED simple graph induced
     * by the edge list (direction and weight dropped, self-loops
     * removed). Classic compact-forward: orient every undirected edge
@@ -265,12 +275,7 @@ object GraphOps {
     * node contributes ZERO wedges instead of 10^12.
     */
   def triangles(edges: DataFrame): DataFrame = {
-    // undirected simple edges as canonical (lo, hi) pairs
-    val und = edges.select(col("src").as("a"), col("dst").as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("u"),
-        greatest(col("a"), col("b")).as("v"))
-      .distinct()
+    val und = undirected(edges)
     val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("deg"))
     // orient u->v iff (deg, name) of u < (deg, name) of v
@@ -380,11 +385,7 @@ object GraphOps {
     * unrolled SQL.
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
-    val und = edges.select(col("src").as("a"), col("dst").as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("u"),
-        greatest(col("a"), col("b")).as("v"))
-      .distinct()
+    val und = undirected(edges)
     // every round reads the same neighbour table; the rounds compose
     // into ONE plan, whose identical `und` exchanges Spark reuses, and
     // the result is its one materialization

@@ -1,21 +1,33 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.GraftFunctions
 import graft.spark.Scans
 
-/** Approximate-nearest-neighbor search over an embedding column
-  * (`Array[Float]`).
+/** Nearest-neighbour search over an embedding column (`Array[Float]`).
   *
-  *  - Brute force: block-nested-loop join with the PROBE side broadcast
-  *    (queries are small; the corpus side streams — no corpus shuffle),
-  *    dot/cosine computed by the native `dot_f32` expression, top-k by
-  *    ranking window.
-  *  - Scale path: signed-random-projection LSH — `nBits` deterministic
-  *    hyperplanes bucket the corpus; probes only join their own bucket
-  *    (+ optional multi-probe neighbors), bounding the pair count.
+  * Every search keys its corpus and its probes, then ends in ONE
+  * scoring path (`scoreTopK`): a join on the key with the
+  * self-pair excluded, the native `dot_f32` score per candidate pair,
+  * and a cut to each probe's k best neighbours by `score desc,
+  * neighbor_id asc`. The searches differ only in their key:
+  *  - Brute force ([[bruteForceTopK]]): no key. The probe side is
+  *    broadcast and the corpus streams past it.
+  *  - SRP-LSH ([[lshTopK]], [[lshTopKTables]]): `nBits` deterministic
+  *    hyperplanes bucket the corpus; probes join their own bucket, plus
+  *    optional lowest-margin multi-probe buckets or further hash
+  *    tables, bounding the pair count.
+  *  - IVF ([[ivfTopK]], [[ivfSelfTopK]]): a deterministic Lloyd coarse
+  *    quantizer splits the corpus into cells; probes join their
+  *    `nprobe` nearest cells. The self join probes the whole corpus
+  *    through a shuffle join instead of a broadcast.
+  * [[semanticDedup]] pairs unit vectors within one IVF cell.
+  *
+  * Null-embedding rows drop out on every path, on both sides: they are
+  * no query and no neighbour. One malformed row must not kill a
+  * 10^12-row job; validate embeddings upstream if absence must be loud.
   */
 object Similarity {
 
@@ -31,6 +43,29 @@ object Similarity {
 
   def normCol(a: Column): Column = sqrt(dotCol(a, a))
 
+  /** `e` scaled to unit length, so a plain dot IS the cosine — one dot
+    * product per candidate pair instead of three (normalizing each row
+    * once is the scale-correct place to pay the norm).
+    *
+    * The norm must NOT be referenced from inside a higher-order lambda,
+    * not even via its own aliased column: Catalyst's CollapseProject
+    * inlines a single-use alias back into the lambda, where it
+    * re-evaluates once PER ELEMENT. zip_with against array_repeat keeps
+    * the norm in an ordinary argument position — evaluated once per
+    * ROW — with only lambda variables inside.
+    *
+    * Zero-norm guard: an all-zero row divides by 1 (passes through
+    * unscaled) instead of producing NaN components (0/0), so a
+    * degenerate row can never poison OTHER rows' rankings with NaN
+    * scores. (A zero probe still ties every neighbour at 0.0, and the
+    * tie-break picks the smallest id.)
+    */
+  def unitCol(e: Column): Column = {
+    val nrm = normCol(e)
+    val safe = when(nrm > 0, nrm).otherwise(lit(1.0))
+    zip_with(e, array_repeat(safe, size(e)), (x, n) => (x / n).cast("float"))
+  }
+
   /** Probe-set rows above which the probe-side broadcast is withheld.
     * At the default, a 64-dim float probe set broadcasts ~50 MB — fine
     * on any executor; past the cap the bucketed paths (lsh/ivf) fall
@@ -43,14 +78,72 @@ object Similarity {
     */
   private[ops] val MaxBroadcastProbes = 200000L
 
-  /** Brute-force top-k by dot product: corpus x broadcast(probes).
+  /** The rows of `df` that have an embedding. */
+  private def withEmbedding(df: DataFrame): DataFrame =
+    df.filter(col("embedding").isNotNull)
+
+  /** [[withEmbedding]] rows keyed by `key` = `keyExpr`, a native
+    * cell/bucket expression that is null only for a null embedding.
+    *
+    * A join on `key` makes Catalyst infer IsNotNull(key) and push it
+    * below the projection — duplicating the key evaluation into a
+    * Filter, i.e. TWO assignment passes over every corpus vector.
+    * Filtering null embeddings explicitly and wrapping the key in
+    * coalesce(key, -1) makes the key non-nullable, so the inferred
+    * IsNotNull constant-folds away and the key runs ONCE per row. -1 is
+    * outside every key domain and unreachable behind the filter.
+    */
+  private def keyed(df: DataFrame, key: String, keyExpr: Column): DataFrame =
+    withEmbedding(df).withColumn(key, coalesce(keyExpr, lit(-1)))
+
+  /** The one candidate-scoring path of every search: joins the keyed
+    * corpus `cb` to the keyed probes `pb` on equality of each of `keys`
+    * with the self-pair excluded, scores each pair with `dot_f32`, and
+    * keeps each probe's k best neighbours by `score desc, neighbor_id
+    * asc` (`rk` = 1..k).
+    *
+    * `metrics` observes the candidate-pair count at zero extra shuffle:
+    * a degenerate bucket or cell surfaces as candidate_pairs blowing
+    * past ~probes x expected bucket, the signal to raise nBits/nlist.
+    * `dedup` must be set when one probe can reach a neighbour through
+    * several keys (multi-probe, multi-table); the pair then keeps one
+    * row before ranking.
     *
     * k == 1 avoids the ranking window entirely: `max(struct(score,
     * -neighbor, neighbor))` is a hash aggregate with a MAP-SIDE partial
-    * — the corpus-sized scored stream reduces to one row per probe
-    * before the exchange, instead of shuffling and sorting every scored
-    * pair (the window plan). Tie semantics identical to the window
-    * (`score desc, neighbor_id asc`).
+    * — the scored stream reduces to one row per probe before the
+    * exchange, instead of shuffling and sorting every scored pair. The
+    * tie order is the window's, and a max needs no dedup.
+    */
+  private def scoreTopK(cb: DataFrame, pb: DataFrame, keys: Seq[String],
+      k: Int, broadcastProbes: Boolean, dedup: Boolean,
+      metrics: Option[Observation]): DataFrame = {
+    val p = if (broadcastProbes) broadcast(pb.as("p")) else pb.as("p")
+    val on = (keys.map(key => col(s"c.$key") === col(s"p.$key")) :+
+      (col("c.vec_id") =!= col("p.vec_id"))).reduce(_ && _)
+    val joined = cb.as("c").join(p, on)
+      .select(
+        col("p.vec_id").as("query_id"),
+        col("c.vec_id").as("neighbor_id"),
+        dotCol(col("p.embedding"), col("c.embedding")).as("score"))
+    val observed = metrics.fold(joined)(obs => joined.observe(obs,
+      coalesce(count(lit(1)), lit(0L)).as("candidate_pairs")))
+    if (k == 1) {
+      observed.groupBy("query_id")
+        .agg(max(struct(col("score"), (-col("neighbor_id")).as("neg"),
+          col("neighbor_id").as("nid"))).as("b"))
+        .select(col("query_id"), col("b.nid").as("neighbor_id"),
+          col("b.score").as("score"), lit(1).as("rk"))
+    } else {
+      val uniq = if (dedup) observed.dropDuplicates("query_id", "neighbor_id")
+        else observed
+      val w = Window.partitionBy("query_id")
+        .orderBy(col("score").desc, col("neighbor_id").asc)
+      uniq.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    }
+  }
+
+  /** Brute-force top-k by dot product: corpus x broadcast(probes).
     *
     * The probe set MUST be bounded: the scoring join has no equi-key
     * to shuffle on, so there is no over-cap fallback — the guard fails
@@ -67,24 +160,9 @@ object Similarity {
         "ivfSelfTopK for corpus-sized probe sets")
     // corpus side spread before the keyless scoring join: the dot
     // stream runs at the corpus scan's parallelism (see Scans)
-    val joined = Scans.spread(corpus, col("vec_id")).as("c")
-      .join(broadcast(probes.as("p")),
-        col("c.vec_id") =!= col("p.vec_id"))
-      .select(
-        col("p.vec_id").as("query_id"),
-        col("c.vec_id").as("neighbor_id"),
-        dotCol(col("p.embedding"), col("c.embedding")).as("score"))
-    if (k == 1) {
-      joined.groupBy("query_id")
-        .agg(max(struct(col("score"), (-col("neighbor_id")).as("neg"),
-          col("neighbor_id").as("nid"))).as("b"))
-        .select(col("query_id"), col("b.nid").as("neighbor_id"),
-          col("b.score").as("score"), lit(1).as("rk"))
-    } else {
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("score").desc, col("neighbor_id").asc)
-      joined.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-    }
+    scoreTopK(withEmbedding(Scans.spread(corpus, col("vec_id"))),
+      withEmbedding(probes), Nil, k, broadcastProbes = true, dedup = false,
+      metrics = None)
   }
 
   /** Deterministic pseudo-random hyperplane component for (bit, dim).
@@ -368,7 +446,7 @@ object Similarity {
   def fitQuantizerLloyd(spark: SparkSession, corpus: DataFrame,
       nlist: Int, iters: Int)
       : org.apache.spark.broadcast.Broadcast[Array[Array[Double]]] = {
-    val c = corpus.filter(col("embedding").isNotNull)
+    val c = withEmbedding(corpus)
     // fixed deterministic init: the nlist smallest ids (a global top-k,
     // one narrow pass — TakeOrderedAndProject, no full sort)
     var cents: Array[Array[Double]] = c
@@ -410,35 +488,28 @@ object Similarity {
     * This is the 100 TB semantic-dedup / retrieval-pair-mining shape:
     * the per-cell cost is O(nprobe * |cell|^2) and `nlist` controls
     * the quadratic term exactly like any IVF search; AQE's skew-join
-    * split handles an oversized cell at runtime. A corpus vector lives
-    * in exactly ONE cell, so a (query, neighbor) pair meets at most
-    * once even with nprobe > 1 — no dedup pass needed before ranking.
+    * split handles an oversized cell at runtime, and `metrics`'
+    * candidate_pairs shows a degenerate cell as the signal to raise
+    * `nlist`. A corpus vector lives in exactly ONE cell, so a (query,
+    * neighbor) pair meets at most once even with nprobe > 1 — no dedup
+    * pass needed before ranking.
     */
   def ivfSelfTopK(spark: SparkSession, corpus: DataFrame, k: Int,
       nlist: Int = 16, nprobe: Int = 2,
-      metrics: Option[org.apache.spark.sql.Observation] = None,
+      metrics: Option[Observation] = None,
       lloydIters: Int = 2): DataFrame =
     ivfCellTopK(spark, corpus, None, k, nlist, nprobe, lloydIters, metrics)
 
   /** Shared IVF search core: probes broadcast when given (the bounded-
     * probe-set path), the corpus probing itself through a shuffle join
-    * when not. One definition of the cell UDFs, the self-exclusion
-    * predicate, the dot score, and the `score desc, neighbor_id asc`
-    * tie order — [[ivfTopK]] and [[ivfSelfTopK]] may not drift apart.
+    * when not. One definition of the cell keys — [[ivfTopK]] and
+    * [[ivfSelfTopK]] may not drift apart.
     */
   private def ivfCellTopK(spark: SparkSession, corpus: DataFrame,
       probes: Option[DataFrame], k: Int, nlist: Int, nprobe: Int,
       lloydIters: Int,
-      metrics: Option[org.apache.spark.sql.Observation] = None,
+      metrics: Option[Observation] = None,
       maxBroadcastProbes: Long = MaxBroadcastProbes): DataFrame = {
-    // NULL embedding rows drop out of results on EVERY path: the
-    // corpus side null-propagates through the native expressions into
-    // null cells/buckets, the probe-side UDFs return zero cells/buckets
-    // for null input (explode drops the row — matters doubly in the
-    // self-join, where the corpus IS the probe side), and the
-    // quantizer fit filters them. One malformed row must not kill a
-    // 10^12-row job; validate embeddings upstream if absence must be
-    // loud.
     val bc = fitQuantizerLloyd(spark, corpus, nlist, lloydIters)
     // corpus-side cell assignment through the native codegen ivf_cell
     // expression (centroids ride as a nested-array literal) — the one
@@ -447,62 +518,22 @@ object Similarity {
     // array return, and in the self-join case the corpus cells are
     // already the expression)
     val centroidsLit = typedlit(bc.value.map(_.toSeq).toSeq)
-    // null guard: a null embedding probes ZERO cells (empty array →
-    // explode drops the row), matching the corpus side's native
-    // null-propagation — in the self-join the corpus IS the probe
-    // side, so without this one malformed row would NPE the job
-    val cellsUdf = udf((v: Seq[Float]) =>
-      if (v == null) Array.empty[Int] else nearestCells(bc.value, v, nprobe))
-
-    // (r8) The join on `cell` makes Catalyst infer IsNotNull(cell) and
-    // push it below the projection — duplicating the ivf_cell
-    // evaluation into a Filter, i.e. TWO assignment passes over every
-    // corpus vector (visible in the r7 plan: ivf_cell in both Filter
-    // and Project). Filtering null embeddings explicitly and wrapping
-    // the key in coalesce(key, -1) makes the key non-nullable, so the
-    // inferred IsNotNull constant-folds away and the assignment runs
-    // ONCE per row. -1 is outside ivf_cell's 0..nlist-1 domain and the
-    // explicit filter means the fallback never actually fires —
-    // null-row semantics are unchanged (null embeddings drop out).
+    val cellsUdf = udf((v: Seq[Float]) => nearestCells(bc.value, v, nprobe))
     // corpus spread across the cluster when its scan under-splits: the
     // cell-join's scoring stream otherwise runs at scan parallelism
     // (no-op at scale — see Scans). The self-join probe side
     // shares the spread frame so neither stream starves.
     val corpusS = Scans.spread(corpus, col("vec_id"))
-    val cb = corpusS.filter(col("embedding").isNotNull).withColumn("cell",
-      coalesce(
-        GraftFunctions.column("ivf_cell", col("embedding"), centroidsLit),
-        lit(-1)))
-    val pbRaw = probes.getOrElse(corpusS)
-      .withColumn("cell", explode(cellsUdf(col("embedding")))).as("p")
+    val cb = keyed(corpusS, "cell",
+      GraftFunctions.column("ivf_cell", col("embedding"), centroidsLit))
+    val pb = withEmbedding(probes.getOrElse(corpusS))
+      .withColumn("cell", explode(cellsUdf(col("embedding"))))
     // probe-side broadcast only while the bounded-probe contract
     // actually holds; past the cap the cell-keyed join shuffles both
     // sides (AQE picks the strategy) instead of OOMing on the build
-    val pb =
-      if (probes.exists(p => boundedCount(p, maxBroadcastProbes)
-          <= maxBroadcastProbes)) broadcast(pbRaw)
-      else pbRaw
-    val joined = cb.as("c").join(pb,
-        col("c.cell") === col("p.cell") &&
-        col("c.vec_id") =!= col("p.vec_id"))
-      .select(
-        col("p.vec_id").as("query_id"),
-        col("c.vec_id").as("neighbor_id"),
-        dotCol(col("p.embedding"), col("c.embedding")).as("score"))
-    // skew telemetry at ZERO extra shuffle: an observe node on the
-    // candidate stream counts the pairs the cell join actually scanned.
-    // The self-join is quadratic per cell BY DESIGN (exact per-cell
-    // ranking), so a degenerate cell shows up here as candidate_pairs
-    // blowing past ~n*nprobe*avg_cell — the signal to raise nlist,
-    // exactly like Dedup's (buckets, hot_buckets, max_bucket)
-    val observed = metrics match {
-      case None => joined
-      case Some(obs) => joined.observe(obs,
-        coalesce(count(lit(1)), lit(0L)).as("candidate_pairs"))
-    }
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    observed.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    scoreTopK(cb, pb, Seq("cell"), k,
+      probes.exists(p => boundedCount(p, maxBroadcastProbes) <= maxBroadcastProbes),
+      dedup = false, metrics)
   }
 
   /** SemDeDup-shaped semantic deduplication (Abbas et al. 2023,
@@ -516,14 +547,14 @@ object Similarity {
     *
     * Scale shape (the published algorithm's own cost model): cell
     * assignment is one narrow pass through the native codegen
-    * `ivf_cell`; embeddings are unit-normalized ONCE per row (the
-    * pair predicate is then a single dot product); the pair join
-    * shuffles both sides on the cell id and is O(Σ|cell|²) — `nlist`
-    * controls the quadratic term exactly as in [[ivfSelfTopK]], AQE
-    * splits an oversized cell, and `metrics` observes the candidate
-    * count as the raise-nlist signal. Keeper election reuses the
-    * large-star/small-star CC core ([[graft.spark.Cc]]), whose output
-    * is proportional to the DUPLICATED subset only.
+    * `ivf_cell`; embeddings are unit-normalized ONCE per row
+    * ([[unitCol]]; the pair predicate is then a single dot product);
+    * the pair join shuffles both sides on the cell id and is
+    * O(Σ|cell|²) — `nlist` controls the quadratic term exactly as in
+    * [[ivfSelfTopK]], and AQE splits an oversized cell. Keeper
+    * election reuses the large-star/small-star CC core
+    * ([[graft.spark.Cc]]), whose output is proportional to the
+    * DUPLICATED subset only.
     *
     * Approximation contract (same honesty as the ANN surfaces): a
     * cross-CLUSTER near-duplicate pair is not examined — that is
@@ -532,53 +563,26 @@ object Similarity {
     * oracle is closed-form.
     */
   def semanticDedup(spark: SparkSession, corpus: DataFrame, tau: Double,
-      nlist: Int = 16,
-      metrics: Option[org.apache.spark.sql.Observation] = None,
-      lloydIters: Int = 2): DataFrame = {
-    // null-row semantics: see ivfCellTopK
+      nlist: Int = 16, lloydIters: Int = 2): DataFrame = {
     val bc = fitQuantizerLloyd(spark, corpus, nlist, lloydIters)
     val centroidsLit = typedlit(bc.value.map(_.toSeq).toSeq)
-    // unit-normalize via zip_with against array_repeat: the norm stays
-    // in an ordinary argument position — evaluated once per ROW — with
-    // only lambda variables inside the HOF (the repo's recurring
-    // CollapseProject re-eval trap, engineered out the same way as the
-    // ANN unit-normalization)
-    val nrm = normCol(col("embedding"))
-    val safe = when(nrm > 0, nrm).otherwise(lit(1.0))
-    val unit = corpus.filter(col("embedding").isNotNull)
+    val unit = keyed(corpus, "cell",
+        GraftFunctions.column("ivf_cell", col("embedding"), centroidsLit))
       .select(col("vec_id").cast("long").as("id"),
-        zip_with(col("embedding"),
-          array_repeat(safe, size(col("embedding"))),
-          (x, n) => (x / n).cast("float")).as("e"),
-        // coalesce(cell, -1): kills the inferred IsNotNull(cell) the
-        // cell self-join would otherwise push down as a SECOND
-        // ivf_cell evaluation per row (see ivfCellTopK); unreachable
-        // behind the isNotNull filter above
-        coalesce(
-          GraftFunctions.column("ivf_cell", col("embedding"), centroidsLit),
-          lit(-1)).as("cell"))
+        unitCol(col("embedding")).as("e"), col("cell"))
     val a = unit.select(col("cell"), col("id").as("id_a"), col("e").as("e_a"))
     val b = unit.select(col("cell"), col("id").as("id_b"), col("e").as("e_b"))
     val pairs = a.join(b, "cell")
       .filter(col("id_a") < col("id_b") &&
         dotCol(col("e_a"), col("e_b")) >= tau)
       .select("id_a", "id_b")
-    val observed = metrics match {
-      case None => pairs
-      case Some(obs) => pairs.observe(obs,
-        coalesce(count(lit(1)), lit(0L)).as("dup_pairs"))
-    }
-    val keepers = Dedup.connectedKeepers(observed)
+    val keepers = Dedup.connectedKeepers(pairs)
       .withColumnRenamed("doc_id", "id")
     corpus.select(col("vec_id").cast("long").as("id"))
       .join(keepers, Seq("id"), "left")
       .select(col("id"), coalesce(col("keeper"), col("id")).as("keeper"))
   }
 
-  /** LSH-bucketed top-k: corpus bucketed once by SRP signature; each
-    * probe joins only its bucket. Recall grows with fewer bits /
-    * multi-probe; the shuffle is bounded by bucket sizes.
-    */
   /** Multi-TABLE SRP-LSH: `nTables` independent nBits-bit hash tables
     * — the standard LSH recall mechanism (a true neighbor pair is
     * missed only if it splits in EVERY table: miss rate p^L instead of
@@ -599,9 +603,7 @@ object Similarity {
     * plane-literal signature per table in SQL.
     */
   def lshTopKTables(corpus: DataFrame,
-      probes: DataFrame, k: Int, nBits: Int = 6, nTables: Int = 4,
-      maxBroadcastProbes: Long = MaxBroadcastProbes,
-      metrics: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
+      probes: DataFrame, k: Int, nBits: Int = 6, nTables: Int = 4): DataFrame = {
     require(nBits >= 1 && nTables >= 1 && nBits * nTables <= 30,
       s"wide signature nBits*nTables = ${nBits * nTables} must fit an INT")
     val wide = nBits * nTables
@@ -610,42 +612,29 @@ object Similarity {
       struct(lit(t).as("t"),
         shiftright(c, t * nBits).bitwiseAND(lit(mask)).as("b"))
     }: _*))
-    def keyed(df: DataFrame) = df
+    def tableKeyed(df: DataFrame) = df
       .withColumn("sig",
         GraftFunctions.column("srp_sig", col("embedding"), lit(wide)))
       .withColumn("tb", slices(col("sig")))
       .select(col("vec_id"), col("embedding"),
         col("tb.t").as("t"), col("tb.b").as("b"))
-    val cb = keyed(corpus)
-    val pbRaw = keyed(probes).as("p")
-    // keyed() explodes each probe to nTables rows, so the broadcast
-    // guard bounds rows AFTER the explosion: count against the cap
-    // divided by the fan-out, not the raw probe count
-    val probeCap = math.max(1L, maxBroadcastProbes / nTables)
-    val pb =
-      if (boundedCount(probes, probeCap) <= probeCap)
-        broadcast(pbRaw)
-      else pbRaw
-    val joined = cb.as("c").join(pb,
-        col("c.t") === col("p.t") && col("c.b") === col("p.b") &&
-        col("c.vec_id") =!= col("p.vec_id"))
-      .select(
-        col("p.vec_id").as("query_id"),
-        col("c.vec_id").as("neighbor_id"),
-        dotCol(col("p.embedding"), col("c.embedding")).as("score"))
-    val observed = metrics match {
-      case None => joined
-      case Some(obs) => joined.observe(obs,
-        coalesce(count(lit(1)), lit(0L)).as("candidate_pairs"))
-    }
-    // a pair can collide in several tables; one row before ranking
-    val uniq = observed.dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    uniq.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    // the probe side explodes each probe to nTables rows, so the
+    // broadcast guard bounds rows AFTER the explosion: count against
+    // the cap divided by the fan-out, not the raw probe count
+    val probeCap = math.max(1L, MaxBroadcastProbes / nTables)
+    scoreTopK(tableKeyed(corpus), tableKeyed(withEmbedding(probes)),
+      Seq("t", "b"), k, boundedCount(probes, probeCap) <= probeCap,
+      dedup = nTables > 1, metrics = None)
   }
 
-  /** Occupancy caveat (measured, BASELINE.md round 7): SRP bucket
+  /** LSH-bucketed top-k: corpus bucketed once by SRP signature; each
+    * probe joins only its bucket, or with `multiProbe` > 0 also the
+    * buckets of its lowest-margin bit flips ([[srpProbeBuckets]]).
+    * Recall grows with fewer bits / multi-probe; the shuffle is
+    * bounded by bucket sizes. nBits = 0 puts the whole corpus in one
+    * bucket: an exhaustive search.
+    *
+    * Occupancy caveat (measured, BASELINE.md round 7): SRP bucket
     * sizes are bounded by the corpus GEOMETRY, not by 2^-nBits — every
     * member of a tight cluster projects with the same signs, so extra
     * bits cannot split it (observed: 40k vectors in 10 tight clusters
@@ -659,22 +648,13 @@ object Similarity {
   def lshTopK(corpus: DataFrame, probes: DataFrame,
       k: Int, nBits: Int = 8, multiProbe: Int = 0,
       maxBroadcastProbes: Long = MaxBroadcastProbes,
-      metrics: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
-    // null-row semantics: see ivfCellTopK
+      metrics: Option[Observation] = None): DataFrame = {
     // corpus bucketing through the native codegen srp_sig expression —
     // the UDF formulation boxed every embedding into a Seq[Float] on
     // the one pass that touches EVERY corpus vector; multi-probe stays
     // a UDF (probe-side only, bounded probe sets, returns an array)
-    def sigCol(c: Column) = GraftFunctions.column("srp_sig", c, lit(nBits))
-    // null guard: a null embedding probes zero buckets (empty array →
-    // explode drops the row) instead of NPEing the multi-probe path
-    val probeUdf = udf((v: Seq[Float]) =>
-      if (v == null) Array.empty[Int] else srpProbeBuckets(v, nBits, multiProbe))
-    // coalesce(sig, -1) after an explicit null filter: same
-    // IsNotNull-constraint double-evaluation fix as ivfCellTopK — the
-    // bucket join otherwise re-evaluates srp_sig in an inferred Filter
-    // on the pass that touches every corpus vector. -1 is outside the
-    // 0..2^nBits-1 signature domain and unreachable behind the filter.
+    val sig = GraftFunctions.column("srp_sig", col("embedding"), lit(nBits))
+    val probeUdf = udf((v: Seq[Float]) => srpProbeBuckets(v, nBits, multiProbe))
     // spread only the one-bucket (nBits == 0, exhaustive) mode: its
     // scoring volume is probes x corpus, so the scan-parallelism floor
     // pays for its exchange; bucketed modes score ~2^-nBits of that
@@ -682,40 +662,14 @@ object Similarity {
     // at the bucketed volume (measured r8: +0.4 s on sub-second
     // queries, -4 s on the exhaustive twin)
     val cbBase = if (nBits == 0) Scans.spread(corpus, col("vec_id")) else corpus
-    val cb = cbBase.filter(col("embedding").isNotNull)
-      .withColumn("bucket", coalesce(sigCol(col("embedding")), lit(-1)))
     val pb =
-      if (multiProbe <= 0) probes.filter(col("embedding").isNotNull)
-        .withColumn("bucket", coalesce(sigCol(col("embedding")), lit(-1)))
-      else probes.withColumn("bucket", explode(probeUdf(col("embedding"))))
+      if (multiProbe <= 0) keyed(probes, "bucket", sig)
+      else withEmbedding(probes)
+        .withColumn("bucket", explode(probeUdf(col("embedding"))))
     // same guarded broadcast as the IVF core: the bucket equi-key
     // means an over-cap probe set degrades to a shuffle join, not OOM
-    val pbMaybe =
-      if (boundedCount(probes, maxBroadcastProbes) <= maxBroadcastProbes)
-        broadcast(pb.as("p"))
-      else pb.as("p")
-    val joined = cb.as("c").join(pbMaybe,
-        col("c.bucket") === col("p.bucket") &&
-        col("c.vec_id") =!= col("p.vec_id"))
-      .select(
-        col("p.vec_id").as("query_id"),
-        col("c.vec_id").as("neighbor_id"),
-        dotCol(col("p.embedding"), col("c.embedding")).as("score"))
-    // candidate-volume telemetry at zero extra shuffle: a degenerate
-    // bucket (see the occupancy caveat above) surfaces here as
-    // candidate_pairs blowing past ~probes x expected-bucket
-    val observed = metrics match {
-      case None => joined
-      case Some(obs) => joined.observe(obs,
-        coalesce(count(lit(1)), lit(0L)).as("candidate_pairs"))
-    }
-    // a probe can reach the same neighbor through several probed
-    // buckets; dedupe before ranking (single-probe pairs are unique
-    // by construction — no shuffle spent on them)
-    val uniq = if (multiProbe <= 0) observed
-      else observed.dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    uniq.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    scoreTopK(keyed(cbBase, "bucket", sig), pb, Seq("bucket"), k,
+      boundedCount(probes, maxBroadcastProbes) <= maxBroadcastProbes,
+      dedup = multiProbe > 0, metrics)
   }
 }

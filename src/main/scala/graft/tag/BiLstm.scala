@@ -193,9 +193,9 @@ object BiLstm {
 
 /** Full imported-weights Bi-LSTM(-CRF) scorer: GloVe lookup (+ optional
   * char-CNN reps, + optional numeric features) -> Bi-LSTM -> dense
-  * logits. Plugs behind the same data contract as [[LinearScorer]]
-  * (broadcast weights, per-partition batched scoring, no shuffle) and
-  * decodes through [[CrfScorer.viterbiDecode]].
+  * logits. Scored with broadcast weights, per-partition batches and no
+  * shuffle ([[BiLstmCrf.predict]]); decodes through
+  * [[CrfScorer.viterbiDecode]].
   */
 final case class BiLstmCrfScorer(
     vocab: Map[String, Int],
@@ -330,7 +330,7 @@ object BiLstmCrf {
   }
 
   /** Distributed decode: broadcast weights, narrow mapPartitions —
-    * identical execution shape to [[CrfTagger.predict]] / HMM decode.
+    * the same execution shape as the HMM decode.
     * `useFeatures` appends the reference's 7 numeric features to each
     * token's input vector (the params['use_features'] path of the best
     * published model); it must match how the weights were trained — the

@@ -1,8 +1,5 @@
 package graft.tag
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import graft.spark.SentenceRow
-
 /** Log-domain Viterbi over per-token label logits with a 3x3 transition
   * matrix — the decode used by the reference's CRF / Bi-LSTM-CRF heads
   * (`tf.contrib.crf.crf_decode`, models/model.py:76-82), re-expressed as
@@ -10,10 +7,9 @@ import graft.spark.SentenceRow
   * W5/W6: probability ⊙ becomes log-domain +).
   *
   * Training stays offline (the reference trains in TF); the engine
-  * scores with imported weights. [[LinearScorer]] is the weight-import
-  * seam: an embedding lookup + dense layer producing per-token logits
-  * (the Bi-LSTM forward pass plugs in behind the same interface,
-  * SURVEY §2.5 W11).
+  * scores with imported weights: [[BiLstmCrfScorer]] produces the
+  * per-token logits and decodes through [[viterbiDecode]] (SURVEY §2.5
+  * W11).
   */
 object CrfScorer {
 
@@ -70,55 +66,5 @@ object CrfScorer {
       if (i > 0) s += transition(labels(i - 1))(labels(i))
     }
     s
-  }
-}
-
-/** Minimal imported-weights scorer: word embedding lookup (broadcast
-  * matrix, OOV id = vocab size) + dense layer to per-label logits.
-  * Stands in for the Bi-LSTM forward pass with the same data contract:
-  * broadcast weights, per-partition batched scoring, no shuffle.
-  */
-final case class LinearScorer(
-    vocab: Map[String, Int],
-    embeddings: Array[Array[Float]], // [vocab+1][d], last row = OOV
-    dense: Array[Array[Double]], // [d][numLabels]
-    bias: Array[Double]) extends Serializable {
-
-  def logitsOf(tokens: Seq[String]): Array[Array[Double]] = {
-    val numLabels = bias.length
-    tokens.map { t =>
-      val id = vocab.getOrElse(t, embeddings.length - 1)
-      val e = embeddings(id)
-      val out = bias.clone()
-      var d = 0
-      while (d < e.length) {
-        val v = e(d)
-        var l = 0
-        while (l < numLabels) { out(l) += v * dense(d)(l); l += 1 }
-        d += 1
-      }
-      out
-    }.toArray
-  }
-}
-
-object CrfTagger {
-  /** Distributed decode: broadcast scorer weights + transition, narrow
-    * per-partition scoring (north star: "batched, broadcast-weights
-    * scoring UDF over typed Datasets").
-    */
-  def predict(spark: SparkSession, scorer: LinearScorer,
-      transition: Array[Array[Double]],
-      sents: Dataset[SentenceRow]): Dataset[(SentenceRow, Seq[Int])] = {
-    import spark.implicits._
-    val bs = spark.sparkContext.broadcast(scorer)
-    val bt = spark.sparkContext.broadcast(transition)
-    sents.mapPartitions { it =>
-      val s = bs.value
-      val t = bt.value
-      it.map { sent =>
-        (sent, CrfScorer.viterbiDecode(s.logitsOf(sent.tkns), t).toSeq)
-      }
-    }
   }
 }

@@ -667,16 +667,48 @@ class OpsSpec extends AnyFunSuite {
     val e = embeddings.select("vec_id", "embedding").limit(50)
     val withNull = e.unionByName(spark.sql(
       "SELECT CAST(999999 AS BIGINT) vec_id, CAST(NULL AS ARRAY<FLOAT>) embedding"))
-    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
-      df.select("query_id").distinct().collect().map(_.getLong(0)).toSet
-    val self = ids(Similarity.ivfSelfTopK(spark, withNull, k = 2, nlist = 4, nprobe = 2))
-    assert(!self.contains(999999L) && self.nonEmpty)
-    val ivf = ids(Similarity.ivfTopK(spark, withNull, withNull, k = 2,
+    def clean(path: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      val rows = df.select("query_id", "neighbor_id", "score").collect()
+      val ids = rows.flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
+      assert(!ids.contains(999999L) && rows.nonEmpty, path)
+      assert(rows.forall(!_.isNullAt(2)), s"$path: null score")
+    }
+    clean("ivfSelfTopK",
+      Similarity.ivfSelfTopK(spark, withNull, k = 2, nlist = 4, nprobe = 2))
+    clean("ivfTopK", Similarity.ivfTopK(spark, withNull, withNull, k = 2,
       nlist = 4, nprobe = 2))
-    assert(!ivf.contains(999999L) && ivf.nonEmpty)
-    val lsh = ids(Similarity.lshTopK(withNull, withNull, k = 2,
+    clean("lshTopK multi-probe", Similarity.lshTopK(withNull, withNull, k = 2,
       nBits = 4, multiProbe = 2))
-    assert(!lsh.contains(999999L) && lsh.nonEmpty)
+    clean("lshTopK", Similarity.lshTopK(withNull, withNull, k = 2, nBits = 4))
+    clean("lshTopKTables", Similarity.lshTopKTables(withNull, withNull, k = 2,
+      nBits = 4, nTables = 2))
+    // brute force scores the null probe's pairs as null dots: k = 1 and
+    // k = 3 must not return them as the probe's "neighbours", and k = 60
+    // (past the 49 real neighbours) must not rank the null corpus row
+    for (k <- Seq(1, 3, 60))
+      clean(s"bruteForceTopK k=$k", Similarity.bruteForceTopK(withNull, withNull, k))
+  }
+
+  test("every top-k search in exhaustive mode returns brute force's rows, k = 1 and k = 5") {
+    // lshTopK with nBits = 0 (one bucket) and the IVF searches with
+    // nprobe = nlist (every cell) see every candidate pair, so the one
+    // rank rule (`score desc, neighbor_id asc`; the top-1 aggregate at
+    // k = 1, the window above it) must give brute force's exact rows,
+    // scores and ranks included
+    val e = embeddings.select("vec_id", "embedding")
+    val n = e.count()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id", "score", "rk").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+    for (k <- Seq(1, 5)) {
+      val brute = rows(Similarity.bruteForceTopK(e, e, k))
+      assert(brute.size == n * k)
+      assert(rows(Similarity.lshTopK(e, e, k, nBits = 0)) == brute, s"lshTopK k=$k")
+      assert(rows(Similarity.ivfTopK(spark, e, e, k, nlist = 8, nprobe = 8)) == brute,
+        s"ivfTopK k=$k")
+      assert(rows(Similarity.ivfSelfTopK(spark, e, k, nlist = 8, nprobe = 8)) == brute,
+        s"ivfSelfTopK k=$k")
+    }
   }
 
   test("native ivf_cell expression assigns exactly like nearestCells") {

@@ -26,20 +26,6 @@ class CrfSpec extends AnyFunSuite {
       assert(gotScore == best)
     }
   }
-
-  test("linear scorer + crf decode end-to-end, deterministic") {
-    val vocab = Map("alice" -> 0, "smith" -> 1, "the" -> 2)
-    val emb = Array(
-      Array(1f, 0f), Array(0.8f, 0.1f), Array(0f, 1f), Array(0.1f, 0.1f))
-    // dense: dim0 -> I-PER logit, dim1 -> O logit
-    val dense = Array(Array(0.0, 0.0, 5.0), Array(5.0, 0.0, 0.0))
-    val scorer = LinearScorer(vocab, emb, dense, Array(0.0, -1.0, 0.0))
-    val logits = scorer.logitsOf(Seq("alice", "smith", "the", "oovword"))
-    val trans = Array.fill(3, 3)(0.0)
-    val tags = CrfScorer.viterbiDecode(logits, trans).toSeq
-    assert(tags(0) == 2 && tags(1) == 2) // names -> I-PER (index 2)
-    assert(tags(2) == 0) // 'the' -> O
-  }
 }
 
 class GazetteerSpec extends AnyFunSuite {
@@ -84,13 +70,26 @@ class GazetteerSpec extends AnyFunSuite {
   }
 
   test("vocab codec: OOV bucket = size") {
-    // the scorers' word-id lookup: an unseen term takes id = vocab size,
-    // the one row below the vocabulary in the embedding matrix
+    // the Bi-LSTM-CRF scorer's word-id lookup: an unseen term takes
+    // id = vocab size, the one row below the vocabulary in the
+    // embedding matrix. One-hot embeddings feed saturated LSTM units
+    // (input and output gates open, forget gate shut, no recurrence),
+    // so unit d fires for word-id d alone and the identity dense layer
+    // makes the logit argmax read the id back.
     val v = Map("a" -> 0, "b" -> 1)
     val emb = Array(Array(1f, 0f, 0f), Array(0f, 1f, 0f), Array(0f, 0f, 1f))
-    val eye = Array.tabulate(3, 3)((i, j) => if (i == j) 1.0 else 0.0)
-    val logits = LinearScorer(v, emb, eye, Array(0.0, 0.0, 0.0))
-      .logitsOf(Seq("a", "zzz", "b"))
-    assert(logits.map(_.indexOf(1.0)).toSeq == Seq(0, v.size, 1))
+    val cell = BiLstm.CellWeights(
+      kernel = Array.tabulate(6, 12)((r, g) => if (r < 3 && g == 3 + r) 5f else 0f),
+      bias = Array.tabulate(12)(g => g / 3 match {
+        case 0 | 3 => 10f // i, o
+        case 2 => -20f    // f
+        case _ => 0f
+      }))
+    val scorer = BiLstmCrfScorer(v, emb, None, cell, cell,
+      dense = Array.tabulate(6, 3)((d, l) => if (d == l) 1f else 0f),
+      denseBias = Array(0f, 0f, 0f),
+      transition = Array.fill(3, 3)(0.0))
+    val logits = scorer.logitsOf(Seq("a", "zzz", "b"))
+    assert(logits.map(l => l.indexOf(l.max)).toSeq == Seq(0, v.size, 1))
   }
 }
