@@ -254,20 +254,8 @@ object Bench {
     // explained from suite-level query_env after the fact)
     val sampleLog = scala.collection.mutable.LinkedHashMap[String, String]()
     val suspects = scala.collection.mutable.ArrayBuffer[String]()
-    // dev-only A/B subset filter (comma-separated names); unset in the
-    // driver's invocation → all queries. Unknown names fail fast — a
-    // typo'd filter that benches zero queries must not pass silently.
-    val benchOnly = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    benchOnly.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not in SparkEntry.queries: " +
-          unknown.toSeq.sorted.mkString(", "))
-    }
-    val results = (if (doQueries) SparkEntry.queries
+    val results = (if (doQueries) SparkEntry.selectedQueries
       else Map.empty[String, (SparkSession, String) => org.apache.spark.sql.DataFrame])
-      .filter { case (n, _) => benchOnly.forall(_.contains(n)) }
       .map { case (name, fn) =>
       // full materialization: every output row of every column is
       // produced (toRdd sits above all projections; count() would let

@@ -1425,7 +1425,7 @@ object SparkEntry {
     "kg_shortest_path" -> ((s, dir) => {
       graft.kg.GraphOps.shortestPaths(s,
           graft.kg.GraphOps.bigramEdges(t(s, dir, "documents")),
-          source = "spark", iters = 4)
+          sources = Seq("spark"), iters = 4)
         .orderBy("node")
     }),
 
@@ -1476,11 +1476,14 @@ object SparkEntry {
         .orderBy("node")
     }),
 
-    // 2-hop min-distance BFS from seed nodes (frontier expansion)
+    // 2-hop min-distance BFS from seed nodes: shortest paths over unit
+    // weights, dist cast back to the INT hop count
     "kg_nhop" -> ((s, dir) => {
-      graft.kg.GraphOps.nhop(s,
-          graft.kg.GraphOps.bigramEdges(t(s, dir, "documents")),
-          seeds = Seq("spark", "query"), hops = 2)
+      graft.kg.GraphOps.shortestPaths(s,
+          graft.kg.GraphOps.bigramEdges(t(s, dir, "documents"))
+            .withColumn("weight", lit(1L)),
+          sources = Seq("spark", "query"), iters = 2)
+        .select(col("node"), col("dist").cast("int").as("dist"))
         .orderBy("node")
     }),
 
@@ -1559,6 +1562,21 @@ object SparkEntry {
         .orderBy("doc_id")
     })
   )
+
+  /** [[queries]] narrowed to the comma-separated names in
+    * `SPARK_GRAFT_ONLY`, the dev subset filter of Verify and Bench;
+    * unset, every query. Unknown names fail fast: a typo that filtered
+    * the run to zero queries would exit cleanly and read as a clean pass.
+    */
+  def selectedQueries: Map[String, (SparkSession, String) => DataFrame] =
+    sys.env.get("SPARK_GRAFT_ONLY").fold(queries) { only =>
+      val names = only.split(",").map(_.trim).toSet
+      val unknown = names -- queries.keySet
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: " +
+          unknown.toSeq.sorted.mkString(", "))
+      queries.filter { case (n, _) => names.contains(n) }
+    }
 
   // memory-sink names must be unique per invocation within a session
   // (Bench runs every query 2-3 times)

@@ -8,21 +8,7 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = Sessions.session("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // dev-only subset filter (comma-separated names); unset in the
-    // driver's invocation → all queries. Unknown names fail fast: a
-    // typo that filtered the run to zero queries would exit cleanly
-    // and read as a clean correctness pass.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: " +
-          unknown.toSeq.sorted.mkString(", "))
-    }
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.selectedQueries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

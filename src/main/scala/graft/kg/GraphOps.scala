@@ -303,15 +303,17 @@ object GraphOps {
       .groupBy("node").agg(count(lit(1)).as("n_triangles"))
   }
 
-  /** Fixed-iteration single-source shortest paths (Bellman-Ford /
+  /** Fixed-iteration multi-source shortest paths (Bellman-Ford /
     * min-plus relaxation, the Pregel textbook shape) over weighted
-    * edges (src, dst, weight:long). `iters` relaxation rounds bound
-    * the path length — distances to nodes further than `iters` hops
-    * are not final (documented; run V-1 rounds for the full
-    * fixed point).
+    * edges (src, dst, weight:long): every node in `sources` starts at
+    * distance 0, and each reached node's dist is its distance to the
+    * nearest source. `iters` relaxation rounds bound the path length —
+    * distances to nodes further than `iters` hops are not final
+    * (documented; run V-1 rounds for the full fixed point). With unit
+    * weights this is an `iters`-hop BFS from the source set.
     *
-    * DELTA relaxation (the same frontier/visited split as [[nhop]]):
-    * each round joins edges against only the nodes whose distance
+    * DELTA relaxation (the frontier/visited split every distributed BFS
+    * uses): each round joins edges against only the nodes whose distance
     * IMPROVED last round, not the whole dist table — a relaxation out
     * of a non-improved node was already applied the round it improved,
     * so re-relaxing it can only reproduce known bounds. Semantics are
@@ -323,16 +325,16 @@ object GraphOps {
     * round). All-long arithmetic — exact, order-independent, oracled
     * by unrolled SQL.
     */
-  def shortestPaths(spark: SparkSession, edges: DataFrame, source: String,
+  def shortestPaths(spark: SparkSession, edges: DataFrame, sources: Seq[String],
       iters: Int): DataFrame =
-    shortestPathsWithFrontier(spark, edges, source, iters, null)
+    shortestPathsWithFrontier(spark, edges, sources, iters, null)
 
   /** [[shortestPaths]] plus per-round frontier sizes appended to
     * `frontierSizes` (spec instrumentation; the extra count() actions
     * run only when the buffer is non-null).
     */
   private[graft] def shortestPathsWithFrontier(spark: SparkSession,
-      edges: DataFrame, source: String, iters: Int,
+      edges: DataFrame, sources: Seq[String], iters: Int,
       frontierSizes: scala.collection.mutable.Buffer[Long]): DataFrame = {
     import spark.implicits._
     // checkpoint the edge table once for the loop: each round's merge
@@ -341,7 +343,7 @@ object GraphOps {
     // its scan + aggregation once per round (measured r8: 4 redundant
     // corpus scans in kg_shortest_path).
     val e = edges.select("src", "dst", "weight").localCheckpoint(true)
-    var dist = Seq(source).toDF("node").select(col("node"),
+    var dist = sources.distinct.toDF("node").select(col("node"),
       lit(0L).as("dist"))
       .localCheckpoint(true)
     var frontier = dist
@@ -404,28 +406,5 @@ object GraphOps {
         .select(col("node"), col("b.l").as("label"))
     }
     labels.localCheckpoint(true)
-  }
-
-  /** Minimum-distance BFS from `seeds`, out to `hops` edge hops.
-    * Returns (node, dist) for every node reachable within `hops`
-    * (seeds at dist 0). Frontier-only expansion: iteration h joins
-    * edges against ONLY the dist=h-1 frontier (not the whole visited
-    * set), then a min-merge collapses revisits — the same
-    * frontier/visited split every distributed BFS uses, so work per
-    * iteration is O(frontier ⋈ edges), not O(visited ⋈ edges).
-    */
-  def nhop(spark: SparkSession, edges: DataFrame, seeds: Seq[String],
-      hops: Int): DataFrame = {
-    import spark.implicits._
-    var dist = seeds.toDF("node").distinct()
-      .select(col("node"), lit(0).as("dist"))
-    for (h <- 1 to hops) {
-      val frontier = dist.filter(col("dist") === (h - 1))
-      val next = edges.join(frontier, edges("src") === frontier("node"))
-        .select(col("dst").as("node"), lit(h).as("dist"))
-      dist = dist.union(next)
-        .groupBy("node").agg(min(col("dist")).as("dist"))
-    }
-    dist
   }
 }

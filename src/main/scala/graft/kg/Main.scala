@@ -116,8 +116,8 @@ object Main {
           val m0 = Hmm.fit(spark, train, timeSteps = 1, useFeatures = true)
           val model = Hmm.selfTrain(spark, m0,
             sents.as[graft.spark.SentenceRow], minCount = stMinCount)
-          Triples.decodedSentences(spark, model,
-            sents.as[graft.spark.SentenceRow]).toDF()
+          Triples.taggedSentences(spark,
+            Hmm.predict(spark, model, sents.as[graft.spark.SentenceRow])).toDF()
         }
         (t, 0.9, "tagged")
       // "bilstm:<weightsDir>" — imported Bi-LSTM-CRF weights
@@ -130,9 +130,10 @@ object Main {
         val t = stages.stage("tagged", stages.outputRowsOf("sentences")) {
           val scorer = graft.tag.BiLstmWeightsIO.load(spark,
             b.stripPrefix("bilstm:"))
-          graft.tag.BiLstmCrf.decodedSentences(spark, scorer,
-            sents.as[graft.spark.SentenceRow],
-            useFeatures = graft.tag.BiLstmCrf.expectsFeatures(scorer)).toDF()
+          Triples.taggedSentences(spark,
+            graft.tag.BiLstmCrf.predict(spark, scorer,
+              sents.as[graft.spark.SentenceRow],
+              useFeatures = graft.tag.BiLstmCrf.expectsFeatures(scorer))).toDF()
         }
         (t, 0.9, "tagged")
       case _ => (sents, 1.0, "sentences")

@@ -66,7 +66,7 @@ object Relations {
   }
 
   /** Relations from the labels carried by the sentences (gold, or
-    * decoded tags written back by [[Triples.decodedSentences]]).
+    * decoded tags written back by [[Triples.taggedSentences]]).
     */
   def goldRelations(spark: SparkSession,
       sents: Dataset[SentenceRow],

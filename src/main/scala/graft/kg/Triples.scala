@@ -21,8 +21,8 @@ object Triples {
     }
 
   /** Mentions from the labels carried by the sentences — gold labels in
-    * the dataset-construction path, or HMM-decoded tags written back by
-    * [[decodedSentences]] (pass the decode confidence then).
+    * the dataset-construction path, or a tagger's decoded tags written
+    * back by [[taggedSentences]] (pass the decode confidence then).
     */
   def goldMentions(spark: SparkSession,
       sents: Dataset[SentenceRow],
@@ -32,19 +32,17 @@ object Triples {
     sents.flatMap(s => mentionsFromTags(s, s.bio, conf))
   }
 
-  /** Sentences with `bio` replaced by HMM-decoded tags: ONE decode pass
-    * whose output serves every downstream projection (mentions AND
-    * relations), instead of each stage re-running Viterbi over the
-    * corpus. Narrow; broadcast weights.
+  /** The one tag write-back: sentences with `bio` replaced by the tag
+    * ids a tagger decoded for them (`Hmm.predict` or `BiLstmCrf.predict`),
+    * named through the engine's O/B-PER/I-PER order ([[Hmm.Labels]]).
+    * The result is ONE decode pass that serves every downstream
+    * projection (mentions AND relations), instead of each stage
+    * re-running the tagger over the corpus. Narrow.
     */
-  def decodedSentences(spark: SparkSession, model: graft.tag.HmmModel,
-      sents: Dataset[SentenceRow]): Dataset[SentenceRow] = {
+  def taggedSentences(spark: SparkSession,
+      decoded: Dataset[(SentenceRow, Seq[Int])]): Dataset[SentenceRow] = {
     import spark.implicits._
-    val b = spark.sparkContext.broadcast(model)
-    sents.mapPartitions { it =>
-      val m = b.value
-      it.map(s => s.copy(bio = Hmm.decode(m, s.feats).map(Hmm.Labels(_)).toSeq))
-    }
+    decoded.map { case (s, tags) => s.copy(bio = tags.map(Hmm.Labels(_))) }
   }
 
   /** Project mentions to deduplicated triples. The dropDuplicates is a

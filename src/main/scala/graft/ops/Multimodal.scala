@@ -1,12 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: media as opaque `binary` columns with
-  * typed metadata, processed in partition-batched kernels (the Scala
-  * analog of `mapInPandas` — one buffer of rows per partition feeds the
-  * "decoder" in batches, keeping the codec boundary wide).
+  * typed metadata, each row decoded by a per-row kernel ([[perRow]]).
   *
   * [[decodeImage]] is a REAL image decode via the JDK's `javax.imageio`
   * (PNG/BMP/GIF/JPEG readers ship with every JRE — zero external
@@ -18,10 +16,21 @@ import org.apache.spark.sql.functions._
   * The exotic-codec seam (video/audio formats the JDK lacks) stays
   * STUBBED: `decodeStub` derives deterministic metadata and a fake
   * feature vector from the bytes. The Spark-side contract — schema,
-  * batch shape, partitioning, null handling — is identical between the
-  * two; swapping a real codec in changes only the kernel body.
+  * partitioning, null handling — is identical between the two;
+  * swapping a real codec in changes only the kernel body.
   */
 object Multimodal {
+
+  /** media(media_id BIGINT, media BINARY) -> the rows `kernel` returns
+    * for each (id, bytes); the one mapper behind every public decode.
+    */
+  private def perRow[A: Encoder](spark: SparkSession, media: DataFrame)
+      (kernel: (Long, Array[Byte]) => IterableOnce[A]): Dataset[A] = {
+    import spark.implicits._
+    media.select(col("media_id").cast("long"), col("media"))
+      .as[(Long, Array[Byte])]
+      .flatMap { case (id, bytes) => kernel(id, bytes) }
+  }
 
   final case class DecodedImage(
       media_id: Long, status: String, format: String,
@@ -87,20 +96,12 @@ object Multimodal {
         img.getRaster.getNumBands, sampleSum(img))
     }
 
-  /** media(media_id BIGINT, media BINARY) -> real ImageIO decode,
-    * batched per partition like [[decode]] (the batch layer is where a
-    * vectorized codec would take one call per batch).
+  /** media(media_id BIGINT, media BINARY) -> real ImageIO decode, one
+    * row per media row.
     */
-  def decodeImage(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[DecodedImage] = {
+  def decodeImage(spark: SparkSession, media: DataFrame): Dataset[DecodedImage] = {
     import spark.implicits._
-    media.select(col("media_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          batch.iterator.map { case (id, bytes) => decodeImageOne(id, bytes) }
-        }
-      }
+    perRow(spark, media)((id, bytes) => Some(decodeImageOne(id, bytes)))
   }
 
   final case class DecodedFrame(
@@ -140,19 +141,10 @@ object Multimodal {
     }
   }
 
-  /** media(media_id BIGINT, media BINARY) -> one decoded row per frame,
-    * batched per partition like [[decodeImage]].
-    */
-  def decodeFrames(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[DecodedFrame] = {
+  /** media(media_id BIGINT, media BINARY) -> one decoded row per frame. */
+  def decodeFrames(spark: SparkSession, media: DataFrame): Dataset[DecodedFrame] = {
     import spark.implicits._
-    media.select(col("media_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          batch.iterator.flatMap { case (id, bytes) => decodeFramesOne(id, bytes) }
-        }
-      }
+    perRow(spark, media)(decodeFramesOne)
   }
 
   /** Deterministic multi-page grayscale TIFF "video": frame f pixel
@@ -240,19 +232,12 @@ object Multimodal {
     }
   }
 
-  /** media(media_id BIGINT, media BINARY) -> real audio decode, batched
-    * per partition like [[decodeImage]].
+  /** media(media_id BIGINT, media BINARY) -> real audio decode, one
+    * row per media row.
     */
-  def decodeAudio(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[DecodedAudio] = {
+  def decodeAudio(spark: SparkSession, media: DataFrame): Dataset[DecodedAudio] = {
     import spark.implicits._
-    media.select(col("media_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          batch.iterator.map { case (id, bytes) => decodeAudioOne(id, bytes) }
-        }
-      }
+    perRow(spark, media)((id, bytes) => Some(decodeAudioOne(id, bytes)))
   }
 
   /** Deterministic 8 kHz 8-bit unsigned PCM mono WAV: sample i of clip
@@ -326,11 +311,12 @@ object Multimodal {
       format: String, feature: Array[Float])
 
   /** Deterministic stand-in for an image decode: metadata from byte
-    * length, features from byte averages over `channels` strides.
-    * Marked clearly as the stub seam.
+    * length, features from byte averages over `channels` strides; a
+    * null payload decodes as an empty one. Marked clearly as the stub
+    * seam.
     */
   def decodeStub(mediaId: Long, bytes: Array[Byte]): Decoded = {
-    val len = bytes.length
+    val len = if (bytes == null) 0 else bytes.length
     val width = len % 97
     val height = (len * 7) % 89
     val channels = 3
@@ -349,22 +335,11 @@ object Multimodal {
   }
 
   /** media(media_id BIGINT, media BINARY) -> decoded metadata+features,
-    * batched per partition (batch size bounds peak decoder memory, like
-    * `spark.sql.execution.arrow.maxRecordsPerBatch` for mapInPandas).
+    * one row per media row.
     */
-  def decode(spark: SparkSession, media: DataFrame,
-      batchSize: Int = 64): Dataset[Decoded] = {
+  def decode(spark: SparkSession, media: DataFrame): Dataset[Decoded] = {
     import spark.implicits._
-    media.select(col("media_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          // a real decoder would process `batch` as one vectorized call
-          batch.iterator.map { case (id, bytes) =>
-            decodeStub(id, if (bytes == null) Array.empty else bytes)
-          }
-        }
-      }
+    perRow(spark, media)((id, bytes) => Some(decodeStub(id, bytes)))
   }
 
   final case class ResizedImage(media_id: Long, status: String,
@@ -416,18 +391,12 @@ object Multimodal {
     }
 
   /** media(media_id BIGINT, media BINARY) -> real box-filter resample,
-    * batched per partition like [[decodeImage]].
+    * one row per media row.
     */
   def resizeImage(spark: SparkSession, media: DataFrame,
-      fx: Int, fy: Int, batchSize: Int = 64): Dataset[ResizedImage] = {
+      fx: Int, fy: Int): Dataset[ResizedImage] = {
     import spark.implicits._
     require(fx > 0 && fy > 0, "box factors must be positive")
-    media.select(col("media_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          batch.iterator.map { case (id, bytes) => resizeBoxOne(id, bytes, fx, fy) }
-        }
-      }
+    perRow(spark, media)((id, bytes) => Some(resizeBoxOne(id, bytes, fx, fy)))
   }
 }

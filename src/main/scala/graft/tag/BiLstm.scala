@@ -304,20 +304,6 @@ object BiLstmCrf {
       else 0.0f
     }
 
-  /** Sentences with `bio` replaced by Bi-LSTM-CRF-decoded tags — the
-    * neural analog of [[graft.kg.Triples.decodedSentences]]: ONE decode
-    * pass feeds every downstream projection (mentions AND relations).
-    * Tag ids map through the engine's O/B-PER/I-PER order
-    * ([[Hmm.Labels]]), so a 3-tag scorer plugs straight into the KG
-    * pipeline.
-    */
-  def decodedSentences(spark: SparkSession, scorer: BiLstmCrfScorer,
-      sents: Dataset[SentenceRow], useFeatures: Boolean = false): Dataset[SentenceRow] = {
-    import spark.implicits._
-    predict(spark, scorer, sents, useFeatures)
-      .map { case (s, tags) => s.copy(bio = tags.map(Hmm.Labels(_))) }
-  }
-
   /** Does this scorer expect the 7 numeric features appended to its
     * input vectors? Derived from the kernel width: inputSize =
     * embDim (+ charFilters) (+ 7 iff trained with use_features).
@@ -330,7 +316,10 @@ object BiLstmCrf {
   }
 
   /** Distributed decode: broadcast weights, narrow mapPartitions —
-    * the same execution shape as the HMM decode.
+    * the same execution shape and output as `Hmm.predict`, so
+    * [[graft.kg.Triples.taggedSentences]] writes either tagger's tag ids
+    * back into `bio` (a 3-tag scorer plugs straight into the KG
+    * pipeline).
     * `useFeatures` appends the reference's 7 numeric features to each
     * token's input vector (the params['use_features'] path of the best
     * published model); it must match how the weights were trained — the

@@ -130,7 +130,7 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(graft.kg.GraphOps.pagerank(e, iters = 2).count() == 4)
       assert(graft.kg.GraphOps.pagerank(e, iters = 2,
         danglingRedistribute = true).count() == 4)
-      assert(graft.kg.GraphOps.shortestPaths(spark, w, "a", iters = 2)
+      assert(graft.kg.GraphOps.shortestPaths(spark, w, Seq("a"), iters = 2)
         .count() == 4)
       assert(graft.kg.GraphOps.labelPropagation(e, rounds = 2)
         .count() == 4)

@@ -198,11 +198,11 @@ class GraphOpsSpec extends AnyFunSuite {
     // s->a (10), s->b (1), b->a (2): dist(a)=3 via b, not 10 direct
     val e = Seq(("s", "a", 10L), ("s", "b", 1L), ("b", "a", 2L))
       .toDF("src", "dst", "weight")
-    val d = GraphOps.shortestPaths(spark, e, "s", iters = 3)
+    val d = GraphOps.shortestPaths(spark, e, Seq("s"), iters = 3)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(d === Map("s" -> 0L, "a" -> 3L, "b" -> 1L))
     // one round only: the 2-hop relaxation hasn't propagated yet
-    val d1 = GraphOps.shortestPaths(spark, e, "s", iters = 1)
+    val d1 = GraphOps.shortestPaths(spark, e, Seq("s"), iters = 1)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(d1("a") === 10L)
   }
@@ -217,7 +217,7 @@ class GraphOpsSpec extends AnyFunSuite {
     val blob = Seq(("s", "b1", 1L), ("s", "b2", 1L), ("s", "b3", 1L))
     val e = (chain ++ blob).toDF("src", "dst", "weight")
     val sizes = scala.collection.mutable.ArrayBuffer[Long]()
-    val d = GraphOps.shortestPathsWithFrontier(spark, e, "s", 5, sizes)
+    val d = GraphOps.shortestPathsWithFrontier(spark, e, Seq("s"), 5, sizes)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(d("n5") === 5L && d("b2") === 1L)
     // round 1 relaxes {s}; round 2 relaxes the 4 newly-reached nodes;
@@ -252,15 +252,17 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(l1 === l7)
   }
 
-  test("nhop: min-distance BFS; unreachable nodes absent; seeds at 0") {
+  test("shortestPaths: unit weights are a min-distance BFS; unreachable nodes absent; seeds at 0") {
     // chain a->b->c->d plus shortcut a->c
     val e = edges(("a", "b"), ("b", "c"), ("c", "d"), ("a", "c"))
-    val d = GraphOps.nhop(spark, e, Seq("a"), hops = 2)
-      .collect().map(r => (r.getString(0), r.getInt(1))).toMap
-    assert(d === Map("a" -> 0, "b" -> 1, "c" -> 1, "d" -> 2))
+      .withColumn("weight", lit(1L))
+    def bfs(seeds: String*) = GraphOps.shortestPaths(spark, e, seeds, iters = 2)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    assert(bfs("a") === Map("a" -> 0L, "b" -> 1L, "c" -> 1L, "d" -> 2L))
     // isolated seed still reported at dist 0
-    val d2 = GraphOps.nhop(spark, e, Seq("zz"), hops = 2)
-      .collect().map(r => (r.getString(0), r.getInt(1))).toMap
-    assert(d2 === Map("zz" -> 0))
+    assert(bfs("zz") === Map("zz" -> 0L))
+    // two seeds: each node at its distance to the NEAREST seed (d is 2
+    // hops from b but a seed itself); a, upstream of both, stays absent
+    assert(bfs("b", "d") === Map("b" -> 0L, "c" -> 1L, "d" -> 0L))
   }
 }

@@ -142,7 +142,7 @@ class MultimodalSpec extends AnyFunSuite {
       (2L, Multimodal.syntheticWav(2L, 200)),
       (3L, "garbage".getBytes))
     val out = Multimodal.decodeAudio(spark, rows.toDF("media_id", "media")
-        .repartition(2), batchSize = 2)
+        .repartition(2))
       .collect().map(d => d.media_id -> d).toMap
     assert(out.size == 3)
     assert(out(1L).status == "ok" && out(1L).sample_sum == expectedWavSum(1L, 80))
@@ -158,7 +158,7 @@ class MultimodalSpec extends AnyFunSuite {
       (3L, "garbage".getBytes),
       (4L, Array.emptyByteArray))
     val media = rows.toDF("media_id", "media").repartition(3)
-    val out = Multimodal.decodeImage(spark, media, batchSize = 2)
+    val out = Multimodal.decodeImage(spark, media)
       .collect().map(d => d.media_id -> d).toMap
     assert(out.size == 4)
     assert(out(1L).status == "ok" && out(1L).format == "png" &&

@@ -413,19 +413,22 @@ class OpsSpec extends AnyFunSuite {
     assert(obs.get("hot_buckets").asInstanceOf[Long] >= 1L)
   }
 
-  test("multimodal decode: schema, determinism, batch independence") {
+  test("multimodal decode: schema, determinism, partition independence") {
     val media = documents.select(col("doc_id").as("media_id"),
       encode(col("text"), "UTF-8").as("media"))
-    val d1 = Multimodal.decode(spark, media, batchSize = 7).collect()
+    val d1 = Multimodal.decode(spark, media).collect()
       .sortBy(_.media_id)
-    val d2 = Multimodal.decode(spark, media.repartition(13), batchSize = 64)
+    val d2 = Multimodal.decode(spark, media.repartition(13))
       .collect().sortBy(_.media_id)
     assert(d1.length == documents.count())
     assert(d1.zip(d2).forall { case (a, b) =>
       a.media_id == b.media_id && a.width == b.width &&
       a.feature.sameElements(b.feature)
-    }, "decode must be deterministic across partitioning and batch size")
+    }, "decode must be deterministic across partitioning")
     assert(d1.forall(_.channels == 3))
+    // a null payload decodes as an empty one
+    val n = Multimodal.decodeStub(1L, null)
+    assert(n.width == 0 && n.height == 0 && n.feature.sameElements(Array(0f, 0f, 0f)))
   }
 
   test("real box-filter resize: floor-mean blocks, partial blocks dropped, errors surface") {
@@ -447,12 +450,12 @@ class OpsSpec extends AnyFunSuite {
     // undecodable/null payloads: error row, no exception
     assert(Multimodal.resizeBoxOne(2L, "not an image".getBytes, 2, 2).status == "error")
     assert(Multimodal.resizeBoxOne(3L, null, 2, 2).status == "error")
-    // distributed wrapper: deterministic across partitioning/batching
+    // distributed wrapper: deterministic across partitioning
     import spark.implicits._
     val media = (0L until 40L).map(i =>
       (i, Multimodal.syntheticImage(i, 6 + (i % 3).toInt, 7, "png")))
       .toDF("media_id", "media")
-    val a = Multimodal.resizeImage(spark, media, 2, 2, batchSize = 7)
+    val a = Multimodal.resizeImage(spark, media, 2, 2)
       .collect().sortBy(_.media_id).toSeq
     val b = Multimodal.resizeImage(spark, media.repartition(9), 2, 2)
       .collect().sortBy(_.media_id).toSeq
