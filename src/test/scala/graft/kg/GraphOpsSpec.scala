@@ -252,7 +252,8 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(l1 === l7)
   }
 
-  test("shortestPaths: unit weights are a min-distance BFS; unreachable nodes absent; seeds at 0") {
+  test("nhop: min-distance BFS; unreachable nodes absent; seeds at 0") {
+    // n-hop BFS is shortestPaths over unit weights (kg_nhop);
     // chain a->b->c->d plus shortcut a->c
     val e = edges(("a", "b"), ("b", "c"), ("c", "d"), ("a", "c"))
       .withColumn("weight", lit(1L))
