@@ -3,13 +3,19 @@ package graft
 import org.apache.spark.sql.SparkSession
 import graft.spark.Sessions
 
-/** Driver-run benchmark: per-query seconds at SPARK_GRAFT_SF_DIR, plus
-  * the north-rule scaling evidence — the same KG pipeline job (synthetic
-  * corpus -> extract -> label -> mentions -> triples) at two parallelism
-  * levels (local[1] vs local[4], the sandbox stand-in for N vs 4N
-  * executors; see the in-code note on why the gate pair sits in the
-  * host's linear region), plus 8/32-core curve points, reporting
-  * triples/sec everywhere and the scaling efficiencies.
+/** Driver-run benchmark: per-query seconds over the tables at
+  * SPARK_GRAFT_SF_DIR, plus the north-rule scaling evidence — the whole
+  * `kg.Main` pipeline over `synth:N` pages (SPARK_GRAFT_SCALE_DOCS) at
+  * local[1] and local[4], the sandbox stand-in for N and 4N executors,
+  * with the efficiency `sec_1 / (4 * sec_4)` for the whole run and for
+  * each stage from its lineage `wall_ms`.
+  *
+  * Env: SPARK_GRAFT_SF_DIR (required by the query phase),
+  * SPARK_GRAFT_QUERY_PHASE=0 and SPARK_GRAFT_SCALING=0 skip a phase,
+  * SPARK_GRAFT_ONLY narrows the queries, SPARK_GRAFT_CPUS sets the
+  * query phase's cores. The multi-JVM figure needs no code here:
+  * spark-submit `graft.kg.Main` on a `local-cluster[N,1,<mem>]` master
+  * (BASELINE.md).
   *
   * Output: ONE JSON line on stdout (unprefixed — build.sbt routes the
   * forked JVM straight to stdout) and mirrored to `bench_out.json`:
@@ -75,26 +81,66 @@ object Bench {
     if (cpu0 < 0 || cpu1 < 0 || sec <= 0) -1.0
     else (cpu1 - cpu0) / 1e9 / (sec * cores)
 
-  /** One scaling sample: wall seconds + contention telemetry. */
-  private final case class Sample(cores: Int, triples: Long, sec: Double,
-      load: Double, cpuUtil: Double, gcMsDelta: Long) {
-    def tps: Double = triples / sec
+  /** One scaling sample: the wall seconds of one whole `kg.Main` run,
+    * each stage's wall ms from that run's lineage, contention telemetry,
+    * and the output directory the run wrote and deleted.
+    */
+  final case class Sample(cores: Int, sec: Double, stageMs: Map[String, Long],
+      load: Double, cpuUtil: Double, gcMsDelta: Long, out: String) {
     def json: String =
-      f"""{"sec":$sec%.3f,"tps":$tps%.1f,"load":$load%.2f,""" +
+      f"""{"sec":$sec%.3f,"load":$load%.2f,""" +
         f""""cpu_util":$cpuUtil%.3f,"gc_ms":$gcMsDelta}"""
   }
 
-  private def runSample(cores: Int, docs: Long): Sample = {
-    val spark = session(cores)
-    val ld = loadAvg()
-    val cpu0 = processCpuNs()
-    val gc0 = gcMs()
-    val (n, sec) = ScalingJob.run(spark, docs, cores * 6)
-    val cpu1 = processCpuNs()
-    val gc1 = gcMs()
-    spark.stop()
-    // well under 1.0 at high loadavg = the host starved us
-    Sample(cores, n, sec, ld, cpuUtilOf(cpu0, cpu1, sec, cores), gc1 - gc0)
+  /** Times `kg.Main.run` over `docs` synthetic pages on `spark`. The run
+    * writes to a directory that did not exist before the call and is
+    * deleted after it: in a reused one `Stages` would resume and skip
+    * every stage, and the sample would time a read.
+    */
+  def runSample(spark: SparkSession, docs: Long): Sample = {
+    val cores = spark.sparkContext.defaultParallelism
+    val out = java.nio.file.Files.createTempDirectory("graft-bench-scaling").toString
+    try {
+      val ld = loadAvg()
+      val cpu0 = processCpuNs()
+      val gc0 = gcMs()
+      val t0 = System.nanoTime()
+      graft.kg.Main.run(spark, s"synth:$docs", out)
+      val sec = (System.nanoTime() - t0) / 1e9
+      val cpu1 = processCpuNs()
+      val gc1 = gcMs()
+      val stageMs = graft.kg.Main.stageSummary(new graft.kg.Stages(spark, out))
+        .select("stage", "wall_ms").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      // well under 1.0 at high loadavg = the host starved us
+      Sample(cores, sec, stageMs, ld, cpuUtilOf(cpu0, cpu1, sec, cores),
+        gc1 - gc0, out)
+    } finally {
+      val dir = new org.apache.hadoop.fs.Path(out)
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+    }
+  }
+
+  /** The `scaling` JSON of interleaved samples at local[1] and local[4]:
+    * the best sample per level counts, and the efficiency is
+    * `sec_1 / (4 * sec_4)`, whole-pipeline and per stage. A stage's two
+    * times come from those two best samples only, never from mixed runs.
+    */
+  def scalingJson(docs: Long, samples: Seq[Sample]): String = {
+    val byLevel = samples.groupBy(_.cores)
+    val (b1, b4) = (byLevel(1).minBy(_.sec), byLevel(4).minBy(_.sec))
+    val stages = b1.stageMs.keys.toSeq.sorted.map { st =>
+      val (ms1, ms4) = (b1.stageMs(st), b4.stageMs(st))
+      f"""${jsonString(st)}:{"ms_1":$ms1,"ms_4":$ms4,""" +
+        f""""efficiency":${ms1 / (4.0 * ms4)}%.3f}"""
+    }.mkString("{", ",", "}")
+    val samplesJson = Seq(1, 4).map { c =>
+      "\"" + c + "\":" + byLevel(c).map(_.json).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    f"""{"docs":$docs,"n_low":1,"n_high":4,""" +
+      f""""sec_1":${b1.sec}%.3f,"sec_4":${b4.sec}%.3f,""" +
+      f""""efficiency":${b1.sec / (4.0 * b4.sec)}%.3f,""" +
+      f""""stages":$stages,"interleaved":true,"samples":$samplesJson}"""
   }
 
   /** One query-phase measurement with its contention stamps. */
@@ -166,74 +212,32 @@ object Bench {
     // a comma-decimal default locale would render {"load":0,42} and
     // break the machine-readable line (the BENCH_r01 failure class)
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "")
     val cpus = Sessions.defaultCores
-    val scaleDocs = sys.env.getOrElse("SPARK_GRAFT_SCALE_DOCS", "120000").toLong
+    val scaleDocs = sys.env.getOrElse("SPARK_GRAFT_SCALE_DOCS", "1000").toLong
     val doScaling = sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") != "0"
     val doQueries = sys.env.getOrElse("SPARK_GRAFT_QUERY_PHASE", "1") != "0"
+    require(sfDir.nonEmpty || !doQueries, "the query phase reads its tables " +
+      "from SPARK_GRAFT_SF_DIR: set it, or skip the phase with SPARK_GRAFT_QUERY_PHASE=0")
 
-    // ---- phase 1: scaling (same job at N and 4N parallelism) ----
+    // ---- phase 1: scaling (the whole kg.Main pipeline at N and 4N) ----
     // (runs first: fresh JVM state keeps the N/4N comparison clean)
-    // The N->4N gate pair is 1->4: after the kernel's allocation work
-    // the job saturates this single socket's memory bandwidth at
-    // ~500-600k triples/s (~8 cores), so any pair whose upper leg sits
-    // at the ceiling measures the HOST, not the plan — on a real
-    // cluster each executor brings its own socket. 1->4 stays inside
-    // the linear region; the full 1/4/8/32 curve and the saturation
-    // analysis are reported alongside (BASELINE.md).
-    //
-    // ALL levels are sampled INTERLEAVED round-robin (not one level as
-    // a contiguous block): this VM's co-tenant bursts last minutes, so
-    // a blocked level can have every sample poisoned while its
-    // neighbors run clean (BENCH_r01 recorded local[32] at 62 s vs the
-    // quiet-host 2.1 s — with local[1] unchanged — exactly the
-    // contiguous-block failure mode). Best-per-level over interleaved
-    // samples is the standard noise-floor estimate.
+    // The levels are sampled INTERLEAVED, not one level as a contiguous
+    // block: this VM's co-tenant bursts last minutes, so a blocked level
+    // can have every sample poisoned while its neighbour runs clean
+    // (BENCH_r01 recorded one level 30x slow with the other unchanged).
+    // Best-per-level over interleaved samples is the noise-floor estimate.
     val scaling: String = if (!doScaling) "null" else {
-      // JIT warmup at the hottest level (classes are shared across the
-      // local[k] sessions of this JVM)
-      runSample(32, scaleDocs)
-      // Soft time budget: under heavy co-tenant contention a sample can
-      // run 10-30x slow; later ROUNDS (never the first, so every level
-      // keeps >= 1 sample) are skipped rather than risking the driver's
-      // overall timeout nulling the whole bench.
-      val budgetMs = sys.env.getOrElse("SPARK_GRAFT_SCALE_BUDGET_SEC", "480")
-        .toLong * 1000L
-      val t0 = System.currentTimeMillis()
-      // >= 3 interleaved samples at EVERY level (r2's plan gave 8/32
-      // only two, so one contended sample left best-of as the other).
-      // The GATE pair (1, 4) gets a 4th sample round of its own — the
-      // driver judges the gate from one invocation, and a co-tenant
-      // burst that clips a couple of gate-leg samples moved a measured
-      // 0.93-quiet efficiency to 0.787 in one r3 run. The cheap (32, 8)
-      // curve legs come last: the soft budget drops later rounds first.
-      val rounds: Seq[Seq[Int]] =
-        Seq(Seq(32, 8, 4, 1), Seq(32, 8, 4, 1), Seq(32, 8, 4, 1),
-          Seq(4, 1), Seq(32, 8))
-      val samples: Seq[Sample] = rounds.zipWithIndex.flatMap { case (r, i) =>
-        if (i > 0 && System.currentTimeMillis() - t0 > budgetMs) Seq.empty
-        else r.map(c => runSample(c, scaleDocs))
+      def sampleAt(cores: Int): Sample = {
+        val spark = session(cores)
+        try runSample(spark, scaleDocs) finally spark.stop()
       }
-      val byLevel: Map[Int, Seq[Sample]] = samples.groupBy(_.cores)
-      val best: Map[Int, Sample] =
-        byLevel.map { case (c, ss) => c -> ss.minBy(_.sec) }
-      val b1 = best(1); val b4 = best(4); val b8 = best(8); val b32 = best(32)
-      val eff14 = (b4.tps / b1.tps) / 4.0
-      val eff48 = (b8.tps / b4.tps) / 2.0
-      val eff832 = (b32.tps / b8.tps) / 4.0
-      val samplesJson = Seq(1, 4, 8, 32).map { c =>
-        "\"" + c + "\":[" +
-          byLevel(c).map(_.json).mkString(",") + "]"
-      }.mkString("{", ",", "}")
-      f"""{"docs":$scaleDocs,"triples":${b4.triples},""" +
-        f""""tps_1":${b1.tps}%.1f,"sec_1":${b1.sec}%.3f,""" +
-        f""""tps_4":${b4.tps}%.1f,"sec_4":${b4.sec}%.3f,""" +
-        f""""tps_8":${b8.tps}%.1f,"sec_8":${b8.sec}%.3f,""" +
-        f""""tps_32":${b32.tps}%.1f,"sec_32":${b32.sec}%.3f,""" +
-        f""""n_low":1,"n_high":4,"tps_low":${b1.tps}%.1f,"tps_high":${b4.tps}%.1f,""" +
-        f""""efficiency":$eff14%.3f,"efficiency_4_8":$eff48%.3f,""" +
-        f""""efficiency_8_32":$eff832%.3f,""" +
-        f""""interleaved":true,"samples":$samplesJson}"""
+      // local[1] and local[4]: the N and 4N this 4-core host can run.
+      // The first run in a JVM pays JIT and code-generation warm-up,
+      // about 2.5x a warm run; the levels' sessions share that JVM state.
+      sampleAt(4)
+      val samples = Seq.fill(3)(Seq(4, 1)).flatten.map(sampleAt)
+      scalingJson(scaleDocs, samples)
     }
 
     // ---- phase 2: query suite ----

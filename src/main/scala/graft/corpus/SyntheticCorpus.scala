@@ -100,11 +100,9 @@ object SyntheticCorpus {
   }
 
   /** Distributed page generation. */
-  def pages(spark: SparkSession, n: Long, seed: Long = 42L,
-      numPartitions: Int = 0): Dataset[Page] = {
+  def pages(spark: SparkSession, n: Long, seed: Long = 42L): Dataset[Page] = {
     import spark.implicits._
-    val parts = if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism * 4
+    val parts = spark.sparkContext.defaultParallelism * 4
     spark.range(0L, n, 1L, parts).mapPartitions(_.map { id =>
       Page(
         url = urlOf(id),

@@ -198,20 +198,20 @@ object Main {
     val spark = Sessions.session("graft-kg")
     val edges = run(spark, pagesSrc, outDir, tagger)
     val n = edges.count()
-    val perStage = stageSummary(new Stages(spark, outDir))
+    val perStage = stageSummary(new Stages(spark, outDir)).toJSON.collect()
     println(s"""{"edges":$n,"stages":[${perStage.mkString(",")}],"out":"$outDir"}""")
     spark.stop()
   }
 
-  /** One JSON object per stage of the lineage table, ordered by stage:
-    * its output rows, input rows, skipped rows and wall ms.
+  /** One row per stage of the lineage table, ordered by stage: its
+    * output rows, input rows, skipped rows and wall ms.
     */
-  def stageSummary(stages: Stages): Array[String] =
+  def stageSummary(stages: Stages): DataFrame =
     // input_rows, skipped_rows and wall_ms are per-stage values repeated
     // on each of the stage's partition rows; output_rows is per partition
     stages.lineage().groupBy("stage")
       .agg(sum("output_rows").as("output_rows"),
         max("input_rows").as("input_rows"),
         max("skipped_rows").as("skipped_rows"), max("wall_ms").as("wall_ms"))
-      .orderBy("stage").toJSON.collect()
+      .orderBy("stage")
 }

@@ -75,4 +75,44 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(root.get("query_samples").get("a").get(1).get("load").asDouble() == 1.10)
     assert(root.get("self_knn").get("candidate_pairs").asLong() == 12345L)
   }
+
+  test("scalingJson: best sample per level, sec_1 / (4 * sec_4), stages of the best runs") {
+    def sample(cores: Int, sec: Double, stageMs: (String, Long)*) =
+      Bench.Sample(cores, sec, stageMs.toMap, 1.5, 0.9, 7L, "/x")
+    val samples = Seq(
+      sample(4, 4.0, "a" -> 1000L, "b" -> 900L),
+      sample(1, 10.0, "a" -> 4000L, "b" -> 2000L),
+      sample(4, 2.5, "a" -> 500L, "b" -> 1000L),
+      sample(1, 8.0, "a" -> 3000L, "b" -> 1000L),
+      // a slower run with faster stages: its stage times must not mix in
+      sample(4, 3.0, "a" -> 100L, "b" -> 100L))
+    val scaling = mapper.readTree(Bench.scalingJson(120L, samples))
+    assert(scaling.get("docs").asLong() == 120L)
+    assert(scaling.get("n_low").asInt() == 1 && scaling.get("n_high").asInt() == 4)
+    assert(scaling.get("sec_1").asDouble() == 8.0 && scaling.get("sec_4").asDouble() == 2.5)
+    assert(scaling.get("efficiency").asDouble() == 0.8)
+    assert(scaling.get("interleaved").asBoolean())
+    val a = scaling.get("stages").get("a")
+    assert(a.get("ms_1").asLong() == 3000L && a.get("ms_4").asLong() == 500L)
+    assert(a.get("efficiency").asDouble() == 1.5)
+    assert(scaling.get("stages").get("b").get("efficiency").asDouble() == 0.25)
+    val perLevel = scaling.get("samples")
+    assert(perLevel.get("1").size() == 2 && perLevel.get("4").size() == 3)
+    for (f <- Seq("sec", "load", "cpu_util", "gc_ms"))
+      assert(perLevel.get("4").get(0).has(f), f)
+    val line = Bench.jsonLine(Map.empty, Map.empty, "", Bench.scalingJson(120L, samples))
+    assert(mapper.readTree(line).get("scaling").get("efficiency").asDouble() == 0.8)
+  }
+
+  test("runSample: one whole kg.Main run per call, in a fresh dir deleted after") {
+    val spark = TestSpark.spark
+    val runs = Seq.fill(2)(Bench.runSample(spark, 20L))
+    for (s <- runs) {
+      assert(s.stageMs.keySet == Set("sentences", "mentions", "triples",
+        "relations", "links", "nodes", "edges", "entity_rank"))
+      assert(s.cores == spark.sparkContext.defaultParallelism && s.sec > 0)
+      assert(!new java.io.File(s.out).exists, s"${s.out} was left behind")
+    }
+    assert(runs(0).out != runs(1).out, "a reused dir resumes and skips every stage")
+  }
 }

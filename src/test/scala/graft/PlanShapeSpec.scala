@@ -16,7 +16,20 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanShapeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val sfDir = "/root/testdata/sf0.001"
+  // The registry reads ten sf0.001 tables: kgbench/data holds the three
+  // the benchmark needs and src/test/data the other seven. One temp dir
+  // of links gives the queries a single table directory.
+  private lazy val sfDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sf0.001")
+    dir.toFile.deleteOnExit()
+    for (src <- Seq("kgbench/data/sf0.001", "src/test/data/sf0.001");
+         f <- new java.io.File(src).listFiles()) {
+      val link = dir.resolve(f.getName)
+      java.nio.file.Files.createSymbolicLink(link, f.toPath.toAbsolutePath)
+      link.toFile.deleteOnExit()
+    }
+    dir.toString
+  }
 
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, sfDir)

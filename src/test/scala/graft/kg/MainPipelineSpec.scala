@@ -17,7 +17,7 @@ class MainPipelineSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_main_once").toString
     val nDocs = 60L
     val consumed = spark.sparkContext.longAccumulator("pages_consumed")
-    val base = graft.corpus.SyntheticCorpus.pages(spark, nDocs, numPartitions = 4)
+    val base = graft.corpus.SyntheticCorpus.pages(spark, nDocs)
     val instrumented = base.mapPartitions(_.map { p => consumed.add(1); p })
 
     val edges = Main.runPages(spark, instrumented, None,

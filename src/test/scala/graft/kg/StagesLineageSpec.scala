@@ -127,7 +127,7 @@ class StagesLineageSpec extends AnyFunSuite {
     assert(st2.outputRowsOf("old") == 3L)
     assert(st2.outputRowsOf("new") == 4L)
     assert(st2.lineage().count() == lin.count())
-    val summary = Main.stageSummary(st2).toSeq
+    val summary = Main.stageSummary(st2).toJSON.collect().toSeq
     assert(summary.size == 2)
     assert(summary.head.contains(""""stage":"new"""") &&
       summary.head.contains(""""output_rows":4,"input_rows":3,"skipped_rows":-1"""))
