@@ -39,12 +39,13 @@ import graft.spark.Sessions
   *    plus a suite-level flag at >=10%); `self_knn` surfaces the
   *    candidate_pairs skew Observation of a full self k-NN pass over
   *    the sf embeddings;
-  *  - every scaling sample records the host 1-min loadavg, the JVM's
-  *    process-CPU utilization of its core budget, and GC ms — this VM
-  *    shares a host with co-tenants (observed loadavg 3-10 with zero
-  *    processes of ours), and a starved high-core leg shows up as
-  *    low cpu_util at high load, which distinguishes host contention
-  *    from a plan that stopped scaling.
+  *  - every scaling sample records the host 1-min loadavg (this VM
+  *    shares a host with co-tenants: observed loadavg 3-10 with zero
+  *    processes of ours), GC ms, and `cpu_util`: the CPU time of the
+  *    whole JVM process, JIT compiler and GC threads included, divided
+  *    by `sec * cores`. Those threads run beside the task threads, so
+  *    `cpu_util` can exceed 1.0 (local[1] samples read 1.55-2.43 on a
+  *    4-core host) and a starved leg need not read low.
   */
 object Bench {
 
@@ -73,8 +74,9 @@ object Bench {
       case _ => -1L
     }
 
-  /** Utilization of the core budget over a span: 1.0 = all `cores`
-    * busy the whole time; -1 when the JVM can't report CPU time.
+  /** The whole process's CPU seconds over a span (task, JIT and GC
+    * threads alike) per second of `cores`' budget; -1 when the JVM
+    * can't report CPU time.
     */
   private def cpuUtilOf(cpu0: Long, cpu1: Long, sec: Double,
       cores: Int): Double =
@@ -112,7 +114,6 @@ object Bench {
       val stageMs = graft.kg.Main.stageSummary(new graft.kg.Stages(spark, out))
         .select("stage", "wall_ms").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      // well under 1.0 at high loadavg = the host starved us
       Sample(cores, sec, stageMs, ld, cpuUtilOf(cpu0, cpu1, sec, cores),
         gc1 - gc0, out)
     } finally {
@@ -241,124 +242,9 @@ object Bench {
     }
 
     // ---- phase 2: query suite ----
-    val spark = session(cpus)
-    // contention telemetry for the QUERY phase too: scaling samples are
-    // individually stamped, but a co-tenant burst during the suite
-    // (min-of-2 per query can't outlast a multi-minute burst) was only
-    // visible by comparing absolute totals across rounds. load0/load1 +
-    // cpu_util make a poisoned suite self-diagnosing in the JSON.
-    val qLoad0 = loadAvg()
-    val qCpu0 = processCpuNs()
-    val qGc0 = gcMs()
-    val qT0 = System.nanoTime()
-    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
-    // per-query noise telemetry: each sample carries the 1-min loadavg
-    // at its start and its own GC delta, so a burst-inflated number is
-    // self-diagnosing IN the artifact (r4's suite total had to be
-    // explained from suite-level query_env after the fact)
-    val sampleLog = scala.collection.mutable.LinkedHashMap[String, String]()
-    val suspects = scala.collection.mutable.ArrayBuffer[String]()
-    val results = (if (doQueries) SparkEntry.selectedQueries
-      else Map.empty[String, (SparkSession, String) => org.apache.spark.sql.DataFrame])
-      .map { case (name, fn) =>
-      // full materialization: every output row of every column is
-      // produced (toRdd sits above all projections; count() would let
-      // Catalyst prune them)
-      def once(): QSample = {
-        val l0 = loadAvg()
-        val g0 = gcMs()
-        val t0 = System.nanoTime()
-        val sec =
-          try {
-            fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
-            (System.nanoTime() - t0) / 1e9
-          } catch {
-            case e: Throwable =>
-              failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-                .replaceAll("[\"\\\\\n\r\t]", " ").take(160)
-              -1.0
-          }
-        QSample(sec, l0, gcMs() - g0)
-      }
-      // min-of-2 per query (the first run also JIT-warms the query's
-      // code paths), escalating to a THIRD sample when two runs can't
-      // establish a clean floor (needsThird: best-of-two tainted by
-      // load/GC, or the post-warm run slower than warm-up by >1.5x) —
-      // the committed artifact is the judge's primary perf signal and
-      // must be the noise floor or say that it isn't (r5 shipped a
-      // 122.8 s co-tenant-burst suite a quiet rerun measured at 55.3 s).
-      // A failure on one run never discards another run's valid
-      // measurement (the query is `failed` only if every run failed).
-      val s1 = once()
-      val s2 = once()
-      val all = if (needsThird(s1, s2)) Seq(s1, s2, once()) else Seq(s1, s2)
-      sampleLog(name) = all.map(_.json).mkString("[", ",", "]")
-      val bOpt = bestOf(all)
-      val b = bOpt.map(_.sec).getOrElse(-1.0)
-      if (b >= 0) failed.remove(name)
-      // still tainted after escalation: this query's floor is suspect
-      if (bOpt.exists(tainted)) suspects += name
-      name -> b
-    }
-
-    // query_env closes BEFORE the telemetry pass below: wall_sec /
-    // cpu_util / gc_ms diagnose the QUERY SUITE's contention and must
-    // stay comparable across rounds — folding the extra self-kNN pass
-    // in would mis-attribute its cost to co-tenant noise
-    val qSec = (System.nanoTime() - qT0) / 1e9
-    val qCpu1 = processCpuNs()
-    val queryEnv = if (!doQueries) "null" else {
-      val util = cpuUtilOf(qCpu0, qCpu1, qSec, cpus)
-      f"""{"load_start":$qLoad0%.2f,"load_end":${loadAvg()}%.2f,""" +
-        f""""wall_sec":$qSec%.3f,"cpu_util":$util%.3f,""" +
-        f""""gc_ms":${gcMs() - qGc0}}"""
-    }
-
-    // self k-NN skew telemetry surfaced in the bench line: the
-    // candidate_pairs Observation ivfSelfTopK computes at zero extra
-    // shuffle, over the REAL sf embeddings — the number that flags a
-    // degenerate quantizer cell (pairs blowing past n*nprobe*avg_cell)
-    // on a production corpus. One extra pass, not part of any query's
-    // timing or of query_env.
-    val selfKnn: String = if (!doQueries) "null" else
-      try {
-        val obs = new org.apache.spark.sql.Observation("bench_self_knn")
-        // Tables.table, not a hardcoded parquet path: SPARK_GRAFT_SF_DIR
-        // may be a catalog:<ns> reference like every query's t() input
-        val e = graft.io.Tables.table(spark, sfDir, "embeddings")
-          .select("vec_id", "embedding")
-        val t0 = System.nanoTime()
-        // count() (a Dataset action), NOT queryExecution.toRdd: the
-        // Observation's metrics are delivered by the query-execution
-        // listener, which only fires on Dataset actions — executing
-        // the physical RDD directly would leave obs.get blocked
-        // forever
-        val rows = graft.ops.Similarity
-          .ivfSelfTopK(spark, e, k = 5, nlist = 8, nprobe = 2,
-            metrics = Some(obs))
-          .count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val pairs = obs.get("candidate_pairs").asInstanceOf[Long]
-        f"""{"candidate_pairs":$pairs,"result_rows":$rows,"sec":$sec%.3f}"""
-      } catch { case _: Throwable => "null" }
-    spark.stop()
-    val querySamples =
-      if (!doQueries) "null"
-      else sampleLog.map { case (k, v) => jsonString(k) + ":" + v }
-        .mkString("{", ",", "}")
-    // floor_suspect: the self-flag the driver can surface — `suspect`
-    // goes true when >=10% of queries could not establish an untainted
-    // floor even after a third sample; the artifact should then be
-    // read as an upper bound, not the noise floor.
-    val floorSuspect =
-      if (!doQueries) "null"
-      else {
-        val names = suspects.map(jsonString).mkString("[", ",", "]")
-        val flag = suspects.size * 10 >= results.size && suspects.nonEmpty
-        s"""{"suspect":$flag,"suspect_queries":$names}"""
-      }
-    val line = jsonLine(results, failed.toMap, sfDir, scaling, queryEnv,
-      querySamples, selfKnn, floorSuspect)
+    val line =
+      if (doQueries) queryPhase(sfDir, cpus, scaling)
+      else jsonLine(Map.empty, Map.empty, sfDir, scaling)
     // stdout (unprefixed via build.sbt outputStrategy) + file mirror so
     // the driver can machine-read it either way
     println(line)
@@ -366,5 +252,121 @@ object Bench {
       val w = new java.io.PrintWriter("bench_out.json")
       try w.println(line) finally w.close()
     } catch { case _: Throwable => () }
+  }
+
+  /** The query phase on a session of its own at `cpus` cores, stopped
+    * before it returns: the JSON line with per-query seconds, samples,
+    * contention and self-kNN telemetry next to `scaling`.
+    */
+  private def queryPhase(sfDir: String, cpus: Int, scaling: String): String = {
+    val spark = session(cpus)
+    try {
+      // contention telemetry for the QUERY phase too: scaling samples are
+      // individually stamped, but a co-tenant burst during the suite
+      // (min-of-2 per query can't outlast a multi-minute burst) was only
+      // visible by comparing absolute totals across rounds. load0/load1 +
+      // cpu_util make a poisoned suite self-diagnosing in the JSON.
+      val qLoad0 = loadAvg()
+      val qCpu0 = processCpuNs()
+      val qGc0 = gcMs()
+      val qT0 = System.nanoTime()
+      val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+      // per-query noise telemetry: each sample carries the 1-min loadavg
+      // at its start and its own GC delta, so a burst-inflated number is
+      // self-diagnosing IN the artifact (r4's suite total had to be
+      // explained from suite-level query_env after the fact)
+      val sampleLog = scala.collection.mutable.LinkedHashMap[String, String]()
+      val suspects = scala.collection.mutable.ArrayBuffer[String]()
+      val results = SparkEntry.selectedQueries.map { case (name, fn) =>
+        // full materialization: every output row of every column is
+        // produced (toRdd sits above all projections; count() would let
+        // Catalyst prune them)
+        def once(): QSample = {
+          val l0 = loadAvg()
+          val g0 = gcMs()
+          val t0 = System.nanoTime()
+          val sec =
+            try {
+              fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
+              (System.nanoTime() - t0) / 1e9
+            } catch {
+              case e: Throwable =>
+                failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
+                  .replaceAll("[\"\\\\\n\r\t]", " ").take(160)
+                -1.0
+            }
+          QSample(sec, l0, gcMs() - g0)
+        }
+        // min-of-2 per query (the first run also JIT-warms the query's
+        // code paths), escalating to a THIRD sample when two runs can't
+        // establish a clean floor (needsThird: best-of-two tainted by
+        // load/GC, or the post-warm run slower than warm-up by >1.5x) —
+        // the committed artifact is the primary perf signal and must
+        // be the noise floor or say that it isn't (r5 shipped a
+        // 122.8 s co-tenant-burst suite a quiet rerun measured at 55.3 s).
+        // A failure on one run never discards another run's valid
+        // measurement (the query is `failed` only if every run failed).
+        val s1 = once()
+        val s2 = once()
+        val all = if (needsThird(s1, s2)) Seq(s1, s2, once()) else Seq(s1, s2)
+        sampleLog(name) = all.map(_.json).mkString("[", ",", "]")
+        val bOpt = bestOf(all)
+        val b = bOpt.map(_.sec).getOrElse(-1.0)
+        if (b >= 0) failed.remove(name)
+        // still tainted after escalation: this query's floor is suspect
+        if (bOpt.exists(tainted)) suspects += name
+        name -> b
+      }
+
+      // query_env closes BEFORE the telemetry pass below: wall_sec /
+      // cpu_util / gc_ms diagnose the QUERY SUITE's contention and must
+      // stay comparable across rounds — folding the extra self-kNN pass
+      // in would mis-attribute its cost to co-tenant noise
+      val qSec = (System.nanoTime() - qT0) / 1e9
+      val qCpu1 = processCpuNs()
+      val util = cpuUtilOf(qCpu0, qCpu1, qSec, cpus)
+      val queryEnv =
+        f"""{"load_start":$qLoad0%.2f,"load_end":${loadAvg()}%.2f,""" +
+          f""""wall_sec":$qSec%.3f,"cpu_util":$util%.3f,""" +
+          f""""gc_ms":${gcMs() - qGc0}}"""
+
+      // self k-NN skew telemetry surfaced in the bench line: the
+      // candidate_pairs Observation ivfSelfTopK computes at zero extra
+      // shuffle, over the REAL sf embeddings — the number that flags a
+      // degenerate quantizer cell (pairs blowing past n*nprobe*avg_cell)
+      // on a production corpus. One extra pass, not part of any query's
+      // timing or of query_env.
+      val selfKnn: String =
+        try {
+          val obs = new org.apache.spark.sql.Observation("bench_self_knn")
+          // Tables.table, not a hardcoded parquet path: SPARK_GRAFT_SF_DIR
+          // may be a catalog:<ns> reference like every query's t() input
+          val e = graft.io.Tables.table(spark, sfDir, "embeddings")
+            .select("vec_id", "embedding")
+          val t0 = System.nanoTime()
+          // count() (a Dataset action), NOT queryExecution.toRdd: the
+          // Observation's metrics are delivered by the query-execution
+          // listener, which only fires on Dataset actions — executing
+          // the physical RDD directly would leave obs.get blocked
+          // forever
+          val rows = graft.ops.Similarity
+            .ivfSelfTopK(spark, e, k = 5, nlist = 8, nprobe = 2,
+              metrics = Some(obs))
+            .count()
+          val sec = (System.nanoTime() - t0) / 1e9
+          val pairs = obs.get("candidate_pairs").asInstanceOf[Long]
+          f"""{"candidate_pairs":$pairs,"result_rows":$rows,"sec":$sec%.3f}"""
+        } catch { case _: Throwable => "null" }
+      val querySamples = sampleLog.map { case (k, v) => jsonString(k) + ":" + v }
+        .mkString("{", ",", "}")
+      // floor_suspect: the line's own flag — `suspect`
+      // goes true when >=10% of queries could not establish an untainted
+      // floor even after a third sample; the artifact should then be
+      // read as an upper bound, not the noise floor.
+      val names = suspects.map(jsonString).mkString("[", ",", "]")
+      val flag = suspects.size * 10 >= results.size && suspects.nonEmpty
+      jsonLine(results, failed.toMap, sfDir, scaling, queryEnv,
+        querySamples, selfKnn, s"""{"suspect":$flag,"suspect_queries":$names}""")
+    } finally spark.stop()
   }
 }

@@ -1023,12 +1023,12 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // Canonicalization oracled (connected components + salted
-    // canonical election, previously LinkSpec-only): the vocabulary as
-    // a names table, links = consecutive same-first-letter tokens in
-    // sorted order, so every CC is exactly a first-letter group —
-    // closed-form in SQL. Election = max(support, name) per component,
-    // aliases/support aggregated through the salted two-phase path.
+    // Canonicalization oracled (connected components + canonical
+    // election, previously LinkSpec-only): the vocabulary as a names
+    // table, links = consecutive same-first-letter tokens in sorted
+    // order, so every CC is exactly a first-letter group — closed-form
+    // in SQL. Election = max(support, name) per component, aliases and
+    // support aggregated by one groupBy on the component.
     "kg_canonicalize" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val names = t(s, dir, "documents")
@@ -1506,18 +1506,6 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // Bloom-prefiltered decontamination: identical result to
-    // doc_contamination (no false negatives; FPs removed by the exact
-    // confirm join) — shares its oracle SQL verbatim. The Bloom
-    // broadcast is the 100 TB path: corpus grams are filtered BEFORE
-    // any join or shuffle.
-    "doc_bloom_contamination" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.ops.TextAnalysis.bloomContamination(d,
-          d.filter(col("doc_id") % 50 === 0), n = 3)
-        .orderBy("doc_id")
-    }),
-
     // BM25 relevance of every doc against a fixed query-term set
     "doc_bm25" -> ((s, dir) => {
       graft.ops.Ranking.bm25(t(s, dir, "documents"),
@@ -1525,8 +1513,7 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // per-domain rollup via explicit two-stage salted aggregation;
-    // oracle is the plain single GROUP BY (algebraic measures ⇒ exact)
+    // per-domain rollup: one groupBy, the oracle's plain GROUP BY
     "doc_domain_stats" -> ((s, dir) => {
       graft.ops.TextAnalysis.domainStats(t(s, dir, "documents"))
         .orderBy("domain")
@@ -1637,27 +1624,6 @@ object SparkEntry {
     s"""(starts_with($c, 'http') AND regexp_matches($c,
        | '^http[s]?://(?:[a-zA-Z]|[0-9]|[$$-_@.&+]|[!*\\(\\),]|%[0-9a-fA-F][0-9a-fA-F])+'))"""
       .stripMargin.replace("\n", " ")
-
-  /** Shared by doc_contamination and doc_bloom_contamination — the
-    * bloom path is an exact-result optimization, so both queries are
-    * checked against the identical DuckDB replica.
-    */
-  private val contaminationOracle: String =
-    """WITH g AS (
-      |  SELECT doc_id,
-      |    CASE WHEN LEN(STRING_SPLIT(text, ' ')) < 3 THEN [text]
-      |    ELSE LIST_DISTINCT(list_transform(
-      |      generate_series(1, LEN(STRING_SPLIT(text, ' ')) - 2),
-      |      i -> array_to_string((STRING_SPLIT(text, ' '))[i:i+2], ' ')))
-      |    END AS grams
-      |  FROM documents),
-      |b AS (SELECT DISTINCT UNNEST(grams) AS gram FROM g
-      |      WHERE doc_id % 50 = 0),
-      |bl AS (SELECT LIST(gram) AS bset FROM b)
-      |SELECT g.doc_id,
-      |  CAST(COALESCE(LEN(LIST_INTERSECT(g.grams, bl.bset)), 0) AS BIGINT)
-      |    AS n_shared_grams
-      |FROM g CROSS JOIN bl ORDER BY doc_id""".stripMargin
 
   /** Token co-occurrence edge CTE shared by the graph-analytics
     * oracles — DuckDB's list_zip/slice replica of GraphOps.bigramEdges'
@@ -2431,10 +2397,22 @@ object SparkEntry {
         |       THEN 'val'
         |       ELSE 'test' END AS split
         |FROM documents ORDER BY doc_id""".stripMargin,
-    "doc_contamination" -> contaminationOracle,
-    // bloom prefilter + exact confirm ≡ exact contamination (no false
-    // negatives; FPs confirmed away) — same oracle by construction
-    "doc_bloom_contamination" -> contaminationOracle,
+    "doc_contamination" ->
+      """WITH g AS (
+        |  SELECT doc_id,
+        |    CASE WHEN LEN(STRING_SPLIT(text, ' ')) < 3 THEN [text]
+        |    ELSE LIST_DISTINCT(list_transform(
+        |      generate_series(1, LEN(STRING_SPLIT(text, ' ')) - 2),
+        |      i -> array_to_string((STRING_SPLIT(text, ' '))[i:i+2], ' ')))
+        |    END AS grams
+        |  FROM documents),
+        |b AS (SELECT DISTINCT UNNEST(grams) AS gram FROM g
+        |      WHERE doc_id % 50 = 0),
+        |bl AS (SELECT LIST(gram) AS bset FROM b)
+        |SELECT g.doc_id,
+        |  CAST(COALESCE(LEN(LIST_INTERSECT(g.grams, bl.bset)), 0) AS BIGINT)
+        |    AS n_shared_grams
+        |FROM g CROSS JOIN bl ORDER BY doc_id""".stripMargin,
     "doc_pii_redact" ->
       """WITH toks AS (
         |  SELECT doc_id,

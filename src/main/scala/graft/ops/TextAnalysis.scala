@@ -304,81 +304,20 @@ object TextAnalysis {
         col("avg_logp"))
   }
 
-  /** [[contamination]] with a Bloom prefilter — the 100 TB shape when
-    * even the exploded doc-gram stream is too wide to semi-join raw: a
-    * Bloom filter over the benchmark grams (one aggregation job; MBs
-    * for an eval-set-sized input at fpp 0.01) broadcasts, and the
-    * corpus-side gram stream is filtered through `mightContain` BEFORE
-    * any join, cutting the join input to true hits + an fpp-sized
-    * trickle of false positives. Those FPs are then removed by the
-    * exact confirm semi-join against the real gram set, so the result
-    * is IDENTICAL to [[contamination]] (Bloom filters have no false
-    * negatives) — `doc_bloom_contamination` shares doc_contamination's
-    * oracle SQL verbatim.
-    */
-  def bloomContamination(docs: DataFrame,
-      benchmark: DataFrame, n: Int = 3): DataFrame = {
-    val bset = benchmark
-      .select(explode(Dedup.ngramSet(col("text"), n)).as("gram"))
-      .distinct()
-      .localCheckpoint(true)
-    // expectedNumItems from the checkpointed blocks — a cheap count,
-    // no gram-pipeline re-execution
-    val nGrams = math.max(bset.count(), 1L)
-    // the filter is built over xxhash64(gram) longs and probed through
-    // Spark's OWN BloomFilterMightContain expression (the runtime-
-    // filter class AQE injects; GraftFunctions builds it as
-    // bloom_might_contain) — the per-gram hot path stays inside
-    // codegen; the serialized blob rides the plan as a foldable binary
-    // literal exactly like an AQE-injected runtime filter
-    val bf = bset.select(xxhash64(col("gram")).as("h"))
-      .stat.bloomFilter("h", nGrams, 0.01)
-    val blob = {
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      bos.toByteArray
-    }
-    val cand = docs
-      .select(col("doc_id"),
-        explode(Dedup.ngramSet(col("text"), n)).as("gram"))
-      .filter(GraftFunctions.column("bloom_might_contain", lit(blob),
-        xxhash64(col("gram"))))
-    val hits = cand.join(broadcast(bset), Seq("gram"), "left_semi")
-      .groupBy("doc_id").agg(count(lit(1)).as("n_shared_grams"))
-    docs.select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_shared_grams"), lit(0L)).as("n_shared_grams"))
-  }
-
   /** Per-domain corpus rollup (docs, chars, tokens, length extremes) of
-    * the `source` column as an EXPLICIT two-stage salted aggregation:
-    * stage 1 aggregates on (domain, doc_id mod 8) — a crawl's hot
-    * domains (a handful of hosts owning double-digit corpus percentages
-    * is the norm) fan out over 8 reducers — stage 2 merges the ≤ 8
-    * partial rows per domain.
-    * All measures are algebraic (sum/count/min/max of longs), so the
-    * two-stage split is exact; the oracle is the plain single GROUP BY.
-    *
-    * (Spark's own partial aggregation gives map-side combining already;
-    * the salt guards the REDUCE side, where one domain otherwise lands
-    * on one reducer regardless of combiners — the same pattern the
-    * canonicalization alias-merge uses.)
+    * the `source` column: one `groupBy`. Every measure is algebraic
+    * (count, sum, min, max of longs), so Spark's partial aggregation
+    * combines each map task's rows before the exchange and a hot domain
+    * sends at most one partial row per map task to its reducer.
     */
   def domainStats(docs: DataFrame): DataFrame = {
-    val nTok = size(split(col("text"), " ")).cast("long")
     val len = length(col("text")).cast("long")
-    val partial = docs
-      .withColumn("__salt", pmod(col("doc_id").cast("long"), lit(8)))
-      .groupBy(col("source").as("domain"), col("__salt"))
-      .agg(count(lit(1)).as("n"), sum(len).as("chars"),
-        sum(nTok).as("toks"), min(len).as("mn"), max(len).as("mx"))
-    partial.groupBy("domain")
-      .agg(sum(col("n")).as("n_docs"),
-        sum(col("chars")).as("n_chars"),
-        sum(col("toks")).as("n_tokens"),
-        min(col("mn")).as("min_len"),
-        max(col("mx")).as("max_len"))
+    docs.groupBy(col("source").as("domain"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(len).as("n_chars"),
+        sum(size(split(col("text"), " ")).cast("long")).as("n_tokens"),
+        min(len).as("min_len"),
+        max(len).as("max_len"))
   }
 
   /** Deterministic stratified sampling: per-stratum keep rates applied

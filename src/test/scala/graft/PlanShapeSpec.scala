@@ -180,7 +180,7 @@ class PlanShapeSpec extends AnyFunSuite {
     docs.select(graft.ops.TextAnalysis.fingerprint(col("text"))).collect()
     assert(graft.ops.Dedup.minhashLshPairs(docs).count() == 1)
     graft.ops.Similarity.lshTopK(vecs, vecs, k = 1).collect()
-    graft.ops.TextAnalysis.bloomContamination(docs, docs.limit(1)).collect()
+    graft.ops.TextAnalysis.contamination(docs, docs.limit(1)).collect()
     val mine = s.sql("SELECT canonical_url('http://b.com'), fnv1a64('x')").head()
     assert(mine.getString(0) == "mine" && mine.getLong(1) == 7L,
       s"a library call replaced the caller's functions: $mine")
@@ -213,16 +213,19 @@ class PlanShapeSpec extends AnyFunSuite {
       s"LPA plan grew a window operator:\n$plan")
   }
 
-  test("doc_bloom_contamination: bloom prefilter sits before the confirm join") {
-    val plan = planOf("doc_bloom_contamination")
-    // confirm semi-join must be broadcast (benchmark side is bounded)
+  test("doc_contamination: benchmark grams broadcast into the semi-join") {
+    val plan = planOf("doc_contamination")
+    // the benchmark gram set is under the cap, so the semi-join
+    // broadcasts it and the corpus grams never shuffle for the join
     assert(plan.contains("BroadcastExchange"),
-      s"exact-confirm side must broadcast:\n$plan")
-    // the prefilter runs through Spark's native BloomFilterMightContain
-    // (codegen), never a Scala UDF
-    assert(plan.contains("might_contain"),
-      s"bloom prefilter disappeared from the plan:\n$plan")
+      s"benchmark gram side must broadcast:\n$plan")
     assert(!plan.contains("ScalaUDF"),
-      s"bloom prefilter regressed to a Scala UDF:\n$plan")
+      s"contamination regressed to a Scala UDF:\n$plan")
+  }
+
+  test("every registry query has a DuckDB oracle and every oracle a query") {
+    // tools/check_oracle.py iterates the oracle keys, so a query with
+    // no oracle would go unchecked without a word
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 }

@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.TestSpark
 
 /** Round-6 pipeline operators: MERGE-style upsert row semantics, BM25
-  * scoring against a closed-form fixture, Bloom-prefiltered
-  * decontamination equivalence, salted domain rollup equivalence, and
-  * stratified-sample determinism.
+  * scoring against a closed-form fixture, domain rollup equivalence,
+  * and stratified-sample determinism.
   */
 class MergeRankingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -109,26 +108,12 @@ class MergeRankingSpec extends AnyFunSuite {
     assert(!out.contains(3L))
   }
 
-  test("bloomContamination ≡ contamination (exact result; bloom is a prefilter)") {
-    import spark.implicits._
-    val docs = Seq(
-      (0L, "a b c d e"), (1L, "c d e f g"), (2L, "x y z w q"),
-      (3L, "a b"), (4L, "")).toDF("doc_id", "text")
-    val bench = Seq((100L, "c d e")).toDF("doc_id", "text")
-    val exact = TextAnalysis.contamination(docs, bench, n = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val bloom = TextAnalysis.bloomContamination(docs, bench, n = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(bloom === exact)
-    assert(exact(0L) === 1L && exact(1L) === 1L && exact(2L) === 0L)
-  }
-
-  test("domainStats: salted two-stage rollup equals the plain groupBy") {
+  test("domainStats: rollup equals the plain groupBy") {
     import spark.implicits._
     val docs = (0L until 200L).map(i =>
         (i, ("tok " * (i % 7 + 1).toInt).trim, s"d${i % 3}"))
       .toDF("doc_id", "text", "source")
-    val salted = TextAnalysis.domainStats(docs)
+    val got = TextAnalysis.domainStats(docs)
       .collect().map(r => (r.getString(0),
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
       .toMap
@@ -140,7 +125,7 @@ class MergeRankingSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0),
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
       .toMap
-    assert(salted === plain)
+    assert(got === plain)
   }
 
   test("semanticDedup: transitive chain elects one min-id keeper; uniques and nulls keep themselves") {
