@@ -1147,39 +1147,6 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // Transformer-branch kernels oracled end-to-end (models/attention
-    // .py:47-98,189-290 formulas; the reference's own transformer
-    // branch is dead code, so this is formula-parity integration):
-    // token vectors [1, 1000*plant] + elementwise-masked sinusoidal
-    // pos encodings, identity-projected 2-head self-attention. The
-    // plant channel saturates (non-plant keys are exactly 0 -> key-
-    // masked; non-plant queries are 0 -> post-softmax zeroed), so the
-    // post-residual layer norm sends plants to +1 and everything else
-    // to -1 on channel 1 — counts equal the kg_bilstm_decode position
-    // formula.
-    "kg_transformer_decode" -> ((s, dir) => {
-      import s.implicits._
-      import graft.tag.{Attention, Transformer}
-      val dense = Attention.Dense(
-        Array(Array(1f, 0f), Array(0f, 1f)), Array(0f, 0f))
-      val gamma = Array(1.0, 1.0); val beta = Array(0.0, 0.0)
-      graft.spark.Scans.spread(t(s, dir, "documents")
-        .select(col("doc_id"), col("text")), col("doc_id"))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          val n = text.split(" ").length
-          val inputs: Array[Array[Double]] = Array.tabulate(n)(i =>
-            Array(1.0, if (i % 13 == 7) 1000.0 else 0.0))
-          val pe = Transformer.posEmbeddings(inputs, maxlen = 1 << 20)
-          val x = Array.tabulate(n)(t0 =>
-            Array(inputs(t0)(0) + pe(t0)(0), inputs(t0)(1) + pe(t0)(1)))
-          val out = Transformer.multiHeadAttention(x, dense, 2, gamma, beta)
-          (id, out.count(_(1) > 0.0).toLong)
-        }
-        .toDF("doc_id", "n_entity_tags")
-        .orderBy("doc_id")
-    }),
-
     // S1 WARC source oracled end-to-end: documents -> WARC response
     // records (HTTP head + Content-Length framing) -> Warc record
     // parser -> pages -> the full DOM extraction kernel; per-doc token
@@ -1218,23 +1185,6 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // The extraction kernel itself, oracle-checked: documents wrapped in
-    // a fixed HTML skeleton -> full parse+tokenize kernel -> per-doc
-    // token count and reconstructed text must equal DuckDB's whitespace
-    // split of the original text (P1-P3 end-to-end).
-    "kg_extract_parity" -> ((s, dir) => {
-      import s.implicits._
-      val pages = graft.corpus.SynthPages.fromDocuments(s, t(s, dir, "documents"))
-      val sents = graft.spark.ExtractStage.sentences(s, pages)
-      sents.filter(sr => sr.feats.nonEmpty && sr.feats.head(11) == "div.body")
-        .map(sr => (
-          sr.url.substring(sr.url.lastIndexOf('/') + 1).toLong,
-          sr.tkns.length.toLong,
-          sr.tkns.mkString(" ")))
-        .toDF("doc_id", "n_tokens", "text_rebuilt")
-        .orderBy("doc_id")
-    }),
-
     // §2.8 streaming <-> batch dedup equivalence, oracled: the corpus
     // replayed as doc_id-ordered micro-batches through the keyed-state
     // first-seen CONTENT dedup (Monitors.firstSeenByContent,
@@ -1244,8 +1194,7 @@ object SparkEntry {
     // id ranges), so "first observed" and "min (warc_ts, url)" agree
     // and the result is deterministic. The driver-side collect is the
     // REPLAY HARNESS ONLY, bounded by the sf corpus (MemoryStream is
-    // the only way to pin cross-micro-batch arrival order;
-    // stream_first_seen_files below replays from a file source).
+    // the only way to pin cross-micro-batch arrival order).
     "stream_first_seen" -> ((s, dir) => {
       import s.implicits._
       val rows: Array[(Long, String)] = t(s, dir, "documents")
@@ -1281,83 +1230,6 @@ object SparkEntry {
         .select(substring_index(col("url"), "/", -1).cast("long")
           .as("doc_id"))
         .orderBy("doc_id")
-    }),
-
-    // §2.8 the file-source replay of the same keyed-state first-seen
-    // dedup: a FILE SOURCE (the crawl-drop shape) — documents spooled
-    // as ascending doc_id-range parquet chunks with ascending mtimes,
-    // consumed with maxFilesPerTrigger=1 under Trigger.AvailableNow —
-    // NOTHING ever collects to the driver, unlike the MemoryStream
-    // harness above.
-    // Result is batching-placement-independent by construction: the
-    // within-batch winner is min (warc_ts, url) and warc_ts encodes
-    // doc_id, so however Spark buckets the files into micro-batches
-    // the emitted set is exactly min doc_id per distinct text — the
-    // same oracle as stream_first_seen.
-    "stream_first_seen_files" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_sff").toFile
-      val inDir = new java.io.File(base, "in"); inDir.mkdirs()
-      try {
-        val docs = t(s, dir, "documents")
-        val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
-        val chunks = 5
-        val chunkCol = least(floor(col("doc_id") * chunks / (mx + 1)),
-          lit(chunks - 1))
-        // (r8 perf) spool all chunk files in ONE partitioned write
-        // instead of `chunks` filter+coalesce jobs that each re-scan
-        // the docs table (guide §2.4: one pass, not five). Each chunk
-        // value lands wholly in one task (repartition on the chunk
-        // key), so partitionBy emits exactly one file per chunk; the
-        // per-chunk move + ascending mtimes are unchanged, so the
-        // micro-batch sequence the file source sees is identical.
-        val tmp = new java.io.File(base, "tmp")
-        docs.select(
-            concat(lit("doc://"), col("doc_id")).as("url"),
-            timestamp_seconds(col("doc_id")).as("warc_ts"),
-            lit(Array.emptyByteArray).as("html"),
-            col("text"), lit("en").as("lang"),
-            chunkCol.cast("int").as("chunk"))
-          .repartition(col("chunk"))
-          .write.mode("overwrite").partitionBy("chunk")
-          .parquet(tmp.getAbsolutePath)
-        for (i <- 0 until chunks) {
-          val cdir = new java.io.File(tmp, s"chunk=$i")
-          val part = Option(cdir.listFiles()).flatMap(_.find(f =>
-            f.getName.startsWith("part-") && f.getName.endsWith(".parquet")))
-            .getOrElse(sys.error(s"no parquet part written for chunk $i"))
-          val dest = new java.io.File(inDir, f"chunk$i%02d.parquet")
-          java.nio.file.Files.move(part.toPath, dest.toPath)
-          dest.setLastModified(1700000000000L + i * 60000L)
-        }
-        // state-store partitions sized to the stream volume, as in
-        // stream_first_seen (the partitionBy write drops the `chunk`
-        // column from the files, so the Page schema below still holds)
-        val ss = streamSession(s, mx + 1)
-        import ss.implicits._
-        val pages = ss.readStream
-          .schema(org.apache.spark.sql.Encoders.product[graft.spark.Page].schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir.getAbsolutePath)
-          .as[graft.spark.Page]
-        val name = "stream_first_seen_files_" + streamSeq.incrementAndGet()
-        val q = graft.streaming.Monitors
-          .firstSeenByContent(ss, pages)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        ss.table(name)
-          .select(substring_index(col("url"), "/", -1).cast("long")
-            .as("doc_id"))
-          .orderBy("doc_id")
-      } finally {
-        // memory sink rows live in memory; the spool dir can go
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(base)
-      }
     }),
 
     // ---- graph analytics over the materialized KG (GraphOps) ----
@@ -1569,19 +1441,19 @@ object SparkEntry {
   // (Bench runs every query 2-3 times)
   private val streamSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Cloned session for the streaming queries with the shuffle-partition
+  /** Cloned session for `stream_first_seen` with the shuffle-partition
     * count — which fixes the stateful query's STATE-STORE partition
     * count for its whole life — sized to the stream's data volume
     * instead of inherited from the batch engine's parallelism default.
     *
     * Scale policy (guide §2.2 applied to streaming state): one state
     * partition per ~1000 in-flight rows, floored at 1 and capped at the
-    * context's default parallelism. Both streaming queries write to a
-    * memory sink with no durable checkpoint, so the count is derived
-    * afresh on every run. At the suite's 500-row replay the old
-    * inherited 32 partitions meant 32 state-store commits per
-    * micro-batch — 160 near-empty store files per run whose fsync/commit
-    * latency, not computation, dominated both streaming queries.
+    * context's default parallelism. The query writes to a memory sink
+    * with no durable checkpoint, so the count is derived afresh on
+    * every run. At the suite's 500-row replay the old inherited 32
+    * partitions meant 32 state-store commits per micro-batch — 160
+    * near-empty store files per run whose fsync/commit latency, not
+    * computation, dominated the streaming query.
     */
   private def streamSession(s: SparkSession, rows: Long): SparkSession = {
     val ss = s.newSession()
@@ -2252,14 +2124,6 @@ object SparkEntry {
         |       THEN (LEN(STRING_SPLIT(text, ' ')) - 8) // 13 + 1
         |       ELSE 0 END AS BIGINT) AS n_entity_tags
         |FROM documents ORDER BY doc_id""".stripMargin,
-    // Saturating-plant closed form again: the masked transformer stack
-    // sends exactly the i % 13 == 7 plants to +1 on channel 1.
-    "kg_transformer_decode" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN LEN(STRING_SPLIT(text, ' ')) >= 8
-        |       THEN (LEN(STRING_SPLIT(text, ' ')) - 8) // 13 + 1
-        |       ELSE 0 END AS BIGINT) AS n_entity_tags
-        |FROM documents ORDER BY doc_id""".stripMargin,
     "kg_mention_counts" ->
       """SELECT doc_id,
         |  CAST((LEN(STRING_SPLIT(text, ' ')) - 7) // 31 + 1 AS BIGINT) AS n_mentions,
@@ -2347,18 +2211,6 @@ object SparkEntry {
         |    PARTITION BY MD5(COALESCE(text, '')) ORDER BY doc_id) AS rn
         |  FROM documents)
         |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    // identical semantics through the file-source production shape
-    "stream_first_seen_files" ->
-      """SELECT doc_id FROM (
-        |  SELECT doc_id, ROW_NUMBER() OVER (
-        |    PARTITION BY MD5(COALESCE(text, '')) ORDER BY doc_id) AS rn
-        |  FROM documents)
-        |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    "kg_extract_parity" ->
-      """SELECT doc_id,
-        |CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT) AS n_tokens,
-        |text AS text_rebuilt
-        |FROM documents ORDER BY doc_id""".stripMargin,
     "doc_dedup_clusters" ->
       """SELECT doc_id, keeper FROM (
         |  SELECT doc_id, doc_id AS keeper FROM documents

@@ -3,10 +3,10 @@ package graft.io
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.spark.SentenceRow
 
-/** CoNLL text codec (SURVEY §2.1 S4/S9): reads the reference's
+/** CoNLL text reader (SURVEY §2.1 S4): reads the reference's
   * 15-column token files into [[SentenceRow]]s (keeping the file's
   * feature strings, including the gazetteer columns the extractor can't
-  * reproduce), and writes `word gold pred` prediction files.
+  * reproduce).
   *
   * Files are read at file granularity (`wholeTextFiles`) — sentences
   * span lines, so line-level splits would break blocks; the reference
@@ -60,20 +60,5 @@ object ConllCodec {
         }
       }
     }.toDS()
-  }
-
-  /** Serialize prediction triples `word gold pred` with a blank line per
-    * sentence (models/estimator.py:151-159).
-    */
-  def predsText(sents: Seq[(Seq[String], Seq[String], Seq[String])]): String = {
-    val sb = new StringBuilder
-    sents.foreach { case (words, gold, pred) =>
-      words.indices.foreach { i =>
-        sb.append(words(i)).append(' ').append(gold(i)).append(' ')
-          .append(pred(i)).append('\n')
-      }
-      sb.append('\n')
-    }
-    sb.toString
   }
 }

@@ -56,15 +56,4 @@ object CrfScorer {
     while (i > 0) { out(i - 1) = ptr(i)(out(i)); i -= 1 }
     out
   }
-
-  /** Path score for tests: sum of unary logits + transitions. */
-  def pathScore(logits: Array[Array[Double]],
-      transition: Array[Array[Double]], labels: Seq[Int]): Double = {
-    var s = 0.0
-    labels.indices.foreach { i =>
-      s += logits(i)(labels(i))
-      if (i > 0) s += transition(labels(i - 1))(labels(i))
-    }
-    s
-  }
 }

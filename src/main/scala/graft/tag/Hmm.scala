@@ -154,21 +154,6 @@ object Hmm {
       .map { case (s, y, c) => (s, y) -> c }.toMap
   }
 
-  def idxToStates(idx: Int, timeSteps: Int): Seq[Int] = {
-    val out = new Array[Int](timeSteps)
-    var rem = idx
-    var mult = math.pow(NumLabels, timeSteps - 1).toInt
-    var i = 0
-    while (i < timeSteps) {
-      out(i) = rem / mult
-      rem %= mult
-      mult /= NumLabels
-      if (mult == 0) mult = 1
-      i += 1
-    }
-    out.toSeq
-  }
-
   def statesToIdx(states: Seq[Int]): Int = {
     var acc = 0
     var mult = 1

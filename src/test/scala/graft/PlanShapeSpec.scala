@@ -228,4 +228,23 @@ class PlanShapeSpec extends AnyFunSuite {
     // no oracle would go unchecked without a word
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
+
+  test("no two oracles share one SQL text, except the named twin pairs") {
+    // Two queries with one oracle text return the same rows. Each pair
+    // below stays because its two queries run different kernels:
+    // IVF vs SRP-LSH search (planted and exhaustive modes), and the
+    // Bi-LSTM-CRF vs the attention stack.
+    val allowed = Set(
+      Set("ann_ivf_exhaustive_topk", "ann_lsh_exhaustive_topk"),
+      Set("ann_ivf_plant_top1", "ann_lsh_plant_top1"),
+      Set("kg_attention_decode", "kg_bilstm_decode"))
+    val shared = SparkEntry.oracleSql.groupBy(_._2).values
+      .flatMap(_.keys.toSeq.sorted.combinations(2).map(_.toSet)).toSet
+    val unlisted = (shared -- allowed).map(_.toSeq.sorted.mkString(" = "))
+    assert(unlisted.isEmpty,
+      s"queries share one oracle text: ${unlisted.toSeq.sorted.mkString("; ")}")
+    val stale = (allowed -- shared).map(_.toSeq.sorted.mkString(" = "))
+    assert(stale.isEmpty,
+      s"allow-listed pairs no longer share an oracle: ${stale.toSeq.sorted.mkString("; ")}")
+  }
 }

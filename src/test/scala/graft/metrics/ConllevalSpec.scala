@@ -15,6 +15,21 @@ class ConllevalSpec extends AnyFunSuite {
 
   val conlleval = Paths.get("/root/reference/conlleval")
 
+  /** Serialize prediction triples `word gold pred` with a blank line per
+    * sentence (models/estimator.py:151-159), the scorer's input format.
+    */
+  def predsText(sents: Seq[(Seq[String], Seq[String], Seq[String])]): String = {
+    val sb = new StringBuilder
+    sents.foreach { case (words, gold, pred) =>
+      words.indices.foreach { i =>
+        sb.append(words(i)).append(' ').append(gold(i)).append(' ')
+          .append(pred(i)).append('\n')
+      }
+      sb.append('\n')
+    }
+    sb.toString
+  }
+
   test("SpanMetrics agrees with the official conlleval scorer") {
     assume(Files.exists(conlleval), "conlleval not present")
     assume(new java.io.File("/usr/bin/perl").exists, "perl not present")
@@ -25,7 +40,7 @@ class ConllevalSpec extends AnyFunSuite {
       val model = Hmm.fit(spark, train, timeSteps = 1, useFeatures = true)
 
       val decoded = Hmm.predict(spark, model, test).collect()
-      val triplesTxt = ConllCodec.predsText(decoded.map { case (s, pred) =>
+      val triplesTxt = predsText(decoded.map { case (s, pred) =>
         (s.tkns, s.bio, pred.map(Hmm.Labels(_)): Seq[String])
       }.toSeq)
 

@@ -1,11 +1,10 @@
 package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.TestSpark
 
 /** Round-6 pipeline operators: MERGE-style upsert row semantics, BM25
-  * scoring against a closed-form fixture, domain rollup equivalence,
+  * scoring against a closed-form fixture, hand-computed domain rollup rows,
   * and stratified-sample determinism.
   */
 class MergeRankingSpec extends AnyFunSuite {
@@ -108,24 +107,25 @@ class MergeRankingSpec extends AnyFunSuite {
     assert(!out.contains(3L))
   }
 
-  test("domainStats: rollup equals the plain groupBy") {
+  test("domainStats: hand-computed rows for a fixed frame") {
     import spark.implicits._
-    val docs = (0L until 200L).map(i =>
-        (i, ("tok " * (i % 7 + 1).toInt).trim, s"d${i % 3}"))
+    // lengths count characters, not bytes ("\u00e9" is 1); tokens are
+    // single-space split parts, so a double space adds an empty token
+    val docs = Seq(
+        (1L, "a bb ccc", "x.org"),    // 8 chars, 3 tokens
+        (2L, "dddd", "x.org"),        // 4 chars, 1 token
+        (3L, "e  f", "x.org"),        // 4 chars, 3 tokens
+        (4L, "hello world", "y.net"), // 11 chars, 2 tokens
+        (5L, "\u00e9", "y.net"))      // 1 char, 1 token
       .toDF("doc_id", "text", "source")
-    val got = TextAnalysis.domainStats(docs)
-      .collect().map(r => (r.getString(0),
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
-      .toMap
-    val plain = docs.groupBy(col("source").as("domain"))
-      .agg(count(lit(1)), sum(length(col("text")).cast("long")),
-        sum(size(split(col("text"), " ")).cast("long")),
-        min(length(col("text")).cast("long")),
-        max(length(col("text")).cast("long")))
-      .collect().map(r => (r.getString(0),
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
-      .toMap
-    assert(got === plain)
+    val out = TextAnalysis.domainStats(docs)
+    assert(out.columns.toSeq ===
+      Seq("domain", "n_docs", "n_chars", "n_tokens", "min_len", "max_len"))
+    val got = out.collect().map(r => (r.getString(0), r.getLong(1),
+      r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toSet
+    assert(got === Set(
+      ("x.org", 3L, 16L, 7L, 4L, 8L),
+      ("y.net", 2L, 12L, 3L, 1L, 11L)))
   }
 
   test("semanticDedup: transitive chain elects one min-id keeper; uniques and nulls keep themselves") {

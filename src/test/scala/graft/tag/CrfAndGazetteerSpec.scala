@@ -10,6 +10,17 @@ import graft.extract.{Extractor, Gazetteers, HtmlToken}
   */
 class CrfSpec extends AnyFunSuite {
 
+  /** Path score: sum of unary logits + transitions. */
+  def pathScore(logits: Array[Array[Double]],
+      transition: Array[Array[Double]], labels: Seq[Int]): Double = {
+    var s = 0.0
+    labels.indices.foreach { i =>
+      s += logits(i)(labels(i))
+      if (i > 0) s += transition(labels(i - 1))(labels(i))
+    }
+    s
+  }
+
   def allSeqs(n: Int, k: Int): Seq[Seq[Int]] =
     if (n == 0) Seq(Seq.empty)
     else allSeqs(n - 1, k).flatMap(s => (0 until k).map(s :+ _))
@@ -21,8 +32,8 @@ class CrfSpec extends AnyFunSuite {
       val logits = Array.fill(n, 3)(rng.nextDouble() * 10 - 5)
       val trans = Array.fill(3, 3)(rng.nextDouble() * 4 - 2)
       val got = CrfScorer.viterbiDecode(logits, trans).toSeq
-      val gotScore = CrfScorer.pathScore(logits, trans, got)
-      val best = allSeqs(n, 3).map(s => CrfScorer.pathScore(logits, trans, s)).max
+      val gotScore = pathScore(logits, trans, got)
+      val best = allSeqs(n, 3).map(s => pathScore(logits, trans, s)).max
       assert(gotScore == best)
     }
   }

@@ -46,6 +46,24 @@ class HmmSpec extends AnyFunSuite {
     score
   }
 
+  /** Inverse of [[Hmm.statesToIdx]]: the radix-3 digits of `idx`, most
+    * significant (oldest label) first.
+    */
+  def idxToStates(idx: Int, timeSteps: Int): Seq[Int] = {
+    val out = new Array[Int](timeSteps)
+    var rem = idx
+    var mult = math.pow(Hmm.NumLabels, timeSteps - 1).toInt
+    var i = 0
+    while (i < timeSteps) {
+      out(i) = rem / mult
+      rem %= mult
+      mult /= Hmm.NumLabels
+      if (mult == 0) mult = 1
+      i += 1
+    }
+    out.toSeq
+  }
+
   def allSeqs(n: Int): Seq[Seq[Int]] =
     if (n == 0) Seq(Seq.empty)
     else allSeqs(n - 1).flatMap(s => (0 until 3).map(s :+ _))
@@ -68,7 +86,7 @@ class HmmSpec extends AnyFunSuite {
 
   test("state radix round-trip") {
     for (t <- 1 to 3; idx <- 0 until math.pow(3, t).toInt) {
-      assert(Hmm.statesToIdx(Hmm.idxToStates(idx, t)) == idx)
+      assert(Hmm.statesToIdx(idxToStates(idx, t)) == idx)
     }
   }
 
