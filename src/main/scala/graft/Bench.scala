@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.spark.Sessions
+import scala.util.control.NonFatal
 
 /** Driver-run benchmark: per-query seconds over the tables at
   * SPARK_GRAFT_SF_DIR, plus the north-rule scaling evidence — the whole
@@ -60,7 +61,7 @@ object Bench {
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.mkString.split(" ")(0).toDouble finally src.close()
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
 
   private def gcMs(): Long = {
     import scala.jdk.CollectionConverters._
@@ -251,7 +252,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter("bench_out.json")
       try w.println(line) finally w.close()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
   }
 
   /** The query phase on a session of its own at `cpus` cores, stopped
@@ -290,7 +291,7 @@ object Bench {
               fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
               (System.nanoTime() - t0) / 1e9
             } catch {
-              case e: Throwable =>
+              case NonFatal(e) =>
                 failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
                   .replaceAll("[\"\\\\\n\r\t]", " ").take(160)
                 -1.0
@@ -356,7 +357,7 @@ object Bench {
           val sec = (System.nanoTime() - t0) / 1e9
           val pairs = obs.get("candidate_pairs").asInstanceOf[Long]
           f"""{"candidate_pairs":$pairs,"result_rows":$rows,"sec":$sec%.3f}"""
-        } catch { case _: Throwable => "null" }
+        } catch { case NonFatal(_) => "null" }
       val querySamples = sampleLog.map { case (k, v) => jsonString(k) + ":" + v }
         .mkString("{", ",", "}")
       // floor_suspect: the line's own flag — `suspect`

@@ -1,6 +1,7 @@
 package graft
 import graft.spark.Sessions
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,7 +12,7 @@ object Verify {
     SparkEntry.selectedQueries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

@@ -99,6 +99,20 @@ object Warc {
     }
   }
 
+  /** One uncompressed `WARC/1.0` record as [[records]] reads it: the
+    * type, target-URI (omitted when `uri` is empty) and date headers,
+    * then `payload` framed by its Content-Length and the CRLF CRLF
+    * record trailer.
+    */
+  def record(warcType: String, uri: String, date: String,
+      payload: Array[Byte]): Array[Byte] = {
+    val head = s"WARC/1.0\r\nWARC-Type: $warcType\r\n" +
+      (if (uri.nonEmpty) s"WARC-Target-URI: $uri\r\n" else "") +
+      s"WARC-Date: $date\r\nContent-Length: ${payload.length}\r\n\r\n"
+    head.getBytes(StandardCharsets.UTF_8) ++ payload ++
+      "\r\n\r\n".getBytes(StandardCharsets.UTF_8)
+  }
+
   /** Streaming record iterator over a (possibly gzipped) WARC stream.
     * Records whose Content-Length exceeds `maxRecordBytes` are skipped
     * without buffering (the WARC spec allows >2 GB payloads; one

@@ -39,9 +39,9 @@ object Canonicalize {
     // Materialize the pair pipeline ONCE: both the id pairs for the
     // shared graft.spark.Cc core and the vertex name table derive from
     // `pairs`, which is typically a full upstream derivation (the linker
-    // window chain) — without the checkpoint the vertex branch
-    // re-executed it a second time (r8 measured). Cc itself then
-    // checkpoints only its canonical id pairs.
+    // window chain) — without the checkpoint the vertex branch would
+    // execute it a second time. Cc itself then checkpoints only its
+    // canonical id pairs.
     val p = pairs.select(col("name_a"), col("name_b")).localCheckpoint(true)
     val edges = p.select(nameIdCol(col("name_a")).as("a"),
       nameIdCol(col("name_b")).as("b"))

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * token co-occurrence graph from [[GraphOps.bigramEdges]] (the
   * TextRank shape, Mihalcea & Tarau 2004), or any edge table.
   *
-  * Determinism contract (the same one `SparkEntry.dsum` uses): every
+  * Determinism contract (the same one `registry.SqlQueries.dsum` uses): every
   * floating-point SUM in [[pagerank]] runs through exact DECIMAL
   * aggregation, so partial-aggregation order — which changes with
   * partition count — cannot change the result. PageRank here is

@@ -289,7 +289,7 @@ object Multimodal {
     // the TIFF writer scaffold): ImageIO.write(img, fmt, OutputStream)
     // wraps the stream in a FileCacheImageOutputStream by default —
     // one disk-backed temp file PER ENCODE, i.e. per-row synchronous
-    // file I/O on the generator path of every mm_* query (r8 measured).
+    // file I/O on the generator path of every mm_* query.
     val writers = javax.imageio.ImageIO.getImageWritersByFormatName(format)
     require(writers.hasNext, s"no JDK ImageIO writer for format '$format'")
     val writer = writers.next()

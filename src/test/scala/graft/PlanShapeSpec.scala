@@ -223,10 +223,12 @@ class PlanShapeSpec extends AnyFunSuite {
       s"contamination regressed to a Scala UDF:\n$plan")
   }
 
-  test("every registry query has a DuckDB oracle and every oracle a query") {
-    // tools/check_oracle.py iterates the oracle keys, so a query with
-    // no oracle would go unchecked without a word
-    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+  test("a registry name defined twice fails and is named") {
+    // each record carries its own oracle, so every query has one; what
+    // can still go wrong is one name in two module files
+    val q = graft.registry.Query("twice", (s, _) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException](SparkEntry.byName(Seq(q, q)))
+    assert(e.getMessage.contains("twice"), e.getMessage)
   }
 
   test("no two oracles share one SQL text, except the named twin pairs") {

@@ -10,14 +10,6 @@ import graft.TestSpark
 class WarcSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def record(tpe: String, uri: String, date: String,
-      payload: Array[Byte]): Array[Byte] = {
-    val head = s"WARC/1.0\r\nWARC-Type: $tpe\r\n" +
-      (if (uri.nonEmpty) s"WARC-Target-URI: $uri\r\n" else "") +
-      s"WARC-Date: $date\r\nContent-Length: ${payload.length}\r\n\r\n"
-    head.getBytes("UTF-8") ++ payload ++ "\r\n\r\n".getBytes("UTF-8")
-  }
-
   private def httpResponse(html: String): Array[Byte] =
     ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + html)
       .getBytes("UTF-8")
@@ -26,13 +18,13 @@ class WarcSpec extends AnyFunSuite {
   private val html2 = "<html><body><p>gamma delta epsilon</p></body></html>"
 
   private def warcBytes: Array[Byte] =
-    record("warcinfo", "", "2024-03-01T00:00:00Z",
+    Warc.record("warcinfo", "", "2024-03-01T00:00:00Z",
         "software: test".getBytes("UTF-8")) ++
-    record("request", "https://x.edu/a", "2024-03-01T10:00:00Z",
+    Warc.record("request", "https://x.edu/a", "2024-03-01T10:00:00Z",
         "GET /a HTTP/1.1\r\n\r\n".getBytes("UTF-8")) ++
-    record("response", "https://x.edu/a", "2024-03-01T10:00:00Z",
+    Warc.record("response", "https://x.edu/a", "2024-03-01T10:00:00Z",
         httpResponse(html1)) ++
-    record("response", "https://x.edu/b", "2024-03-02T11:30:00Z",
+    Warc.record("response", "https://x.edu/b", "2024-03-02T11:30:00Z",
         httpResponse(html2))
 
   test("records: framing, headers, payload lengths") {
@@ -41,6 +33,10 @@ class WarcSpec extends AnyFunSuite {
     assert(rs.map(_.warcType) == Seq("warcinfo", "request", "response", "response"))
     assert(rs(2).targetUri.contains("https://x.edu/a"))
     assert(new String(Warc.httpBody(rs(2).payload), "UTF-8") == html1)
+    // the writer's bytes, pinned apart from the reader
+    assert(new String(Warc.record("response", "u", "d", "p".getBytes("UTF-8")),
+      "UTF-8") == "WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: u\r\n" +
+      "WARC-Date: d\r\nContent-Length: 1\r\n\r\np\r\n\r\n")
     // LF-only HTTP heads also strip
     assert(new String(Warc.httpBody(
       ("HTTP/1.1 200 OK\nX: y\n\nBODY").getBytes("UTF-8")), "UTF-8") == "BODY")
@@ -56,7 +52,7 @@ class WarcSpec extends AnyFunSuite {
     // UTF-8 bytes in a header value (real Common-Crawl URIs carry them)
     val uri = "https://x.edu/café"
     val rs = Warc.records(new java.io.ByteArrayInputStream(
-      record("response", uri, "2024-03-01T00:00:00Z", httpResponse("y"))),
+      Warc.record("response", uri, "2024-03-01T00:00:00Z", httpResponse("y"))),
       gzipped = false).toSeq
     assert(rs.head.targetUri.contains(uri), s"got ${rs.head.targetUri}")
   }
@@ -71,9 +67,9 @@ class WarcSpec extends AnyFunSuite {
       g.write(b); g.close(); o.toByteArray
     }
     val members =
-      gz(record("response", "https://m.edu/1", "2024-03-01T00:00:00Z",
+      gz(Warc.record("response", "https://m.edu/1", "2024-03-01T00:00:00Z",
         httpResponse(html1))) ++
-      gz(record("response", "https://m.edu/2", "2024-03-01T00:00:01Z",
+      gz(Warc.record("response", "https://m.edu/2", "2024-03-01T00:00:01Z",
         httpResponse(html2)))
     val lying = new java.io.FilterInputStream(
         new java.io.ByteArrayInputStream(members)) {
@@ -86,9 +82,9 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("oversized records are skipped without buffering; later records survive") {
-    val big = record("response", "https://x.edu/huge", "2024-03-01T00:00:00Z",
+    val big = Warc.record("response", "https://x.edu/huge", "2024-03-01T00:00:00Z",
       httpResponse("Z" * 5000))
-    val small = record("response", "https://x.edu/ok", "2024-03-01T00:00:00Z",
+    val small = Warc.record("response", "https://x.edu/ok", "2024-03-01T00:00:00Z",
       httpResponse(html1))
     val rs = Warc.records(new java.io.ByteArrayInputStream(big ++ small),
       gzipped = false, maxRecordBytes = 1000).toSeq

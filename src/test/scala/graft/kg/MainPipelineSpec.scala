@@ -70,12 +70,9 @@ class MainPipelineSpec extends AnyFunSuite {
     def rec(id: Int): Array[Byte] = {
       val html = "<html><body><div class=\"doc\"><p>faculty page " + id +
         " zzjohn zzdoe office</p></div></body></html>"
-      val payload = ("HTTP/1.1 200 OK\r\n\r\n" + html).getBytes("UTF-8")
-      ("WARC/1.0\r\nWARC-Type: response\r\n" +
-        "WARC-Target-URI: https://w.edu/p" + id + "\r\n" +
-        "WARC-Date: 2024-05-01T00:00:00Z\r\n" +
-        "Content-Length: " + payload.length + "\r\n\r\n").getBytes("UTF-8") ++
-        payload ++ "\r\n\r\n".getBytes("UTF-8")
+      graft.io.Warc.record("response", "https://w.edu/p" + id,
+        "2024-05-01T00:00:00Z",
+        ("HTTP/1.1 200 OK\r\n\r\n" + html).getBytes("UTF-8"))
     }
     val wdir = java.nio.file.Files.createTempDirectory("warc_kg")
     java.nio.file.Files.write(wdir.resolve("crawl-0.warc"),
